@@ -16,7 +16,6 @@ from dss_nlp_ingestion_spark.operators.dedup import (  # noqa: F401
 from dss_nlp_ingestion_spark.operators.graph import (  # noqa: F401
     canonical_filter,
     connected_components,
-    connected_components_pj,
 )
 from dss_nlp_ingestion_spark.operators.merge import merge_into  # noqa: F401
 from dss_nlp_ingestion_spark.operators.sampling import (  # noqa: F401

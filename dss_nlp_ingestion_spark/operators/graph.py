@@ -4,53 +4,73 @@ canonical-document selection in a training-data dedup pipeline.
 
 The reference dedups by exact key only (src/base.py:210-218); at
 100 TB, near-dup PAIRS must be folded into CLUSTERS so each group
-keeps one canonical document.  This is small-diameter graph work
-(duplicate clusters are near-cliques), so iterative min-label
-propagation converges in a handful of supersteps.
+keeps one canonical document.
 
-Scale design: each iteration is one join + one aggregate, both
-shuffled on the node id — the classic large-star/small-star shape
-without an external graph library.  The driver-side loop inspects
-only a changed-count aggregate (never row data), and iterations are
-capped.  NON-CONVERGENCE IS NEVER SILENT: plain propagation that
-exhausts its cap switches to pointer-jumping rounds (distance covered
-doubles per round), and if even those exhaust, a RuntimeError is
-raised — wrong cluster labels (and therefore wrong canonical-document
-choices) must not leak out quietly.
+One algorithm, min-label propagation with pointer jumping: an
+aggregate seeds label(v) = min(v, min neighbor), the first round is a
+plain hop (label(v) <- min over neighbors' labels), and every later
+round is a hop plus one pointer jump (label(v) <- label(label(v))),
+so the distance a label covers roughly doubles per round: near-clique
+clusters converge in the first round, chains in O(log diameter).
+Each round is a join + aggregate shuffled on the node id, driven by
+:func:`converge` — the driver reads one observed count per round,
+never row data, and NON-CONVERGENCE IS NEVER SILENT: wrong cluster
+labels (hence wrong canonical documents) must not leak out quietly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Iterator, Sequence
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
+def converge(
+    state: DataFrame,
+    steps: Sequence[Callable[[DataFrame], DataFrame]],
+    changed: Column,
+    what: str,
+) -> Iterator[DataFrame]:
+    """Apply ``steps`` in order, ``state = step(state)``, yielding each
+    round's result; stop after the first round in which no row
+    satisfies the boolean ``changed`` column. A round's only action is
+    its ``localCheckpoint`` (lineage stays one round deep), and the
+    changed-row count rides on it as a ``DataFrame.observe`` metric; a
+    sum over zero rows is NULL, so an empty round counts as converged.
+    ``len(steps)`` is the round cap: running out with rows still
+    changing raises RuntimeError naming ``what``."""
+    n_changed = None
+    for step in steps:
+        obs = Observation()
+        state = (
+            step(state)
+            .observe(obs, F.sum(changed.cast("long")).alias("n"))
+            .localCheckpoint()
+        )
+        n_changed = obs.get["n"]
+        yield state
+        if not n_changed:
+            return
+    raise RuntimeError(
+        f"{what} did not converge within {len(steps)} rounds "
+        f"({n_changed} rows still changing) — raise the round cap"
+    )
+
+
 def _sym_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """Symmetrized, deduped (u, v) edge list. Persisted by callers:
-    the upstream lineage may be an expensive pipeline (LSH candidate
-    generation) re-read every superstep.
+    """Symmetrized, deduped (u, v) edge list, persisted by the caller:
+    the upstream lineage (LSH candidate generation) is read every round.
 
-    Symmetrization is an EXPLODE of both orientations from each input
-    row, not a union of two selects: a union evaluates the upstream
-    edge pipeline once per branch — for CC over LSH candidates that
-    re-ran the whole shingle/minhash/band join a second time inside
-    the very first superstep (r11 measurement: the pair pass is half
-    the query) — while the explode reads each input row once.
-
-    The result is hash-partitioned on ``v`` AT NO EXTRA EXCHANGE
-    (r11, guide §2.4): the dedup shuffles on v alone —
-    hash-partitioning by v co-locates every copy of a (u, v) row, so
-    the dropDuplicates aggregate runs partition-locally on top of it
-    (HashPartitioning(v) satisfies ClusteredDistribution(u, v)) —
-    where ``.distinct()`` would shuffle the same rows keyed on (u, v).
-    Why v: every superstep's propagation join keys on ``sym.v ==
-    labels.node``. At toy scale the labels side broadcasts and the
-    cache partitioning is moot (measured: neutral at sf0.1); at scale
-    labels outgrow broadcast, the join falls back to sort-merge, and
-    a (u, v)-partitioned cache would re-shuffle the FULL edge table
-    every superstep while the v-partitioned one leaves only the
-    neighbor-min groupBy(u) — the message shuffle the algorithm is
-    made of — plus the |V|-sized labels exchange."""
+    Both orientations come from one EXPLODE per input row, not a union
+    of two selects, which would run the upstream pair pipeline once per
+    branch. The dedup shuffles on ``v`` alone: HashPartitioning(v)
+    co-locates every copy of a (u, v) row, so dropDuplicates runs
+    partition-locally where ``.distinct()`` would shuffle again on
+    (u, v). Why v: every round's propagation join keys on ``sym.v ==
+    labels.node``; once labels outgrow broadcast, a v-partitioned
+    cache leaves only the neighbor-min groupBy(u) and the |V|-sized
+    labels exchange per round instead of re-shuffling every edge."""
     return (
         edges.select(
             F.explode(
@@ -71,11 +91,9 @@ def _sym_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 
 
 def _seed_labels(sym: DataFrame) -> DataFrame:
-    """Superstep 0 for free: with identity labels the neighbor-min is
-    just min(v) per u, so the first round needs no label join — one
-    aggregate seeds label(v) = min(v, min neighbor), saving a full
-    join+shuffle round (most near-clique clusters then converge in a
-    single checked superstep)."""
+    """Round 0 for free: with identity labels the neighbor-min is just
+    min(v) per u, so one aggregate seeds label(v) = min(v, min
+    neighbor) without a label join."""
     return (
         sym.groupBy("u")
         .agg(F.min("v").alias("_nmin0"))
@@ -87,8 +105,8 @@ def _seed_labels(sym: DataFrame) -> DataFrame:
 
 
 def _hop(sym: DataFrame, labels: DataFrame) -> DataFrame:
-    """One propagation superstep: (node, _old, _hop) where _hop =
-    min(label, min over neighbors' labels)."""
+    """One propagation round: (node, _old, label) where the new label
+    is min(label, min over neighbors' labels)."""
     neighbor_min = (
         sym.join(labels, sym["v"] == labels["node"])
         .groupBy("u")
@@ -101,25 +119,26 @@ def _hop(sym: DataFrame, labels: DataFrame) -> DataFrame:
             F.col("label").alias("_old"),
             F.least(
                 F.col("label"), F.coalesce(F.col("_nmin"), F.col("label"))
-            ).alias("_hop"),
+            ).alias("label"),
         )
     )
 
 
-def _jump(hopped: DataFrame) -> DataFrame:
-    """Pointer-jump: chase one level of indirection through the labels
-    table itself (label(v) <- label(label(v))). Valid because labels
-    always point at real nodes and are non-increasing, so the chase
-    only tightens. Rename-per-side: shared-lineage aliases are unsafe
-    for self-joins. Returns (node, _old, _new)."""
-    chase = hopped.select(F.col("node").alias("_cn"), F.col("_hop").alias("_cl"))
+def _jump(hopped: DataFrame, labels: DataFrame) -> DataFrame:
+    """Pointer-jump: chase each hopped label one level through the
+    round's input labels (label(v) <- label(label(v))). Valid because
+    labels point at real nodes of the same component and never
+    increase. Chasing the previous round's checkpoint rather than
+    ``hopped`` itself saves planning the hop twice (3 Spark jobs per
+    round, measured). Keeps the (node, _old, label) shape."""
+    chase = labels.select(F.col("node").alias("_cn"), F.col("label").alias("_cl"))
     return (
-        hopped.join(chase, hopped["_hop"] == chase["_cn"], "left")
+        hopped.join(chase, F.col("label") == F.col("_cn"), "left")
         .select(
             "node",
             "_old",
-            F.least(F.col("_hop"), F.coalesce(F.col("_cl"), F.col("_hop"))).alias(
-                "_new"
+            F.least(F.col("label"), F.coalesce(F.col("_cl"), F.col("label"))).alias(
+                "label"
             ),
         )
     )
@@ -129,59 +148,32 @@ def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_iter: int = 15,
-    jump_iter: int = 20,
+    max_iter: int = 20,
 ) -> DataFrame:
     """Label every node reachable through ``edges`` with the minimum
-    node id of its component.  Returns (node, label).
-
-    Min-label propagation: start with label(v) = v; each superstep
-    sets label(v) = min(label(v), min over neighbors' labels); stop
-    when no label changes (checked via a count aggregate, not a
-    collect).  Deterministic for any edge order.
-
-    Convergence contract: plain propagation needs diameter-many
-    supersteps — ample for near-clique duplicate clusters.  If
-    ``max_iter`` rounds exhaust without converging (a chain-shaped
-    component wider than ``max_iter``), the loop SWITCHES STRATEGY to
-    pointer-jumping rounds (covered distance doubles per round, so
-    ``jump_iter`` = 20 covers diameter ~2^20) rather than returning
-    wrong labels; if even those exhaust, it raises.
-    """
+    node id of its component.  Returns (node, label), deterministic for
+    any edge order.  Seeded labels, one plain hop round (a jump there
+    only adds a join: near-cliques are converged after the seed), then
+    hop + pointer-jump rounds until no label changes.  ``max_iter``
+    caps the rounds (20 reach diameter ~2^19); running out raises
+    RuntimeError."""
     sym = _sym_edges(edges, src_col, dst_col).persist()
-    labels = _seed_labels(sym).persist()
-    changed = -1
-    for _ in range(max_iter):
-        # Checkpoint FIRST (one execution, lineage truncated, result
-        # materialized), then derive both the convergence count and
-        # the next labels from the materialized blocks — the earlier
-        # order (count, then eager checkpoint) ran every superstep's
-        # join twice.
-        ck = _hop(sym, labels).localCheckpoint()
-        changed = ck.filter(F.col("_hop") < F.col("_old")).count()
-        prev = labels
-        labels = ck.select("node", F.col("_hop").alias("label"))
-        prev.unpersist()
-        if changed == 0:
-            break
-    if changed != 0:
-        # Strategy switch: the component is wider than max_iter hops
-        # (chain-shaped, not near-clique) — continue with pointer
-        # jumping instead of silently returning wrong labels.
-        for _ in range(jump_iter):
-            ck = _jump(_hop(sym, labels)).localCheckpoint()
-            changed = ck.filter(F.col("_new") < F.col("_old")).count()
-            labels = ck.select("node", F.col("_new").alias("label"))
-            if changed == 0:
-                break
-    sym.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            f"propagation + {jump_iter} pointer-jump supersteps "
-            f"({changed} labels still changing) — raise the caps"
-        )
-    return labels
+    hop = lambda labels: _hop(sym, labels)  # noqa: E731
+    hop_jump = lambda labels: _jump(_hop(sym, labels), labels)  # noqa: E731
+    # Read twice by the first round's plan: persisting saves one job.
+    seed = _seed_labels(sym).persist()
+    try:
+        for labels in converge(
+            seed,
+            [hop] + [hop_jump] * (max_iter - 1),
+            F.col("label") < F.col("_old"),
+            "connected_components",
+        ):
+            pass
+    finally:  # rounds are checkpointed: nothing still reads these
+        sym.unpersist()
+        seed.unpersist()
+    return labels.select("node", "label")
 
 
 def canonical_filter(
@@ -201,57 +193,6 @@ def canonical_filter(
     return joined.filter(
         F.col("_label").isNull() | (F.col(id_col) == F.col("_label"))
     ).drop("_label")
-
-
-def connected_components_pj(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 10,
-) -> DataFrame:
-    """Connected components with POINTER JUMPING: each superstep does
-    one hop of neighbor-min propagation followed by a label-chase
-    (label(v) <- label(label(v))), so the frontier distance covered
-    DOUBLES per round instead of growing by one. Same output contract
-    as :func:`connected_components` — (node, label = component min id).
-
-    Why it exists: plain min-label propagation needs diameter-many
-    supersteps, fine for near-clique duplicate clusters but O(n)
-    rounds on chain-shaped components (url redirect chains, quote
-    chains). With the jump, convergence is O(log diameter) — the
-    default ``max_iter`` = 10 covers diameter ~2^10; raising it to 40
-    covers any graph that fits on Earth — which is the shape you want
-    when each superstep is a full shuffle at 100 TB.
-
-    The jump is valid because labels always point at real nodes
-    (a label is the min of some reachable node set and every node is
-    in the labels table) and label(v) is non-increasing, so chasing
-    one level composes reachability information already paid for —
-    two extra hash joins on the (node,label) table per round, far
-    cheaper than the supersteps they eliminate.
-
-    Raises RuntimeError when ``max_iter`` exhausts with labels still
-    changing — non-convergence is never silent.
-    """
-    sym = _sym_edges(edges, src_col, dst_col).persist()
-    labels = _seed_labels(sym).localCheckpoint()
-    changed = -1
-    for _ in range(max_iter):
-        # Checkpoint first, then count + relabel off the materialized
-        # blocks (one execution per superstep, not two).
-        ck = _jump(_hop(sym, labels)).localCheckpoint()
-        changed = ck.filter(F.col("_new") < F.col("_old")).count()
-        labels = ck.select("node", F.col("_new").alias("label"))
-        if changed == 0:
-            break
-    sym.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components_pj did not converge within {max_iter} "
-            f"pointer-jump supersteps ({changed} labels still changing) "
-            f"— raise max_iter (each round doubles covered diameter)"
-        )
-    return labels
 
 
 def pagerank(
@@ -287,27 +228,15 @@ def pagerank(
     simplification), so ranks are comparative, not a distribution.
     """
     w = F.col(weight_col) if weight_col else F.lit(1)
-    # Persist the projected edge list itself (r11): ``nodes`` (via
-    # the endpoint explode), ``out`` and the ``ew`` join all consume
-    # it — unpersisted, the upstream edge pipeline (often an
-    # expensive multi-join) executed once per consumer just to BUILD
-    # the two cached frames.
-    # NOTE (r11): an explicit repartition("src") on this cache was
-    # tried and REVERTED — in the at-scale (no-broadcast) regime the
-    # `ew` build join is itself a sort-merge on src, so the cached ew
-    # is already src-partitioned AND sorted for the iteration joins
-    # (verified: plans/r11/pagerank_superstep_smj_{before,after}.txt
-    # show the identical exchange-free superstep either way), and at
-    # toy scale ranks broadcast so partitioning is moot (A/B neutral).
+    # ``nodes``, ``out`` and ``ew`` all consume the projected edge
+    # list: persisted, the upstream edge pipeline runs once, not once
+    # per consumer. No repartition("src"): at scale the ``ew`` build
+    # is a sort-merge on src, so the cache is already src-partitioned.
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     ).persist()
-    # Both frames are referenced every superstep; without persist the
-    # edge lineage re-executes 2x per iteration. They stay cached for
-    # the loop's lifetime — node+edge sized, the working set of the
-    # algorithm — and are released before return (every superstep is
-    # materialized by its localCheckpoint, so nothing downstream can
-    # still need them).
+    # Both frames are read every superstep; they stay cached for the
+    # loop (node + edge sized) and are released before return.
     nodes = (
         e.select(
             F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")

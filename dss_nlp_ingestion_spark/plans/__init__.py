@@ -4,6 +4,13 @@ Importing this package populates the registry (``QUERIES`` /
 ``ORACLES``) consumed by ``__spark_entry__.py``.
 """
 
+import dis
+import functools
+import hashlib
+import importlib.util
+import inspect
+from pathlib import Path
+
 from dss_nlp_ingestion_spark.plans.registry import ORACLES, QUERIES  # noqa: F401
 
 # Import for registration side effects — each module registers its
@@ -48,16 +55,17 @@ for _name, _note in {
         "importance-weight ranking; cost is O(tokens), one shuffle"
     ),
     "dup_canonical_best": (
-        "connected-components supersteps + per-cluster best pick: "
-        "one job per pointer-jump round by design (log D rounds)"
+        "connected components (min-label hop + pointer-jump rounds, "
+        "one checkpoint job per round) + per-cluster best pick"
     ),
     "dup_clusters": (
-        "iterative connected components (small-star/large-star): "
-        "superstep jobs by design; per-round data is edge-bounded"
+        "connected components over LSH pairs: min-label hop + "
+        "pointer-jump rounds, one checkpoint job per round by design "
+        "(log D rounds); per-round data is edge-bounded"
     ),
     "dup_clusters_pj": (
-        "pointer-jumping CC twin: log D superstep jobs by design "
-        "(compared against dup_clusters for parity)"
+        "registered twin of dup_clusters: runs the same connected "
+        "components kernel and returns the same rows"
     ),
     "fulltext_index_incremental": (
         "posting-list build + txlog commit + incremental merge — "
@@ -226,37 +234,54 @@ for _name, _note in {
     _TAGS.setdefault(_name, _note)
 
 
-def _query_code_hash(name: str) -> str:
-    """Hash of a query's implementation source + the sources of the
-    same-module helper FUNCTIONS it calls (one level) + oracle SQL —
-    the identity the greenness cache is keyed on, so neither a
-    rewritten query NOR an edited shared helper (e.g.
-    basket_item_pairs, r5 review finding) can inherit a pre-edit
-    green row."""
-    import hashlib
-    import inspect
-    import sys
+@functools.cache
+def _module_source(modname: str) -> str:
+    return Path(importlib.util.find_spec(modname).origin).read_text()
 
+
+@functools.cache
+def _package_imports(modname: str) -> frozenset[str]:
+    """Package modules ``modname`` imports, read off the bytecode of
+    every code object in it (function-body imports included). ``from
+    pkg import sub`` counts the submodule ``sub``; ``pkg`` itself
+    counts only when a non-module name is taken from it."""
+    out, codes = set(), [compile(_module_source(modname), modname, "exec")]
+    while codes:
+        code = codes.pop()
+        codes += [c for c in code.co_consts if inspect.iscode(c)]
+        for ins in dis.get_instructions(code):
+            if ins.opname == "LOAD_CONST":
+                fromlist = ins.argval  # the operand IMPORT_NAME pops
+            elif ins.opname == "IMPORT_NAME" and ins.argval.startswith(
+                "dss_nlp_ingestion_spark."
+            ):
+                pkg = importlib.util.find_spec(ins.argval).submodule_search_locations
+                names = [f"{ins.argval}.{n}" for n in fromlist or () if n != "*"]
+                subs = {m for m in names if pkg and importlib.util.find_spec(m)}
+                out |= subs
+                if not names or len(subs) < len(names):
+                    out.add(ins.argval)
+    return frozenset(out)
+
+
+def _query_code_hash(name: str) -> str:
+    """Hash of the oracle SQL plus the source of every package module
+    the query reaches: its own module and, transitively, every
+    ``dss_nlp_ingestion_spark`` module imported from there — the
+    identity the greenness cache is keyed on, so neither a rewritten
+    query NOR an edited operator it calls can inherit a pre-edit green
+    row. Module granularity over-invalidates, which is cheap; a stale
+    green row is not. Split composites (register_split) start from
+    their setup/probe modules, not the wrapper in registry.py."""
     fn = QUERIES[name]
-    # Split composites (register_split) hash their real setup/probe
-    # sources, not the thin wrapper in registry.py.
-    targets = [fn, *getattr(fn, "_split", ())]
-    parts = []
-    for tgt in targets:
-        try:
-            parts.append(inspect.getsource(tgt))
-        except (OSError, TypeError):
-            parts.append(name)
-        mod = sys.modules.get(getattr(tgt, "__module__", ""), None)
-        code = getattr(tgt, "__code__", None)
-        if mod is not None and code is not None:
-            for ref in sorted(set(code.co_names)):
-                helper = getattr(mod, ref, None)
-                if inspect.isfunction(helper) and helper not in targets:
-                    try:
-                        parts.append(inspect.getsource(helper))
-                    except (OSError, TypeError):
-                        parts.append(ref)
+    todo = [t.__module__ for t in (fn, *getattr(fn, "_split", ()))]
+    seen: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        if mod not in seen:
+            seen.add(mod)
+            todo += _package_imports(mod)
+    parts = [f"{m}\x00{_module_source(m)}" for m in sorted(seen)]
     return hashlib.sha256(
         ("\x00".join(parts) + "\x00" + ORACLES.get(name, "")).encode()
     ).hexdigest()[:16]
@@ -282,7 +307,6 @@ def _rotate_for_driver_sample() -> None:
     import json
     import os
     import re
-    from pathlib import Path
 
     root = Path(__file__).resolve().parents[2]
     latest: dict[str, tuple[int, dict]] = {}  # name -> (round, row)

@@ -880,42 +880,35 @@ def ancestor_closure_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE re-expressed as the engine's iterative-frontier
     pattern: Spark has no recursive CTE, so the ancestor closure over
     the decimal tree (parent(k) = k div 10) is an expand-until-empty
-    driver loop — each round derives the next frontier from the
-    localCheckpoint'd previous one (bounded lineage, one count per
-    round to detect exhaustion, never row data on the driver). Depth
-    is log10(max key), so the loop is ~6 rounds at ANY scale factor —
-    the hierarchy-walk analog of the dedup family's pointer-jumping
-    CC. The oracle runs DuckDB's native WITH RECURSIVE; the hash
-    match proves the loop computes exactly the fixpoint the SQL
-    standard defines."""
+    driver loop on the connected-components round driver
+    (operators/graph.py ``converge``) — each round derives the next
+    frontier from the localCheckpoint'd previous one (bounded lineage;
+    the round's row count is observed on its checkpoint job, never row
+    data on the driver). Depth is log10(max key), so the loop is ~6
+    rounds at ANY scale factor. The oracle runs DuckDB's native WITH
+    RECURSIVE; the hash match proves the loop computes exactly the
+    fixpoint the SQL standard defines."""
+    from dss_nlp_ingestion_spark.operators.graph import converge
+
     cust = table(spark, sf_dir, "customer").filter(F.col("c_custkey") > 0)
-    frontier = cust.select(
+    first = cust.select(
         F.col("c_custkey").alias("node"),
         F.expr("c_custkey div 10").alias("anc"),
         F.lit(1).cast("int").alias("depth"),
-    ).localCheckpoint()
-    tiers = [frontier]
-    # 64 is a safety cap (2^64 keys deep would exhaust BIGINT long
-    # before); the loop exits on an empty frontier in ~log10(max key).
-    for _ in range(64):
-        nxt = (
-            frontier.filter(F.col("anc") > 0)
-            .select(
-                "node",
-                F.expr("anc div 10").alias("anc"),
-                (F.col("depth") + 1).cast("int").alias("depth"),
-            )
-            .localCheckpoint()
+    )
+
+    def expand(frontier: DataFrame) -> DataFrame:
+        return frontier.filter(F.col("anc") > 0).select(
+            "node",
+            F.expr("anc div 10").alias("anc"),
+            (F.col("depth") + 1).cast("int").alias("depth"),
         )
-        if nxt.rdd.isEmpty():
-            break
-        tiers.append(nxt)
-        frontier = nxt
-    else:
-        raise RuntimeError("ancestor closure did not converge in 64 rounds")
-    out = tiers[0]
-    for t in tiers[1:]:
-        out = out.unionByName(t)
+
+    # 64 rounds is a safety cap (2^64 keys deep would exhaust BIGINT
+    # long before); the loop stops at the first empty frontier.
+    out = first
+    for tier in converge(first, [expand] * 64, F.lit(True), "ancestor closure"):
+        out = out.unionByName(tier)
     return out
 
 

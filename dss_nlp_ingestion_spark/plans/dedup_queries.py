@@ -419,18 +419,10 @@ def decontaminated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dup_clusters_pj", _CLUSTER_ORACLE)
 def dup_clusters_pj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same near-dup clustering through the POINTER-JUMPING
-    components kernel (label(v) <- label(label(v)) each round):
-    identical labels — same oracle — in O(log diameter) supersteps
-    instead of O(diameter), the kernel to prefer when cluster shapes
-    are not guaranteed near-clique."""
-    from dss_nlp_ingestion_spark.operators.graph import connected_components_pj
-
-    docs = table(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(
-        docs, "doc_id", "text", num_perm=_NUM_PERM, band_rows=_BAND_ROWS, k=3
-    )
-    return connected_components_pj(pairs, "id_a", "id_b")
+    """Registered twin of :func:`dup_clusters`, kept because the query
+    registry is frozen: the same connected-components kernel (hop +
+    pointer-jump rounds) and the same rows."""
+    return dup_clusters(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -929,14 +921,19 @@ def dup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Edit-distance near-dup (blocked candidate pairs + exact Levenshtein)
 # ---------------------------------------------------------------------------
 
-_EDIT_DIST_ORACLE = """
+#: Largest Levenshtein distance that counts as an edit-distance
+#: near-dup; the oracle, the length-band join predicate and the banded
+#: DP all read it.
+_EDIT_MAX = 20
+
+_EDIT_DIST_ORACLE = f"""
 WITH blocked AS (
   SELECT doc_id, text, substr(text, 1, 12) AS blk FROM documents
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist
 FROM blocked a JOIN blocked b ON a.blk = b.blk AND a.doc_id < b.doc_id
-WHERE levenshtein(a.text, b.text) <= 20
+WHERE levenshtein(a.text, b.text) <= {_EDIT_MAX}
 """
 
 
@@ -962,24 +959,21 @@ def edit_distance_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = spark.sparkContext.defaultParallelism
     a = (docs.repartition(n, "blk") if docs.rdd.getNumPartitions() < n else docs).alias("a")
     b = docs.alias("b")
-    # r12 (guide §1.2, the Levenshtein analog of the PPJoin positional
-    # filter): |len(a) - len(b)| is a LOWER BOUND on edit distance, so
-    # candidates whose lengths differ by more than the threshold can
-    # never verify — they are dropped in the join condition, before
-    # any DP runs. The surviving pairs use the THRESHOLD form of
-    # levenshtein (Spark 3.5+): a banded O(len x 20) DP instead of the
-    # full O(len^2) matrix, returning the exact distance when it is
-    # <= 20 and -1 otherwise — output rows are bit-identical.
+    # |len(a) - len(b)| is a LOWER BOUND on edit distance, so pairs
+    # whose lengths differ by more than _EDIT_MAX are dropped in the
+    # join condition, before any DP runs. Survivors use the threshold
+    # form of levenshtein: a banded O(len x _EDIT_MAX) DP returning the
+    # exact distance when it is <= _EDIT_MAX and -1 otherwise.
     pairs = a.join(
         b,
         (F.col("a.blk") == F.col("b.blk"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
         & (
             F.abs(F.length(F.col("a.text")) - F.length(F.col("b.text")))
-            <= F.lit(20)
+            <= F.lit(_EDIT_MAX)
         ),
     )
-    dist = F.levenshtein(F.col("a.text"), F.col("b.text"), 20)
+    dist = F.levenshtein(F.col("a.text"), F.col("b.text"), _EDIT_MAX)
     return pairs.filter(dist >= 0).select(
         F.col("a.doc_id").alias("id_a"),
         F.col("b.doc_id").alias("id_b"),

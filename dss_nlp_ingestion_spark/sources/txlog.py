@@ -918,6 +918,7 @@ def merge_into_table(
     sit outside every stats range. Returns a summary dict:
     version committed, files touched/total/stat-skipped, and whether
     the commit degraded to an append."""
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from dss_nlp_ingestion_spark.operators.merge import (
@@ -925,17 +926,14 @@ def merge_into_table(
         merge_into_with_delete,
     )
 
-    # r12 (guide §5): the merge consumes ``source`` three times —
-    # the pruning-bounds aggregate, the touched-file semi-join, and
-    # the COW rewrite itself — and for incremental callers (CDC
-    # replication, matview refresh) ``source`` is a whole
-    # net-changes pipeline (changed-file scan + full-row groupBy)
-    # that re-ran per consumer. Persist it for the duration of the
-    # merge: it is O(commit delta) by the operator's own cost model,
-    # never O(table), and the split timer showed the re-computation
-    # was ~70% of the CDC probe where the tag said "write IO".
-    # Released in the finally below — nothing outlives the call.
-    source = source.persist()
+    # The merge reads ``source`` three times (pruning bounds, touched-
+    # file semi-join, COW rewrite), and for CDC / matview callers it is
+    # a whole net-changes pipeline, so it is cached for the call: it is
+    # O(commit delta), never O(table). A source the caller cached is
+    # used as is and stays cached; a cache made here is released below.
+    owned = source.storageLevel == StorageLevel.NONE
+    if owned:
+        source = source.persist()
     try:
         return _merge_into_table_body(
             spark, path, source, key_cols, delete_col, insert_only,
@@ -943,7 +941,8 @@ def merge_into_table(
             merge_into, merge_into_with_delete,
         )
     finally:
-        source.unpersist()
+        if owned:
+            source.unpersist()
 
 
 def _merge_into_table_body(

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 import duckdb
 import pytest
 
@@ -20,10 +23,24 @@ TABLES = (
 )
 
 
-@pytest.fixture(scope="session")
-def spark():
-    import tempfile
+@pytest.fixture(scope="session", autouse=True)
+def tmp_root():
+    """One temp root for the whole session. ``tempfile`` hands it out
+    as the temp dir, so every table, checkpoint and warehouse dir the
+    tests and the engine make, and ``ship_package``'s zip, land under
+    it; child processes inherit it through TMPDIR. It is removed at
+    teardown, after the Spark session stops (``spark`` depends on
+    this fixture), so a run leaves nothing behind in /tmp."""
+    root = tempfile.mkdtemp(prefix="dss_tests_")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tempfile, "tempdir", root)
+        mp.setenv("TMPDIR", root)
+        yield root
+    shutil.rmtree(root, ignore_errors=True)
 
+
+@pytest.fixture(scope="session")
+def spark(tmp_root):
     warehouse = tempfile.mkdtemp(prefix="dss_warehouse_")
     s = get_spark(
         app_name="dss-tests",

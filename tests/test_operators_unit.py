@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from dss_nlp_ingestion_spark.functions.text import (
@@ -320,24 +322,86 @@ def test_decontaminate_ngram_overlap(spark):
     assert kept == [2, 3]
 
 
-def test_pointer_jumping_cc_matches_naive_on_chain(spark):
-    from dss_nlp_ingestion_spark.operators.graph import (
-        connected_components,
-        connected_components_pj,
-    )
+def _union_find_labels(edges):
+    """Pure-Python oracle: node -> min node id of its component."""
+    parent = {}
 
-    # 40-node chain (worst case for plain propagation: diameter 39,
-    # pointer jumping must close it in <= 10 doubling rounds) plus a
-    # separate triangle and an isolated edge.
-    chain = [(i, i + 1) for i in range(100, 140)]
-    extra = [(1, 2), (2, 3), (3, 1), (7, 8)]
-    edges = spark.createDataFrame(chain + extra, "id_a long, id_b long")
-    pj = {r.node: r.label for r in connected_components_pj(edges).collect()}
-    naive = {r.node: r.label
-             for r in connected_components(edges, max_iter=50).collect()}
-    assert pj == naive
-    assert all(pj[n] == 100 for n in range(100, 141))
-    assert pj[1] == pj[2] == pj[3] == 1 and pj[7] == pj[8] == 7
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+# 41-node chain (diameter 40: the worst case for plain propagation)
+# plus a separate triangle and an isolated edge.
+_CHAIN_GRAPH = [(i, i + 1) for i in range(100, 140)] + [(1, 2), (2, 3), (3, 1), (7, 8)]
+# 30 six-node near-cliques (every edge with (i + j) % 4 == 0 missing),
+# the shape near-duplicate clusters take.
+_NEAR_CLIQUE_GRAPH = [
+    (1000 + 10 * c + i, 1000 + 10 * c + j)
+    for c in range(30)
+    for i in range(6)
+    for j in range(i + 1, 6)
+    if (i + j) % 4
+]
+
+
+@pytest.mark.parametrize(
+    "graph", [_CHAIN_GRAPH, _NEAR_CLIQUE_GRAPH], ids=["chain", "near_clique"]
+)
+def test_cc_matches_union_find(spark, graph):
+    from dss_nlp_ingestion_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(graph, "id_a long, id_b long")
+    got = {r.node: r.label for r in connected_components(edges).collect()}
+    assert got == _union_find_labels(graph)
+
+
+def test_cc_empty_edges_is_empty_not_error(spark):
+    from dss_nlp_ingestion_spark.operators.graph import connected_components
+
+    # The observed changed-count sums zero rows to NULL — that must
+    # read as converged, not as "still changing".
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    out = connected_components(edges)
+    assert out.columns == ["node", "label"]
+    assert out.collect() == []
+
+
+@pytest.mark.parametrize(
+    "graph,max_jobs",
+    [(_CHAIN_GRAPH, 45), (_NEAR_CLIQUE_GRAPH, 17)],
+    ids=["chain", "near_clique"],
+)
+def test_cc_spark_jobs_per_call(spark, graph, max_jobs):
+    """Spark jobs per call, the caller's collect included: each round's
+    checkpoint carries its own convergence count (no count job), and
+    the first round is a plain hop. The bounds are the measured counts
+    at local[4] with 4 shuffle partitions; the earlier kernels ran 146
+    (hop, then jump fallback) / 62 (pointer jumping) jobs on the chain
+    and 19 / 28 on the near-cliques."""
+    from dss_nlp_ingestion_spark.operators.graph import connected_components
+
+    # Fresh ids, so no cached plan from another test can stand in.
+    edges = spark.createDataFrame(
+        [(a + 10**6, b + 10**6) for a, b in graph], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    group = f"cc-jobs-{len(graph)}"
+    sc.setJobGroup(group, group)
+    try:
+        connected_components(edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= max_jobs, n_jobs
 
 
 def test_merge_into_null_keyed_source_inserts(spark):
@@ -352,37 +416,15 @@ def test_merge_into_null_keyed_source_inserts(spark):
     assert out == {1: "a", 2: "b2", None: "nullkey"}
 
 
-def test_cc_switches_to_pointer_jumping_past_max_iter(spark):
+def test_cc_nonconvergence_raises_not_silent(spark):
     from dss_nlp_ingestion_spark.operators.graph import connected_components
 
-    # Diameter-40 chain with max_iter=3: plain propagation cannot
-    # converge, so the kernel must switch to pointer jumping and still
-    # produce correct labels (never silently-wrong ones).
-    chain = [(i, i + 1) for i in range(200, 240)]
-    edges = spark.createDataFrame(chain, "id_a long, id_b long")
-    labels = {
-        r.node: r.label
-        for r in connected_components(edges, max_iter=3).collect()
-    }
-    assert all(labels[n] == 200 for n in range(200, 241))
-
-
-def test_cc_nonconvergence_raises_not_silent(spark):
-    import pytest as _pytest
-
-    from dss_nlp_ingestion_spark.operators.graph import (
-        connected_components,
-        connected_components_pj,
-    )
-
+    # Two rounds (one hop, one hop + jump) cover distance ~5 of a
+    # 40-diameter chain: the kernel must raise, not return wrong labels.
     chain = [(i, i + 1) for i in range(300, 340)]
     edges = spark.createDataFrame(chain, "id_a long, id_b long")
-    # pj with 2 rounds covers distance ~4 of a 40-diameter chain.
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_pj(edges, max_iter=2)
-    # Plain kernel with the jump fallback also capped too low.
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1, jump_iter=1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iter=2)
 
 
 def test_cjk_char_shingles_catch_mutated_twins(spark):

@@ -12,6 +12,8 @@ import json
 import re
 from pathlib import Path
 
+import pytest
+
 ROOT = Path(__file__).resolve().parents[1]
 
 
@@ -159,3 +161,42 @@ def test_committed_bench_heavy_rows_tagged():
     heavy = sorted(n for n, t in rec["queries"].items() if eff(n, t) > 2.0)
     missing = [n for n in heavy if n not in TAGS]
     assert not missing, f"heavy rows without TAGS notes: {missing}"
+
+
+@pytest.mark.parametrize(
+    "module,queries",
+    [
+        (
+            "dss_nlp_ingestion_spark.operators.graph",
+            (
+                "dup_clusters",
+                "dup_clusters_pj",
+                "dup_canonical_best",
+                "leakage_safe_splits",
+                "ancestor_closure_customers",
+            ),
+        ),
+        (
+            "dss_nlp_ingestion_spark.operators.similarity",
+            ("semdedup_prune", "embedding_near_dups"),
+        ),
+        ("dss_nlp_ingestion_spark.operators.dedup", ("simhash_near_dups_banded",)),
+    ],
+)
+def test_code_hash_follows_imported_modules(monkeypatch, module, queries):
+    """Editing an operator module re-keys every query that reaches it
+    through an import — including imports inside the query function —
+    and leaves a query that never reaches it alone."""
+    from dss_nlp_ingestion_spark import plans
+
+    before = {n: plans._query_code_hash(n) for n in plans.QUERIES}
+    real = plans._module_source
+    monkeypatch.setattr(
+        plans,
+        "_module_source",
+        lambda m: real(m) + ("\n# edited\n" if m == module else ""),
+    )
+    after = {n: plans._query_code_hash(n) for n in plans.QUERIES}
+    for name in queries:
+        assert after[name] != before[name], name
+    assert after["q1_pricing_summary"] == before["q1_pricing_summary"]

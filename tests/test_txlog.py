@@ -475,6 +475,24 @@ def test_merge_into_table_upserts_and_inserts(spark):
     assert txlog.history(path)[-1]["op"] == "merge"
 
 
+def test_merge_into_table_keeps_caller_cache(spark):
+    """A source the caller persisted is still cached after the merge;
+    a source the merge cached itself is released."""
+    path = tempfile.mkdtemp(prefix="dss_txmerge_")
+    txlog.create_table(_orders_tbl(spark), path, stats_cols=["k"])
+    cached = spark.createDataFrame(
+        [(3, "upd", 999.0)], "k long, c string, p double"
+    ).persist()
+    plain = spark.createDataFrame([(4, "upd", 1.0)], "k long, c string, p double")
+    try:
+        txlog.merge_into_table(spark, path, cached, ["k"])
+        txlog.merge_into_table(spark, path, plain, ["k"])
+        assert cached.is_cached and cached.storageLevel.useMemory
+        assert not plain.is_cached
+    finally:
+        cached.unpersist()
+
+
 def test_merge_into_table_rewrites_only_matching_files(spark):
     """Files whose key range can't match the source are neither
     scanned for the COW join nor rewritten — their physical files
