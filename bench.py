@@ -512,7 +512,23 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if SOLO_QUERIES:
-        _solo_main()
-    else:
-        main()
+    # One temp root per run, as tests/conftest.py::tmp_root: ``tempfile``
+    # hands it out, so every table and checkpoint the queries make lands
+    # under it; child processes (the solo pass) inherit it through
+    # TMPDIR. It is removed at exit, SIGTERM included, after the Spark
+    # session has stopped.
+    import shutil
+    import signal
+    import tempfile
+
+    _root = tempfile.mkdtemp(prefix="dss_bench_")
+    tempfile.tempdir = _root
+    os.environ["TMPDIR"] = _root
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    try:
+        if SOLO_QUERIES:
+            _solo_main()
+        else:
+            main()
+    finally:
+        shutil.rmtree(_root, ignore_errors=True)

@@ -57,7 +57,15 @@ def cosine(a: Column, b: Column) -> Column:
     neither fuse nor reassociate — pinned per element by
     tests/test_pq_adc_kernels.py) at 10-100x the throughput. This is
     the hot kernel of every candidate-scoring join (bucketed near-dup
-    pairs, LSH/IVF probes, brute-force baselines)."""
+    pairs, LSH/IVF probes, brute-force baselines).
+
+    The column is marked ``asNondeterministic()`` although it is pure:
+    the marker pins ONE evaluation per row, because the optimizer
+    otherwise copies the UDF under a filter or join key pushed below
+    the projection. Callers must therefore project it into a column
+    first and filter, group or join on that column (Spark refuses a
+    non-deterministic expression inside a join condition), and get no
+    filter pushdown through it; two calls are two evaluations."""
     global _COSINE_ARROW_UDF
     if _COSINE_ARROW_UDF is None:
         import numpy as np
@@ -289,7 +297,15 @@ def hyperplane_bucket(vec_col: Column, n_planes: int = 8, dim: int = 64) -> Colu
     :func:`plane_weight` — Arrow exact-fold kernel,
     bit-identical to :func:`hyperplane_bucket_expr` (the projections
     are the same component-sequential IEEE folds, so every sign bit
-    agrees; pinned by tests/test_pq_adc_kernels.py)."""
+    agrees; pinned by tests/test_pq_adc_kernels.py).
+
+    The column is marked ``asNondeterministic()`` although it is pure:
+    the marker pins ONE evaluation per row, because the optimizer
+    otherwise copies the UDF under a filter or join key pushed below
+    the projection. Callers must therefore project it into a column
+    first and filter, group or join on that column (Spark refuses a
+    non-deterministic expression inside a join condition), and get no
+    filter pushdown through it; two calls are two evaluations."""
     key = (n_planes, dim)
     if key not in _HYPERPLANE_UDFS:
         import numpy as np
@@ -652,7 +668,15 @@ def centroid_topk_exact_udf(cent_rows: list, n_best: int):
     ``acc = acc + x_j * c_j`` over j — which is bit-identical to
     ``dot_exact`` / the oracle's list_reduce chain, so the selected
     list set (and any cut at n_best) is hash-gate safe, at Arrow
-    speed instead of interpreted higher-order-function cost."""
+    speed instead of interpreted higher-order-function cost.
+
+    The returned UDF is marked ``asNondeterministic()`` although it is pure:
+    the marker pins ONE evaluation per row, because the optimizer
+    otherwise copies the UDF under a filter or join key pushed below
+    the projection. Callers must therefore project it into a column
+    first and filter, group or join on that column (Spark refuses a
+    non-deterministic expression inside a join condition), and get no
+    filter pushdown through it; two calls are two evaluations."""
     import math
 
     import numpy as np

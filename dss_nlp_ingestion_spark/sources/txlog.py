@@ -24,6 +24,15 @@ log-structured core those formats share, pure stdlib + Spark:
   orphan data files (cleaned by ``vacuum``), never a torn table.
 - ``read(..., version=N)`` is time travel; ``history`` lists commits.
 
+One fold, one commit loop: every reader and writer takes a version's
+live files, per-file stats and rename chain from ONE call,
+:func:`_fold`, never from separate replays. The fold resumes from the
+newest checkpoint at or below the version (see :func:`checkpoint_log`)
+and replays only the entries after it; a checkpoint that is torn or
+lacks any of ``live`` / ``renames`` is ignored, because a checkpoint is
+only an optimization. Every commit that claims ``head + 1`` goes
+through :func:`_commit_next`.
+
 Scale note: the log is O(commits) tiny JSON files; state folding is
 driver-side metadata work (like Delta's log replay), while data stays
 distributed parquet — readers hand Spark an explicit file list, so
@@ -38,6 +47,7 @@ import re
 import time
 import uuid
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -94,18 +104,40 @@ def _read_entry(path: str, version: int) -> dict:
     raise AssertionError("unreachable")
 
 
-def snapshot_files(path: str, version: int | None = None) -> list[str]:
-    """Data files visible at ``version`` (latest when None): fold the
-    log's add/remove sets in commit order."""
+class _Snapshot(NamedTuple):
+    """One version's folded log state, as :func:`_fold` returns it."""
+
+    path: str
+    version: int  # -1 when the table has no commits yet
+    live: list[str]  # logged (stored) names of the live files, commit order
+    stats: dict  # stored name -> {col: [min, max]}, live files only
+    renames: list[tuple[str, str]]  # (old, new) rename chain, commit order
+
+    @property
+    def files(self) -> list[str]:
+        """Live files as paths. A shallow clone logs another table's
+        files by absolute path, which os.path.join passes through."""
+        return [os.path.join(self.path, "data", f) for f in self.live]
+
+
+def _fold(path: str, version: int | None = None) -> _Snapshot:
+    """THE log replay: the live files, their logged stats and the
+    rename chain at ``version`` (head when None), in one pass over the
+    entries after the newest usable checkpoint at or below it."""
     versions = _versions(path)
     if version is not None:
         versions = [v for v in versions if v <= version]
         if not versions or versions[-1] != version:
             raise ValueError(f"version {version} does not exist at {path}")
+    head = versions[-1] if versions else -1
     live: dict[str, None] = {}
-    ck = _latest_checkpoint(path, versions[-1] if versions else None)
+    stats: dict[str, dict] = {}
+    renames: list[tuple[str, str]] = []
+    ck = _latest_checkpoint(path, head)
     if ck is not None:
         live = dict.fromkeys(ck[1]["live"])
+        stats = dict(ck[1].get("stats", {}))
+        renames = [tuple(r) for r in ck[1]["renames"]]
         versions = [v for v in versions if v > ck[0]]
     for v in versions:
         e = _read_entry(path, v)
@@ -113,7 +145,17 @@ def snapshot_files(path: str, version: int | None = None) -> list[str]:
             live[f] = None
         for f in e.get("remove", []):
             live.pop(f, None)
-    return [os.path.join(path, "data", f) for f in live]
+        stats.update(e.get("stats", {}))
+        if e.get("rename"):
+            renames.append(tuple(e["rename"]))
+    return _Snapshot(
+        path, head, list(live), {f: stats[f] for f in live if f in stats}, renames
+    )
+
+
+def snapshot_files(path: str, version: int | None = None) -> list[str]:
+    """Data files visible at ``version`` (latest when None)."""
+    return _fold(path, version).files
 
 
 def history(path: str) -> list[dict]:
@@ -202,6 +244,18 @@ def _try_commit(path: str, version: int, entry: dict) -> bool:
     return True
 
 
+def _commit_next(path: str, entry_at, what: str, max_retries: int = 10) -> int:
+    """The one ``head + 1`` commit loop: claim the version after the
+    current head with ``entry_at(head)``, and on a lost O_EXCL race
+    retry against the new head. ``entry_at`` may raise to abort, e.g.
+    when a concurrent commit invalidated a rewrite's base."""
+    for _ in range(max_retries):
+        head = (_versions(path) or [-1])[-1]
+        if _try_commit(path, head + 1, entry_at(head)):
+            return head + 1
+    raise TxConflictError(f"{what} lost {max_retries} commit races at {path}")
+
+
 def create_table(
     df: DataFrame, path: str, stats_cols: list[str] | None = None
 ) -> int:
@@ -234,21 +288,34 @@ def append(
     write, preserving the invariant that every data file carries the
     PHYSICAL (pre-rename) schema all snapshot readers resolve from
     (r6 advisor finding: a read()->append() round trip after
-    rename_column otherwise mixes generations and breaks
-    _apply_renames with duplicate columns)."""
-    renames = _folded_renames(path)  # ONE metadata walk per append
-    df = _unapply_renames_checked(df, path, renames=renames)
+    rename_column otherwise mixes generations and breaks the rename
+    resolution with duplicate columns)."""
+    return _append(df, path, stats_cols, max_retries)
+
+
+def _append(
+    df: DataFrame,
+    path: str,
+    stats_cols: list[str] | None,
+    max_retries: int,
+    txn: tuple[str, int] | None = None,
+    renames: list | None = None,
+) -> int:
+    """Body of :func:`append`; ``txn`` = (app_id, epoch) stamps the
+    commit (:func:`append_txn`). ``renames`` is the chain when the
+    caller already folded the log."""
+    if renames is None:
+        renames = _fold(path).renames
+    df = _rename_to(df, _unapply_renames_checked(df.columns, path, renames))
     files = _write_data_files(df, path)
     entry: dict = {"op": "append", "add": files, "remove": []}
+    if txn is not None:
+        entry["txn"] = {"app": txn[0], "epoch": int(txn[1])}
     if stats_cols:
         entry["stats"] = _collect_file_stats(
-            path, files, _physical_stats_cols(path, stats_cols, renames=renames)
+            path, files, _physical_names(stats_cols, renames)
         )
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"append lost {max_retries} commit races at {path}")
+    return _commit_next(path, lambda head: entry, "append", max_retries)
 
 
 def rewrite(
@@ -266,7 +333,8 @@ def rewrite(
     ``expect_version`` AND removed one of the files being replaced,
     the base snapshot is stale -> TxConflictError (caller re-reads).
     Concurrent APPENDS don't conflict (disjoint files) — the rewrite
-    commits on top of them. ``txn`` = (app_id, epoch) stamps the
+    commits on top of them (ten lost version races in a row also
+    raise ``TxConflictError``). ``txn`` = (app_id, epoch) stamps the
     commit for :func:`last_committed_txn` replay detection."""
     files = _write_data_files(df, path)
     entry: dict = {"op": op, "add": files, "remove": list(replace)}
@@ -274,21 +342,20 @@ def rewrite(
         entry["txn"] = {"app": txn[0], "epoch": int(txn[1])}
     if stats_cols:
         entry["stats"] = _collect_file_stats(path, files, stats_cols)
-    while True:
-        head = (_versions(path) or [-1])[-1]
+
+    def entry_at(head: int) -> dict:
         if head > expect_version:
             # someone committed since our snapshot: conflict iff they
             # removed any file we're replacing
-            still_live = {
-                _stored_name(path, f) for f in snapshot_files(path)
-            }
+            still_live = set(_fold(path, head).live)
             gone = [f for f in replace if f not in still_live]
             if gone:
                 raise TxConflictError(
                     f"rewrite base is stale: {gone} removed by a concurrent commit"
                 )
-        if _try_commit(path, head + 1, entry):
-            return head + 1
+        return entry
+
+    return _commit_next(path, entry_at, op)
 
 
 def read(
@@ -306,18 +373,39 @@ def read(
     the same reader-side resolution Delta/Iceberg perform from their
     logged schemas. Footer merging is a metadata job over the live
     file list only, not a data scan."""
-    if version is not None and version < _vacuum_horizon(path):
+    return _scan(spark, _read_snapshot(path, version), merge_schema=merge_schema)
+
+
+def _read_snapshot(path: str, version: int | None = None) -> _Snapshot:
+    """The fold behind :func:`read`, the rewrite jobs and the
+    ``format("txlog")`` reader: refuses a version below the vacuum
+    horizon (its data files were reclaimed) and an empty snapshot."""
+    horizon = _vacuum_horizon(path)
+    if version is not None and version < horizon:
         raise ValueError(
             f"version {version} is below the vacuum horizon "
-            f"{_vacuum_horizon(path)} at {path}: its data files were reclaimed"
+            f"{horizon} at {path}: its data files were reclaimed"
         )
-    files = snapshot_files(path, version)
-    if not files:
+    snap = _fold(path, version)
+    if not snap.live:
         raise ValueError(f"empty snapshot at {path} version={version}")
+    return snap
+
+
+def _scan(
+    spark: SparkSession,
+    snap: _Snapshot,
+    files: list[str] | None = None,
+    merge_schema: bool = True,
+) -> DataFrame:
+    """Parquet scan of ``files`` (default: every live file) resolved to
+    the snapshot's LOGICAL schema — every snapshot reader goes through
+    it, so none exposes physical (pre-rename) column names."""
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return _apply_renames(reader.parquet(*files), path, version)
+    df = reader.parquet(*(snap.files if files is None else files))
+    return _rename_to(df, _logical_names(df.columns, snap.renames))
 
 
 def compact(
@@ -339,20 +427,16 @@ def compact(
     of the same base raises ``TxConflictError`` and is retried here
     against the fresh snapshot."""
     for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        rel = [_stored_name(path, f) for f in live]
-        # read() yields the LOGICAL schema; fold back so compacted
+        snap = _read_snapshot(path)
+        # _scan yields the LOGICAL schema; fold back so compacted
         # files keep the physical-schema invariant (a concurrent
         # append of a pre-rename producer would otherwise mix
         # generations under mergeSchema).
-        df = _unapply_renames(
-            read(spark, path, version=head), path, head
-        ).coalesce(target_files)
+        df = _unapply_renames(_scan(spark, snap), snap.renames).coalesce(target_files)
         try:
-            return rewrite(df, path, rel, expect_version=head, op="compact")
+            return rewrite(
+                df, path, snap.live, expect_version=snap.version, op="compact"
+            )
         except TxConflictError:
             continue
     raise TxConflictError(f"compaction lost {max_retries} rewrite races at {path}")
@@ -399,17 +483,28 @@ def added_files_between(path: str, v_from: int, v_to: int) -> list[str]:
     """Data files added by commits in (v_from, v_to] and still live at
     v_to — the delta an incremental refresh scans instead of the whole
     table (incremental view maintenance over the log)."""
-    before = set(snapshot_files(path, v_from))
-    after = snapshot_files(path, v_to)
-    return [f for f in after if f not in before]
+    return _file_diff(path, v_from, v_to)[0]
 
 
 def removed_files_between(path: str, v_from: int, v_to: int) -> list[str]:
     """Data files live at v_from but no longer live at v_to — the
     complement of :func:`added_files_between`; together they are the
     file-level change feed between two snapshots."""
-    after = set(snapshot_files(path, v_to))
-    return [f for f in snapshot_files(path, v_from) if f not in after]
+    return _file_diff(path, v_from, v_to)[1]
+
+
+def _file_diff(
+    path: str, v_from: int, v_to: int
+) -> tuple[list[str], list[str], _Snapshot]:
+    """(files added, files removed, snapshot at v_to) between two
+    versions, from one fold of each."""
+    before, after = _fold(path, v_from), _fold(path, v_to)
+    was, now = set(before.live), set(after.live)
+    return (
+        [os.path.join(path, "data", f) for f in after.live if f not in was],
+        [os.path.join(path, "data", f) for f in before.live if f not in now],
+        after,
+    )
 
 
 def net_changes(
@@ -432,30 +527,17 @@ def net_changes(
 
     if v_to is None:
         v_to = (_versions(path) or [-1])[-1]
-    added = added_files_between(path, v_from, v_to)
-    removed = removed_files_between(path, v_from, v_to)
-    parts = []
+    added, removed, snap = _file_diff(path, v_from, v_to)
     # Rename resolution (as in read()): a pre-rename removed file and
     # a post-rename added file carry different PHYSICAL names for the
-    # same logical column; fold the chain on each side so copied rows
-    # align under unionByName and cancel, and the feed exposes the
-    # logical schema consumers filter on.
-    if added:
-        parts.append(
-            _apply_renames(
-                spark.read.option("mergeSchema", "true").parquet(*added),
-                path,
-                v_to,
-            ).withColumn("_sign", F.lit(1).cast("long"))
-        )
-    if removed:
-        parts.append(
-            _apply_renames(
-                spark.read.option("mergeSchema", "true").parquet(*removed),
-                path,
-                v_to,
-            ).withColumn("_sign", F.lit(-1).cast("long"))
-        )
+    # same logical column; fold the v_to chain on each side so copied
+    # rows align under unionByName and cancel, and the feed exposes
+    # the logical schema consumers filter on.
+    parts = [
+        _scan(spark, snap, files).withColumn("_sign", F.lit(sign).cast("long"))
+        for files, sign in ((added, 1), (removed, -1))
+        if files
+    ]
     if not parts:
         raise ValueError(f"no changes between v{v_from} and v{v_to} at {path}")
     delta = parts[0]
@@ -493,42 +575,11 @@ def snapshot_row_count(path: str, version: int | None = None) -> int:
     )
 
 
-def _fold_live_and_stats(
-    path: str, version: int | None = None
-) -> tuple[list[str], dict]:
-    """ONE pass over the log reading each entry once: (live relative
-    files in commit order, {rel -> {col: [min, max]}} for live files).
-    snapshot_files + snapshot_file_stats separately would read every
-    entry three times — on a long-lived table that triples the
-    driver's metadata I/O per planned query."""
-    versions = _versions(path)
-    if version is not None:
-        versions = [v for v in versions if v <= version]
-        if not versions or versions[-1] != version:
-            raise ValueError(f"version {version} does not exist at {path}")
-    live: dict[str, None] = {}
-    stats: dict[str, dict] = {}
-    ck = _latest_checkpoint(path, versions[-1] if versions else None)
-    if ck is not None:
-        live = dict.fromkeys(ck[1]["live"])
-        stats = dict(ck[1].get("stats", {}))
-        versions = [v for v in versions if v > ck[0]]
-    for v in versions:
-        e = _read_entry(path, v)
-        for f in e.get("add", []):
-            live[f] = None
-        for f in e.get("remove", []):
-            live.pop(f, None)
-        for rel, per in e.get("stats", {}).items():
-            stats[rel] = per
-    return list(live), {rel: per for rel, per in stats.items() if rel in live}
-
-
 def snapshot_file_stats(path: str, version: int | None = None) -> dict:
     """{relative file -> {col: [min, max]}} for the snapshot's live
     files, folded from the log entries' logged stats (files committed
     without stats simply have no entry — they can never be pruned)."""
-    return _fold_live_and_stats(path, version)[1]
+    return _fold(path, version).stats
 
 
 def plan_pruned_files(
@@ -549,23 +600,27 @@ def plan_pruned_files(
     ``col`` may be a LOGICAL (post-rename) or physical name: stats
     are consulted under every physical name that folds to it, so
     pruning keeps working across ``rename_column``."""
-    live, stats = _fold_live_and_stats(path, version)
-    cands = _physical_candidates(path, col, version)
+    return _prune(_fold(path, version), {col: (lo, hi)})
+
+
+def _prune(snap: _Snapshot, ranges: dict) -> tuple[list[str], int]:
+    """The one overlap test: keep a live file unless, for some
+    ``{col: (lo, hi)}`` range, its logged [min, max] under a physical
+    name of ``col`` lies wholly outside it. Files and columns without
+    stats are kept. Returns (files to scan, files skipped)."""
+    names = {col: _physical_candidates(col, snap.renames) for col in ranges}
     keep, skipped = [], 0
-    for rel in live:
-        per_file = stats.get(rel, {})
-        disjoint = any(
+    for rel, f in zip(snap.live, snap.files):
+        per_file = snap.stats.get(rel, {})
+        if any(
             per is not None
-            and (
-                (hi is not None and per[0] > hi)
-                or (lo is not None and per[1] < lo)
-            )
-            for per in (per_file.get(name) for name in cands)
-        )
-        if disjoint:
+            and ((hi is not None and per[0] > hi) or (lo is not None and per[1] < lo))
+            for col, (lo, hi) in ranges.items()
+            for per in (per_file.get(name) for name in names[col])
+        ):
             skipped += 1
-            continue
-        keep.append(os.path.join(path, "data", rel))
+        else:
+            keep.append(f)
     return keep, skipped
 
 
@@ -577,27 +632,16 @@ def read_pruned(
     hi=None,
     version: int | None = None,
 ) -> DataFrame:
-    """Snapshot read planned through :func:`plan_pruned_files`. The
-    range predicate is ALSO applied as a real filter (pruning is a
-    superset guarantee, the filter is the semantics).
+    """Snapshot read planned through :func:`plan_pruned_files` — the
+    one-range form of :func:`read_pruned_multi`. The range predicate
+    is ALSO applied as a real filter (pruning is a superset guarantee,
+    the filter is the semantics).
 
     ``col`` is the LOGICAL (post-rename) name: pruning consults the
     logged stats under every physical name that folds to it, and the
     returned DataFrame carries the same rename-resolved schema as
     :func:`read`."""
-    from pyspark.sql import functions as F
-
-    files, _ = plan_pruned_files(path, col, lo, hi, version)
-    if not files:
-        raise ValueError(f"no files overlap [{lo}, {hi}] at {path}")
-    df = _apply_renames(
-        spark.read.option("mergeSchema", "true").parquet(*files), path, version
-    )
-    if lo is not None:
-        df = df.filter(F.col(col) >= lo)
-    if hi is not None:
-        df = df.filter(F.col(col) <= hi)
-    return df
+    return read_pruned_multi(spark, path, {col: (lo, hi)}, version)
 
 
 def version_at(path: str, ts: float) -> int:
@@ -675,12 +719,8 @@ def optimize_zorder(
     from pyspark.sql import functions as F
 
     for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        rel = [_stored_name(path, f) for f in live]
-        df = read(spark, path, version=head)
+        snap = _read_snapshot(path)
+        df = _scan(spark, snap)
         stats = df.agg(
             *[F.min(c).alias(f"_min_{c}") for c in zorder_cols],
             *[F.max(c).alias(f"_max_{c}") for c in zorder_cols],
@@ -702,12 +742,12 @@ def optimize_zorder(
         )
         try:
             return rewrite(
-                _unapply_renames(clustered, path, head),
+                _unapply_renames(clustered, snap.renames),
                 path,
-                rel,
-                expect_version=head,
+                snap.live,
+                expect_version=snap.version,
                 op="zorder",
-                stats_cols=_physical_stats_cols(path, list(zorder_cols), head),
+                stats_cols=_physical_names(zorder_cols, snap.renames),
             )
         except TxConflictError:
             continue
@@ -730,12 +770,9 @@ def vacuum_retain(path: str, horizon_version: int) -> dict:
     versions = _versions(path)
     if horizon_version not in versions:
         raise ValueError(f"horizon {horizon_version} is not a version at {path}")
-    keep: set[str] = set()
-    for v in versions:
-        if v >= horizon_version:
-            keep.update(
-                _stored_name(path, f) for f in snapshot_files(path, v)
-            )
+    # A file is live in some snapshot >= the horizon iff it is live AT
+    # the horizon or a later commit adds it.
+    keep = set(_fold(path, horizon_version).live)
     # Only files the LOG references are candidates: a staged-but-not-
     # yet-committed file of an in-flight writer is invisible to the
     # log and MUST survive (deleting it would tear the table the
@@ -743,7 +780,10 @@ def vacuum_retain(path: str, horizon_version: int) -> dict:
     # vacuum()'s job, to be run only when no writers are active.
     referenced: set[str] = set()
     for v in versions:
-        referenced.update(_read_entry(path, v).get("add", []))
+        added = _read_entry(path, v).get("add", [])
+        referenced.update(added)
+        if v > horizon_version:
+            keep.update(added)
     removed = []
     data_root = os.path.join(path, "data")
     for rel in sorted(referenced - keep):
@@ -823,11 +863,10 @@ def snapshot_col_minmax(path: str, col: str, version: int | None = None):
     without scanning data pages. Returns (min, max)."""
     import pyarrow.parquet as pq
 
-    stats = snapshot_file_stats(path, version)
+    snap = _fold(path, version)
     lo = hi = None
-    for f in snapshot_files(path, version):
-        rel = _stored_name(path, f)
-        per = stats.get(rel, {}).get(col)
+    for rel, f in zip(snap.live, snap.files):
+        per = snap.stats.get(rel, {}).get(col)
         if per is None:
             if pq.ParquetFile(f).metadata.num_rows == 0:
                 continue  # empty part file: contributes nothing
@@ -935,176 +974,133 @@ def merge_into_table(
     if owned:
         source = source.persist()
     try:
-        return _merge_into_table_body(
-            spark, path, source, key_cols, delete_col, insert_only,
-            stats_cols, max_retries, txn, null_safe, F,
-            merge_into, merge_into_with_delete,
+        last_err: TxConflictError | None = None
+        for _ in range(max_retries):
+            snap = _fold(path)
+            if snap.version < 0:
+                raise ValueError(f"no tx table at {path}")
+            if txn is not None and last_committed_txn(path, txn[0]) >= txn[1]:
+                return {
+                    "version": snap.version,
+                    "files_touched": 0,
+                    "files_total": 0,
+                    "files_skipped_by_stats": 0,
+                    "appended": False,
+                    "skipped": True,
+                }
+            candidates, skipped = snap.files, 0
+            if len(key_cols) == 1:
+                key = key_cols[0]
+                # One aggregate job yields the pruning bounds AND (for
+                # the null-safe path) whether any source key is NULL —
+                # min/max ignore NULLs, so NULL presence needs its own
+                # flag.
+                bounds = source.agg(
+                    F.min(key).alias("lo"),
+                    F.max(key).alias("hi"),
+                    F.max(F.col(key).isNull().cast("int")).alias("has_null"),
+                ).collect()[0]
+                if bounds["lo"] is not None and not (
+                    null_safe and bounds["has_null"]
+                ):
+                    candidates, skipped = _prune(
+                        snap, {key: (bounds["lo"], bounds["hi"])}
+                    )
+            res = {
+                "version": snap.version,
+                "files_touched": 0,
+                "files_total": len(snap.live),
+                "files_skipped_by_stats": skipped,
+                "appended": False,
+                "skipped": False,
+            }
+            touched: list[str] = []
+            if candidates:
+                # Source keys target the LOGICAL schema, which _scan
+                # resolves like every other snapshot reader.
+                cand_keys = (
+                    _scan(spark, snap, candidates)
+                    .withColumn("_f", F.input_file_name())
+                    .select(*key_cols, "_f")
+                )
+                src_keys = source.select(
+                    *[F.col(k).alias(f"_sk_{k}") for k in key_cols]
+                ).distinct()
+                sem = reduce(
+                    lambda a, b: a & b,
+                    [
+                        cand_keys[k].eqNullSafe(src_keys[f"_sk_{k}"])
+                        if null_safe
+                        else cand_keys[k] == src_keys[f"_sk_{k}"]
+                        for k in key_cols
+                    ],
+                )
+                touched = _touched_files(cand_keys.join(src_keys, sem, "left_semi"))
+            if not touched:
+                # No key matches anywhere: pure insert, commutes with
+                # every concurrent commit -> blind retryable append
+                # (folded to the physical schema like any append).
+                inserts = source
+                if delete_col is not None:
+                    inserts = inserts.filter(
+                        ~F.coalesce(F.col(delete_col), F.lit(False))
+                    ).drop(delete_col)
+                if inserts.isEmpty():
+                    if txn is not None:
+                        # the watermark must still advance: commit a
+                        # metadata-only stamped entry, else CDC/matview
+                        # consumers re-scan an ever-growing source window
+                        res["version"] = _append(
+                            inserts.limit(0), path, None, 10, txn, snap.renames
+                        )
+                    return res
+                res["version"] = _append(
+                    inserts, path, stats_cols, 10, txn, snap.renames
+                )
+                res["appended"] = True
+                return res
+            target_touched = _scan(spark, snap, touched)
+            if delete_col is not None:
+                merged = merge_into_with_delete(
+                    target_touched, source, key_cols, delete_col,
+                    null_safe=null_safe,
+                )
+            else:
+                merged = merge_into(
+                    target_touched, source, key_cols, insert_only=insert_only,
+                    null_safe=null_safe,
+                )
+            try:
+                res["version"] = rewrite(
+                    _unapply_renames(merged, snap.renames),
+                    path,
+                    [_stored_name(path, f) for f in touched],
+                    expect_version=snap.version,
+                    op="merge",
+                    stats_cols=_physical_names(stats_cols, snap.renames),
+                    txn=txn,
+                )
+            except TxConflictError as exc:
+                last_err = exc
+                continue
+            res["files_touched"] = len(touched)
+            return res
+        raise TxConflictError(
+            f"merge lost {max_retries} commit races at {path}: {last_err}"
         )
     finally:
         if owned:
             source.unpersist()
 
 
-def _merge_into_table_body(
-    spark, path, source, key_cols, delete_col, insert_only,
-    stats_cols, max_retries, txn, null_safe, F,
-    merge_into, merge_into_with_delete,
-) -> dict:
-    last_err: TxConflictError | None = None
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        if txn is not None and last_committed_txn(path, txn[0]) >= txn[1]:
-            return {
-                "version": head,
-                "files_touched": 0,
-                "files_total": 0,
-                "files_skipped_by_stats": 0,
-                "appended": False,
-                "skipped": True,
-            }
-        live = snapshot_files(path, head)
-        skipped = 0
-        candidates = live
-        if len(key_cols) == 1:
-            key = key_cols[0]
-            # One aggregate job yields the pruning bounds AND (for the
-            # null-safe path) whether any source key is NULL — min/max
-            # ignore NULLs, so NULL presence needs its own flag.
-            bounds = source.agg(
-                F.min(key).alias("lo"),
-                F.max(key).alias("hi"),
-                F.max(F.col(key).isNull().cast("int")).alias("has_null"),
-            ).collect()[0]
-            source_has_null_key = bool(bounds["has_null"])
-            if bounds["lo"] is not None and not (
-                null_safe and source_has_null_key
-            ):
-                candidates, skipped = plan_pruned_files(
-                    path, key, bounds["lo"], bounds["hi"], version=head
-                )
-        touched: list[str] = []
-        if candidates:
-            # Source keys target the LOGICAL schema — resolve the
-            # rename chain before matching, like every other snapshot
-            # reader (r6 review finding).
-            cand_keys = _apply_renames(
-                spark.read.option("mergeSchema", "true").parquet(*candidates)
-                .withColumn("_f", F.input_file_name()),
-                path,
-                head,
-            ).select(*key_cols, "_f")
-            src_keys = source.select(
-                *[F.col(k).alias(f"_sk_{k}") for k in key_cols]
-            ).distinct()
-            if null_safe:
-                sem = reduce(
-                    lambda a, b: a & b,
-                    [
-                        cand_keys[k].eqNullSafe(src_keys[f"_sk_{k}"])
-                        for k in key_cols
-                    ],
-                )
-            else:
-                sem = reduce(
-                    lambda a, b: a & b,
-                    [cand_keys[k] == src_keys[f"_sk_{k}"] for k in key_cols],
-                )
-            # input_file_name() yields file: URIs; the log stores
-            # plain paths — normalize before diffing against it.
-            touched = [
-                re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
-                for r in cand_keys.join(src_keys, sem, "left_semi")
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
-        if not touched:
-            # No key matches anywhere: pure insert, commutes with
-            # every concurrent commit -> blind retryable append.
-            # Fold back to the PHYSICAL schema so appended data files
-            # keep the invariant every snapshot reader resolves from.
-            inserts = _unapply_renames(source, path, head)
-            if delete_col is not None:
-                inserts = inserts.filter(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                ).drop(delete_col)
-            if inserts.isEmpty():
-                if txn is not None:
-                    # the watermark must still advance: commit a
-                    # metadata-only stamped entry, else CDC/matview
-                    # consumers re-scan an ever-growing source window
-                    v = append_txn(inserts.limit(0), path, txn[0], txn[1])
-                    return {
-                        "version": v if v is not None else head,
-                        "files_touched": 0,
-                        "files_total": len(live),
-                        "files_skipped_by_stats": skipped,
-                        "appended": False,
-                        "skipped": v is None,
-                    }
-                return {
-                    "version": head,
-                    "files_touched": 0,
-                    "files_total": len(live),
-                    "files_skipped_by_stats": skipped,
-                    "appended": False,
-                    "skipped": False,
-                }
-            phys_stats = _physical_stats_cols(path, stats_cols, head)
-            if txn is not None:
-                v = append_txn(
-                    inserts, path, txn[0], txn[1], stats_cols=phys_stats
-                )
-            else:
-                v = append(inserts, path, stats_cols=phys_stats)
-            return {
-                "version": v,
-                "files_touched": 0,
-                "files_total": len(live),
-                "files_skipped_by_stats": skipped,
-                "appended": True,
-                "skipped": v is None,
-            }
-        target_touched = _apply_renames(
-            spark.read.option("mergeSchema", "true").parquet(*touched), path, head
-        )
-        if delete_col is not None:
-            merged = merge_into_with_delete(
-                target_touched, source, key_cols, delete_col,
-                null_safe=null_safe,
-            )
-        else:
-            merged = merge_into(
-                target_touched, source, key_cols, insert_only=insert_only,
-                null_safe=null_safe,
-            )
-        rel = [_stored_name(path, f) for f in touched]
-        try:
-            v = rewrite(
-                _unapply_renames(merged, path, head),
-                path,
-                rel,
-                expect_version=head,
-                op="merge",
-                stats_cols=_physical_stats_cols(path, stats_cols, head),
-                txn=txn,
-            )
-        except TxConflictError as exc:
-            last_err = exc
-            continue
-        return {
-            "version": v,
-            "files_touched": len(touched),
-            "files_total": len(live),
-            "files_skipped_by_stats": skipped,
-            "appended": False,
-            "skipped": False,
-        }
-    raise TxConflictError(
-        f"merge lost {max_retries} commit races at {path}: {last_err}"
-    )
+def _touched_files(df: DataFrame) -> list[str]:
+    """Distinct data files (the ``_f`` input_file_name() column) that
+    hold ``df``'s rows. input_file_name() yields file: URIs; the log
+    stores plain paths — normalize before diffing against it."""
+    return [
+        re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
+        for r in df.select("_f").distinct().collect()
+    ]
 
 
 def last_committed_txn(path: str, app_id: str) -> int:
@@ -1138,24 +1134,7 @@ def append_txn(
     column names before the write."""
     if last_committed_txn(path, app_id) >= epoch:
         return None
-    renames = _folded_renames(path)  # ONE metadata walk per append
-    df = _unapply_renames_checked(df, path, renames=renames)
-    files = _write_data_files(df, path)
-    entry: dict = {
-        "op": "append",
-        "add": files,
-        "remove": [],
-        "txn": {"app": app_id, "epoch": int(epoch)},
-    }
-    if stats_cols:
-        entry["stats"] = _collect_file_stats(
-            path, files, _physical_stats_cols(path, stats_cols, renames=renames)
-        )
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"append_txn lost {max_retries} commit races at {path}")
+    return _append(df, path, stats_cols, max_retries, txn=(app_id, epoch))
 
 
 def delete_from_table(
@@ -1179,66 +1158,10 @@ def delete_from_table(
     the oracle)."""
     from pyspark.sql import functions as F
 
-    last_err: TxConflictError | None = None
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        skipped = 0
-        candidates = live
-        if prune_col is not None:
-            candidates, skipped = plan_pruned_files(
-                path, prune_col, prune_lo, prune_hi, version=head
-            )
-        touched: list[str] = []
-        if candidates:
-            # Predicates are written against the LOGICAL schema:
-            # resolve the rename chain before evaluating (r5 advisor —
-            # raw parquet exposes physical names).
-            touched = [
-                re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
-                for r in _apply_renames(
-                    spark.read.option("mergeSchema", "true").parquet(*candidates)
-                    .withColumn("_f", F.input_file_name()),
-                    path,
-                    head,
-                )
-                .filter(F.expr(predicate))
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
-        if not touched:
-            return {
-                "version": head,
-                "files_touched": 0,
-                "files_total": len(live),
-                "files_skipped_by_stats": skipped,
-            }
-        kept = _unapply_renames(
-            _apply_renames(spark.read.option("mergeSchema", "true").parquet(*touched), path, head)
-            .filter(~F.expr(predicate)),
-            path,
-            head,
-        )
-        rel = [_stored_name(path, f) for f in touched]
-        try:
-            v = rewrite(
-                kept, path, rel, expect_version=head, op="delete",
-                stats_cols=_physical_stats_cols(path, stats_cols, head),
-            )
-        except TxConflictError as exc:
-            last_err = exc
-            continue
-        return {
-            "version": v,
-            "files_touched": len(touched),
-            "files_total": len(live),
-            "files_skipped_by_stats": skipped,
-        }
-    raise TxConflictError(
-        f"delete lost {max_retries} commit races at {path}: {last_err}"
+    return _cow_rewrite(
+        spark, path, "delete", predicate,
+        lambda tgt: tgt.filter(~F.expr(predicate)),
+        prune_col, prune_lo, prune_hi, stats_cols, max_retries,
     )
 
 
@@ -1259,43 +1182,7 @@ def update_table(
     rows in those files are carried unchanged)."""
     from pyspark.sql import functions as F
 
-    last_err: TxConflictError | None = None
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        live = snapshot_files(path, head)
-        skipped = 0
-        candidates = live
-        if prune_col is not None:
-            candidates, skipped = plan_pruned_files(
-                path, prune_col, prune_lo, prune_hi, version=head
-            )
-        touched: list[str] = []
-        if candidates:
-            # Predicates/SET expressions target the LOGICAL schema —
-            # resolve the rename chain before evaluating.
-            touched = [
-                re.sub(r"^file:/{0,2}(?=/)", "", r["_f"])
-                for r in _apply_renames(
-                    spark.read.option("mergeSchema", "true").parquet(*candidates)
-                    .withColumn("_f", F.input_file_name()),
-                    path,
-                    head,
-                )
-                .filter(F.expr(predicate))
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
-        if not touched:
-            return {
-                "version": head,
-                "files_touched": 0,
-                "files_total": len(live),
-                "files_skipped_by_stats": skipped,
-            }
-        tgt = _apply_renames(spark.read.option("mergeSchema", "true").parquet(*touched), path, head)
+    def transform(tgt: DataFrame) -> DataFrame:
         unknown = set(set_exprs) - set(tgt.columns)
         if unknown:
             raise ValueError(
@@ -1303,7 +1190,7 @@ def update_table(
                 f"(table has {tgt.columns})"
             )
         match = F.expr(predicate)
-        updated = tgt.select(
+        return tgt.select(
             *[
                 (
                     F.when(match, F.expr(set_exprs[c])).otherwise(F.col(c))
@@ -1313,27 +1200,73 @@ def update_table(
                 for c in tgt.columns
             ]
         )
-        rel = [_stored_name(path, f) for f in touched]
+
+    return _cow_rewrite(
+        spark, path, "update", predicate, transform,
+        prune_col, prune_lo, prune_hi, stats_cols, max_retries,
+    )
+
+
+def _cow_rewrite(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    predicate: str,
+    transform,
+    prune_col: str | None,
+    prune_lo,
+    prune_hi,
+    stats_cols: list[str] | None,
+    max_retries: int,
+) -> dict:
+    """The loop DELETE and UPDATE share: prune candidates from the
+    logged stats, find the files holding rows that match ``predicate``,
+    rewrite only those through ``transform`` (a function of the
+    touched files' LOGICAL-schema rows) and retry the whole plan on a
+    rewrite conflict. Predicates are written against the LOGICAL
+    schema, which :func:`_scan` resolves."""
+    from pyspark.sql import functions as F
+
+    last_err: TxConflictError | None = None
+    for _ in range(max_retries):
+        snap = _fold(path)
+        if snap.version < 0:
+            raise ValueError(f"no tx table at {path}")
+        candidates, skipped = snap.files, 0
+        if prune_col is not None:
+            candidates, skipped = _prune(snap, {prune_col: (prune_lo, prune_hi)})
+        touched = (
+            _touched_files(
+                _scan(spark, snap, candidates)
+                .withColumn("_f", F.input_file_name())
+                .filter(F.expr(predicate))
+            )
+            if candidates
+            else []
+        )
+        res = {
+            "version": snap.version,
+            "files_touched": len(touched),
+            "files_total": len(snap.live),
+            "files_skipped_by_stats": skipped,
+        }
+        if not touched:
+            return res
         try:
-            v = rewrite(
-                _unapply_renames(updated, path, head),
+            res["version"] = rewrite(
+                _unapply_renames(transform(_scan(spark, snap, touched)), snap.renames),
                 path,
-                rel,
-                expect_version=head,
-                op="update",
-                stats_cols=_physical_stats_cols(path, stats_cols, head),
+                [_stored_name(path, f) for f in touched],
+                expect_version=snap.version,
+                op=op,
+                stats_cols=_physical_names(stats_cols, snap.renames),
             )
         except TxConflictError as exc:
             last_err = exc
             continue
-        return {
-            "version": v,
-            "files_touched": len(touched),
-            "files_total": len(live),
-            "files_skipped_by_stats": skipped,
-        }
+        return res
     raise TxConflictError(
-        f"update lost {max_retries} commit races at {path}: {last_err}"
+        f"{op} lost {max_retries} commit races at {path}: {last_err}"
     )
 
 
@@ -1347,8 +1280,9 @@ _CKPT_RE = re.compile(r"^(\d{8})\.checkpoint\.json$")
 def _latest_checkpoint(path: str, version: int | None = None):
     """(checkpoint_version, payload) of the newest checkpoint at or
     below ``version`` (head when None), or None. Unreadable/partial
-    checkpoints are skipped — a checkpoint is ALWAYS a pure
-    optimization, never required for correctness."""
+    checkpoints, and ones lacking the ``live`` or ``renames`` key, are
+    skipped — a checkpoint is ALWAYS a pure optimization, never
+    required for correctness."""
     try:
         names = os.listdir(_log_dir(path))
     except FileNotFoundError:
@@ -1363,7 +1297,7 @@ def _latest_checkpoint(path: str, version: int | None = None):
         try:
             with open(os.path.join(_log_dir(path), f"{v:08d}.checkpoint.json")) as fh:
                 payload = json.load(fh)
-            if payload.get("version") == v:
+            if payload.get("version") == v and {"live", "renames"} <= payload.keys():
                 return v, payload
         except (OSError, ValueError):
             continue
@@ -1379,19 +1313,15 @@ def checkpoint_log(path: str) -> int:
     Written to a temp file + atomic rename; readers that race the
     rename simply use the previous checkpoint. Returns the
     checkpointed version."""
-    head = (_versions(path) or [-1])[-1]
+    snap = _fold(path)
+    head = snap.version
     if head < 0:
         raise ValueError(f"no tx table at {path}")
-    live, stats = _fold_live_and_stats(path, head)
     payload = {
         "version": head,
-        "live": live,
-        "stats": stats,
-        # Folded rename chain at the checkpoint: lets _folded_renames
-        # (on EVERY snapshot read and rename-folding write) replay
-        # only post-checkpoint entries instead of the whole log —
-        # same O(recent) bound the live-set fold already has.
-        "renames": [list(t) for t in _folded_renames(path, head)],
+        "live": snap.live,
+        "stats": snap.stats,
+        "renames": [list(t) for t in snap.renames],
     }
     final = os.path.join(_log_dir(path), f"{head:08d}.checkpoint.json")
     tmp = final + f".tmp.{uuid.uuid4().hex[:8]}"
@@ -1416,23 +1346,18 @@ def restore_table(path: str, version: int, max_retries: int = 10) -> int:
             f"cannot restore to {version}: below vacuum horizon "
             f"{_vacuum_horizon(path)} at {path}"
         )
-    target = {_stored_name(path, f) for f in snapshot_files(path, version)}
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
-        if head < 0:
-            raise ValueError(f"no tx table at {path}")
-        current = {
-            _stored_name(path, f) for f in snapshot_files(path, head)
-        }
-        entry = {
+    target = set(_fold(path, version).live)
+
+    def entry_at(head: int) -> dict:
+        current = set(_fold(path, head).live)
+        return {
             "op": "restore",
             "add": sorted(target - current),
             "remove": sorted(current - target),
             "restore_of": version,
         }
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"restore lost {max_retries} commit races at {path}")
+
+    return _commit_next(path, entry_at, "restore", max_retries)
 
 
 def clone_table(src_path: str, dst_path: str, version: int | None = None) -> int:
@@ -1450,16 +1375,13 @@ def clone_table(src_path: str, dst_path: str, version: int | None = None) -> int
             f"cannot clone {src_path} at version {version}: below its "
             f"vacuum horizon {_vacuum_horizon(src_path)} (data reclaimed)"
         )
-    src_files = snapshot_files(src_path, version)
+    src = _fold(src_path, version)
     # store absolute paths: snapshot_files only path-joins relative
     # names, and os.path.join passes absolute components through.
-    entry = {"op": "clone", "add": src_files, "remove": [],
+    entry = {"op": "clone", "add": src.files, "remove": [],
              "clone_of": {"path": src_path, "version": version}}
-    stats_src = snapshot_file_stats(src_path, version)
     data_root = os.path.join(src_path, "data")
-    stats = {
-        os.path.join(data_root, rel): per for rel, per in stats_src.items()
-    }
+    stats = {os.path.join(data_root, rel): per for rel, per in src.stats.items()}
     if stats:
         entry["stats"] = stats
     if not _try_commit(dst_path, 0, entry):
@@ -1579,74 +1501,60 @@ def rename_column(path: str, old: str, new: str, max_retries: int = 10) -> int:
     Chained renames compose (a->b then b->c reads physical a as c);
     time travel below the rename sees the old name. O(1) metadata."""
     entry = {"op": "rename", "add": [], "remove": [], "rename": [old, new]}
-    for _ in range(max_retries):
-        head = (_versions(path) or [-1])[-1]
+
+    def entry_at(head: int) -> dict:
         if head < 0:
             raise ValueError(f"no tx table at {path}")
-        if _try_commit(path, head + 1, entry):
-            return head + 1
-    raise TxConflictError(f"rename lost {max_retries} commit races at {path}")
+        return entry
+
+    return _commit_next(path, entry_at, "rename", max_retries)
 
 
-def _folded_renames(path: str, version: int | None = None) -> list[tuple[str, str]]:
-    """Rename chain up to ``version`` in commit order. Resumes from
-    the latest checkpoint's folded chain when one exists (pre-r7
-    checkpoints lack the "renames" key and fall back to a full log
-    replay), so the per-read/per-append metadata cost stays O(recent
-    commits) on long-lived streaming tables."""
-    versions = _versions(path)
-    if version is not None:
-        versions = [v for v in versions if v <= version]
-    out: list[tuple[str, str]] = []
-    ck = _latest_checkpoint(path, versions[-1] if versions else None)
-    if ck is not None and "renames" in ck[1]:
-        out = [tuple(r) for r in ck[1]["renames"]]
-        versions = [v for v in versions if v > ck[0]]
-    for v in versions:
-        r = _read_entry(path, v).get("rename")
-        if r:
-            out.append((r[0], r[1]))
+def _logical_names(names: list[str], renames: list) -> list[str]:
+    """Fold the rename chain onto physical column names — the
+    logical-schema resolution every snapshot reader applies (a reader
+    that skips it exposes physical names)."""
+    out = []
+    for name in names:
+        for old_name, new_name in renames:
+            if name == old_name:
+                name = new_name
+        out.append(name)
     return out
 
 
-def _apply_renames(df: DataFrame, path: str, version: int | None = None) -> DataFrame:
-    """Fold the rename chain onto a raw-parquet DataFrame — the same
-    logical-schema resolution :func:`read` performs; every other
-    snapshot reader must apply it too or it exposes physical column
-    names (r5 advisor finding on read_pruned/net_changes)."""
-    for old_name, new_name in _folded_renames(path, version):
-        df = df.withColumnRenamed(old_name, new_name)
-    return df
+def _physical_names(names: list[str] | None, renames: list) -> list[str]:
+    """Inverse of :func:`_logical_names`: LOGICAL names back to the
+    PHYSICAL names data files (and so parquet footers and logged
+    stats) carry — writes keep every data file in the physical schema
+    all snapshot readers resolve from. None reads as no names."""
+    out = []
+    for name in names or []:
+        for old_name, new_name in reversed(renames):
+            if name == new_name:
+                name = old_name
+        out.append(name)
+    return out
 
 
-def _unapply_renames(
-    df: DataFrame,
-    path: str,
-    version: int | None = None,
-    renames: list | None = None,
-) -> DataFrame:
-    """Inverse of :func:`_apply_renames`: fold a LOGICAL-schema
-    DataFrame back to the physical column names, so COW rewrites
-    (delete/update) keep data files in the physical schema every
-    snapshot reader resolves from. ``renames`` short-circuits the
-    metadata walk when the caller already folded the chain."""
-    chain = _folded_renames(path, version) if renames is None else renames
-    for old_name, new_name in reversed(chain):
-        df = df.withColumnRenamed(new_name, old_name)
-    return df
+def _rename_to(df: DataFrame, names: list[str]) -> DataFrame:
+    return df if names == df.columns else df.toDF(*names)
 
 
-def _unapply_renames_checked(
-    df: DataFrame, path: str, renames: list | None = None
-) -> DataFrame:
-    """:func:`_unapply_renames` for PUBLIC write entry points: rejects
-    a DataFrame carrying MORE THAN ONE name from the same rename
-    chain (folding would create duplicate physical columns). The
-    guard walks the TRANSITIVE closure — after v->label->tag, a frame
-    carrying 'v' and 'tag' collides even though no single rename
-    entry pairs them (r7 review finding). No-op for already-physical
-    input, so internal pre-folded callers stay idempotent."""
-    chain = _folded_renames(path) if renames is None else renames
+def _unapply_renames(df: DataFrame, renames: list) -> DataFrame:
+    """A LOGICAL-schema DataFrame in the physical column names, for the
+    rewrite jobs (compact/zorder/merge/delete/update)."""
+    return _rename_to(df, _physical_names(df.columns, renames))
+
+
+def _unapply_renames_checked(names: list[str], path: str, renames: list) -> list[str]:
+    """:func:`_physical_names` for PUBLIC write entry points (append and
+    the ``format("txlog")`` writers): rejects columns carrying MORE
+    THAN ONE name from the same rename chain (folding would create
+    duplicate physical columns). The guard walks the TRANSITIVE
+    closure — after v->label->tag, a frame carrying 'v' and 'tag'
+    collides even though no single rename entry pairs them. No-op for
+    already-physical input."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -1654,54 +1562,31 @@ def _unapply_renames_checked(
             x = parent[x]
         return x
 
-    for old_name, new_name in chain:
+    for old_name, new_name in renames:
         parent[find(new_name)] = find(old_name)
     groups: dict[str, set[str]] = {}
     for name in parent:
         groups.setdefault(find(name), set()).add(name)
-    cols = set(df.columns)
     for g in groups.values():
-        hit = sorted(g & cols)
+        hit = sorted(g & set(names))
         if len(hit) > 1:
             raise ValueError(
                 f"append to {path}: DataFrame carries {hit} — multiple "
                 f"generations of the same renamed column; drop or "
                 f"rename all but one before writing"
             )
-    return _unapply_renames(df, path, renames=chain)
+    return _physical_names(names, renames)
 
 
-def _physical_stats_cols(
-    path: str,
-    stats_cols: list[str] | None,
-    version: int | None = None,
-    renames: list | None = None,
-) -> list[str] | None:
-    """Map LOGICAL stats column names to the PHYSICAL names the data
-    files (and so the parquet footers) actually carry — a rename-
-    unaware lookup would silently log no stats and disable pruning."""
-    if not stats_cols:
-        return stats_cols
-    return [
-        _physical_candidates(path, c, version, renames=renames)[-1]
-        for c in stats_cols
-    ]
-
-
-def _physical_candidates(
-    path: str, col: str, version: int | None = None, renames: list | None = None
-) -> list[str]:
-    """Every physical column name that folds to LOGICAL ``col`` at
-    ``version``, newest first: a file written before rename a->b
+def _physical_candidates(col: str, renames: list) -> list[str]:
+    """Every physical column name that folds to LOGICAL ``col`` under
+    ``renames``, newest first: a file written before rename a->b
     stores (and logged stats under) ``a``; one written after stores
     ``b``. Pruning must consult whichever name the file actually
     carries."""
     names = [col]
-    cur = col
-    chain = _folded_renames(path, version) if renames is None else renames
-    for old_name, new_name in reversed(chain):
-        if cur == new_name:
-            cur = old_name
+    for old_name, new_name in reversed(renames):
+        if names[-1] == new_name:
             names.append(old_name)
     return names
 
@@ -1722,32 +1607,11 @@ def read_pruned_multi(
     :func:`read`'s rename-resolved schema."""
     from pyspark.sql import functions as F
 
-    live, stats = _fold_live_and_stats(path, version)
-    cands = {col: _physical_candidates(path, col, version) for col in ranges}
-    keep = []
-    for rel in live:
-        ok = True
-        for col, (lo, hi) in ranges.items():
-            disjoint = any(
-                per is not None
-                and (
-                    (hi is not None and per[0] > hi)
-                    or (lo is not None and per[1] < lo)
-                )
-                for per in (
-                    stats.get(rel, {}).get(name) for name in cands[col]
-                )
-            )
-            if disjoint:
-                ok = False
-                break
-        if ok:
-            keep.append(os.path.join(path, "data", rel))
+    snap = _fold(path, version)
+    keep, _ = _prune(snap, ranges)
     if not keep:
         raise ValueError(f"no files overlap {ranges} at {path}")
-    df = _apply_renames(
-        spark.read.option("mergeSchema", "true").parquet(*keep), path, version
-    )
+    df = _scan(spark, snap, keep)
     for col, (lo, hi) in ranges.items():
         if lo is not None:
             df = df.filter(F.col(col) >= lo)

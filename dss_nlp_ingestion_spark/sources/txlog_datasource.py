@@ -15,6 +15,12 @@ The stream reader treats LOG VERSIONS as offsets: each microbatch is
 exactly the files ADDED by commits in (start, end] — an exactly-once
 append-feed over the table, with offsets checkpointed by the engine.
 
+Every read takes its files and rename chain from the library's one
+log fold, and every write folds logical column names back to the
+physical ones and commits through the library's one commit loop, so
+this surface cannot drift from ``txlog.read`` / ``txlog.append``
+(renamed columns, the vacuum horizon, the physical-schema invariant).
+
 Scale honesty: a Python data source moves bytes through Arrow between
 the JVM and a Python worker, so for raw throughput the explicit
 file-list readers (txlog.read) remain the fast path — this module is
@@ -24,11 +30,16 @@ work (log fold, file pruning) is identical driver-side metadata.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamWriter,
+    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
+    WriterCommitMessage,
 )
 
 from dss_nlp_ingestion_spark.sources import txlog
@@ -39,15 +50,29 @@ class _FilePartition(InputPartition):
         self.file = file
 
 
-def _unified_arrow_schema(files: list[str]):
-    """Footer-merged schema over ALL live files — a snapshot spanning
-    an additive schema evolution must read as the WIDEST schema (the
-    same resolution txlog.read performs via mergeSchema), not as
-    whichever file happens to be listed first."""
+def _snapshot(options: dict) -> txlog._Snapshot:
+    """The snapshot a batch read sees — the same fold and the same
+    vacuum-horizon / empty-snapshot errors as ``txlog.read``."""
+    v = options.get("version")
+    return txlog._read_snapshot(options["path"], int(v) if v is not None else None)
+
+
+def _logical(batch, snap: txlog._Snapshot):
+    """A data file's RecordBatch under the snapshot's LOGICAL names."""
+    return batch.rename_columns(txlog._logical_names(batch.schema.names, snap.renames))
+
+
+def _unified_arrow_schema(snap: txlog._Snapshot):
+    """Footer-merged LOGICAL schema over ALL live files — a snapshot
+    spanning an additive schema evolution must read as the WIDEST
+    schema (the same resolution txlog.read performs via mergeSchema),
+    not as whichever file happens to be listed first."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    return pa.unify_schemas([pq.ParquetFile(f).schema_arrow for f in files])
+    merged = pa.unify_schemas([pq.ParquetFile(f).schema_arrow for f in snap.files])
+    names = txlog._logical_names(merged.names, snap.renames)
+    return pa.schema([f.with_name(n) for f, n in zip(merged, names)])
 
 
 def _pad_batch(batch, schema):
@@ -67,22 +92,17 @@ def _pad_batch(batch, schema):
 
 class _TxLogBatchReader(DataSourceReader):
     def __init__(self, options: dict, arrow_schema):
-        self.path = options["path"]
-        v = options.get("version")
-        self.version = int(v) if v is not None else None
+        self.snap = _snapshot(options)  # one fold plans every partition
         self.arrow_schema = arrow_schema
 
     def partitions(self):
-        return [
-            _FilePartition(f)
-            for f in txlog.snapshot_files(self.path, self.version)
-        ]
+        return [_FilePartition(f) for f in self.snap.files]
 
     def read(self, partition):  # executor-side: Arrow batches, not rows
         import pyarrow.parquet as pq
 
         for batch in pq.ParquetFile(partition.file).iter_batches():
-            yield _pad_batch(batch, self.arrow_schema)
+            yield _pad_batch(_logical(batch, self.snap), self.arrow_schema)
 
 
 class _TxLogStreamReader(SimpleDataSourceStreamReader):
@@ -109,9 +129,10 @@ class _TxLogStreamReader(SimpleDataSourceStreamReader):
         # size.
         import pyarrow.parquet as pq
 
+        snap = txlog._fold(self.path, v_to)
         if v_from < 0:
             # initial load: the snapshot as of the first observed head
-            files = txlog.snapshot_files(self.path, v_to)
+            files = snap.files
         else:
             # incremental: NEW-row files by LOG OPERATION — a raw
             # file diff would re-deliver every row a compaction or
@@ -125,7 +146,8 @@ class _TxLogStreamReader(SimpleDataSourceStreamReader):
                 # name-keyed projection: schema-evolved files may have
                 # extra/missing/reordered columns vs the stream schema
                 rows.extend(
-                    tuple(r.get(n) for n in names) for r in batch.to_pylist()
+                    tuple(r.get(n) for n in names)
+                    for r in _logical(batch, snap).to_pylist()
                 )
         return rows
 
@@ -155,12 +177,7 @@ class TxLogDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        path = self.options["path"]
-        v = self.options.get("version")
-        files = txlog.snapshot_files(path, int(v) if v is not None else None)
-        if not files:
-            raise ValueError(f"empty snapshot at {path}")
-        return from_arrow_schema(_unified_arrow_schema(files))
+        return from_arrow_schema(_unified_arrow_schema(_snapshot(self.options)))
 
     def reader(self, schema):
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -184,7 +201,8 @@ def register(spark) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Writer: df.write.format("txlog").mode("append"|"overwrite").save(path)
+# Writers: df.write.format("txlog").mode("append"|"overwrite").save(path)
+# and df.writeStream.format("txlog").start(...)
 # ---------------------------------------------------------------------------
 # The Python writer API is EXACTLY the log's two-phase commit: each
 # task stages one parquet file and reports it in its commit message;
@@ -192,10 +210,13 @@ def register(spark) -> None:
 # reported files. Speculative/retried task leftovers are never
 # referenced (vacuum cleans them) — the same crash story as the
 # library write path, now behind Spark's own writer surface.
-
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
+#
+# The streaming writer additionally gets the batchId, which maps 1:1
+# onto the log's idempotent-writer txn stamp: commit() skips any
+# batchId at or below the app's last committed epoch, so a replayed
+# micro-batch (restart, checkpoint loss) lands ZERO rows. This is the
+# engine-native form of streaming.pipeline.stream_merge_to_txlog_table's
+# foreachBatch sink, for the append case.
 
 
 @dataclass
@@ -203,56 +224,47 @@ class _StagedFile(WriterCommitMessage):
     rel: str  # staged file, relative to <path>/data/
 
 
-class _TxLogWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema, overwrite: bool):
-        import uuid as _uuid
+class _Stager:
+    """The half both writers share. The driver folds the incoming
+    LOGICAL schema back to the table's physical column names (the
+    guard ``txlog.append`` uses), so every staged file keeps the
+    physical-schema invariant; each task stages its rows as one
+    parquet file under data/<txn>/."""
+
+    def __init__(self, options: dict, schema):
+        import uuid
+
+        from pyspark.sql.types import StructField, StructType
 
         self.path = options["path"]
-        self.overwrite = overwrite
-        self.txn = _uuid.uuid4().hex[:12]
-        self.schema = schema
+        self.txn = uuid.uuid4().hex[:12]
+        names = txlog._unapply_renames_checked(
+            schema.names, self.path, txlog._fold(self.path).renames
+        )
+        self.schema = StructType(
+            [StructField(n, f.dataType, f.nullable) for n, f in zip(names, schema)]
+        )
 
     def write(self, iterator):  # executor-side
         import os
-        import uuid as _uuid
+        import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(self.schema)
-        rows = [r.asDict() for r in iterator]
+        names = self.schema.names
+        tbl = pa.Table.from_pylist(
+            [dict(zip(names, r)) for r in iterator], schema=to_arrow_schema(self.schema)
+        )
         staged_dir = os.path.join(self.path, "data", self.txn)
         os.makedirs(staged_dir, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex[:12]}.parquet"
-        tbl = pa.Table.from_pylist(rows, schema=arrow_schema)
+        name = f"part-{uuid.uuid4().hex[:12]}.parquet"
         pq.write_table(tbl, os.path.join(staged_dir, name))
         return _StagedFile(rel=f"{self.txn}/{name}")
 
-    def commit(self, messages):  # driver-side: the atomic log commit
-        files = [m.rel for m in messages if m is not None]
-        if self.overwrite:
-            for _ in range(10):
-                head = (txlog._versions(self.path) or [-1])[-1]
-                if head < 0:
-                    remove: list[str] = []
-                else:
-                    remove = [
-                        txlog._stored_name(self.path, f)
-                        for f in txlog.snapshot_files(self.path, head)
-                    ]
-                entry = {"op": "overwrite", "add": files, "remove": remove}
-                if txlog._try_commit(self.path, head + 1, entry):
-                    return
-            raise txlog.TxConflictError(f"overwrite lost commit races at {self.path}")
-        for _ in range(10):
-            head = (txlog._versions(self.path) or [-1])[-1]
-            entry = {"op": "append", "add": files, "remove": []}
-            if txlog._try_commit(self.path, head + 1, entry):
-                return
-        raise txlog.TxConflictError(f"append lost commit races at {self.path}")
-
-    def abort(self, messages):  # nothing referenced -> nothing visible
+    def _remove_staged(self, messages) -> None:
+        """Abort: nothing referenced -> nothing visible; drop the files."""
         import os
 
         for m in messages:
@@ -263,73 +275,47 @@ class _TxLogWriter(DataSourceWriter):
                     pass
 
 
-# ---------------------------------------------------------------------------
-# Streaming writer: df.writeStream.format("txlog").start(...)
-# ---------------------------------------------------------------------------
-# Spark hands every micro-batch through the same two-phase protocol as
-# the batch writer — tasks stage, driver commits — and additionally
-# passes the batchId, which maps 1:1 onto the log's idempotent-writer
-# txn stamp: commit() skips any batchId at or below the app's last
-# committed epoch, so a replayed micro-batch (restart, checkpoint
-# loss) lands ZERO rows. This is the engine-native form of
-# streaming.pipeline.stream_merge_to_txlog_table's foreachBatch sink,
-# for the append case.
+class _TxLogWriter(_Stager, DataSourceWriter):
+    def __init__(self, options: dict, schema, overwrite: bool):
+        super().__init__(options, schema)
+        self.overwrite = overwrite
 
-from pyspark.sql.datasource import DataSourceStreamWriter
+    def commit(self, messages):  # driver-side: the atomic log commit
+        files = [m.rel for m in messages if m is not None]
+        if not self.overwrite:
+            entry = {"op": "append", "add": files, "remove": []}
+            txlog._commit_next(self.path, lambda head: entry, "append")
+            return
+
+        def entry_at(head: int) -> dict:
+            remove = txlog._fold(self.path, head).live if head >= 0 else []
+            return {"op": "overwrite", "add": files, "remove": remove}
+
+        txlog._commit_next(self.path, entry_at, "overwrite")
+
+    def abort(self, messages):
+        self._remove_staged(messages)
 
 
-class _TxLogStreamWriter(DataSourceStreamWriter):
+class _TxLogStreamWriter(_Stager, DataSourceStreamWriter):
     def __init__(self, options: dict, schema):
-        self.path = options["path"]
+        super().__init__(options, schema)
         self.app = options.get("appid", "txlog_stream")
-        self.schema = schema
-
-    def write(self, iterator):  # executor-side, per partition per batch
-        import os
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(self.schema)
-        rows = [r.asDict() for r in iterator]
-        txn = _uuid.uuid4().hex[:12]
-        staged_dir = os.path.join(self.path, "data", txn)
-        os.makedirs(staged_dir, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex[:12]}.parquet"
-        tbl = pa.Table.from_pylist(rows, schema=arrow_schema)
-        pq.write_table(tbl, os.path.join(staged_dir, name))
-        return _StagedFile(rel=f"{txn}/{name}")
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
         if txlog.last_committed_txn(self.path, self.app) >= batchId:
             # Replayed epoch: files were staged by this batch's tasks
             # but must never become visible; leave them to vacuum.
             return
-        files = [m.rel for m in messages if m is not None]
         entry = {
             "op": "append",
-            "add": files,
+            "add": [m.rel for m in messages if m is not None],
             "remove": [],
             "txn": {"app": self.app, "epoch": int(batchId)},
         }
-        for _ in range(10):
-            head = (txlog._versions(self.path) or [-1])[-1]
-            if txlog._try_commit(self.path, head + 1, entry):
-                # bound log-replay cost on long-lived streaming tables
-                txlog.maybe_checkpoint(self.path)
-                return
-        raise txlog.TxConflictError(
-            f"stream append lost commit races at {self.path}"
-        )
+        txlog._commit_next(self.path, lambda head: entry, "stream append")
+        # bound log-replay cost on long-lived streaming tables
+        txlog.maybe_checkpoint(self.path)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        import os
-
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(os.path.join(self.path, "data", m.rel))
-                except OSError:
-                    pass
+        self._remove_staged(messages)

@@ -1270,9 +1270,9 @@ def test_concurrent_merge_merge_conflict_detect_and_retry(spark, monkeypatch):
 
 
 def test_checkpoint_carries_folded_renames(spark):
-    """r7: the checkpoint folds the rename chain too, so
-    _folded_renames — on every snapshot read AND every rename-folding
-    append — replays only post-checkpoint entries. Pre-checkpoint
+    """r7: the checkpoint folds the rename chain too, so the log fold
+    — on every snapshot read AND every rename-folding append — replays
+    only post-checkpoint entries. Pre-checkpoint
     renames must resolve from the checkpoint payload; post-checkpoint
     renames stack on top; time travel below the checkpoint still
     replays the log."""
@@ -1286,7 +1286,7 @@ def test_checkpoint_carries_folded_renames(spark):
         payload = _json.load(fh)
     assert payload["renames"] == [["v", "label"]]
     txlog.rename_column(path, "label", "tag")
-    assert txlog._folded_renames(path) == [("v", "label"), ("label", "tag")]
+    assert txlog._fold(path).renames == [("v", "label"), ("label", "tag")]
     assert txlog.read(spark, path).columns == ["k", "tag"]
     # round-trip append still folds to the physical name
     txlog.append(txlog.read(spark, path), path)
@@ -1311,3 +1311,105 @@ def test_append_guard_rejects_transitive_rename_chain(spark):
     # and the clean logical round trip still works
     txlog.append(txlog.read(spark, path), path)
     assert sorted(r["k"] for r in txlog.read(spark, path).collect()) == [1, 1]
+
+
+def _count_folds(monkeypatch) -> list:
+    """Wrap the one log fold in a call counter; returns the call log."""
+    calls: list = []
+    fold = txlog._fold
+
+    def counted(path, version=None):
+        calls.append(version)
+        return fold(path, version)
+
+    monkeypatch.setattr(txlog, "_fold", counted)
+    return calls
+
+
+def test_read_merge_and_vacuum_fold_the_log_once(spark, monkeypatch):
+    """read folds once, merge_into_table once per attempt (rewrite and
+    append-degrade paths alike, no conflict), and vacuum_retain a
+    constant number of times whatever head - horizon is."""
+    path = tempfile.mkdtemp(prefix="dss_txfold_")
+    txlog.create_table(_orders_tbl(spark), path, stats_cols=["k"])
+    txlog.rename_column(path, "c", "cat")
+    calls = _count_folds(monkeypatch)
+    txlog.read(spark, path).collect()
+    assert len(calls) == 1
+    for rows in ([(3, "upd", 9.0)], [(500, "new", 1.0)]):
+        del calls[:]
+        src = spark.createDataFrame(rows, "k long, cat string, p double")
+        res = txlog.merge_into_table(spark, path, src, ["k"], stats_cols=["k"])
+        assert res["files_touched"] + res["appended"] == 1
+        assert len(calls) == 1
+    counts = []
+    for n_after in (1, 6):
+        p = tempfile.mkdtemp(prefix="dss_txfold_vac_")
+        txlog.create_table(_tbl(spark, [(0, "a")]), p)
+        txlog.compact(spark, p)
+        for i in range(n_after):
+            txlog.append(_tbl(spark, [(i, "x")]), p)
+        del calls[:]
+        txlog.vacuum_retain(p, 1)
+        counts.append(len(calls))
+    assert counts[0] == counts[1] <= 1
+
+
+def test_vacuum_retain_keep_set_matches_brute_force(spark):
+    """vacuum_retain removes exactly the logged files outside the union
+    of every snapshot at or after the horizon, across appends, a
+    compaction, a merge, a delete and a checkpoint between them."""
+    import shutil
+
+    path = tempfile.mkdtemp(prefix="dss_txvacbf_") + "/t"
+    txlog.create_table(_orders_tbl(spark, n=20, files=2), path, stats_cols=["k"])
+    txlog.append(_orders_tbl(spark, n=5, files=1), path)
+    txlog.compact(spark, path)
+    txlog.checkpoint_log(path)
+    src = spark.createDataFrame([(3, "m", 1.0), (90, "n", 2.0)], "k long, c string, p double")
+    txlog.merge_into_table(spark, path, src, ["k"])
+    txlog.append(_orders_tbl(spark, n=4, files=1), path)
+    txlog.delete_from_table(spark, path, "k = 1")
+    txlog.append(_tbl(spark, [(7, "z")]).selectExpr("k", "v AS c", "1.0D AS p"), path)
+    data = os.path.join(path, "data")
+    versions = [h["version"] for h in txlog.history(path)]
+    referenced = {
+        f for v in versions for f in txlog._read_entry(path, v).get("add", [])
+    }
+    for horizon in versions:
+        keep = {
+            os.path.relpath(f, data)
+            for v in versions
+            if v >= horizon
+            for f in txlog.snapshot_files(path, v)
+        }
+        copy = tempfile.mkdtemp(prefix="dss_txvacbf_") + "/t"
+        shutil.copytree(path, copy)
+        res = txlog.vacuum_retain(copy, horizon)
+        assert res["removed"] == sorted(referenced - keep), horizon
+        for v in versions[horizon:]:
+            assert all(os.path.exists(f) for f in txlog.snapshot_files(copy, v))
+
+
+def test_checkpoint_without_renames_is_skipped(spark):
+    """A checkpoint lacking ``renames`` (as written before the chain
+    was checkpointed) is ignored: the fold replays the log and still
+    yields the right live set and rename chain."""
+    import json as _json
+
+    path = tempfile.mkdtemp(prefix="dss_txckold_")
+    txlog.create_table(_tbl(spark, [(1, "a")]), path)
+    txlog.rename_column(path, "v", "label")
+    v = txlog.append(_tbl(spark, [(2, "b")]).toDF("k", "label"), path)
+    want = txlog._fold(path)
+    with open(os.path.join(path, "_txlog", f"{v:08d}.checkpoint.json"), "w") as fh:
+        _json.dump({"version": v, "live": want.live, "stats": {}}, fh)
+    txlog.rename_column(path, "label", "tag")
+    got = txlog._fold(path)
+    assert got.live == want.live
+    assert got.renames == [("v", "label"), ("label", "tag")]
+    assert sorted(tuple(r) for r in txlog.read(spark, path).collect()) == [
+        (1, "a"), (2, "b")
+    ]
+    # the maintenance policy treats it as absent and writes a real one
+    assert txlog.maybe_checkpoint(path, every_n_commits=3) == v + 1

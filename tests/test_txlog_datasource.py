@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from dss_nlp_ingestion_spark.sources import txlog
 from dss_nlp_ingestion_spark.sources.txlog_datasource import TxLogDataSource
 
@@ -19,15 +21,35 @@ def _registered(spark):
 
 
 def test_batch_read_matches_library_read(spark):
+    """format("txlog") reads what txlog.read reads: an appended table,
+    a table after rename_column, and a version below the vacuum
+    horizon (both refuse it with the same message)."""
     _registered(spark)
-    path = tempfile.mkdtemp(prefix="dss_txds_") + "/t"
-    txlog.create_table(_tbl(spark, [(1, "a"), (2, "b")]), path)
-    txlog.append(_tbl(spark, [(3, "c")]), path)
-    got = spark.read.format("txlog").option("path", path).load()
-    assert sorted((r["k"], r["v"]) for r in got.collect()) == [
-        (1, "a"), (2, "b"), (3, "c")
+    appended = tempfile.mkdtemp(prefix="dss_txds_") + "/t"
+    txlog.create_table(_tbl(spark, [(1, "a"), (2, "b")]), appended)
+    txlog.append(_tbl(spark, [(3, "c")]), appended)
+    renamed = tempfile.mkdtemp(prefix="dss_txds_") + "/t"
+    txlog.create_table(_tbl(spark, [(1, "a")]), renamed)
+    txlog.rename_column(renamed, "v", "label")
+    txlog.append(_tbl(spark, [(2, "b")]).toDF("k", "label"), renamed)
+    vacuumed = tempfile.mkdtemp(prefix="dss_txds_") + "/t"
+    txlog.create_table(_tbl(spark, [(1, "a")]), vacuumed)
+    txlog.compact(spark, vacuumed)
+    txlog.vacuum_retain(vacuumed, 1)
+    for path, version in ((appended, None), (renamed, None), (vacuumed, None)):
+        want = txlog.read(spark, path, version=version)
+        got = spark.read.format("txlog").option("path", path).load()
+        assert got.schema == want.schema, path
+        assert sorted(got.collect()) == sorted(want.collect()), path
+    assert spark.read.format("txlog").option("path", renamed).load().columns == [
+        "k", "label"
     ]
-    assert got.schema == txlog.read(spark, path).schema
+    with pytest.raises(ValueError, match="below the vacuum horizon"):
+        txlog.read(spark, vacuumed, version=0)
+    with pytest.raises(Exception, match="below the vacuum horizon"):
+        spark.read.format("txlog").option("path", vacuumed).option(
+            "version", "0"
+        ).load().collect()
 
 
 def test_batch_time_travel_option(spark):
@@ -236,3 +258,50 @@ def test_stream_writer_appends_exactly_once_across_replay(spark, tmp_path):
     # reads identically
     txlog.vacuum(table, grace_seconds=0)
     assert sorted(r["k"] for r in txlog.read(spark, table).collect()) == rows1
+
+
+def test_writers_fold_renamed_columns_to_physical(spark, tmp_path):
+    """After rename v->label, rows written as (k, label) through the
+    batch and the streaming format("txlog") writers land in the
+    physical column, so the table still reads as two columns."""
+    _registered(spark)
+    path = tempfile.mkdtemp(prefix="dss_txds_") + "/t"
+    txlog.create_table(_tbl(spark, [(1, "a")]), path)
+    txlog.rename_column(path, "v", "label")
+    spark.createDataFrame([(2, "b")], "k long, label string").write.format(
+        "txlog"
+    ).mode("append").option("path", path).save()
+    got = txlog.read(spark, path)
+    assert got.columns == ["k", "label"]
+    assert {tuple(r) for r in got.collect()} == {(1, "a"), (2, "b")}
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(3, "c")], "k long, label string").write.parquet(src)
+    q = (
+        spark.readStream.schema("k long, label string")
+        .format("parquet")
+        .load(src)
+        .writeStream.format("txlog")
+        .option("path", path)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = txlog.read(spark, path)
+    assert got.columns == ["k", "label"]
+    assert {tuple(r) for r in got.collect()} == {(1, "a"), (2, "b"), (3, "c")}
+    # the stream reader projects the same logical columns
+    rows: list[tuple] = []
+    q = (
+        spark.readStream.format("txlog")
+        .option("path", path)
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _bid: rows.extend(tuple(r) for r in df.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ck_read"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert set(rows) == {(1, "a"), (2, "b"), (3, "c")}
