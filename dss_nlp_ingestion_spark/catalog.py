@@ -105,8 +105,41 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     scan produced fewer splits than the cluster has slots (a small
     file arrives as one partition; 100 TB arrives as ~800k splits —
     this no-ops there). The round-robin shuffle of the *input* rows
-    is cheap relative to per-row crypto/codec work downstream."""
+    is cheap relative to per-row crypto/codec work downstream.
+
+    The decision reads the planned physical plan and launches no Spark
+    job. A plan holding an exchange (an ``AdaptiveSparkPlan`` root, or
+    ``Exchange`` nodes when AQE is off) already reads a shuffle, whose
+    width ``spark.sql.shuffle.partitions`` and AQE decide, so ``df``
+    comes back unchanged: counting its partitions would execute every
+    upstream shuffle stage (or broadcast) once for the count and again
+    for the real query. Any other plan is scan-only, and counting its
+    splits is driver-side file planning."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _holds_exchange(df.sparkSession, plan):
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if plan.execute().getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _holds_exchange(spark: SparkSession, plan) -> bool:
+    """Whether a physical plan reads a shuffle or broadcast: it is (or
+    holds) an adaptive plan, which AQE only builds around exchanges and
+    subqueries, or it holds an ``Exchange`` node."""
+    from py4j.java_gateway import is_instance_of
+
+    gateway = spark.sparkContext._gateway
+    kinds = (
+        "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
+        "org.apache.spark.sql.execution.exchange.Exchange",
+    )
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if any(is_instance_of(gateway, node, k) for k in kinds):
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False

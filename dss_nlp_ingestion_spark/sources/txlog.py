@@ -35,8 +35,9 @@ through :func:`_commit_next`.
 
 Scale note: the log is O(commits) tiny JSON files; state folding is
 driver-side metadata work (like Delta's log replay), while data stays
-distributed parquet — readers hand Spark an explicit file list, so
-partition pruning/pushdown behave exactly as for plain parquet.
+distributed parquet — readers hand Spark an explicit file list and
+the schema from the files' footers, so partition pruning/pushdown
+behave exactly as for plain parquet and building a read runs no job.
 """
 
 from __future__ import annotations
@@ -371,8 +372,8 @@ def read(
     a snapshot spanning an additive schema change (see :func:`append`)
     reads as the widest schema with NULLs for pre-evolution rows —
     the same reader-side resolution Delta/Iceberg perform from their
-    logged schemas. Footer merging is a metadata job over the live
-    file list only, not a data scan."""
+    logged schemas. The schema is read from the footers on the driver
+    (see :func:`_scan`), so building the read runs no Spark job."""
     return _scan(spark, _read_snapshot(path, version), merge_schema=merge_schema)
 
 
@@ -401,11 +402,54 @@ def _scan(
     """Parquet scan of ``files`` (default: every live file) resolved to
     the snapshot's LOGICAL schema — every snapshot reader goes through
     it, so none exposes physical (pre-rename) column names."""
+    files = snap.files if files is None else files
+    schema = _footer_schema(spark, files, merge_schema)
     reader = spark.read
-    if merge_schema:
+    if schema is not None:
+        reader = reader.schema(schema)
+    elif merge_schema:
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*(snap.files if files is None else files))
+    df = reader.parquet(*files)
     return _rename_to(df, _logical_names(df.columns, snap.renames))
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, files: list[str], merge_schema: bool):
+    """The schema Spark's parquet inference would give ``files``, read
+    on the driver from the Spark schema each writer stores in its
+    footer, so the scan needs no schema-inference job. Spark orders the
+    footers by path; with ``merge_schema`` it folds them with its own
+    ``StructType.merge`` (called through the JVM, so field order,
+    widening and conflict errors stay Spark's), without it the first
+    footer wins. Every file of one data directory comes from one write
+    (:func:`_write_data_files`) and so carries one schema: one footer
+    per directory is read, O(commits) rather than O(files). None when a
+    file carries no Spark schema (written by another writer, e.g. the
+    ``format("txlog")`` data source) or is missing: the caller then
+    leaves inference, and its errors, to Spark."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    firsts: dict[str, str] = {}  # directory -> its first file by path
+    for f in sorted(files):
+        firsts.setdefault(os.path.dirname(f), f)
+    ordered = list(firsts.values())
+    found: dict[bytes, None] = {}  # distinct schemas, first-seen order
+    for f in ordered if merge_schema else ordered[:1]:
+        try:
+            meta = pq.read_schema(f).metadata or {}
+        except FileNotFoundError:
+            return None
+        if _SPARK_SCHEMA_KEY not in meta:
+            return None
+        found[meta[_SPARK_SCHEMA_KEY]] = None
+    parse = spark._jvm.org.apache.spark.sql.types.DataType.fromJson
+    case_sensitive = spark._jsparkSession.sessionState().conf().caseSensitiveAnalysis()
+    schemas = [parse(js.decode()) for js in found]
+    merged = reduce(lambda a, b: a.merge(b, case_sensitive), schemas)
+    return StructType.fromJson(json.loads(merged.json()))
 
 
 def compact(

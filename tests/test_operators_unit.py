@@ -393,15 +393,101 @@ def test_cc_spark_jobs_per_call(spark, graph, max_jobs):
     edges = spark.createDataFrame(
         [(a + 10**6, b + 10**6) for a, b in graph], "id_a long, id_b long"
     )
+    n_jobs, _ = _spark_jobs(
+        spark, f"cc-jobs-{len(graph)}", lambda: connected_components(edges).collect()
+    )
+    assert 0 < n_jobs <= max_jobs, n_jobs
+
+
+def _spark_jobs(spark, group: str, fn):
+    """(Spark jobs ``fn()`` launches, its result), the jobs counted by
+    job group (``group`` must be unique to the call)."""
     sc = spark.sparkContext
-    group = f"cc-jobs-{len(graph)}"
     sc.setJobGroup(group, group)
     try:
-        connected_components(edges).collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= max_jobs, n_jobs
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.fixture(params=["true", "false"], ids=["aqe", "no_aqe"])
+def aqe(spark, request):
+    """Run the test with adaptive query execution on, then off."""
+    key = "spark.sql.adaptive.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, was)
+
+
+def test_plan_building_runs_no_spark_job(spark, aqe):
+    """Building a plan runs nothing: the dedup operators over shuffled
+    inputs (ensure_parallelism reads the plan, it does not execute it)
+    and tx-log reads (the schema comes from the footers on the driver,
+    not from a parquet schema-inference job)."""
+    import tempfile
+
+    from dss_nlp_ingestion_spark.operators import dedup
+    from dss_nlp_ingestion_spark.sources import txlog
+
+    docs = spark.createDataFrame(
+        [(i, f"shared opening words then item {i % 5} of the batch") for i in range(12)],
+        "id long, text string",
+    )
+    ids = spark.createDataFrame([(i,) for i in range(0, 12, 2)], "id long")
+    path = tempfile.mkdtemp(prefix="dss_plan_jobs_")
+    txlog.create_table(docs, path)
+    txlog.append(docs, path)
+    builds = {
+        "lsh_over_exact_dedup": lambda: dedup.lsh_candidate_pairs(
+            dedup.exact_dedup(docs, ["text"], "id"), "id", "text"
+        ),
+        "ngram_over_semi_join": lambda: dedup.ngram_jaccard_pairs(
+            docs.join(ids, "id", "left_semi"), "id", "text"
+        ),
+        "txlog_read_head": lambda: txlog.read(spark, path),
+        "txlog_read_version": lambda: txlog.read(spark, path, version=0),
+    }
+    jobs = {n: _spark_jobs(spark, f"plan-{aqe}-{n}", b)[0] for n, b in builds.items()}
+    txlog.append(docs.withColumn("score", F.lit(1.0)), path)
+    jobs["txlog_read_evolved"], evolved = _spark_jobs(
+        spark, f"plan-{aqe}-evolved", lambda: txlog.read(spark, path)
+    )
+    assert jobs == dict.fromkeys(jobs, 0)
+    assert "score" in evolved.columns
+
+
+def test_ensure_parallelism_widens_scans_not_shuffles(spark, aqe):
+    """A narrow scan comes back with defaultParallelism partitions,
+    without a Spark job; an input that already reads a shuffle (window
+    or aggregate) comes back as the same object."""
+    import tempfile
+
+    from pyspark.sql import Window
+
+    from dss_nlp_ingestion_spark.catalog import ensure_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    one = spark.createDataFrame([(1, "a")], "k long, v string").coalesce(1)
+    pq_dir = tempfile.mkdtemp(prefix="dss_one_file_") + "/t"
+    spark.createDataFrame([(i, "a") for i in range(8)], "k long, v string").coalesce(
+        1
+    ).write.parquet(pq_dir)
+    one_file = spark.read.parquet(pq_dir)
+    for name, df in (("local", one), ("parquet", one_file)):
+        assert df.rdd.getNumPartitions() == 1, name
+        n_jobs, wide = _spark_jobs(
+            spark, f"widen-{aqe}-{name}", lambda: ensure_parallelism(df)
+        )
+        assert n_jobs == 0, name
+        assert wide.rdd.getNumPartitions() == target, name
+    windowed = one_file.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("v").orderBy("k"))
+    )
+    aggregated = one_file.groupBy("v").count()
+    for df in (windowed, aggregated):
+        assert ensure_parallelism(df) is df
 
 
 def test_merge_into_null_keyed_source_inserts(spark):

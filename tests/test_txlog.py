@@ -173,6 +173,67 @@ def test_schema_evolution_reads_nulls_for_old_rows(spark):
     assert got2 == got
 
 
+def _evolved_table(spark) -> str:
+    """Two additive evolutions, each adding a different column, so the
+    merged field order depends on the order the footers are folded."""
+    path = tempfile.mkdtemp(prefix="dss_txevo_")
+    txlog.create_table(_tbl(spark, [(1, "a"), (2, "b")]), path)
+    txlog.append(
+        spark.createDataFrame([(3, "c", 9.5)], "k long, v string, score double"), path
+    )
+    txlog.append(spark.createDataFrame([(4, "n")], "k long, note string"), path)
+    return path
+
+
+def _renamed(spark) -> str:
+    path = _evolved_table(spark)
+    txlog.rename_column(path, "v", "label")
+    return path
+
+
+def _compacted(spark) -> str:
+    path = _evolved_table(spark)
+    txlog.compact(spark, path, target_files=1)
+    return path
+
+
+def _cloned(spark) -> str:
+    dst = tempfile.mkdtemp(prefix="dss_txevo_clone_") + "/c"
+    txlog.clone_table(_evolved_table(spark), dst)
+    txlog.append(spark.createDataFrame([(5, 0.5)], "k long, score double"), dst)
+    return dst
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_evolved_table, _renamed, _compacted, _cloned],
+    ids=["additive", "rename_column", "compact", "clone_table"],
+)
+def test_read_schema_matches_spark_merge_schema(spark, build):
+    """txlog.read takes its schema from the footers on the driver; it
+    must be the schema Spark's own mergeSchema inference gives the
+    snapshot files (field order, types, nullability), under the
+    logical names, and read the same rows."""
+    path = build(spark)
+    inferred = spark.read.option("mergeSchema", "true").parquet(
+        *txlog.snapshot_files(path)
+    )
+    inferred = inferred.toDF(
+        *txlog._logical_names(inferred.columns, txlog._fold(path).renames)
+    )
+    got = txlog.read(spark, path)
+    assert got.schema == inferred.schema
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+def test_read_conflicting_column_types_raises(spark):
+    path = tempfile.mkdtemp(prefix="dss_txconflict_")
+    txlog.create_table(_tbl(spark, [(1, "a")]), path)
+    txlog.append(spark.createDataFrame([(2, 7)], "k long, v long"), path)
+    with pytest.raises(Exception, match="CANNOT_MERGE"):
+        txlog.read(spark, path)
+
+
 def test_net_changes_append_only_is_pure_inserts(spark):
     path = tempfile.mkdtemp(prefix="dss_tx_")
     txlog.create_table(_tbl(spark, [(1, "a"), (2, "b")]), path)
