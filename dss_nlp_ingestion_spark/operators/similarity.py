@@ -440,16 +440,16 @@ def bucketed_near_pairs(
     )
 
 
-#: Above this many literal cells (centroids x dims) the centroid
-#: table stops being embedded as a codegen literal: a 512x64 array is
-#: ~32k expression nodes (compiles in seconds); the old 4096-centroid
-#: ceiling would have been a ~1M-node tree that stalls janino long
-#: before memory is a concern. Past the cap, assignment switches to an
-#: Arrow-vectorized pandas UDF over the same broadcast centroids —
-#: still scan-side, still no corpus Exchange.
-_LITERAL_CELL_CAP = 512 * 64
-#: Driver-memory guard on the centroid collect itself (model
-#: parameters, k-means-center sized — never corpus sized).
+#: The one exact-vs-matmul rule of nearest-centroid ranking
+#: (:func:`centroid_topk_udf`): at or below this many centroid cells
+#: (centroids x dims) scores are the component-sequential exact fold,
+#: bit-identical to :func:`centroid_topk_expr` and the oracles'
+#: list_reduce chains; above it they are one float64 matmul per
+#: batch. Per 10k-row batch at dim 64 and 282 centroids the fold
+#: measured 1.06-1.40 s and the matmul 0.05-0.07 s (4-core x86-64).
+_EXACT_CELL_CAP = 64 * 64
+#: Driver-memory guard on the centroid set (model parameters,
+#: k-means-center sized — never corpus sized).
 _CENTROID_HARD_CAP = 65536
 
 
@@ -461,7 +461,6 @@ def ivf_topk(
     centroid_mod: int = 31,
     n_probe: int = 2,
     k: int = 5,
-    literal_cell_cap: int = _LITERAL_CELL_CAP,
     centroid_max: int | None = None,
     centroids: list | None = None,
 ) -> DataFrame:
@@ -470,26 +469,22 @@ def ivf_topk(
     closest to each query, score candidates exactly.
 
     Training-free deterministic centroids (every ``centroid_mod``-th
-    corpus vector) keep the operator reproducible in any engine — on
-    a cluster, swap in k-means centroids without touching the plan
-    shape.  Scale story: centroids are MODEL PARAMETERS — a
-    catalog-sized set collected once at index-build time (exactly
-    where MLlib keeps k-means centers).  Assignment is ALWAYS a pure
-    scan-side projection — NO crossJoin, NO window, NO Exchange on
-    the corpus (the r3 version shuffled the whole corpus through a
-    row_number window here) — in one of two physical forms:
-
-    - ``<= literal_cell_cap`` cells: the EXACT-fold Arrow kernel
-      (:func:`centroid_topk_exact_udf`) — component-sequential numpy
-      folds bit-identical to the literal-expression form the oracles
-      mirror (pinned by tests/test_pq_adc_kernels.py), at Arrow
-      throughput instead of interpreted higher-order-function cost;
-    - above the cap: an Arrow-vectorized pandas UDF holding the
-      centroid matrix in a numpy closure (one BLAS matmul per batch).
-      Same plan shape; float64 matmul may differ from the sequential
-      fold in the last ulp, so exact near-tie assignments can differ
-      — acceptable for an *approximate* index at the scale where
-      thousands of centroids exist.
+    corpus vector, :func:`collect_centroids`) keep the operator
+    reproducible in any engine — on a cluster, swap in k-means
+    centroids without touching the plan shape.  Scale story:
+    centroids are MODEL PARAMETERS — a catalog-sized set collected
+    once at index-build time (exactly where MLlib keeps k-means
+    centers).  Corpus assignment and probe selection are both
+    :func:`assign_nearest_centroid`, a pure scan-side projection — NO
+    crossJoin, NO window, NO Exchange on the corpus (the r3 version
+    shuffled the whole corpus through a row_number window here). Its
+    kernel follows the one rule of :func:`centroid_topk_udf`: the
+    exact fold at or below ``_EXACT_CELL_CAP`` cells, one float64
+    matmul above it, one ranking (score DESC, cent_id ASC) for both.
+    The matmul may differ from the fold in the last ulp, so an exact
+    near-tie can pick another list — acceptable for an *approximate*
+    index at the scale where hundreds of centroids exist; the
+    candidate scores always go through the exact :func:`cosine`.
 
     The probe table (queries × n_probe rows) then broadcasts onto the
     assigned corpus, and only the k-bounded per-query ranking windows
@@ -511,53 +506,18 @@ def ivf_topk(
     Returns (query_id, neighbor_id, score, rank).
     """
     if centroids is not None:
-        cent_rows = sorted(
-            ({"cent_id": int(c), "_cvec": list(v)} for c, v in centroids),
-            key=lambda r: r["cent_id"],
-        )
+        cent_rows = [{"cent_id": int(c), "_cvec": list(v)} for c, v in centroids]
     else:
-        cents = corpus.filter(F.col(id_col) % centroid_mod == 0)
+        seeds = corpus
         if centroid_max is not None:
-            cents = cents.filter(F.col(id_col) < centroid_max)
-        cent_rows = sorted(
-            cents.select(
-                F.col(id_col).alias("cent_id"), F.col(vec_col).alias("_cvec")
-            ).collect(),
-            key=lambda r: r["cent_id"],
-        )
-    if not cent_rows:
-        raise ValueError("no centroids: lower centroid_mod or check id domain")
-    if len(cent_rows) > _CENTROID_HARD_CAP:
-        raise ValueError(
-            f"{len(cent_rows)} centroids exceeds the driver collect budget; "
-            "raise centroid_mod (or plug in trained k-means centers)"
-        )
-    dim = len(cent_rows[0]["_cvec"])
-    if len(cent_rows) * dim > literal_cell_cap:
-        return _ivf_topk_pandas(
-            corpus, queries, cent_rows, id_col, vec_col, n_probe, k
-        )
-    # Assignment and probe selection run the Arrow exact-fold kernel:
-    # bit-identical to the literal-expression fold (ties score DESC,
-    # cent_id ASC — pinned by tests/test_pq_adc_kernels.py) without
-    # the interpreted higher-order-function cost (~0.7 ms/row for
-    # 32x64 cells — Spark never codegens transform/aggregate).
-    base = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    assigned = base.select(
-        "neighbor_id",
-        "_cv",
-        F.element_at(
-            centroid_topk_exact_udf(cent_rows, 1)(F.col("_cv")), 1
-        ).alias("cent_id"),
+            seeds = corpus.filter(F.col(id_col) < centroid_max)
+        cent_rows = collect_centroids(seeds, id_col, vec_col, centroid_mod)
+    assigned = assign_nearest_centroid(corpus, id_col, vec_col, cent_rows).select(
+        F.col("id").alias("neighbor_id"), F.col("v").alias("_cv"), "cent_id"
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    probes = q.select(
-        "query_id",
-        "_qv",
-        F.explode(
-            centroid_topk_exact_udf(cent_rows, n_probe)(F.col("_qv"))
-        ).alias("cent_id"),
-    )
+    probes = assign_nearest_centroid(
+        queries, id_col, vec_col, cent_rows, n_best=n_probe
+    ).select(F.col("id").alias("query_id"), F.col("v").alias("_qv"), "cent_id")
     w_rank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         assigned.join(F.broadcast(probes), "cent_id")
@@ -576,99 +536,44 @@ def assign_nearest_centroid(
     id_col: str,
     vec_col: str,
     cent_rows: list,
-    literal_cell_cap: int = 64 * 64,
     n_best: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Scan-side nearest-centroid assignment shared by the IVF index,
-    SemDeDup, the k-means step and the incremental index: returns
-    (id, v, vn, cent_id) with NO exchange on ``df``. ``n_best > 1``
+    SemDeDup, the k-means step and the incremental IVF/IVFADC indexes:
+    returns (id, v, cent_id) with NO exchange on ``df``. ``n_best > 1``
     yields one row per (input row, nearest cell) — the multi-probe
-    form (cells ordered score DESC, cent_id ASC). Below
-    ``literal_cell_cap`` centroid cells the assignment is
-    BIT-DETERMINISTIC (the oracle-gated path) in either ``impl``:
-    ``"arrow"`` (default) runs :func:`centroid_topk_exact_udf`, whose
-    component-sequential numpy folds are bit-identical to the
-    ``"expr"`` literal-expression fold (pinned per element by
-    tests/test_pq_adc_kernels.py) at 10-100x the throughput — Spark
-    evaluates higher-order functions INTERPRETED (~0.7 ms/row for
-    32x64 cells), so the expression form is kept as executable
-    documentation of the fold the oracles mirror, not the hot path.
-    Above the cap, the BLAS pandas UDF (ties still break to the
-    lowest cent_id; last-ulp ordering may differ — documented
-    acceptable for approximate indexes at the scale where thousands
-    of centroids exist)."""
-    import math
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("vn"),
-    )
-    dim = len(cent_rows[0]["_cvec"]) if cent_rows else 0
-    if cent_rows and len(cent_rows) * dim > literal_cell_cap:
-        if n_best == 1:
-            return base.withColumn(
-                "cent_id", _centroid_assign_udf(cent_rows)(F.col("v"))
-            )
-        return base.withColumn(
-            "cent_id",
-            F.explode(_centroid_probe_udf(cent_rows, n_best)(F.col("v"))),
-        )
-    if impl == "arrow":
-        topk = centroid_topk_exact_udf(cent_rows, n_best)
-        if n_best == 1:
-            return base.withColumn(
-                "cent_id", F.element_at(topk(F.col("v")), 1)
-            )
-        return base.withColumn("cent_id", F.explode(topk(F.col("v"))))
-
-    def _py_norm(vec) -> float:
-        acc = 0.0
-        for x in vec:
-            acc += float(x) * float(x)
-        return acc and math.sqrt(acc)
-
-    cent_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["cent_id"])).cast("long").alias("cent_id"),
-                F.array(*[F.lit(float(x)) for x in r["_cvec"]]).alias("cvec"),
-                F.lit(_py_norm(r["_cvec"])).alias("cnorm"),
-            )
-            for r in cent_rows
-        ]
-    )
-    scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            (dot_exact(F.col("v"), c["cvec"]) / (F.col("vn") * c["cnorm"])).alias("s"),
-            (-c["cent_id"]).alias("nid"),
-        ),
-    )
-    if n_best == 1:
-        return base.withColumn("cent_id", -F.array_max(scored)["nid"])
-    # Struct sort is lexicographic (s DESC, then nid DESC = cent_id
-    # ASC) — identical to the oracle's ORDER BY score DESC, cent_id
-    # ASC with rn <= n_best.
-    best = F.slice(F.sort_array(scored, asc=False), 1, n_best)
-    return (
-        base.withColumn("_pc", F.explode(best))
-        .withColumn("cent_id", -F.col("_pc")["nid"])
-        .drop("_pc")
+    form, cells in rank order. Ranking is :func:`centroid_topk_udf`'s
+    one rule: the exact fold at or below ``_EXACT_CELL_CAP`` cells
+    (bit-identical to the oracles), one float64 matmul above it, and
+    for both score DESC, cent_id ASC, NaN last."""
+    topk = centroid_topk_udf(cent_rows, n_best)(F.col(vec_col))
+    cent = F.element_at(topk, 1) if n_best == 1 else F.explode(topk)
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), cent.alias("cent_id")
     )
 
 
-def centroid_topk_exact_udf(cent_rows: list, n_best: int):
-    """EXACT-fold multi-probe: per vector the ``n_best`` nearest
-    cells by cosine as an ordered array<long> (score DESC, cent_id
-    ASC — np.lexsort, stable). Unlike :func:`_centroid_probe_udf`
-    (BLAS matmul, library-defined summation order), every dot/norm
-    here is a COMPONENT-SEQUENTIAL fold vectorized across rows —
-    ``acc = acc + x_j * c_j`` over j — which is bit-identical to
-    ``dot_exact`` / the oracle's list_reduce chain, so the selected
-    list set (and any cut at n_best) is hash-gate safe, at Arrow
-    speed instead of interpreted higher-order-function cost.
+def centroid_topk_udf(cent_rows: list, n_best: int):
+    """The nearest-centroid kernel: per vector the ``n_best`` nearest
+    cells by cosine as an ordered array<long>. ``cent_rows`` (dicts or
+    Rows with ``cent_id`` and ``_cvec``) are sorted by cent_id here,
+    so one stable ``argsort`` of the negated scores ranks score DESC,
+    cent_id ASC, with NaN (a zero-norm centroid or vector) last.
+
+    Scores come from one of two kernels, picked from the set's size:
+
+    - at or below ``_EXACT_CELL_CAP`` cells (centroids x dims): every
+      dot/norm is a COMPONENT-SEQUENTIAL fold vectorized across rows —
+      ``acc = acc + x_j * c_j`` over j — bit-identical to
+      :func:`centroid_topk_expr` / ``dot_exact`` and the oracle's
+      list_reduce chain, so the selected list set (and any cut at
+      n_best) is hash-gate safe;
+    - above it, one float64 matmul per batch, whose summation order
+      is the library's: a near-tie may rank differently in the last
+      ulp, which an approximate index at that size accepts.
+
+    Raises ``ValueError`` on an empty set or one above
+    ``_CENTROID_HARD_CAP``.
 
     The returned UDF is marked ``asNondeterministic()`` although it is pure:
     the marker pins ONE evaluation per row, because the optimizer
@@ -677,47 +582,50 @@ def centroid_topk_exact_udf(cent_rows: list, n_best: int):
     first and filter, group or join on that column (Spark refuses a
     non-deterministic expression inside a join condition), and get no
     filter pushdown through it; two calls are two evaluations."""
-    import math
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
+    if not cent_rows:
+        raise ValueError("no centroids: lower centroid_mod or check id domain")
+    if len(cent_rows) > _CENTROID_HARD_CAP:
+        raise ValueError(
+            f"{len(cent_rows)} centroids exceeds the driver collect budget; "
+            "raise centroid_mod (or plug in trained k-means centers)"
+        )
+    rows = sorted(cent_rows, key=lambda r: int(r["cent_id"]))
+    cent_ids = np.array([int(r["cent_id"]) for r in rows], dtype=np.int64)
     cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
+        [[float(x) for x in r["_cvec"]] for r in rows], dtype=np.float64
     )
+    n_cent, dim = cent_mat.shape
+    exact = n_cent * dim <= _EXACT_CELL_CAP
 
-    def _seq_norm(row) -> float:
-        acc = 0.0
-        for x in row:
-            acc += float(x) * float(x)
-        return acc and math.sqrt(acc)
+    def _norms(m):
+        acc = None  # per-row self-dot, folded component-sequentially
+        for j in range(dim):
+            sq = m[:, j] * m[:, j]
+            acc = sq if acc is None else acc + sq
+        return np.sqrt(acc)
 
-    cnorms = np.array([_seq_norm(row) for row in cent_mat], dtype=np.float64)
-    dim = cent_mat.shape[1]
+    cnorms = _norms(cent_mat)
 
     def _topk_fn(vs):
         if len(vs) == 0:
             return pd.Series([], dtype="object")
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
+        # One stack + float64 widening, which is exact for float32.
         mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        dots = None  # (n, k): sequential fold over components
-        qq = None  # (n,): sequential self-dot
-        for j in range(dim):
-            xj = mat[:, j]
-            pj = xj[:, None] * cent_mat[None, :, j]
-            dots = pj if dots is None else dots + pj
-            sq = xj * xj
-            qq = sq if qq is None else qq + sq
-        scores = dots / (np.sqrt(qq)[:, None] * cnorms[None, :])
-        return pd.Series(
-            [
-                cent_ids[np.lexsort((cent_ids, -scores[i]))[:n_best]].tolist()
-                for i in range(len(mat))
-            ]
-        )
+        if exact:
+            dots = None  # (n, n_cent): sequential fold over components
+            for j in range(dim):
+                pj = mat[:, j][:, None] * cent_mat[None, :, j]
+                dots = pj if dots is None else dots + pj
+        else:
+            dots = mat @ cent_mat.T
+        with np.errstate(all="ignore"):
+            scores = dots / (_norms(mat)[:, None] * cnorms[None, :])
+        order = np.argsort(-scores, axis=1, kind="stable")[:, :n_best]
+        return pd.Series(cent_ids[order].tolist())
 
     # asNondeterministic (r12, guide §4.4): cent_id derived from this
     # UDF is a downstream join key; the join-inferred isnotnull filter
@@ -727,139 +635,32 @@ def centroid_topk_exact_udf(cent_rows: list, n_best: int):
     return pandas_udf(_topk_fn, "array<long>").asNondeterministic()
 
 
-def _centroid_probe_udf(cent_rows: list, n_best: int):
-    """BLAS multi-probe twin of :func:`_centroid_assign_udf`: the
-    ``n_best`` nearest cells per vector (stable argsort — ties to the
-    lowest cent_id), returned as array<long> for a downstream
-    explode."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
+def centroid_topk_expr(vec_col: Column, cent_rows: list, n_best: int = 1) -> Column:
+    """Expression form of :func:`centroid_topk_udf`'s exact fold — the
+    fold the oracles mirror (``dot_exact`` over literal centroids,
+    ranked score DESC, cent_id ASC), kept as the test reference
+    (interpreted HOF evaluation, the slow path)."""
+    cent_lit = F.array(
+        *[
+            F.struct(
+                F.lit(int(r["cent_id"])).cast("long").alias("cent_id"),
+                F.array(*[F.lit(float(x)) for x in r["_cvec"]]).alias("cvec"),
+            )
+            for r in cent_rows
+        ]
     )
-    cnorms = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-
-    def _probe_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        vnorms = np.sqrt((mat * mat).sum(axis=1))
-        scores = (mat @ cent_mat.T) / np.outer(vnorms, cnorms)
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :n_best]
-        return pd.Series([cent_ids[row].tolist() for row in order])
-
-    # asNondeterministic — same §4.4 single-evaluation pin as the
-    # exact-fold twin above.
-    return pandas_udf(_probe_fn, "array<long>").asNondeterministic()
-
-
-def _centroid_assign_udf(cent_rows: list):
-    """BLAS nearest-centroid argmax as an Arrow pandas UDF — the
-    above-literal-cap assignment path shared by the IVF index and
-    SemDeDup. cent_ids are sorted ascending and np.argmax keeps the
-    FIRST max, so ties break to the lowest cent_id exactly like the
-    codegen literal fold; float64 matmul may differ from the
-    sequential fold in the last ulp (documented acceptable for
-    approximate indexes at the scale where thousands of centroids
-    exist)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
+    scored = F.transform(
+        cent_lit,
+        lambda c: F.struct(
+            (dot_exact(vec_col, c["cvec"]) / (l2_norm(vec_col) * l2_norm(c["cvec"])))
+            .alias("s"),
+            (-c["cent_id"]).alias("nid"),
+        ),
     )
-    cnorms = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-
-    def _assign_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        vnorms = np.sqrt((mat * mat).sum(axis=1))
-        scores = (mat @ cent_mat.T) / np.outer(vnorms, cnorms)
-        return pd.Series(cent_ids[np.argmax(scores, axis=1)])
-
-    # asNondeterministic — same §4.4 single-evaluation pin.
-    return pandas_udf(_assign_fn, "long").asNondeterministic()
-
-
-def _ivf_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cent_rows: list,
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
-    k: int,
-) -> DataFrame:
-    """Large-centroid-set IVF assignment: the centroid matrix rides a
-    numpy closure into Arrow-batched pandas UDFs (one float64 BLAS
-    matmul per batch) instead of a codegen literal. Plan shape is
-    identical to the literal path — scan-side assignment, broadcast
-    probe join, k-bounded ranking windows — and the FINAL candidate
-    scores still use the bit-deterministic ``cosine`` expression;
-    only centroid argmax/probe selection is BLAS-ordered."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cent_ids = np.array([int(r["cent_id"]) for r in cent_rows], dtype=np.int64)
-    cent_mat = np.array(
-        [[float(x) for x in r["_cvec"]] for r in cent_rows], dtype=np.float64
-    )
-    cnorms = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-
-    def _scores(vs):
-        # One stack + exact float64 widening (r12, §4.2) — replaces
-        # the n*dim interpreted float() double loop, same values.
-        mat = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        vnorms = np.sqrt((mat * mat).sum(axis=1))
-        return (mat @ cent_mat.T) / np.outer(vnorms, cnorms)
-
-    def _assign_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        # argmax picks the FIRST max; cent_ids are sorted ascending,
-        # so ties break to the lowest cent_id like the literal path.
-        return pd.Series(cent_ids[np.argmax(_scores(vs), axis=1)])
-
-    def _probe_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        order = np.argsort(-_scores(vs), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([cent_ids[row].tolist() for row in order])
-
-    # asNondeterministic — same §4.4 single-evaluation pin as the
-    # literal-cap path.
-    _assign = pandas_udf(_assign_fn, "long").asNondeterministic()
-    _probe = pandas_udf(_probe_fn, "array<long>").asNondeterministic()
-
-    assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    ).withColumn("cent_id", _assign(F.col("_cv")))
-    probes = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).select("query_id", "_qv", F.explode(_probe(F.col("_qv"))).alias("cent_id"))
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("_qv"), F.col("_cv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    # Struct sort is lexicographic (s DESC, then nid DESC = cent_id
+    # ASC) — the oracle's ORDER BY score DESC, cent_id ASC.
+    best = F.slice(F.sort_array(scored, asc=False), 1, n_best)
+    return F.transform(best, lambda p: -p["nid"])
 
 
 def multiprobe_bucket_topk(
@@ -923,20 +724,13 @@ def collect_centroids(
 ) -> list:
     """Deterministic centroid seed set (every ``centroid_mod``-th
     vector), collected driver-side — model parameters, never corpus
-    data; hard-capped like ivf_topk's collect."""
-    rows = sorted(
+    data. :func:`centroid_topk_udf` sorts the set and rejects an empty
+    or oversized one."""
+    return (
         corpus.filter(F.col(id_col) % centroid_mod == 0)
         .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("_cvec"))
-        .collect(),
-        key=lambda r: r["cent_id"],
+        .collect()
     )
-    if not rows:
-        raise ValueError("no centroids: lower centroid_mod or check id domain")
-    if len(rows) > _CENTROID_HARD_CAP:
-        raise ValueError(
-            f"{len(rows)} centroids exceeds the driver collect budget"
-        )
-    return rows
 
 
 def kmeans_update_step(
@@ -945,13 +739,12 @@ def kmeans_update_step(
     vec_col: str = "embedding",
     centroid_mod: int = 31,
     scale: int = 10**6,
-    literal_cell_cap: int = 64 * 64,
 ) -> DataFrame:
     """One distributed k-means (Lloyd) update: assign every vector to
-    its nearest seed centroid (cosine, scan-side literal argmax — the
-    exact assignment ivf_topk indexes with, NO corpus Exchange), then
-    recompute each centroid as the member mean, per dimension:
-    ``(cent_id, dim, n_members, mean_micro)``.
+    its nearest seed centroid (cosine, :func:`assign_nearest_centroid`
+    — the scan-side assignment ivf_topk indexes with, NO corpus
+    Exchange), then recompute each centroid as the member mean, per
+    dimension: ``(cent_id, dim, n_members, mean_micro)``.
 
     Means are computed in integer micro-units
     (``floor(value * scale)`` summed exactly as BIGINT, one floored
@@ -963,25 +756,14 @@ def kmeans_update_step(
     (cent_id, dim)-keyed exchange of bounded size (centroids x dims
     rows), which is the MLlib k-means superstep shape.
 
-    Like :func:`semdedup`, assignment hops to the shared BLAS pandas
-    UDF above ``literal_cell_cap`` literal cells — training runs use
-    hundreds-to-thousands of centroids, where the codegen literal
-    fold's N x C expression cost dominates the step (r6 sf1 sweep);
-    the oracle-gated small-sf path stays the bit-exact literal
-    fold."""
+    Assignment follows :func:`centroid_topk_udf`'s one rule: the
+    bit-exact fold at or below ``_EXACT_CELL_CAP`` cells (the
+    oracle-gated small-sf path), one float64 matmul above it, where
+    training runs with hundreds of centroids live."""
     cent_rows = collect_centroids(corpus, id_col, vec_col, centroid_mod)
-    assigned = assign_nearest_centroid(
-        corpus, id_col, vec_col, cent_rows, literal_cell_cap
-    ).select(F.col("v").alias("_cv"), "cent_id")
-    return _kmeans_member_means(assigned, scale)
-
-
-def _kmeans_member_means(assigned: DataFrame, scale: int) -> DataFrame:
-    """Per-(centroid, dimension) exact integer member means over an
-    assigned corpus — the shuffle half of the Lloyd step, shared by
-    both assignment paths."""
+    assigned = assign_nearest_centroid(corpus, id_col, vec_col, cent_rows)
     expl = assigned.select(
-        "cent_id", F.posexplode(F.col("_cv")).alias("_pos", "_x")
+        "cent_id", F.posexplode(F.col("v")).alias("_pos", "_x")
     ).select(
         "cent_id",
         (F.col("_pos") + 1).cast("int").alias("dim"),
@@ -1003,7 +785,6 @@ def semdedup(
     vec_col: str = "embedding",
     centroid_mod: int = 31,
     threshold: float = 0.4,
-    literal_cell_cap: int = 64 * 64,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by clustering the
     embedding space and pruning, WITHIN each cluster, every vector
@@ -1013,8 +794,10 @@ def semdedup(
     comparison tractable: candidate pairs are only generated inside a
     cluster, exactly the published algorithm's trick.
 
-    Scale shape: assignment is the scan-side literal-centroid argmax
-    ivf_topk/kmeans use (NO corpus exchange); the only shuffle is the
+    Scale shape: assignment is the scan-side
+    :func:`assign_nearest_centroid` ivf_topk/kmeans use (NO corpus
+    exchange; the exact fold at or below ``_EXACT_CELL_CAP`` cells,
+    one float64 matmul above it); the only shuffle is the
     within-cluster self-join keyed on cent_id. Cluster size is the
     knob bounding pair work (k ~ n/avg_size); a pathologically hot
     cluster is handled like any hot join key (salt or split the
@@ -1023,15 +806,9 @@ def semdedup(
     Returns (id, cent_id, pruned 0/1).
     """
     cent_rows = collect_centroids(corpus, id_col, vec_col, centroid_mod)
-    # Assignment is the shared two-path helper: codegen literal fold
-    # below the budget (the oracle-gated bit-exact form), BLAS pandas
-    # UDF above it (the r6 sf1 bench measured the literal fold at
-    # N x C cost here — 15.8x time for 10x data with ~282 literal
-    # centroids). Pair scoring below stays the bit-deterministic
-    # expression on both paths.
-    assigned = assign_nearest_centroid(
-        corpus, id_col, vec_col, cent_rows, literal_cell_cap
-    )
+    # At sf1 (~282 centroids x 64 dims) assignment runs the matmul
+    # kernel; pair scoring below stays the bit-exact cosine either way.
+    assigned = assign_nearest_centroid(corpus, id_col, vec_col, cent_rows)
 
     a = assigned.alias("a")
     b = assigned.alias("b")

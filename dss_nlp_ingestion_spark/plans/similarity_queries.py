@@ -330,9 +330,10 @@ FROM ranked WHERE rank <= {_IVF_K}
     "ivf_topk",
     _IVF_ORACLE,
     tag=(
-        "setup_sec = centroid collect (index build) + compile of the "
-        "centroid-literal plan; recorded time = the probe execution, "
-        "the O(data) part"
+        "setup_sec = centroid collect (index build) + plan compile and "
+        "one warm run; the 32x64 centroid cells are within the exact-fold "
+        "cap (exact fold <= 64x64 cells, one float64 matmul above, one "
+        "ranking); recorded time = the probe execution, the O(data) part"
     ),
 )
 def ivf_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,6 +581,18 @@ _INC_ADC_N_PROBE = 16
 _INC_ADC_REFINE = 100
 
 
+def _adc_index_rows(vecs: DataFrame, model: dict, cents: list) -> DataFrame:
+    """The IVFADC inverted-list row (id, codes, cent_id) of each
+    (vec_id, embedding): nearest list and PQ codes, both scan-side
+    Arrow kernels bit-identical to the oracles' folds."""
+    from dss_nlp_ingestion_spark.operators.pq import pq_code_array_udf
+    from dss_nlp_ingestion_spark.operators.similarity import assign_nearest_centroid
+
+    return assign_nearest_centroid(vecs, "vec_id", "embedding", cents).select(
+        "id", pq_code_array_udf(model)(F.col("v")).alias("codes"), "cent_id"
+    )
+
+
 def _ivf_inc_build_pq(spark: SparkSession, sf_dir: str, cents: list):
     """IVFADC index build (Jégou et al., 2011 §IV): assign the corpus
     to the given centroid set ONCE and persist (id, codes, cent_id) —
@@ -593,26 +606,11 @@ def _ivf_inc_build_pq(spark: SparkSession, sf_dir: str, cents: list):
     from dss_nlp_ingestion_spark.operators.pq import (
         DEFAULT_PQ_ARTIFACT,
         load_pq_artifact,
-        pq_code_array_udf,
-    )
-    from dss_nlp_ingestion_spark.operators.similarity import (
-        centroid_topk_exact_udf,
     )
     from dss_nlp_ingestion_spark.sources import txlog
 
     model = load_pq_artifact(DEFAULT_PQ_ARTIFACT)
-    emb = table(spark, sf_dir, "embeddings")
-    # One Arrow pass: exact-fold nearest list + PQ encode per vector
-    # (bit-identical to the literal-expression forms, ~10-100x the
-    # interpreted HOF throughput — the scan-side kernel a 100 TB
-    # build needs).
-    index = emb.select(
-        F.col("vec_id").alias("id"),
-        pq_code_array_udf(model)(F.col("embedding")).alias("codes"),
-        F.element_at(
-            centroid_topk_exact_udf(cents, 1)(F.col("embedding")), 1
-        ).alias("cent_id"),
-    )
+    index = _adc_index_rows(table(spark, sf_dir, "embeddings"), model, cents)
     path = tempfile.mkdtemp(prefix="dss_ivfadc_") + "/index"
     txlog.create_table(index, path, stats_cols=["cent_id"])
     return sf_dir, path, cents, _INC_ADC_N_PROBE, _INC_ADC_REFINE
@@ -743,11 +741,10 @@ def _ivf_inc_adc_probe(spark: SparkSession, ctx) -> DataFrame:
         DEFAULT_PQ_ARTIFACT,
         load_pq_artifact,
         pq_adc_cogroup_scorer,
-        pq_code_array_udf,
         pq_query_lut_udf,
     )
     from dss_nlp_ingestion_spark.operators.similarity import (
-        centroid_topk_exact_udf,
+        assign_nearest_centroid,
         cosine,
     )
     from dss_nlp_ingestion_spark.sources import txlog
@@ -758,18 +755,15 @@ def _ivf_inc_adc_probe(spark: SparkSession, ctx) -> DataFrame:
     incoming = emb.filter(
         (F.col("vec_id") % 7 == 0) & (F.col("vec_id") < _IVF_INC_BATCH_CAP)
     ).select((F.col("vec_id") + _IVF_INC_SHIFT).alias("vec_id"), "embedding")
-    # One Arrow pass per query: ordered n_probe nearest lists + the
-    # ADC LUT (both exact-fold, hash-gate safe) — then explode to
-    # (query, list) probe rows; the batch (not the index) broadcasts.
-    qprep = incoming.select(
-        F.col("vec_id").alias("query_id"),
-        centroid_topk_exact_udf(cents, n_probe)(F.col("embedding")).alias(
-            "_cents"
-        ),
-        pq_query_lut_udf(model)(F.col("embedding")).alias("_lut"),
-    )
-    probes = qprep.select(
-        "query_id", "_lut", F.explode("_cents").alias("cent_id")
+    # (query, list) probe rows: the n_probe nearest lists, then the
+    # ADC LUT of the query on each (both exact-fold, hash-gate safe);
+    # the batch (not the index) broadcasts.
+    probes = assign_nearest_centroid(
+        incoming, "vec_id", "embedding", cents, n_best=n_probe
+    ).select(
+        F.col("id").alias("query_id"),
+        pq_query_lut_udf(model)(F.col("v")).alias("_lut"),
+        "cent_id",
     )
     idx = txlog.read(spark, path).select(
         F.col("id").alias("neighbor_id"), "codes", "cent_id"
@@ -820,14 +814,7 @@ def _ivf_inc_adc_probe(spark: SparkSession, ctx) -> DataFrame:
     # Maintenance: the batch's own (id, codes, cent_id) rows enter the
     # compressed index through the same commit protocol.
     before = txlog.snapshot_row_count(path)
-    batch_assigned = incoming.select(
-        F.col("vec_id").alias("id"),
-        pq_code_array_udf(model)(F.col("embedding")).alias("codes"),
-        F.element_at(
-            centroid_topk_exact_udf(cents, 1)(F.col("embedding")), 1
-        ).alias("cent_id"),
-    )
-    txlog.append(batch_assigned, path, stats_cols=["cent_id"])
+    txlog.append(_adc_index_rows(incoming, model, cents), path, stats_cols=["cent_id"])
     grew = txlog.snapshot_row_count(path) - before
     assert grew == incoming.count(), (grew, "index growth != batch size")
     return out
@@ -1162,7 +1149,7 @@ FROM expl GROUP BY cent_id, dim
 def kmeans_update_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd update over the embedding corpus
     (operators/similarity.py:kmeans_update_step): nearest-centroid
-    assignment is the same scan-side literal argmax ivf_topk indexes
+    assignment is the same scan-side exact-fold argmax ivf_topk indexes
     with (no corpus Exchange); the member means come back in exact
     integer micro-units, so the training step — not just the final
     index — is hash-verifiable cross-engine. The oracle replays
@@ -1290,7 +1277,7 @@ FROM assigned s LEFT JOIN pruned p ON p.vec_id = s.vec_id
 @register("semdedup_prune", _SEM_ORACLE)
 def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) end to end: cluster the embedding
-    space (scan-side literal-centroid argmax — the same no-Exchange
+    space (scan-side exact-fold centroid argmax — the same no-Exchange
     assignment the IVF index and k-means step use), then prune every
     vector with a lower-id near-twin (cosine > {_SEM_T}) INSIDE its
     cluster — clustering bounds the quadratic pair work, the paper's

@@ -108,9 +108,10 @@ def test_fulltext_broadcast_term_stats(spark):
 
 
 def test_ivf_broadcasts_centroids_and_probes(spark):
-    # IVF: centroids are a literal array, so corpus assignment is a
-    # pure projection (argmax in codegen — no crossJoin, no window);
-    # the probe table broadcasts onto the assigned corpus.
+    # IVF: centroids ride the nearest-centroid kernel's closure, so
+    # corpus assignment is a pure projection (exact fold <= 64x64
+    # cells, one float64 matmul above — no crossJoin, no window); the
+    # probe table broadcasts onto the assigned corpus.
     plan = _formatted(spark, "ivf_topk")
     assert "CartesianProduct" not in plan
     assert (
@@ -457,8 +458,9 @@ def test_pq_adc_refine_exact_stage_is_shortlist_sized(spark):
 
 
 def test_ivf_topk_trained_has_no_corpus_collect_or_exchange(spark):
-    """Trained-centroid IVF: centroids are plan-time literals (no
-    corpus action), assignment is scan-side, and the only shuffles
+    """Trained-centroid IVF: centroids are plan-time model parameters
+    in the nearest-centroid kernel (no corpus action; 32x64 cells run
+    the exact fold), assignment is scan-side, and the only shuffles
     are the k-bounded per-query ranking windows."""
     plan = _formatted(spark, "ivf_topk_trained")
     # assignment stays in the scan: no corpus-wide hash exchange

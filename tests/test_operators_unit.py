@@ -801,13 +801,14 @@ def test_asof_join_strict_vs_nonstrict_same_instant(spark):
     assert loose.asof_click_id == 9    # same-instant row matched
 
 
-def test_ivf_pandas_fallback_matches_literal_path(spark):
-    """Above the literal-cell cap, IVF assignment switches to the
-    Arrow/numpy path; on tie-free data the two paths must produce
-    IDENTICAL results (same assignments, same probes, and the final
-    scores go through the same exact cosine expression either way)."""
+def test_ivf_pandas_fallback_matches_literal_path(spark, monkeypatch):
+    """Above the exact-fold cell cap, IVF assignment switches to the
+    float64 matmul kernel; on tie-free data the two kernels must
+    produce IDENTICAL results (same assignments, same probes, and the
+    final scores go through the same exact cosine either way)."""
     import random
 
+    from dss_nlp_ingestion_spark.operators import similarity
     from dss_nlp_ingestion_spark.operators.similarity import ivf_topk
 
     rng = random.Random(7)
@@ -816,20 +817,19 @@ def test_ivf_pandas_fallback_matches_literal_path(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id < 5")
-    lit = ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3)
-    pnd = ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3, literal_cell_cap=1)
     norm = lambda d: sorted(
         (r.query_id, r.neighbor_id, repr(r.score), r.rank) for r in d.collect()
     )
-    assert norm(lit) == norm(pnd)
-    assert len(norm(lit)) > 0
+    lit = norm(ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3))
+    monkeypatch.setattr(similarity, "_EXACT_CELL_CAP", 0)
+    pnd = norm(ivf_topk(df, q, centroid_mod=7, n_probe=2, k=3))
+    assert lit == pnd
+    assert len(lit) > 0
 
 
 def test_ivf_literal_cap_512_centroids_compiles(spark):
-    """The literal path at its cap — 512 centroids x 64 dims = 32k
-    literal cells — must codegen and execute in bounded time (the old
-    4096-centroid ceiling was a ~1M-node expression tree that stalls
-    janino; this pins the guard at a size that demonstrably works)."""
+    """512×64 centroids run through the matmul branch and execute in
+    bounded time."""
     import random
     import time
 
@@ -1785,10 +1785,14 @@ def test_batched_bmp_paths_match_scalar_codec():
         list(bmp_pixel_stats_batch(iter([broken])))
 
 
-def test_assign_nearest_centroid_paths_agree(spark):
-    """r6: the literal-fold and BLAS-pandas assignment paths (and
-    their n_best multi-probe forms) must agree away from float ties —
-    synthetic well-separated vectors make every argmax decisive."""
+def test_assign_nearest_centroid_paths_agree(spark, monkeypatch):
+    """r6: the exact-fold and matmul kernels (and their n_best
+    multi-probe forms) must agree away from float ties — synthetic
+    well-separated vectors make every argmax decisive. A zero-norm
+    centroid scores NaN and is never nearest on either kernel, the
+    nearest cell is the head of the 2-probe list, and an empty
+    centroid set is a ValueError."""
+    from dss_nlp_ingestion_spark.operators import similarity
     from dss_nlp_ingestion_spark.operators.similarity import (
         assign_nearest_centroid,
         collect_centroids,
@@ -1802,22 +1806,29 @@ def test_assign_nearest_centroid_paths_agree(spark):
         rows.append((i, v))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = collect_centroids(df, "vec_id", "embedding", 15)  # ids 0,15,30,45
-    for n_best in (1, 2):
-        lit = {
-            (r["id"], r["cent_id"])
-            for r in assign_nearest_centroid(
-                df, "vec_id", "embedding", cents,
-                literal_cell_cap=10**9, n_best=n_best,
-            ).collect()
-        }
-        blas = {
-            (r["id"], r["cent_id"])
-            for r in assign_nearest_centroid(
-                df, "vec_id", "embedding", cents,
-                literal_cell_cap=0, n_best=n_best,
-            ).collect()
-        }
-        assert lit == blas and len(lit) == 60 * n_best
+    zero = {"cent_id": -1, "_cvec": [0.0] * 8}  # sorts first: NaN scores
+
+    def ranked(n_best):
+        # explode emits each id's cells contiguously in rank order
+        # within its scan partition, and collect() keeps that order
+        got: dict[int, list[int]] = {}
+        for r in assign_nearest_centroid(
+            df, "vec_id", "embedding", [zero, *cents], n_best=n_best
+        ).collect():
+            got.setdefault(r["id"], []).append(r["cent_id"])
+        return got
+
+    exact = {n_best: ranked(n_best) for n_best in (1, 2)}
+    monkeypatch.setattr(similarity, "_EXACT_CELL_CAP", 0)
+    matmul = {n_best: ranked(n_best) for n_best in (1, 2)}
+    for got in (exact, matmul):
+        assert len(got[1]) == 60 and all(len(c) == 1 for c in got[1].values())
+        assert all(len(c) == 2 for c in got[2].values())
+        assert all(-1 not in c for n in (1, 2) for c in got[n].values())
+        assert {i: c[:1] for i, c in got[2].items()} == got[1]
+    assert exact == matmul
+    with pytest.raises(ValueError, match="no centroids"):
+        assign_nearest_centroid(df, "vec_id", "embedding", [])
 
 
 def test_bmp_batch_truncated_header_error_parity():

@@ -8,9 +8,9 @@ folds, 10-100x faster). The hash gate only stays sound if the two are
 bit-identical: numpy must not fuse or reassociate the folds. Pin it
 per element over the real embeddings fixture.
 
-Also pins the centroid top-k exact-fold UDF against the literal
-scan-side assignment operator (same scores, same DESC/cent_id ASC
-tie-break) — the probe's list SELECTION is part of the hashed output.
+Also pins the centroid top-k kernel's exact-fold branch against its
+expression form (same scores, same DESC/cent_id ASC tie-break) — the
+probe's list SELECTION is part of the hashed output.
 """
 
 from __future__ import annotations
@@ -63,38 +63,27 @@ def test_pq_lut_udf_matches_expression_form_bitwise(spark):
         )
 
 
-def test_centroid_topk_exact_udf_matches_literal_assignment(spark):
+def test_centroid_topk_udf_matches_expression_form(spark):
     from dss_nlp_ingestion_spark.operators.similarity import (
-        assign_nearest_centroid,
-        centroid_topk_exact_udf,
+        centroid_topk_expr,
+        centroid_topk_udf,
         load_ivf_centroids,
     )
 
+    # 32 x 64 cells: within the exact-fold cap
     cents = [
         {"cent_id": int(c), "_cvec": [float(x) for x in v]}
         for c, v in load_ivf_centroids()
     ]
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     n_best = 4
-    # The explode emits each id's cells contiguously in rank order
-    # within its scan partition and collect() preserves partition
-    # order — group consecutively driver-side (a groupBy/collect_list
-    # would scramble the order across the shuffle).
-    lit_rows = assign_nearest_centroid(
-        emb, "vec_id", "embedding", cents, n_best=n_best, impl="expr"
-    ).select("id", "cent_id").collect()
-    lits: dict[int, list[int]] = {}
-    for r in lit_rows:
-        lits.setdefault(r["id"], []).append(r["cent_id"])
-    uds = {
-        r["id"]: list(r["uds"])
-        for r in emb.select(
-            F.col("vec_id").alias("id"),
-            centroid_topk_exact_udf(cents, n_best)(F.col("embedding")).alias(
-                "uds"
-            ),
-        ).collect()
-    }
+    rows = emb.select(
+        F.col("vec_id").alias("id"),
+        centroid_topk_expr(F.col("embedding"), cents, n_best).alias("lits"),
+        centroid_topk_udf(cents, n_best)(F.col("embedding")).alias("uds"),
+    ).collect()
+    lits = {r["id"]: list(r["lits"]) for r in rows}
+    uds = {r["id"]: list(r["uds"]) for r in rows}
     assert lits and set(lits) == set(uds)
     for vid, ordered in lits.items():
         assert ordered == uds[vid], vid
