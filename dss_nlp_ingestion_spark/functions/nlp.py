@@ -21,8 +21,9 @@ deterministic local heuristics with the same *signatures and shapes*:
 
 Everything is a JVM-side expression, so the "model" runs inside
 whole-stage codegen; swap in a real model by replacing a single
-function with a pandas UDF of the same signature (a reference
-vectorized implementation lives in ``sentiment_pandas_udf``).
+function with a pandas UDF of the same signature (the shipped
+quantized models below — ``quantized_sentiment_udf``,
+``quantized_topic_udf``, ``quantized_encoder_udf`` — are such UDFs).
 """
 
 from __future__ import annotations
@@ -78,125 +79,7 @@ def sentiment_label(col: Column, threshold: float = 0.2) -> Column:
     )
 
 
-def sentiment_pandas_udf():
-    """Arrow-vectorized twin of :func:`sentiment_score` — the slot
-    where a real model (ONNX/torch) would sit; batched, never
-    per-row-Python in the JVM loop. Built lazily because
-    ``pandas_udf`` needs an active SparkSession to parse its return
-    type."""
-
-    @pandas_udf("double")
-    def _sentiment(text: pd.Series) -> pd.Series:
-        pos_pat = r"\b(" + "|".join(POS_WORDS) + r")\b"
-        neg_pat = r"\b(" + "|".join(NEG_WORDS) + r")\b"
-        low = text.str.lower()
-        pos = low.str.count(pos_pat)
-        neg = low.str.count(neg_pat)
-        total = pos + neg
-        return ((pos - neg) / total.where(total > 0)).fillna(0.0)
-
-    return _sentiment
-
-
-def train_sentiment_model(
-    texts: list[str],
-    labels: list[int],
-    dim: int = 256,
-    epochs: int = 300,
-    lr: float = 0.5,
-) -> dict:
-    """Train REAL weights for the sentiment slot: logistic regression
-    over hashed bag-of-words features (numpy batch gradient descent,
-    deterministic — no RNG, zero init). Returns the weight artifact
-    ``{"w": ndarray[dim], "b": float, "dim": int}`` —
-    ``numpy.savez``-able, i.e. the same load-from-artifact contract a
-    quantized ONNX/torch model would use.
-
-    This exists to prove the pandas-UDF model slot
-    (:func:`sentiment_model_udf`) carries learned parameters, not just
-    the keyword heuristic; the heuristic remains the oracle-checked
-    default (an API-backed model is inherently non-reproducible
-    cross-engine, the same reason the reference's Tencent/Baidu calls
-    aren't oracle-checkable)."""
-    import numpy as np
-
-    feats = np.stack([_hash_bow(t, dim) for t in texts])
-    y = np.asarray(labels, dtype="float64")
-    w = np.zeros(dim)
-    b = 0.0
-    for _ in range(epochs):
-        z = feats @ w + b
-        p = 1.0 / (1.0 + np.exp(-z))
-        grad = p - y
-        w -= lr * (feats.T @ grad) / len(y)
-        b -= lr * float(grad.mean())
-    return {"w": w, "b": b, "dim": dim}
-
-
-def _hash_bow(text: str, dim: int) -> "object":
-    """Deterministic hashed bag-of-words featurizer (shared by train
-    and serve — crc32 bucket per lowercase token, L1-normalized)."""
-    import zlib
-
-    import numpy as np
-
-    v = np.zeros(dim)
-    toks = text.lower().split()
-    for t in toks:
-        v[zlib.crc32(t.encode()) % dim] += 1.0
-    return v / max(len(toks), 1)
-
-
-def sentiment_model_udf(model: dict):
-    """The N-family MODEL slot with real weights: an Arrow-vectorized
-    pandas UDF scoring P(positive) from a trained artifact
-    (:func:`train_sentiment_model`). The weight arrays ride the UDF
-    closure — exactly how small models ship to executors; a large
-    model would instead lazy-load from shared storage on first batch,
-    same signature. Output shape matches
-    :func:`sentiment_pandas_udf` (one double per document), so the
-    two implementations are drop-in interchangeable behind the same
-    column contract (baidu_api.py:108-121's ``positive_prob``)."""
-    import numpy as np
-
-    w = np.asarray(model["w"], dtype="float64")
-    b = float(model["b"])
-    dim = int(model["dim"])
-
-    @pandas_udf("double")
-    def _score(text: pd.Series) -> pd.Series:
-        import numpy as np
-
-        feats = np.stack([_hash_bow(t or "", dim) for t in text])
-        z = feats @ w + b
-        return pd.Series(1.0 / (1.0 + np.exp(-z)))
-
-    return _score
-
-
-def _sum_bow_counts(text: str, dim: int):
-    """Hashed bag-of-words with an ENGINE-PORTABLE hash: token bucket
-    = (sum of position-weighted character codepoints, ``(i+1) *
-    ord(ch)``) mod ``dim``. Weaker than crc32 as a hash but exactly
-    reproducible in ANSI SQL (DuckDB: list_sum over ascii*position),
-    which is what puts the served model under the oracle gate.
-
-    The POSITION weight matters: the plain codepoint sum aliased
-    every digit-swapped token pair ('tok06' == 'tok15' == 'tok24' at
-    ANY dim), which capped the encoder's held-out retrieval below the
-    zero-parameter hash baseline (r7 NLP_EVAL finding: 0.875 -> 1.0
-    1-NN accuracy from this one change). Returns (bucket-count int64
-    vector, n_tokens)."""
-    import numpy as np
-
-    counts = np.zeros(dim, dtype=np.int64)
-    toks = text.strip().lower().split()
-    for t in toks:
-        counts[sum((i + 1) * ord(ch) for i, ch in enumerate(t)) % dim] += 1
-    return counts, len(toks)
-
-
-#: Negation-scope vocabulary for the v2 featurizer. A token within 4
+#: Negation-scope vocabulary for the sentiment featurizer. A token within 4
 #: positions after a NEGATOR — with no scope BREAK between them —
 #: contributes -1 instead of +1 to its hash bucket, so serving flips
 #: the learned polarity of any vocabulary word ("not good" scores as
@@ -211,7 +94,7 @@ NEGATORS = frozenset(
 BREAK_WORDS = frozenset("but however yet although though".split())
 NEG_WINDOW = 4
 
-import re as _re  # noqa: E402  (stdlib; used by the v2 featurizer)
+import re as _re  # noqa: E402  (stdlib; used by the featurizers)
 
 _STRIP_EDGE = _re.compile(r"^[^a-z0-9]+|[^a-z0-9]+$")
 _CLAUSE_END = _re.compile(r"[.,;:!?]$")
@@ -221,7 +104,7 @@ def _poly_bucket(token: str, dim: int) -> int:
     """Engine-portable POLYNOMIAL rolling hash: ``h = 7; h = (h*131 +
     codepoint) mod (2^31 - 1)`` folded left-to-right, bucket = h mod
     dim. Sequential (DuckDB replays it with ``list_reduce``), int64-
-    safe (acc < 2^31, *131 + code < 2^39), and — unlike the v1
+    safe (acc < 2^31, *131 + code < 2^39), and — unlike the former v1
     position-weighted codepoint SUM — actually mixing: same-length
     lowercase words no longer land in a narrow band (measured on the
     committed 878-word lexicon: 26 collisions at dim=16384, the
@@ -230,32 +113,6 @@ def _poly_bucket(token: str, dim: int) -> int:
     for ch in token:
         h = (h * 131 + ord(ch)) % 2147483647
     return h % dim
-
-
-def _signed_features(text: str, dim: int, memo: dict | None = None):
-    """v2 featurizer core: yield ``(bucket, sign)`` per feature token
-    in ONE O(tokens) pass. Token bucket = :func:`_poly_bucket` of the
-    PUNCTUATION-STRIPPED token; sign is -1 when the token sits in an
-    active negation scope, else +1.
-
-    Scope rule (replayed exactly by the SQL oracle via one window
-    frame): token i is negated iff some negator sits at position
-    p in [i-4, i-1] and no scope break sits at a position in [p, i-1]
-    — equivalently, tracking the GLOBAL last negator/breaker indices:
-    ``last_neg >= i-4 and last_break < last_neg``. A break is a token
-    ENDING with clause punctuation (.,;:!?) or a contrast conjunction
-    (but/however/yet/although/though). Negator tokens themselves emit
-    no feature (their signal is structural); tokens that strip to ''
-    emit none either.
-
-    ``memo`` caches the context-free per-token properties (stripped
-    form, bucket, negator/breaker flags) across documents of a batch
-    — the serving-path hot loop; scope state stays per-document.
-
-    Implemented as the v3 featurizer with an EMPTY subword space
-    (dim_s = 0) so the negation-scope machinery — the subtlest part —
-    has exactly one implementation (r9 review finding)."""
-    return _signed_features_v3(text, dim, 0, memo)
 
 
 #: v3 sentiment subword config: char n-gram length, the two hash
@@ -295,16 +152,32 @@ def _subword_buckets(s: str, dim_s: int) -> list[int]:
     return out
 
 
-def _signed_features_v3(
+def _signed_features(
     text: str, dim_w: int, dim_s: int, memo: dict | None = None
 ):
-    """v3 featurizer core: the v2 negation-scope pass
-    (:func:`_signed_features`) EXTENDED with subword buckets — each
-    surviving token emits its word bucket (in [0, dim_w)) plus its
-    char n-gram buckets (offset by dim_w), all carrying the token's
-    negation sign. Subwords are what give a morphologically novel
-    word ("dreadfully") a polarity: it shares stem grams with a
-    trained word ("dreadful") — architecture, not eval vocabulary."""
+    """The sentiment featurizer: yield ``(bucket, sign)`` per feature
+    in ONE O(tokens) pass. Each surviving token emits its word bucket
+    (:func:`_poly_bucket` of the PUNCTUATION-STRIPPED token, in [0,
+    dim_w)) plus, when ``dim_s > 0``, its char n-gram buckets (offset
+    by dim_w), all carrying the token's negation sign: -1 when it sits
+    in an active negation scope, else +1. ``dim_s = 0`` is the
+    word-only v2 model; the subwords of v3 are what give a
+    morphologically novel word ("dreadfully") a polarity — it shares
+    stem grams with a trained word ("dreadful").
+
+    Scope rule (replayed exactly by the SQL oracle via one window
+    frame): token i is negated iff some negator sits at position
+    p in [i-4, i-1] and no scope break sits at a position in [p, i-1]
+    — equivalently, tracking the GLOBAL last negator/breaker indices:
+    ``last_neg >= i-4 and last_break < last_neg``. A break is a token
+    ENDING with clause punctuation (.,;:!?) or a contrast conjunction
+    (but/however/yet/although/though). Negator tokens themselves emit
+    no feature (their signal is structural); tokens that strip to ''
+    emit none either.
+
+    ``memo`` caches the context-free per-token properties (buckets,
+    negator/breaker flags) across documents of a batch — the
+    serving-path hot loop; scope state stays per-document."""
     if memo is None:
         memo = {}
     out = []
@@ -340,24 +213,12 @@ def _signed_features_v3(
 
 def _signed_ngram_counts(text: str, dim_w: int, dim_s: int):
     """Dense int64 signed-count vector form of
-    :func:`_signed_features_v3` (training/eval path)."""
+    :func:`_signed_features` (training/eval path). Returns (counts,
+    n = number of features)."""
     import numpy as np
 
     counts = np.zeros(dim_w + dim_s, dtype=np.int64)
-    feats = _signed_features_v3(text, dim_w, dim_s)
-    for bucket, sgn in feats:
-        counts[bucket] += sgn
-    return counts, len(feats)
-
-
-def _signed_bow_counts(text: str, dim: int):
-    """Dense int64 signed-count vector form of
-    :func:`_signed_features` (training/eval path). Returns (counts,
-    n = number of feature-emitting tokens)."""
-    import numpy as np
-
-    counts = np.zeros(dim, dtype=np.int64)
-    feats = _signed_features(text, dim)
+    feats = _signed_features(text, dim_w, dim_s)
     for bucket, sgn in feats:
         counts[bucket] += sgn
     return counts, len(feats)
@@ -501,92 +362,6 @@ def sentiment_training_set(corpus: list, lexicon: dict):
     return texts, labels, weights
 
 
-def train_quantized_sentiment(
-    texts: list[str],
-    labels: list[int],
-    dim: int = 128,
-    epochs: int = 400,
-    lr: float = 0.5,
-    scale: int = 1_000_000,
-) -> dict:
-    """Train the SHIPPED sentiment model: logistic regression over
-    the portable codepoint-sum featurizer (deterministic numpy batch
-    GD, zero init, no RNG), with the learned weights QUANTIZED to
-    integers at ``1/scale`` resolution. Quantization is what makes
-    serving cross-engine exact: the score's pre-activation is
-    ``(b_q*n + sum_j w_q[j]*c_j) / (n*scale)`` — an integer dot
-    product (order-independent, overflow-free at any realistic doc
-    length) followed by ONE float division, so Spark and a SQL oracle
-    compute bit-identical z and only exp() can differ (last-ulp,
-    absorbed by fround). Artifact: {"w_q": int64[dim], "b_q": int,
-    "dim", "scale"} — numpy.savez-able."""
-    import numpy as np
-
-    feats = np.stack(
-        [
-            (lambda cn: cn[0] / max(cn[1], 1))(_sum_bow_counts(t, dim))
-            for t in texts
-        ]
-    )
-    y = np.asarray(labels, dtype="float64")
-    w = np.zeros(dim)
-    b = 0.0
-    for _ in range(epochs):
-        z = feats @ w + b
-        p = 1.0 / (1.0 + np.exp(-z))
-        grad = p - y
-        w -= lr * (feats.T @ grad) / len(y)
-        b -= lr * float(grad.mean())
-    return {
-        "w_q": np.rint(w * scale).astype(np.int64),
-        "b_q": int(np.rint(b * scale)),
-        "dim": dim,
-        "scale": scale,
-    }
-
-
-def train_negation_sentiment(
-    texts: list[str],
-    labels: list[int],
-    sample_weight: list[float] | None = None,
-    dim: int = 16384,
-    epochs: int = 6000,
-    lr: float = 2.0,
-    lam: float = SENTIMENT_L2,
-    scale: int = 1_000_000,
-) -> dict:
-    """Train the v2 SHIPPED sentiment model: L2-regularized logistic
-    regression over UNNORMALIZED signed negation-scope counts
-    (:func:`_signed_bow_counts`) — deterministic numpy batch GD, zero
-    init, no RNG. Sample weights are rescaled so the two classes
-    carry exactly equal total weight (no learned prior from class
-    imbalance). Unnormalized counts matter: L1-normalizing by doc
-    length diluted a content word's evidence to w/n, letting tiny
-    filler-word sums outvote it on ~9-token inputs (measured on the
-    carrier validation).
-
-    The serving score is an exact integer dot product: z =
-    ``(b_q + sum_j w_q[j]*c_j) / scale`` clamped to [-37, 37], so
-    both engines compute bit-identical z and only exp() can differ
-    in the last ulp (absorbed by fround-6). Artifact carries
-    ``version: 2`` so loaders dispatch the right featurizer."""
-    import numpy as np
-
-    feats = np.stack(
-        [_signed_bow_counts(t, dim)[0] for t in texts]
-    ).astype("float64")
-    w_q, b_q = _fit_signed_logistic(
-        feats, labels, sample_weight, np.full(dim, lam), epochs, lr, scale
-    )
-    return {
-        "w_q": w_q,
-        "b_q": b_q,
-        "dim": dim,
-        "scale": scale,
-        "version": 2,
-    }
-
-
 #: Cody–Waite constants for :func:`_det_exp` (ln2 split hi/lo so
 #: ``x - k*LN2_HI`` is exact for |k| < 2^20; the lo part restores the
 #: dropped bits — fdlibm's e_exp.c split, public domain).
@@ -689,8 +464,8 @@ def _fold_feat_grad(idx, vals, g, d):
 def _fit_signed_logistic(
     feats, labels, sample_weight, lam_vec, epochs, lr, scale
 ):
-    """The ONE weighted-logistic trainer behind both shipped
-    sentiment models (v2 word-only and v3 word+subword): exact class
+    """The weighted-logistic fit behind both shipped sentiment models
+    (v2 word-only and v3 word+subword): exact class
     balance, mean-1 sample weights, deterministic batch GD with a
     PER-COORDINATE L2 vector (a uniform vector is bitwise-identical
     to the scalar penalty it replaced — scalar broadcast and
@@ -745,17 +520,28 @@ def train_subword_sentiment(
     lam_s_mult: float = SENTIMENT_SUBWORD_L2_MULT,
     scale: int = 1_000_000,
 ) -> dict:
-    """Train the v3 SHIPPED sentiment model: the v2 recipe
-    (:func:`train_negation_sentiment` — balanced weighted logistic
-    regression, deterministic batch GD) over the SPLIT word+subword
-    feature space (:func:`_signed_ngram_counts`), with a HEAVIER L2
-    on the subword region (``lam * lam_s_mult``). The asymmetric
-    penalty is the point: in-vocabulary words keep their word-level
-    evidence dominant (subword weights shrink toward 0 and cannot
-    flip a known word's polarity via cross-polarity stem collisions
-    like grates/grateful), while a morphologically NOVEL word has
-    ONLY subword features, so even small stem weights decide its
-    sign. Serving stays the same exact integer dot product."""
+    """Train a SHIPPED sentiment model: balanced weighted logistic
+    regression (deterministic batch GD, :func:`_fit_signed_logistic`)
+    over UNNORMALIZED signed counts of the split word+subword feature
+    space (:func:`_signed_ngram_counts`), with a HEAVIER L2 on the
+    subword region (``lam * lam_s_mult``). ``dim_s = 0`` trains the
+    word-only v2 model (the subword region is empty); ``dim_s > 0``
+    the v3 one.
+
+    Unnormalized counts matter: L1-normalizing by doc length diluted a
+    content word's evidence to w/n, letting tiny filler-word sums
+    outvote it on ~9-token inputs (measured on the carrier
+    validation). The asymmetric penalty is the point of v3:
+    in-vocabulary words keep their word-level evidence dominant
+    (subword weights shrink toward 0 and cannot flip a known word's
+    polarity via cross-polarity stem collisions like grates/grateful),
+    while a morphologically NOVEL word has ONLY subword features, so
+    even small stem weights decide its sign.
+
+    The serving score is an exact integer dot product: z =
+    ``(b_q + sum_j w_q[j]*c_j) / scale`` clamped to [-37, 37], so
+    both engines compute bit-identical z and only exp() can differ
+    in the last ulp (absorbed by fround-6)."""
     import numpy as np
 
     feats = np.stack(
@@ -773,15 +559,29 @@ def train_subword_sentiment(
         "dim_w": dim_w,
         "dim_s": dim_s,
         "scale": scale,
-        "version": 3,
+        "version": 3 if dim_s else 2,
     }
+
+
+def _artifact_version(z, path: str, supported: tuple[int, ...]) -> int:
+    """The ``version`` of an opened model artifact, or ValueError when
+    it is missing or not one this module can featurize — a file
+    scored through the wrong featurizer would serve silently wrong
+    numbers, so it must fail at load."""
+    version = int(z["version"]) if "version" in z else None
+    if version not in supported:
+        raise ValueError(
+            f"model artifact {path!r} has version {version}; supported "
+            f"versions: {', '.join(map(str, supported))}"
+        )
+    return version
 
 
 def save_sentiment_artifact(model: dict, path: str) -> None:
     import numpy as np
 
     extra = {}
-    if model.get("version", 1) >= 3:
+    if model["version"] == 3:
         extra = {
             "dim_w": np.int64(model["dim_w"]),
             "dim_s": np.int64(model["dim_s"]),
@@ -792,12 +592,17 @@ def save_sentiment_artifact(model: dict, path: str) -> None:
         b_q=np.int64(model["b_q"]),
         dim=np.int64(model["dim"]),
         scale=np.int64(model["scale"]),
-        version=np.int64(model.get("version", 1)),
+        version=np.int64(model["version"]),
         **extra,
     )
 
 
 def load_sentiment_artifact(path: str) -> dict:
+    """Load a sentiment artifact: version 2 (word-only, read as
+    ``dim_w = dim, dim_s = 0``) or version 3 (word+subword, carrying
+    its own dim_w/dim_s). The split dims are validated here so a
+    malformed file fails at load with a clear message, not with a
+    bare KeyError deep inside an executor's scoring batch."""
     import numpy as np
 
     with np.load(path) as z:
@@ -806,55 +611,38 @@ def load_sentiment_artifact(path: str) -> dict:
             "b_q": int(z["b_q"]),
             "dim": int(z["dim"]),
             "scale": int(z["scale"]),
-            "version": int(z["version"]) if "version" in z else 1,
+            "version": _artifact_version(z, path, (2, 3)),
         }
-        if "dim_w" in z:
-            out["dim_w"] = int(z["dim_w"])
-            out["dim_s"] = int(z["dim_s"])
-        # A version>=3 artifact is scored through the split featurizer,
-        # which indexes dim_w/dim_s — validate at LOAD so a malformed
-        # file fails here with a clear message, not with a bare
-        # KeyError deep inside an executor's scoring batch.
-        if out["version"] >= 3:
-            if "dim_w" not in out or "dim_s" not in out:
-                raise ValueError(
-                    f"sentiment artifact {path!r} is version "
-                    f"{out['version']} but lacks dim_w/dim_s — the "
-                    "split-featurizer dims are required for v3+ scoring"
-                )
-            if out["dim_w"] + out["dim_s"] != out["dim"]:
-                raise ValueError(
-                    f"sentiment artifact {path!r}: dim_w({out['dim_w']})"
-                    f" + dim_s({out['dim_s']}) != dim({out['dim']})"
-                )
-        return out
+        if out["version"] == 2:
+            out["dim_w"], out["dim_s"] = out["dim"], 0
+        elif "dim_w" not in z or "dim_s" not in z:
+            raise ValueError(
+                f"sentiment artifact {path!r} is version 3 but lacks "
+                "dim_w/dim_s — the split-featurizer dims are required"
+            )
+        else:
+            out["dim_w"], out["dim_s"] = int(z["dim_w"]), int(z["dim_s"])
+    if out["dim_w"] + out["dim_s"] != out["dim"]:
+        raise ValueError(
+            f"sentiment artifact {path!r}: dim_w({out['dim_w']})"
+            f" + dim_s({out['dim_s']}) != dim({out['dim']})"
+        )
+    return out
 
 
 def sentiment_z(text: str, model: dict) -> float:
     """Pre-activation z for one text under a quantized sentiment
-    artifact (v1 or v2 featurizer by ``version``): the ONE float
-    division after an exact integer dot product — shared by the
-    pandas-UDF serving path, the eval harness, and tests so every
-    consumer scores identically. v2 scores unnormalized signed
-    counts, ``z = (b_q + dot) / scale`` clamped to [-37, 37] (the
-    clamp keeps exp() finite on pathological repeated-token inputs;
-    past |z|=14 the fround-6 sigmoid is saturated anyway, so the
-    clamp never changes a recorded score)."""
-    version = model.get("version", 1)
-    if version >= 2:
-        w_q = model["w_q"]
-        feats = (
-            _signed_features_v3(text or "", model["dim_w"], model["dim_s"])
-            if version >= 3
-            else _signed_features(text or "", model["dim"])
-        )
-        dot = sum(sgn * int(w_q[bucket]) for bucket, sgn in feats)
-        z = (model["b_q"] + dot) / model["scale"]
-        return max(-37.0, min(37.0, z))
-    counts, n = _sum_bow_counts(text or "", model["dim"])
-    n = max(n, 1)
-    s = model["b_q"] * n + int(counts @ model["w_q"])
-    return s / (n * model["scale"])
+    artifact: the ONE float division after an exact integer dot
+    product over signed counts, ``z = (b_q + dot) / scale`` clamped to
+    [-37, 37] (the clamp keeps exp() finite on pathological
+    repeated-token inputs; past |z|=14 the fround-6 sigmoid is
+    saturated anyway, so the clamp never changes a recorded score).
+    The driver-side twin of :func:`quantized_sentiment_udf`, used by
+    the eval harness and tests."""
+    w_q = model["w_q"]
+    feats = _signed_features(text or "", model["dim_w"], model["dim_s"])
+    dot = sum(sgn * int(w_q[bucket]) for bucket, sgn in feats)
+    return max(-37.0, min(37.0, (model["b_q"] + dot) / model["scale"]))
 
 
 #: Path of the committed default artifact — v2: negation-scope signed
@@ -867,57 +655,33 @@ DEFAULT_SENTIMENT_ARTIFACT = __file__.replace("nlp.py", "sentiment_model_v2.npz"
 
 
 def quantized_sentiment_udf(model: dict):
-    """Serve a :func:`train_quantized_sentiment` artifact as an
-    Arrow-vectorized pandas UDF returning fround-6 P(positive). The
+    """Serve a sentiment artifact (:func:`load_sentiment_artifact`) as
+    an Arrow-vectorized pandas UDF returning fround-6 P(positive). The
     integer weight vector rides the UDF closure to executors; scoring
-    is the exact integer dot product described in the trainer — the
+    is the exact integer dot product of :func:`sentiment_z` — the
     same number a SQL oracle computes, which is how a LEARNED model
     (not a heuristic) sits under the driver's hash gate."""
     import numpy as np
 
-    m = {
-        "w_q": np.asarray(model["w_q"], dtype=np.int64),
-        "b_q": int(model["b_q"]),
-        "dim": int(model["dim"]),
-        "scale": int(model["scale"]),
-        "version": int(model.get("version", 1)),
-    }
-    if m["version"] >= 3:
-        m["dim_w"], m["dim_s"] = int(model["dim_w"]), int(model["dim_s"])
+    w_q = np.asarray(model["w_q"], dtype=np.int64)
+    b_q, scale = int(model["b_q"]), int(model["scale"])
+    dim_w, dim_s = int(model["dim_w"]), int(model["dim_s"])
 
     @pandas_udf("double")
     def _score(text: pd.Series) -> pd.Series:
         import numpy as np
 
+        # Hot path: one O(tokens) pass per doc, integer weight
+        # accumulation (no dense vector), token properties memoized
+        # across the Arrow batch.
+        w_l = w_q.tolist()  # plain Python ints: exact + fast
         out = np.empty(len(text), dtype="float64")
-        if m["version"] >= 2:
-            # Hot path: one O(tokens) pass per doc, integer weight
-            # accumulation (no dense vector), token properties
-            # memoized across the Arrow batch.
-            w_l = m["w_q"].tolist()  # plain Python ints: exact + fast
-            b_q, scale = m["b_q"], m["scale"]
-            if m["version"] >= 3:
-                dim_w, dim_s = m["dim_w"], m["dim_s"]
-
-                def feats(t, memo):
-                    return _signed_features_v3(t or "", dim_w, dim_s, memo)
-
-            else:
-                dim = m["dim"]
-
-                def feats(t, memo):
-                    return _signed_features(t or "", dim, memo)
-
-            memo: dict = {}
-            for i, t in enumerate(text):
-                dot = b_q
-                for bucket, sgn in feats(t, memo):
-                    dot += sgn * w_l[bucket]
-                z = max(-37.0, min(37.0, dot / scale))
-                out[i] = np.floor(1.0 / (1.0 + np.exp(-z)) * 1e6 + 0.5) / 1e6
-            return pd.Series(out)
+        memo: dict = {}
         for i, t in enumerate(text):
-            z = sentiment_z(t, m)  # exact int64 dot + ONE float division
+            dot = b_q
+            for bucket, sgn in _signed_features(t or "", dim_w, dim_s, memo):
+                dot += sgn * w_l[bucket]
+            z = max(-37.0, min(37.0, dot / scale))
             out[i] = np.floor(1.0 / (1.0 + np.exp(-z)) * 1e6 + 0.5) / 1e6
         return pd.Series(out)
 
@@ -991,21 +755,15 @@ TOPIC_CLASSES = ("query_engine", "streaming", "data_mgmt")
 DEFAULT_TOPIC_ARTIFACT = __file__.replace("nlp.py", "topic_model_v2.npz")
 
 
-def _topic_counts(text: str, model_or_version, dim: int):
-    """Featurizer dispatch for the topic/encoder models: version 3 ->
-    uni+bigram poly-hash counts (:func:`_ngram_bow_counts`), version
-    2 -> unsigned poly-hash counts (:func:`_poly_bow_counts`),
-    version 1 -> the legacy codepoint-sum counts. Shared by trainer,
-    serving UDF and the eval harness."""
-    version = (
-        model_or_version.get("version", 1)
-        if isinstance(model_or_version, dict)
-        else int(model_or_version)
-    )
+def _topic_counts(text: str, version: int, dim: int, memo: dict | None = None):
+    """Featurizer of the topic/encoder models by artifact ``version``:
+    3 -> uni+bigram poly-hash counts (:func:`_ngram_bow_counts`,
+    ``memo`` caches its per-token state across a batch), 2 ->
+    unsigned poly-hash counts (:func:`_poly_bow_counts`). Shared by
+    trainer, serving UDFs and the eval harness."""
     if version >= 3:
-        return _ngram_bow_counts(text, dim)
-    fn = _poly_bow_counts if version >= 2 else _sum_bow_counts
-    return fn(text, dim)
+        return _ngram_bow_counts(text, dim, memo)
+    return _poly_bow_counts(text, dim)
 
 
 def train_quantized_topic(
@@ -1022,7 +780,7 @@ def train_quantized_topic(
     portable hashed-BoW featurizer (v2 default: poly-hash over
     punctuation-stripped tokens — selected with dim/epochs/lr on an
     every-5th-row validation split of the training corpus, 0.947 vs
-    0.868 for the legacy codepoint-sum form at the old defaults).
+    0.868 for the former codepoint-sum form at the old defaults).
     Deterministic numpy batch GD, zero init, no RNG; weights
     quantized to integers. Serving needs NO exp at all: the predicted
     class is the integer argmax of ``b_q[k]*n + sum_j w_q[k][j]*c_j``
@@ -1088,11 +846,13 @@ def save_topic_artifact(model: dict, path: str) -> None:
         dim=np.int64(model["dim"]),
         scale=np.int64(model["scale"]),
         n_classes=np.int64(model["n_classes"]),
-        version=np.int64(model.get("version", 1)),
+        version=np.int64(model["version"]),
     )
 
 
 def load_topic_artifact(path: str) -> dict:
+    """Load a topic artifact. Only version 2 (poly-hash unigrams) is
+    accepted: it is the featurizer the SQL oracle replays."""
     import numpy as np
 
     with np.load(path) as z:
@@ -1102,7 +862,7 @@ def load_topic_artifact(path: str) -> dict:
             "dim": int(z["dim"]),
             "scale": int(z["scale"]),
             "n_classes": int(z["n_classes"]),
-            "version": int(z["version"]) if "version" in z else 1,
+            "version": _artifact_version(z, path, (2,)),
         }
 
 
@@ -1117,7 +877,7 @@ def quantized_topic_udf(model: dict, class_names: tuple = TOPIC_CLASSES):
     b_q = np.asarray(model["b_q"], dtype=np.int64)
     dim = int(model["dim"])
     scale = int(model["scale"])
-    version = int(model.get("version", 1))
+    version = int(model["version"])
 
     @pandas_udf("topic string, margin double")
     def _score(text: pd.Series) -> pd.DataFrame:
@@ -1159,7 +919,6 @@ def train_quantized_encoder(
     epochs: int = 400,
     lr: float = 0.5,
     scale: int = 1_000_000,
-    version: int = 3,
 ) -> dict:
     """Train the SHIPPED text encoder: a softmax probe over
     ``emb_dim`` synthetic topic clusters; the learned class-weight
@@ -1168,7 +927,7 @@ def train_quantized_encoder(
     the classic linear-probe embedding). Quantized to integers, so
     ENCODING is pure int64 arithmetic: e_k = b_q[k]*n + W_q[k]·c.
 
-    v2 artifact defaults (r9): featurizer version 3 — uni+BIGRAM
+    The featurizer is version 3 — uni+BIGRAM
     poly-hash (:func:`_ngram_bow_counts`) at dim 2048 — selected on
     a mixed-cluster carrier validation built only from training
     materials (0.9922 vs 0.9219 for the best pure-BoW form; BoW has
@@ -1176,7 +935,7 @@ def train_quantized_encoder(
     token multisets)."""
     m = train_quantized_topic(
         texts, labels, n_classes=emb_dim, dim=dim, epochs=epochs, lr=lr,
-        scale=scale, version=version,
+        scale=scale, version=3,
     )
     return {
         "w_q": m["w_q"],
@@ -1184,7 +943,7 @@ def train_quantized_encoder(
         "dim": m["dim"],
         "scale": m["scale"],
         "emb_dim": emb_dim,
-        "version": version,
+        "version": 3,
     }
 
 
@@ -1198,11 +957,14 @@ def save_encoder_artifact(model: dict, path: str) -> None:
         dim=np.int64(model["dim"]),
         scale=np.int64(model["scale"]),
         emb_dim=np.int64(model["emb_dim"]),
-        version=np.int64(model.get("version", 1)),
+        version=np.int64(model["version"]),
     )
 
 
 def load_encoder_artifact(path: str) -> dict:
+    """Load an encoder artifact. Only version 3 (uni+bigram poly-hash)
+    is accepted: it is the featurizer the coverage gate and the SQL
+    oracles replay."""
     import numpy as np
 
     with np.load(path) as z:
@@ -1212,24 +974,8 @@ def load_encoder_artifact(path: str) -> dict:
             "dim": int(z["dim"]),
             "scale": int(z["scale"]),
             "emb_dim": int(z["emb_dim"]),
-            "version": int(z["version"]) if "version" in z else 1,
+            "version": _artifact_version(z, path, (3,)),
         }
-
-
-def default_text_embedding_udf(anchor_text: str | None = None):
-    """The DEFAULT N8/N10 text-embedding serving path (r5 verdict #5):
-    the committed learned encoder artifact. Returns the serving
-    pandas UDF, or ``None`` when the artifact is unavailable — the
-    caller then falls back to the :func:`embed_tokens` hash heuristic
-    (kept as the artifact-free path)."""
-    try:
-        model = load_encoder_artifact(DEFAULT_ENCODER_ARTIFACT)
-    except (OSError, KeyError, ValueError):
-        return None
-    anchor = (
-        encode_text_int64(model, anchor_text) if anchor_text is not None else None
-    )
-    return quantized_encoder_udf(model, anchor)
 
 
 #: Vocabulary-coverage gate for the DEFAULT embedding path (r10
@@ -1256,51 +1002,61 @@ ENCODER_COVERAGE_DEN = 4
 
 def encoder_covered_buckets(model: dict) -> list[int]:
     """Sorted bucket ids where the artifact carries any nonzero probe
-    weight — the single source both the serving gate UDF and the
-    DuckDB oracle's IN-list derive from."""
+    weight — the single source both the serving gate and the DuckDB
+    oracle's IN-list derive from."""
     import numpy as np
 
     w = np.asarray(model["w_q"])
     return sorted(int(b) for b in np.nonzero(np.any(w != 0, axis=0))[0])
 
 
-def encoder_coverage_ok(model: dict, text: str, memo: dict | None = None) -> bool:
-    """Driver/eval-side single-text gate decision — the exact integer
-    rule the serving UDF and the SQL twin replay."""
-    import numpy as np
-
-    dim = int(model["dim"])
-    counts, _n = _ngram_bow_counts(text or "", dim, memo)
-    covered = np.zeros(dim, dtype=bool)
-    covered[encoder_covered_buckets(model)] = True
+def _coverage_ok(counts, covered) -> bool:
+    """The integer coverage gate over one text's feature counts:
+    ``covd*DEN >= total*NUM`` with ``covd`` the occurrences landing in
+    the ``covered`` bucket ids (:func:`encoder_covered_buckets`)."""
     total = int(counts.sum())
     covd = int(counts[covered].sum())
     return total > 0 and covd * ENCODER_COVERAGE_DEN >= total * ENCODER_COVERAGE_NUM
 
 
-def encoder_coverage_gate_udf(model: dict):
-    """Arrow-vectorized boolean gate: True => the learned encoder
-    serves this row; False => the hash-embedding fallback does. Same
-    integer rule as :func:`encoder_coverage_ok`."""
+def encoder_coverage_ok(model: dict, text: str, memo: dict | None = None) -> bool:
+    """Driver/eval-side single-text gate decision — the exact integer
+    rule the serving UDF and the SQL twin replay."""
+    dim = int(model["dim"])
+    counts, _n = _topic_counts(text or "", model["version"], dim, memo)
+    return _coverage_ok(counts, encoder_covered_buckets(model))
+
+
+def _anchor_parts(a_vec):
+    """(exact big-int components, norm) of an int64 anchor vector for
+    :func:`_learned_sha_cos` — the norm is the one IEEE sqrt both
+    engines take of the exact sum of squares."""
     import numpy as np
 
-    dim = int(model["dim"])
-    covered = np.zeros(dim, dtype=bool)
-    covered[encoder_covered_buckets(model)] = True
-    num, den = ENCODER_COVERAGE_NUM, ENCODER_COVERAGE_DEN
+    a_obj = np.asarray(a_vec, dtype=np.int64).astype(object)
+    return a_obj, float(np.sqrt(float(int((a_obj**2).sum()))))
 
-    @pandas_udf("boolean")
-    def _gate(text: pd.Series) -> pd.Series:
-        memo: dict = {}
-        out = []
-        for t in text:
-            counts, _n = _ngram_bow_counts(t or "", dim, memo)
-            total = int(counts.sum())
-            covd = int(counts[covered].sum())
-            out.append(total > 0 and covd * den >= total * num)
-        return pd.Series(out, dtype="bool")
 
-    return _gate
+def _learned_sha_cos(w_q, b_q, counts, n: int, a_obj, a_norm: float):
+    """The learned encoder branch for one text: int64 embedding
+    ``e = b_q*max(n, 1) + W_q·counts``, emb_sha = sha256 of its
+    comma-joined raw components (bit-exact identity of the vector),
+    and the cosine against the anchor from :func:`_anchor_parts` —
+    exact big-int dot/norms, one sqrt+division at the end (IEEE sqrt
+    is correctly rounded, so both engines agree), fround-6."""
+    import hashlib
+
+    import numpy as np
+
+    e = b_q * max(n, 1) + w_q @ counts
+    sha = hashlib.sha256(",".join(str(int(x)) for x in e).encode()).hexdigest()
+    e_obj = e.astype(object)
+    sumsq = int((e_obj**2).sum())
+    if sumsq == 0:
+        return sha, 0.0
+    dot = int((e_obj * a_obj).sum())
+    c = float(dot) / (float(np.sqrt(float(sumsq))) * a_norm)
+    return sha, np.floor(c * 1e6 + 0.5) / 1e6
 
 
 def _hash_fallback_parts(text: str, memo: dict | None = None):
@@ -1339,15 +1095,15 @@ def _hash_fallback_parts(text: str, memo: dict | None = None):
 def gated_text_embedding_udf(model: dict, anchor_text: str):
     """ONE-Arrow-pass serving kernel of the coverage-gated default
     embedding: per row — featurize once, decide the integer gate,
-    then emit EITHER the learned branch (raw-int64 sha + big-int
-    anchor cosine, exactly :func:`quantized_encoder_udf`) OR the hash
-    fallback (integer nibble-sum identity sha + the hashed-path
-    cosine, exactly the column-expression form). The first gated
-    text_embeddings shipped the fallback as interpreted higher-order
-    column expressions evaluated on EVERY row next to the learned
-    UDF — 9-15x the row cost; this kernel computes each branch only
-    for its own rows, all inside numpy/hashlib (bit-identical per the
-    fold rules pinned by tests/test_oracle_parity.py)."""
+    then emit EITHER the learned branch (:func:`_learned_sha_cos`
+    against the anchor's embedding) OR the hash fallback (integer
+    nibble-sum identity sha + the hashed-path cosine, exactly the
+    column-expression form). The first gated text_embeddings shipped
+    the fallback as interpreted higher-order column expressions
+    evaluated on EVERY row next to the learned UDF — 9-15x the row
+    cost; this kernel computes each branch only for its own rows, all
+    inside numpy/hashlib (bit-identical per the fold rules pinned by
+    tests/test_oracle_parity.py)."""
     import hashlib
     import math
 
@@ -1355,14 +1111,9 @@ def gated_text_embedding_udf(model: dict, anchor_text: str):
 
     w_q = np.asarray(model["w_q"], dtype=np.int64)
     b_q = np.asarray(model["b_q"], dtype=np.int64)
-    dim = int(model["dim"])
-    covered = np.zeros(dim, dtype=bool)
-    covered[encoder_covered_buckets(model)] = True
-    num, den = ENCODER_COVERAGE_NUM, ENCODER_COVERAGE_DEN
-    # Learned-branch anchor (int64 embedding + exact norm).
-    a_vec = encode_text_int64(model, anchor_text)
-    a_obj = np.asarray(a_vec, dtype=np.int64).astype(object)
-    a_norm = float(np.sqrt(float(int((a_obj**2).sum()))))
+    dim, version = int(model["dim"]), int(model["version"])
+    covered = np.asarray(encoder_covered_buckets(model), dtype=np.intp)
+    a_obj, a_norm = _anchor_parts(encode_text_int64(model, anchor_text))
     # Hash-branch anchor (double components + the an-chain constant,
     # same op order as the folded column expression).
     _, a_hash = _hash_fallback_parts(anchor_text)
@@ -1380,27 +1131,11 @@ def gated_text_embedding_udf(model: dict, anchor_text: str):
         memo: dict = {}
         nib_memo: dict = {}
         for i, t in enumerate(text):
-            counts, n = _ngram_bow_counts(t or "", dim, memo)
-            total = int(counts.sum())
-            covd = int(counts[covered].sum())
-            ok = total > 0 and covd * den >= total * num
-            used[i] = ok
+            counts, n = _topic_counts(t or "", version, dim, memo)
+            used[i] = ok = _coverage_ok(counts, covered)
             if ok:
-                nn = max(n, 1)
-                e = b_q * nn + w_q @ counts
-                shas.append(
-                    hashlib.sha256(
-                        ",".join(str(int(x)) for x in e).encode()
-                    ).hexdigest()
-                )
-                e_obj = e.astype(object)
-                sumsq = int((e_obj**2).sum())
-                if sumsq == 0:
-                    cos[i] = 0.0
-                else:
-                    dot = int((e_obj * a_obj).sum())
-                    c = float(dot) / (float(np.sqrt(float(sumsq))) * a_norm)
-                    cos[i] = np.floor(c * 1e6 + 0.5) / 1e6
+                sha, cos[i] = _learned_sha_cos(w_q, b_q, counts, n, a_obj, a_norm)
+                shas.append(sha)
             else:
                 ident, evals = _hash_fallback_parts(t or "", nib_memo)
                 shas.append(
@@ -1434,64 +1169,34 @@ def encode_text_int64(model: dict, text: str):
 
     w_q = np.asarray(model["w_q"], dtype=np.int64)
     b_q = np.asarray(model["b_q"], dtype=np.int64)
-    counts, n = _topic_counts(text or "", model, int(model["dim"]))
+    counts, n = _topic_counts(text or "", model["version"], int(model["dim"]))
     return b_q * max(n, 1) + w_q @ counts
 
 
-def quantized_encoder_udf(model: dict, anchor_vec=None):
+def quantized_encoder_udf(model: dict):
     """Serve the encoder as one Arrow-vectorized pandas UDF returning
-    (emb_sha, probe_cos | anchor_cos): emb_sha = sha256 of the
-    comma-joined RAW int64 embedding (bit-exact identity of the
-    vector); the cosine is against the first probe axis e_0 by
-    default, or against ``anchor_vec`` (an int64 vector from
-    :func:`encode_text_int64`) when given — exact big-int dot/norms,
-    one sqrt+division at the end (IEEE sqrt is correctly rounded, so
-    both engines agree), fround-6."""
+    (emb_sha, probe_cos): the learned branch (:func:`_learned_sha_cos`)
+    with the cosine against the first probe axis e_0 — a one-hot
+    anchor of norm 1.0, so the cosine is exactly e[0] / ||e||."""
     import numpy as np
 
     w_q = np.asarray(model["w_q"], dtype=np.int64)
     b_q = np.asarray(model["b_q"], dtype=np.int64)
-    dim = int(model["dim"])
-    cos_col = "probe_cos" if anchor_vec is None else "anchor_cos"
-    a_obj = None
-    a_norm = None
-    if anchor_vec is not None:
-        a_obj = np.asarray(anchor_vec, dtype=np.int64).astype(object)
-        a_norm = float(np.sqrt(float(int((a_obj**2).sum()))))
+    dim, version = int(model["dim"]), int(model["version"])
+    axis0 = np.zeros(len(b_q), dtype=np.int64)
+    axis0[0] = 1
+    a_obj, a_norm = _anchor_parts(axis0)
 
-    @pandas_udf(f"emb_sha string, {cos_col} double")
+    @pandas_udf("emb_sha string, probe_cos double")
     def _encode(text: pd.Series) -> pd.DataFrame:
-        import hashlib
-
-        import numpy as np
-
         shas = []
         cos = np.empty(len(text), dtype="float64")
-        v3 = int(model.get("version", 1)) >= 3
-        memo: dict = {}  # per-batch distinct-token cache (v3 path)
+        memo: dict = {}  # per-batch distinct-token cache
         for i, t in enumerate(text):
-            if v3:
-                counts, n = _ngram_bow_counts(t or "", dim, memo)
-            else:
-                counts, n = _topic_counts(t or "", model, dim)
-            nn = max(n, 1)
-            e = b_q * nn + w_q @ counts  # int64 embedding
-            shas.append(
-                hashlib.sha256(",".join(str(int(x)) for x in e).encode()).hexdigest()
-            )
-            e_obj = e.astype(object)
-            sumsq = int((e_obj**2).sum())  # exact big-int
-            if sumsq == 0:
-                cos[i] = 0.0
-            elif a_obj is None:
-                # cosine against axis 0: e[0] / ||e||
-                c = float(int(e[0])) / float(np.sqrt(float(sumsq)))
-                cos[i] = np.floor(c * 1e6 + 0.5) / 1e6
-            else:
-                dot = int((e_obj * a_obj).sum())  # exact big-int
-                c = float(dot) / (float(np.sqrt(float(sumsq))) * a_norm)
-                cos[i] = np.floor(c * 1e6 + 0.5) / 1e6
-        return pd.DataFrame({"emb_sha": shas, cos_col: cos})
+            counts, n = _topic_counts(t or "", version, dim, memo)
+            sha, cos[i] = _learned_sha_cos(w_q, b_q, counts, n, a_obj, a_norm)
+            shas.append(sha)
+        return pd.DataFrame({"emb_sha": shas, "probe_cos": cos})
 
     return _encode
 

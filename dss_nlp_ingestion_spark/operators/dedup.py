@@ -25,6 +25,7 @@ Scale design:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -262,57 +263,23 @@ SIMHASH_WIDE_BITS = 60
 #: Exact Python twin of Java ``\s`` (ASCII whitespace only — PySpark's
 #: ``split(_, '\\s+')`` compiles a Java regex; Python's ``\s`` would
 #: additionally match Unicode whitespace and drift the token set).
-_JAVA_WS_RE = None  # built lazily so importing this module stays re-free
-
-
-def _simhash_py(text: str | None, bits: int) -> int | None:
-    """Row-local SimHash twin of the former exploded JVM pipeline:
-    distinct whitespace tokens (Spark ``split(trim(text), '\\s+')``
-    semantics — ``trim`` strips ASCII spaces only, ``split`` keeps
-    leading/trailing empty fields), each voting ±1 per bit from the
-    first ``bits/4`` hex digits of its sha256.  Pure-integer logic, so
-    it reproduces the JVM/DuckDB results bit-for-bit (pinned by
-    ``tests``)."""
-    global _JAVA_WS_RE
-    if _JAVA_WS_RE is None:
-        import re
-
-        _JAVA_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
-    if text is None:
-        return None
-    import hashlib
-
-    toks = set(_JAVA_WS_RE.split(text.strip(" ")))
-    nhex = bits // 4
-    votes = [0] * bits
-    sha = hashlib.sha256
-    for tok in toks:
-        h = int(sha(tok.encode("utf-8")).hexdigest()[:nhex], 16)
-        for j in range(bits):
-            votes[j] += 1 if (h >> j) & 1 else -1
-    sig = 0
-    for j in range(bits):
-        if votes[j] > 0:
-            sig |= 1 << j
-    return sig
+_JAVA_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
 
 
 def _simhash_batch(texts, bits: int):
-    """Vectorized batch twin of :func:`_simhash_py` (r12, guide §4.2):
-    the per-token 60-iteration Python vote loop was the hot half of
-    the sf10 banded row (sig pass 7.6 s of 20.5 s). Per batch: one
-    Python pass tokenizes and sha-hashes (hashlib is C; the hex parse
-    becomes int.from_bytes on the digest prefix — same integer), then
-    the votes fold as numpy segment sums per bit: votes_j =
-    2 * Σ_tok bit_j(h) − n_toks — pure integer arithmetic, so the
-    signatures are bit-identical to the scalar twin (the unit test
-    asserts equality against the exploded JVM form, and the scalar
-    reference stays above as executable documentation)."""
-    global _JAVA_WS_RE
-    if _JAVA_WS_RE is None:
-        import re
-
-        _JAVA_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
+    """Vectorized SimHash of a batch of texts, bit-identical to the
+    former exploded JVM pipeline: distinct whitespace tokens (Spark
+    ``split(trim(text), '\\s+')`` semantics — ``trim`` strips ASCII
+    spaces only, ``split`` keeps leading/trailing empty fields), each
+    voting ±1 per bit from the first ``bits/4`` hex digits of its
+    sha256 (r12, guide §4.2). Per batch: one Python pass tokenizes
+    and sha-hashes (hashlib is C; the hex parse becomes
+    int.from_bytes on the digest prefix — same integer), then the
+    votes fold as numpy segment sums per bit: votes_j =
+    2 * Σ_tok bit_j(h) − n_toks — pure integer arithmetic (the unit
+    test asserts equality against the exploded JVM form). The
+    per-token vote loop this replaced was the hot half of the sf10
+    banded row (sig pass 7.6 s of 20.5 s). NULL text -> NULL."""
     import hashlib
 
     import numpy as np
@@ -365,8 +332,7 @@ _SIMHASH_UDFS: dict[int, Callable] = {}
 
 
 def _simhash_udf(bits: int):
-    """Per-``bits`` Arrow (pandas) UDF cache for :func:`_simhash_batch`
-    (the vectorized twin of :func:`_simhash_py`)."""
+    """Per-``bits`` Arrow (pandas) UDF cache for :func:`_simhash_batch`."""
     if bits not in _SIMHASH_UDFS:
         import pandas as pd
         from pyspark.sql.types import LongType

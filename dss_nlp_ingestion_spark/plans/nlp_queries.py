@@ -5,7 +5,8 @@ These pin the *shapes* of the reference's API-backed enrichment
 (sentiment structs, scored keyword lists, topic tags, summaries,
 embeddings) while staying hermetic and engine-portable. A production
 deployment swaps each heuristic for a model-backed pandas UDF with
-the same signature (see functions.nlp.sentiment_pandas_udf).
+the same signature (as functions.nlp.quantized_sentiment_udf serves
+the shipped sentiment model).
 """
 
 from __future__ import annotations
@@ -99,44 +100,32 @@ _TOK_LIST_SQL = (
 )
 
 
-def _bow_cte(dim: int) -> str:
-    """The v1 hashed-BoW featurizer scaffold (codepoint-sum bucket
-    per token, per-doc token count, per-(doc,bucket) counts) — kept
-    as the version-1 fallback branch of :func:`_encoder_oracle`. (The
-    sentiment model serves the v2 signed featurizer —
-    :func:`_signed_bow_cte` — the topic model the v2 poly-hash form —
-    :func:`_poly_bow_cte` — and the encoder the v3 uni+bigram form —
-    :func:`_ngram_bow_cte`.)"""
-    return f"""toks AS (
-  SELECT doc_id,
-         unnest({_TOK_LIST_SQL}) AS tok
-  FROM documents WHERE trim(text) <> ''
-), bt AS (
-  SELECT doc_id,
-         CAST(list_sum(list_transform(range(1, length(tok) + 1),
-                                      i -> ascii(tok[i]) * i)) % {dim} AS BIGINT) AS bucket
-  FROM toks WHERE tok <> ''
-), n AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM bt GROUP BY doc_id
-), counts AS (
-  SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS c
-  FROM bt GROUP BY doc_id, bucket
-)"""
+#: Word-bucket fold shared by the sentiment and topic CTEs (the
+#: polynomial rolling hash over the stripped token's codepoints),
+#: parameterized by hash-space size.
+_WORD_FOLD = """list_reduce(list_prepend(CAST(7 AS BIGINT),
+             list_transform(range(1, length(s) + 1),
+                            k -> CAST(ascii(s[k]) AS BIGINT))),
+             (acc, c) -> (acc * 131 + c) % 2147483647) % {dim}"""
 
 
-def _scope_prefix_cte() -> str:
-    """The negation-scope scaffold shared by BOTH signed featurizer
-    CTEs (v2 word-only and v3 word+subword — one source of truth for
-    the subtlest part of the replay): positional tokens,
-    edge-punctuation strip, negator/breaker flags, and the scope
-    window (max negator / max breaker position over the 4 preceding
-    tokens — token i is negated iff a negator precedes it within 4
-    positions with no break at-or-after that negator). Emits
-    ``base/toks/flags/scoped`` plus ``wf(doc_id, s, sgn)`` — the
-    surviving feature tokens with their signs."""
+def _signed_cte(dim_w: int, dim_s: int) -> str:
+    """The sentiment featurizer replayed in SQL (DuckDB), each step the
+    exact int64 arithmetic of functions.nlp._signed_features:
+    positional tokens, edge-punctuation strip, negator/breaker flags,
+    and the scope window (max negator / max breaker position over the
+    4 preceding tokens — token i is negated iff a negator precedes it
+    within 4 positions with no break at-or-after that negator), giving
+    ``wf(doc_id, s, sgn)`` — the surviving feature tokens with their
+    signs — folded to word buckets. With ``dim_s > 0`` a SUBWORD
+    branch is UNION ALL'd into ``feats``: per surviving token of
+    length >= SUBWORD_MIN_LEN, every char-``SUBWORD_NGRAM``-gram of
+    the boundary-marked ``'<' || s || '>'`` folds through the same
+    list_reduce rolling hash, bucketed into [dim_w, dim_w + dim_s)
+    with the token's negation sign. Emits ``base`` and ``counts``."""
     negs = ", ".join(f"'{w}'" for w in sorted(N.NEGATORS))
     brks = ", ".join(f"'{w}'" for w in sorted(N.BREAK_WORDS))
-    return f"""base AS (
+    scope = f"""base AS (
   SELECT doc_id, {_TOK_LIST_SQL} AS l
   FROM documents WHERE trim(text) <> ''
 ), toks AS (
@@ -164,52 +153,22 @@ def _scope_prefix_cte() -> str:
               THEN -1 ELSE 1 END AS sgn
   FROM scoped WHERE s <> '' AND NOT is_neg
 )"""
-
-
-#: Shared word-bucket fold (the polynomial rolling hash over the
-#: stripped token's codepoints), parameterized by hash-space size.
-_WORD_FOLD = """list_reduce(list_prepend(CAST(7 AS BIGINT),
-             list_transform(range(1, length(s) + 1),
-                            k -> CAST(ascii(s[k]) AS BIGINT))),
-             (acc, c) -> (acc * 131 + c) % 2147483647) % {dim}"""
-
-
-def _signed_bow_cte(dim: int) -> str:
-    """The v2 featurizer replayed in ANSI-ish SQL (DuckDB): the
-    shared negation-scope scaffold (:func:`_scope_prefix_cte`) plus
-    the word-bucket fold — each step the exact int64 arithmetic of
-    functions.nlp._signed_bow_counts."""
-    return f"""{_scope_prefix_cte()}, feats AS (
-  SELECT doc_id, {_WORD_FOLD.format(dim=dim)} AS bucket, sgn
-  FROM wf
-), counts AS (
-  SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS c
-  FROM feats GROUP BY doc_id, bucket
-)"""
-
-
-def _signed_ngram_cte(dim_w: int, dim_s: int) -> str:
-    """The v3 sentiment featurizer replayed in SQL: the SHARED
-    negation-scope scaffold (:func:`_scope_prefix_cte` — same source
-    of truth as the v2 CTE) with a SUBWORD branch UNION ALL'd into
-    ``feats``: per surviving token of length >= SUBWORD_MIN_LEN,
-    every char-``SUBWORD_NGRAM``-gram of the boundary-marked
-    ``'<' || s || '>'`` folds through the same list_reduce rolling
-    hash, bucketed into [dim_w, dim_w + dim_s) with the token's
-    negation sign (exactly functions.nlp._signed_features_v3)."""
-    n = int(N.SUBWORD_NGRAM)
-    gram_fold = f"""{dim_w} + list_reduce(list_prepend(CAST(7 AS BIGINT),
+    subwords = ""
+    if dim_s:
+        n = int(N.SUBWORD_NGRAM)
+        gram_fold = f"""{dim_w} + list_reduce(list_prepend(CAST(7 AS BIGINT),
              list_transform(range(1, {n} + 1),
                             j -> CAST(ascii(substr(p, g.k + j - 1, 1)) AS BIGINT))),
              (acc, c) -> (acc * 131 + c) % 2147483647) % {dim_s}"""
-    return f"""{_scope_prefix_cte()}, feats AS (
-  SELECT doc_id, {_WORD_FOLD.format(dim=dim_w)} AS bucket, sgn
-  FROM wf
+        subwords = f"""
   UNION ALL
   SELECT doc_id, {gram_fold} AS bucket, sgn
   FROM (SELECT doc_id, '<' || s || '>' AS p, sgn FROM wf
         WHERE length(s) >= {int(N.SUBWORD_MIN_LEN)}) t,
-       LATERAL (SELECT unnest(range(1, length(p) - {n} + 2)) AS k) g
+       LATERAL (SELECT unnest(range(1, length(p) - {n} + 2)) AS k) g"""
+    return f"""{scope}, feats AS (
+  SELECT doc_id, {_WORD_FOLD.format(dim=dim_w)} AS bucket, sgn
+  FROM wf{subwords}
 ), counts AS (
   SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS c
   FROM feats GROUP BY doc_id, bucket
@@ -218,7 +177,7 @@ def _signed_ngram_cte(dim_w: int, dim_s: int) -> str:
 
 def _model_oracle() -> str:
     """Build the oracle SQL from the committed sentiment artifact
-    (featurizer CTE by artifact ``version``): the pre-activation is
+    (featurizer CTE at its dim_w/dim_s): the pre-activation is
     an integer dot product (quantized weights, signed bucket counts)
     divided ONCE by scale then clamped to [-37, 37], so both engines
     compute bit-identical z; only exp() can differ in the last ulp,
@@ -232,13 +191,8 @@ def _model_oracle() -> str:
         f"least(greatest(CAST({b_q} + coalesce(dot.s, 0) AS DOUBLE)"
         f" / {scale}.0, -37.0), 37.0)"
     )
-    feat_cte = (
-        _signed_ngram_cte(m["dim_w"], m["dim_s"])
-        if m.get("version", 1) >= 3
-        else _signed_bow_cte(m["dim"])
-    )
     return f"""
-WITH {feat_cte}, wt(bucket, w) AS (VALUES {rows}),
+WITH {_signed_cte(m["dim_w"], m["dim_s"])}, wt(bucket, w) AS (VALUES {rows}),
 dot AS (
   SELECT counts.doc_id, CAST(sum(wt.w * counts.c) AS BIGINT) AS s
   FROM counts JOIN wt USING (bucket) GROUP BY counts.doc_id
@@ -668,7 +622,7 @@ def stupid_backoff_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _poly_bow_cte(dim: int) -> str:
     """The v2 TOPIC featurizer replayed in SQL: edge-punctuation-
     stripped tokens, polynomial rolling hash as a ``list_reduce``
-    fold (same fold as the sentiment v2 CTE, no negation logic), and
+    fold (``_WORD_FOLD``, as in the sentiment CTE, no negation logic), and
     an ``n`` CTE that keeps zero-feature docs via LEFT JOIN so every
     ``base`` doc scores (Python serves nn = max(n, 1))."""
     return f"""base AS (
@@ -679,10 +633,7 @@ def _poly_bow_cte(dim: int) -> str:
   FROM base, LATERAL (SELECT unnest(range(1, len(l) + 1)) AS i) u
 ), feats AS (
   SELECT doc_id,
-         list_reduce(list_prepend(CAST(7 AS BIGINT),
-             list_transform(range(1, length(s) + 1),
-                            k -> CAST(ascii(s[k]) AS BIGINT))),
-             (acc, c) -> (acc * 131 + c) % 2147483647) % {dim} AS bucket
+         {_WORD_FOLD.format(dim=dim)} AS bucket
   FROM toks WHERE s <> ''
 ), n AS (
   SELECT base.doc_id,
@@ -830,18 +781,9 @@ def _encoder_oracle(anchor_text: str | None = None) -> str:
     ``anchor_text`` the cosine targets that text's int64 embedding
     (anchor components inlined as VALUES; its norm inlined as the
     identical double constant the serving UDF uses); without, the
-    first probe axis e_0. The featurizer CTE follows the artifact's
-    ``version`` (v3 uni+bigram, v2 poly, v1 codepoint-sum)."""
+    first probe axis e_0. The featurizer CTE is the uni+bigram
+    :func:`_ngram_bow_cte`, the one encoder featurizer."""
     m = N.load_encoder_artifact(N.DEFAULT_ENCODER_ARTIFACT)
-    dim, scale = m["dim"], m["scale"]
-    _ = scale
-    version = int(m.get("version", 1))
-    if version >= 3:
-        feat_cte = _ngram_bow_cte(dim)
-    elif version == 2:
-        feat_cte = _poly_bow_cte(dim)
-    else:
-        feat_cte = _bow_cte(dim)
     wrows = ", ".join(
         f"({k}, {j}, {int(w)})"
         for k in range(m["emb_dim"])
@@ -860,10 +802,8 @@ def _encoder_oracle(anchor_text: str | None = None) -> str:
         dot_sel = "max(CASE WHEN k = 0 THEN ek END) AS e0"
         e_src = "e"
     else:
-        import numpy as np
-
         a = N.encode_text_int64(m, anchor_text)
-        a_norm = float(np.sqrt(float(int((a.astype(object) ** 2).sum()))))
+        _, a_norm = N._anchor_parts(a)
         arows = ", ".join(f"({k}, {int(v)})" for k, v in enumerate(a))
         anc_cte = f", anc(k, ak) AS (VALUES {arows})"
         dot_sel = "sum(CAST(ek AS HUGEINT) * CAST(ak AS HUGEINT)) AS dot"
@@ -874,7 +814,7 @@ def _encoder_oracle(anchor_text: str | None = None) -> str:
                 / (sqrt(CAST(sumsq AS DOUBLE)) * {a_norm!r})
                 * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE) END AS anchor_cos"""
     return f"""
-WITH {feat_cte}, wt(k, bucket, w) AS (VALUES {wrows}),
+WITH {_ngram_bow_cte(m["dim"])}, wt(k, bucket, w) AS (VALUES {wrows}),
 cl(k, b_q) AS (VALUES {crows}){anc_cte},
 dots AS (
   SELECT counts.doc_id, wt.k, CAST(sum(wt.w * counts.c) AS BIGINT) AS s

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dss_nlp_ingestion_spark.functions.dates import parse_ts_fuzzy
@@ -67,71 +68,12 @@ def test_redact_pii_all_kinds(spark):
     assert out[2].r == "ip only <IP>" and out[2].ni == 1
 
 
-def test_sentiment_model_slot_carries_real_weights(spark):
-    """The N-family model slot with LEARNED parameters: train a tiny
-    logistic regression (numpy, deterministic), push it through the
-    same pandas-UDF contract as the heuristic, and check (a) output
-    shape/type matches the heuristic slot column-for-column, (b) the
-    weights actually learned the polarity (positive texts score above
-    negative ones), (c) round-tripping the artifact through
-    numpy.savez (the real-model load path) changes nothing."""
-    import io
-
-    import numpy as np
-
-    from dss_nlp_ingestion_spark.functions.nlp import (
-        sentiment_model_udf,
-        sentiment_pandas_udf,
-        train_sentiment_model,
-    )
-
-    train_texts = [
-        "fast big scan wins", "big fast merge", "fast join fast agg",
-        "blazing fast and big", "slow small scan loses", "small slow merge",
-        "slow filter slow sort", "tiny slow and small",
-    ]
-    train_labels = [1, 1, 1, 1, 0, 0, 0, 0]
-    model = train_sentiment_model(train_texts, train_labels)
-
-    # Artifact round-trip: savez -> load, the path a real checkpoint
-    # takes from shared storage to the executor.
-    buf = io.BytesIO()
-    np.savez(buf, w=model["w"], b=model["b"], dim=model["dim"])
-    buf.seek(0)
-    loaded = np.load(buf)
-    model2 = {"w": loaded["w"], "b": float(loaded["b"]), "dim": int(loaded["dim"])}
-
-    df = spark.createDataFrame(
-        [(1, "fast big table scan"), (2, "slow small row lookup"),
-         (3, "the neutral middle text")],
-        ["id", "text"],
-    )
-    heur = sentiment_pandas_udf()
-    mdl = sentiment_model_udf(model2)
-    out = df.select(
-        "id",
-        heur(F.col("text")).alias("s_heur"),
-        mdl(F.col("text")).alias("s_model"),
-    )
-    # (a) shape-for-shape: same row count, both DoubleType.
-    assert [f.dataType.simpleString() for f in out.schema.fields[1:]] == [
-        "double", "double"
-    ]
-    rows = {r.id: r for r in out.collect()}
-    assert len(rows) == 3
-    # (b) the learned weights separate the classes the same way the
-    # heuristic's lexicon does.
-    assert rows[1].s_model > 0.5 > rows[2].s_model
-    assert rows[1].s_heur > 0 > rows[2].s_heur
-    # (c) scores are probabilities.
-    assert all(0.0 <= r.s_model <= 1.0 for r in rows.values())
-
-
 def test_committed_sentiment_artifact_provenance_and_quality():
     """The shipped v2 artifact (functions/sentiment_model_v2.npz) is
     exactly what deterministic training on the committed fixtures
     produces (sentiment_corpus.json + opinion_lexicon.json through
-    nlp.sentiment_training_set; no-RNG GD -> bit-reproducible), and
+    nlp.sentiment_training_set; no-RNG GD -> bit-reproducible; the
+    word-only v2 model is the shared trainer at dim_s = 0), and
     the learned weights actually separate the classes (>=90% accuracy
     on the labeled SENTENCES) — real learned parameters, not a
     heuristic in disguise. (v2 stays the DEFAULT: the v3 subword
@@ -146,7 +88,7 @@ def test_committed_sentiment_artifact_provenance_and_quality():
     corpus = json.load(open("tests/fixtures/sentiment_corpus.json"))
     lexicon = json.load(open("tests/fixtures/opinion_lexicon.json"))
     texts, labels, weights = N.sentiment_training_set(corpus, lexicon)
-    retrained = N.train_negation_sentiment(texts, labels, weights)
+    retrained = N.train_subword_sentiment(texts, labels, weights, dim_s=0)
     shipped = N.load_sentiment_artifact(N.DEFAULT_SENTIMENT_ARTIFACT)
     assert shipped["version"] == 2 == retrained["version"]
     assert shipped["dim"] == 16384 and shipped["scale"] == retrained["scale"]
@@ -168,23 +110,34 @@ def test_committed_sentiment_artifact_provenance_and_quality():
     assert N.sentiment_z("never dreadful", shipped) > 0
 
 
-def test_quantized_sentiment_udf_scores(spark):
-    """Arrow-vectorized serving of the shipped artifact: positive
+@pytest.mark.parametrize(
+    "artifact", ["sentiment_model_v2.npz", "sentiment_model_v3.npz"]
+)
+def test_quantized_sentiment_udf_scores(spark, artifact):
+    """Arrow-vectorized serving of each committed sentiment artifact:
+    every row equals fround-6 of sigmoid(sentiment_z) — the driver-side
+    scorer the eval harness and the SQL parity tests use — positive
     fixture text scores above negative, empty text falls back to the
     bias term, and scores are fround-6 doubles in [0, 1]."""
+    import os
+
     import numpy as np
 
     from dss_nlp_ingestion_spark.functions import nlp as N
     from pyspark.sql import functions as F
 
-    model = N.load_sentiment_artifact(N.DEFAULT_SENTIMENT_ARTIFACT)
+    model = N.load_sentiment_artifact(
+        os.path.join(os.path.dirname(N.__file__), artifact)
+    )
+    texts = {
+        1: "the plot was wonderful and the acting superb",
+        2: "the plot was terrible and the acting wooden",
+        3: "",
+        4: "it was not wonderful, but never dreadfully dull either",
+        5: "Charming!  A thoroughly delightful, unforgettable film.",
+    }
     df = spark.createDataFrame(
-        [
-            (1, "the plot was wonderful and the acting superb"),
-            (2, "the plot was terrible and the acting wooden"),
-            (3, ""),
-        ],
-        "doc_id long, text string",
+        sorted(texts.items()), "doc_id long, text string"
     )
     rows = {
         r["doc_id"]: r["s"]
@@ -192,6 +145,11 @@ def test_quantized_sentiment_udf_scores(spark):
             "doc_id", N.quantized_sentiment_udf(model)(F.col("text")).alias("s")
         ).collect()
     }
+    for doc_id, text in texts.items():
+        z = N.sentiment_z(text, model)
+        assert rows[doc_id] == np.floor(
+            1.0 / (1.0 + np.exp(-z)) * 1e6 + 0.5
+        ) / 1e6, (doc_id, text)
     assert 0.0 <= rows[2] < 0.5 < rows[1] <= 1.0
     expected_bias = float(
         np.floor(
@@ -440,15 +398,15 @@ def test_subword_sentiment_variant_provenance_and_capability():
 def test_signed_ngram_cte_matches_python_scoring():
     """Cross-engine pin for the v3 subword featurizer: a tiny
     train_subword_sentiment model scored by nlp.sentiment_z must
-    match a DuckDB replay built from plans.nlp_queries._signed_ngram_
-    cte — the same bucket arithmetic (word fold, boundary-marked
-    4-gram folds, min-length gate, negation sign) as SQL."""
+    match a DuckDB replay built from plans.nlp_queries._signed_cte —
+    the same bucket arithmetic (word fold, boundary-marked 4-gram
+    folds, min-length gate, negation sign) as SQL."""
     import math
 
     import duckdb
 
     from dss_nlp_ingestion_spark.functions import nlp as N
-    from dss_nlp_ingestion_spark.plans.nlp_queries import _signed_ngram_cte
+    from dss_nlp_ingestion_spark.plans.nlp_queries import _signed_cte
 
     duck = duckdb.connect()
     docs = [
@@ -472,7 +430,7 @@ def test_signed_ngram_cte_matches_python_scoring():
     duck.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     duck.executemany("INSERT INTO documents VALUES (?, ?)", docs)
     sql = f"""
-WITH {_signed_ngram_cte(model["dim_w"], model["dim_s"])},
+WITH {_signed_cte(model["dim_w"], model["dim_s"])},
 wt(bucket, w) AS (VALUES {rows}),
 dot AS (
   SELECT counts.doc_id, CAST(sum(wt.w * counts.c) AS BIGINT) AS s
@@ -499,8 +457,9 @@ def test_model_ctes_match_python_on_unicode_whitespace():
     U+3000, line separators) as separators and whose .strip() removes
     it from both ends — RE2's \\s is ASCII-only and SQL trim() strips
     plain spaces only (a leading tab would shift every position the
-    negation window depends on). Pins bucket-count parity of all four
-    model CTEs against the Python featurizers on adversarial docs.
+    negation window depends on). Pins bucket-count parity of the three
+    model CTEs (the sentiment one at dim_s = 0 and dim_s > 0) against
+    the Python featurizers on adversarial docs.
     Net-zero count rows (a +1/-1 collision cancelling inside one
     bucket) are allowed on the SQL side: they contribute nothing to
     the weight dot product."""
@@ -511,8 +470,7 @@ def test_model_ctes_match_python_on_unicode_whitespace():
     from dss_nlp_ingestion_spark.plans.nlp_queries import (
         _ngram_bow_cte,
         _poly_bow_cte,
-        _signed_bow_cte,
-        _signed_ngram_cte,
+        _signed_cte,
     )
 
     docs = [
@@ -543,9 +501,9 @@ def test_model_ctes_match_python_on_unicode_whitespace():
             exp = {i: int(v) for i, v in enumerate(c) if v != 0}
             assert got.get(doc_id, {}) == exp, (tag, doc_id, text)
 
-    check(_signed_bow_cte(64), lambda t: N._signed_bow_counts(t, 64), "v2")
+    check(_signed_cte(64, 0), lambda t: N._signed_ngram_counts(t, 64, 0), "v2")
     check(
-        _signed_ngram_cte(32, 32),
+        _signed_cte(32, 32),
         lambda t: N._signed_ngram_counts(t, 32, 32),
         "v3",
     )
@@ -619,7 +577,7 @@ def test_v3_sentiment_artifact_load_validation(tmp_path):
     assert N.load_sentiment_artifact(p)["dim_w"] == 4
 
     # np.savez appends .npz; write a v3 artifact WITHOUT the split
-    # dims by abusing the v1 writer path.
+    # dims with np.savez directly.
     bad = dict(good)
     del bad["dim_w"], bad["dim_s"]
     bad["version"] = 3
@@ -640,3 +598,33 @@ def test_v3_sentiment_artifact_load_validation(tmp_path):
     N.save_sentiment_artifact(inconsistent, pi)
     with pytest.raises(ValueError, match="!= dim"):
         N.load_sentiment_artifact(pi)
+
+
+@pytest.mark.parametrize(
+    "load", ["load_sentiment_artifact", "load_topic_artifact", "load_encoder_artifact"]
+)
+def test_artifact_loaders_reject_unsupported_versions(tmp_path, load):
+    """A model file with no ``version`` key, or the retired version 1
+    (codepoint-sum featurizer), must fail at load with a ValueError
+    naming the file and the supported versions — scoring it with a
+    different featurizer would serve silently wrong numbers."""
+    import numpy as np
+
+    from dss_nlp_ingestion_spark.functions import nlp as N
+
+    arrays = {
+        "w_q": np.zeros((3, 8), dtype=np.int64),
+        "b_q": np.zeros(3, dtype=np.int64),
+        "dim": np.int64(8),
+        "scale": np.int64(1_000_000),
+        "n_classes": np.int64(3),
+        "emb_dim": np.int64(3),
+    }
+    if load == "load_sentiment_artifact":
+        arrays.update(w_q=np.zeros(8, dtype=np.int64), b_q=np.int64(0))
+    for name, extra in (("noversion.npz", {}), ("v1.npz", {"version": np.int64(1)})):
+        path = str(tmp_path / name)
+        np.savez(path, **arrays, **extra)
+        with pytest.raises(ValueError, match="supported versions") as err:
+            getattr(N, load)(path)
+        assert name in str(err.value)

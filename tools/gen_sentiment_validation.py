@@ -1,7 +1,7 @@
 """Carrier validations for sentiment model selection (training materials only).
 
 The v3 sentiment featurizer (word + char-n-gram subword buckets,
-functions/nlp.py:_signed_features_v3) and its subword L2 multiplier
+functions/nlp.py:_signed_features at dim_s > 0) and its subword L2 multiplier
 were selected on these two validation sets, built ONLY from training
 materials (the committed opinion lexicon), never from the frozen eval
 fixture:

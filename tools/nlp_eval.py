@@ -101,7 +101,7 @@ def eval_topic() -> dict:
     b_q = np.asarray(model["b_q"], dtype=np.int64)
     preds_m = []
     for t in texts:
-        counts, n = nlp._topic_counts(t, model, model["dim"])
+        counts, n = nlp._topic_counts(t, model["version"], model["dim"])
         s = b_q * max(n, 1) + w_q @ counts
         order = np.lexsort((np.arange(len(s)), -s))
         preds_m.append(int(order[0]))
@@ -390,7 +390,7 @@ def render(results: list[dict]) -> str:
         "char-4-gram subword buckets (the fastText subword idea; "
         "functions/nlp.py:train_subword_sentiment, committed as "
         "sentiment_model_v3.npz with a full SQL replay in "
-        "_signed_ngram_cte) were built for the morphological-OOV gap "
+        "_signed_cte) were built for the morphological-OOV gap "
         "('dreadfully'). Selected on carrier validations from "
         "training materials only (tools/gen_sentiment_validation.py: "
         "morph 0.4971 -> 0.8257, in-vocab base 0.9771 -> 0.9886, "
