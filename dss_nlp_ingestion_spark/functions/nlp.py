@@ -33,7 +33,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from dss_nlp_ingestion_spark.functions.text import EN_STOPWORDS, token_count, ws_tokens
+from dss_nlp_ingestion_spark.functions.text import spark_ws_split, token_count, ws_tokens
 
 #: Sentiment lexicons, fixed to the synthetic corpus vocabulary so the
 #: heuristic is exercised; swap per-domain.
@@ -1063,19 +1063,16 @@ def _hash_fallback_parts(text: str, memo: dict | None = None):
     """The HASH-fallback branch of the gated default, computed with
     the exact op sequence of the column-expression path so the gated
     UDF is bit-identical to it (and to the DuckDB oracle):
-    tokens = Spark ``split(trim(text), '\\s+')`` (trim strips ASCII
-    0x20 only; Java ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``; limit -1
-    keeps empty edge tokens), e_j = (0.0-seeded left fold of
+    tokens = Spark ``split(trim(text), '\\s+')`` (:func:`spark_ws_split`),
+    e_j = (0.0-seeded left fold of
     nibble_j(sha256(tok)) - 7.5) / n. Returns (int nibble-sum
     identity list [2*sum..., n], e values). ``memo`` caches the 8
     leading nibbles per DISTINCT token across a batch (documents
     reuse vocabulary heavily; hashing every occurrence dominated the
     first kernel cut)."""
     import hashlib
-    import re
 
-    t = text.strip(" ")
-    toks = re.split(r"[ \t\n\x0b\f\r]+", t)
+    toks = spark_ws_split(text)
     n = len(toks)
     acc = [0.0] * EMBED_DIM
     s2 = [0] * EMBED_DIM

@@ -24,6 +24,8 @@ whole-stage codegen and scale linearly with input.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -43,6 +45,21 @@ PUNCT_CLASS = r"[.,!?;:]"
 def ws_tokens(col: Column) -> Column:
     """Whitespace tokens (array)."""
     return F.split(F.trim(col), r"\s+")
+
+
+#: Java regex ``\s``: ASCII whitespace only. Python's ``\s`` would
+#: also match Unicode whitespace (NBSP, U+3000) and drift the tokens.
+_JAVA_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
+
+
+def spark_ws_split(text: str) -> list[str]:
+    """Python replay of :func:`ws_tokens`, Spark's ``split(trim(text),
+    '\\s+')``: ``trim`` strips ASCII spaces (0x20) only, the split
+    pattern is Java ``\\s+``, and limit -1 keeps empty leading and
+    trailing tokens (``""`` and ``"\\t"`` give ``[""]`` and
+    ``["", ""]``). Arrow kernels that must match the JVM token set
+    call this."""
+    return _JAVA_WS_RE.split(text.strip(" "))
 
 
 def token_count(col: Column) -> Column:

@@ -25,14 +25,17 @@ Scale design:
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dss_nlp_ingestion_spark.catalog import ensure_parallelism
-from dss_nlp_ingestion_spark.functions.text import content_hash, shingles
+from dss_nlp_ingestion_spark.functions.text import (
+    content_hash,
+    shingles,
+    spark_ws_split,
+)
 
 #: Pluggable shingle builder: Column (text) -> Column (array<string>).
 #: ``None`` means word k-grams (:func:`functions.text.shingles`);
@@ -260,12 +263,6 @@ SIMHASH_BITS = 16
 SIMHASH_WIDE_BITS = 60
 
 
-#: Exact Python twin of Java ``\s`` (ASCII whitespace only — PySpark's
-#: ``split(_, '\\s+')`` compiles a Java regex; Python's ``\s`` would
-#: additionally match Unicode whitespace and drift the token set).
-_JAVA_WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
-
-
 def _simhash_batch(texts, bits: int):
     """Vectorized SimHash of a batch of texts, bit-identical to the
     former exploded JVM pipeline: distinct whitespace tokens (Spark
@@ -299,7 +296,7 @@ def _simhash_batch(texts, bits: int):
             starts.append(pos)
             lens.append(0)
             continue
-        toks = set(_JAVA_WS_RE.split(t.strip(" ")))
+        toks = set(spark_ws_split(t))
         starts.append(pos)
         lens.append(len(toks))
         hs_flat.extend(

@@ -11,11 +11,16 @@ table lookups.
 Division of labor mirrors production systems (and this repo's IVF /
 sentiment-model pattern): codebooks are MODEL PARAMETERS — trained
 driver-side with deterministic numpy k-means on a bounded sample,
-shipped as a committed ``.npz`` artifact — while ASSIGNMENT is pure
-distributed column math: per subspace, the squared distance to each
-of the k centroids is a fixed left-associated IEEE expression tree,
-argmin with a first-match tie-break. Identical SQL reproduces every
-bit, so the encoder sits under the driver's hash gate.
+shipped as a committed ``.npz`` artifact — while ASSIGNMENT runs
+scan-side in one Arrow batch kernel. Every engine-side PQ distance
+goes through one numpy fold, :func:`_sq_dists`: per subspace, the
+squared distance to each of the k centroids is accumulated
+component by component (plain IEEE ops, no FMA or reassociation),
+and the argmin takes the first index on ties. That is the same
+left-associated '+' chain the SQL twins spell out, so identical SQL
+reproduces every bit and the encoder sits under the driver's hash
+gate. :func:`pq_query_lut_column` keeps the Catalyst expression form
+as the reference the bit-equality tests compare against.
 
 Training determinism: init = first k sample rows, Lloyd iterations
 with lowest-index tie-break, empty clusters keep their centroid —
@@ -25,31 +30,17 @@ no RNG anywhere, so the committed artifact is exactly reproducible
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: committed default artifact (trained on the deterministic synthetic
-#: sample below; provenance pinned by tests).
+#: committed default artifact (trained on :func:`corpus_training_sample`;
+#: provenance pinned by tests).
 DEFAULT_PQ_ARTIFACT = __file__.replace("pq.py", "pq_codebook_v1.npz")
-
-
-def synth_training_sample(n: int = 256, dim: int = 64) -> np.ndarray:
-    """Deterministic synthetic sample: row i, component j =
-    sin(0.7*i + 1.3*j) + 0.01*((i*37 + j*17) % 100).
-
-    Kept as the corpus-independent fallback; the COMMITTED codebook
-    is trained on :func:`corpus_training_sample` instead — the r7 sf1
-    recall eval showed the synthetic sample is badly off-distribution
-    vs the embeddings table (range [-1, 2] vs +-0.33), which put the
-    true neighbors at ADC rank ~1500/2000 (recall@20 = 0.05).
-    Codebooks are a fit to the data distribution; production PQ
-    (FAISS train()) samples the real corpus for exactly this
-    reason."""
-    i = np.arange(n, dtype=np.float64)[:, None]
-    j = np.arange(dim, dtype=np.float64)[None, :]
-    return np.sin(0.7 * i + 1.3 * j) + 0.01 * ((i * 37 + j * 17) % 100)
 
 
 #: Provenance of the committed codebook's training sample: the first
@@ -98,176 +89,94 @@ def train_pq_codebooks(
 
 
 def save_pq_artifact(model: dict, path: str) -> None:
-    extra = {}
-    if model.get("query_vec") is not None:
-        extra["query_vec"] = np.asarray(model["query_vec"], dtype=np.float64)
     np.savez(
         path,
         codebooks=model["codebooks"],
         m=np.int64(model["m"]),
         k=np.int64(model["k"]),
-        **extra,
+        query_vec=np.asarray(model["query_vec"], dtype=np.float64),
     )
 
 
 def load_pq_artifact(path: str) -> dict:
+    """Load a PQ artifact, or ValueError naming the path when a field
+    is missing. ``query_vec`` is the committed eval query point
+    (in-distribution, deterministic): it rides in the artifact so
+    plan builders never read corpus files at import time, and an
+    off-distribution stand-in would make every ADC distance
+    near-equal and the ranking meaningless."""
     with np.load(path) as z:
-        out = {
+        missing = [f for f in ("codebooks", "m", "k", "query_vec") if f not in z]
+        if missing:
+            raise ValueError(f"PQ artifact {path!r} lacks {', '.join(missing)}")
+        return {
             "codebooks": z["codebooks"].astype(np.float64),
             "m": int(z["m"]),
             "k": int(z["k"]),
+            "query_vec": z["query_vec"].astype(np.float64),
         }
-        if "query_vec" in z:
-            # The committed eval query point (in-distribution,
-            # deterministic) — rides in the artifact so plan builders
-            # never read corpus files at import time.
-            out["query_vec"] = z["query_vec"].astype(np.float64)
-        return out
 
 
-def _sub_distance(emb: Column, s: int, sub: int, centroid) -> Column:
-    """Squared distance of subvector s to one centroid — a LEFT-
-    ASSOCIATED sum of per-component squares (Python sum() folds left,
-    matching SQL's '+' chain), doubles throughout."""
-    terms = []
+def _sq_dists(q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The one PQ distance fold: ``(n, m, k)`` squared L2 distances
+    between each row's subvector ``s`` of ``q`` (n, dim) and centroid
+    ``c`` of ``books`` (m, k, sub). Accumulated COMPONENT-SEQUENTIALLY
+    — ``acc = t_0``, then ``acc + t_j`` over j — with numpy
+    elementwise ufuncs, which are plain IEEE ops with no FMA or
+    reassociation, so every entry equals the SQL twins' left-
+    associated '+' chain bit for bit."""
+    m, k, sub = books.shape
+    qs = q[:, : m * sub].reshape(len(q), m, 1, sub)
+    acc = None
     for j in range(sub):
-        x = F.element_at(emb, s * sub + j + 1).cast("double")
-        c = F.lit(float(centroid[j]))
-        terms.append((x - c) * (x - c))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def _sub_argmin(model: dict, s: int, emb, dim: int, payloads=None):
-    """Per-subspace argmin as ONE pass over a literal centroid array:
-    transform evaluates the distance lambda per element (compact
-    codegen — the unrolled per-centroid expression forest compiled
-    ~10x slower at tiny SF), array_min picks (dist, idx) with the
-    same first-match tie-break as array_position (smaller idx wins).
-    The fold starts at 0.0; 0.0 + t == t exactly for the non-negative
-    squared terms, so distances stay bit-identical to the SQL twin's
-    left-associated '+' chain. Returns the winning struct with fields
-    d (distance), i (index) and optionally p (payload[i])."""
-    books = model["codebooks"]
-    k = model["k"]
-    sub = dim // model["m"]
-    cents = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(books[s][c][j])) for j in range(sub)]).alias(
-                    "cv"
-                ),
-                F.lit(c).cast("long").alias("i"),
-                F.lit(
-                    float(payloads[c]) if payloads is not None else 0.0
-                ).alias("p"),
-            )
-            for c in range(k)
-        ]
-    )
-    subvec = F.slice(emb, s * sub + 1, sub)
-
-    def _dist(c):
-        return F.aggregate(
-            F.zip_with(
-                subvec,
-                c["cv"],
-                lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    scored = F.transform(
-        cents,
-        lambda c: F.struct(_dist(c).alias("d"), c["i"].alias("i"), c["p"].alias("p")),
-    )
-    return F.array_min(scored)
-
-
-def pq_code_columns(model: dict, emb_col: str = "embedding", dim: int = 64):
-    """(codes_str, total_err) columns: per subspace the argmin
-    centroid index (first-match tie-break: array_min over (dist, idx)
-    structs == array_position of the minimum) and the summed minimum
-    distances."""
-    m = model["m"]
-    emb = F.col(emb_col)
-    code_cols = []
-    err_cols = []
-    for s in range(m):
-        best = _sub_argmin(model, s, emb, dim)
-        code_cols.append(best["i"].cast("string"))
-        err_cols.append(best["d"])
-    total = err_cols[0]
-    for e in err_cols[1:]:
-        total = total + e
-    return F.concat_ws(",", *code_cols), total
+        d = qs[..., j] - books[..., j]  # (n, m, 1) - (m, k) -> (n, m, k)
+        t = d * d
+        acc = t if acc is None else acc + t
+    return acc
 
 
 def adc_lookup_table(model: dict, query_vec) -> list[list[float]]:
     """ADC lookup tables for one query vector: lut[s][c] = squared
     L2 distance between the query's subvector s and centroid c —
     the m*k floats that replace all O(dim) arithmetic per database
-    vector at search time (Jégou et al., 2011 §III). Driver-side
-    numpy float64; model-parameter-sized (m*k values), shipped as
-    literals to both engines."""
+    vector at search time (Jégou et al., 2011 §III). One row through
+    :func:`_sq_dists`, returned as Python floats: model-parameter-
+    sized (m*k values), shipped as literals to both engines."""
+    q = np.asarray(query_vec, dtype=np.float64)[None, :]
+    return _sq_dists(q, model["codebooks"])[0].tolist()
+
+
+def pq_dist_lists_sql(model: dict, emb_sql: str = "embedding") -> list[str]:
+    """DuckDB twin of :func:`_sq_dists` for one row: per subspace s,
+    the list ``[d_0, ..., d_{k-1}]`` of squared distances to the k
+    literal centroids, each a left-associated '+' chain of
+    per-component squares. ``list_position(l, list_min(l))`` over one
+    of them is the first-match argmin."""
     books = model["codebooks"]
-    m, k = model["m"], model["k"]
-    sub = len(query_vec) // m
-    lut = []
-    for s in range(m):
-        q = [float(x) for x in query_vec[s * sub : (s + 1) * sub]]
-        row = []
-        for c in range(k):
-            d = 0.0
-            for j in range(sub):
-                t = q[j] - float(books[s][c][j])
-                d += t * t
-            row.append(d)
-        lut.append(row)
-    return lut
+    m, k, sub = books.shape
 
+    def _dist(s: int, c: int) -> str:
+        terms = []
+        for j in range(sub):
+            x = f"CAST({emb_sql}[{s * sub + j + 1}] AS DOUBLE)"
+            lit = repr(float(books[s][c][j]))
+            terms.append(f"({x} - {lit}) * ({x} - {lit})")
+        return "(" + " + ".join(terms) + ")"
 
-def pq_adc_column(
-    model: dict, lut: list[list[float]], emb_col: str = "embedding", dim: int = 64
-) -> Column:
-    """Asymmetric-distance column: per subspace, the stored vector's
-    code is its argmin centroid (same first-match semantics as
-    :func:`pq_code_columns`) and the query's distance contribution is
-    the LUT payload riding in the argmin struct — one pass over the
-    literal centroid array per subspace, the scan-side ADC search
-    kernel. Left-associated sum of m lookups, doubles throughout, so
-    identical SQL reproduces every bit."""
-    m = model["m"]
-    emb = F.col(emb_col)
-    terms = [
-        _sub_argmin(model, s, emb, dim, payloads=lut[s])["p"] for s in range(m)
+    return [
+        "[" + ", ".join(_dist(s, c) for c in range(k)) + "]" for s in range(m)
     ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
-def pq_adc_sql(
-    model: dict, lut: list[list[float]], emb_sql: str = "embedding", dim: int = 64
-) -> str:
-    """DuckDB twin of :func:`pq_adc_column` — same literal LUT, same
-    list_position argmin, same left-associated '+' chain."""
-    books = model["codebooks"]
-    m, k = model["m"], model["k"]
-    sub = dim // m
+def pq_adc_sql(model: dict, lut: list[list[float]], emb_sql: str = "embedding") -> str:
+    """DuckDB twin of the ADC column (codes from :func:`pq_code_array_udf`,
+    distance from :func:`pq_adc_from_lut_column`) — same literal LUT,
+    list_position first-match argmin, same left-associated '+'
+    chain."""
     terms = []
-    for s in range(m):
-        dlist = ", ".join(
-            pq_sub_distance_sql(emb_sql, s, sub, books[s][c]) for c in range(k)
-        )
-        lut_lit = "[" + ", ".join(repr(float(v)) for v in lut[s]) + "]"
-        terms.append(
-            f"list_extract({lut_lit}, list_position([{dlist}], list_min([{dlist}])))"
-        )
+    for lut_s, dl in zip(lut, pq_dist_lists_sql(model, emb_sql)):
+        lut_lit = "[" + ", ".join(repr(float(v)) for v in lut_s) + "]"
+        terms.append(f"list_extract({lut_lit}, list_position({dl}, list_min({dl})))")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -282,11 +191,12 @@ def pq_query_lut_column(
     query vector is a COLUMN (an incoming batch), so the LUT is
     computed engine-side once per query row, and per-candidate ADC
     becomes m array lookups instead of O(dim) arithmetic (Jégou et
-    al., 2011 §III — the IVFADC search kernel). Same transform-over-
-    literal-centroids codegen form as :func:`_sub_argmin` (compact
-    generated code), same 0.0-seeded left fold, so the DuckDB twin
-    (:func:`pq_query_lut_sql`, a '+'-chain per entry) is
-    bit-identical."""
+    al., 2011 §III — the IVFADC search kernel). The Catalyst
+    reference form of :func:`pq_query_lut_udf` (interpreted
+    higher-order functions over literal centroids, ~ms/row): its
+    0.0-seeded left fold equals the DuckDB twin
+    (:func:`pq_query_lut_sql`, a '+'-chain per entry) and the numpy
+    fold bit for bit, which the kernel tests pin."""
     m, k = model["m"], model["k"]
     books = model["codebooks"]
     sub = dim // m
@@ -348,115 +258,54 @@ def pq_query_lut_sql(model: dict, emb_sql: str = "qv", dim: int = 64) -> str:
     return "[" + ", ".join(entries) + "]"
 
 
-def pq_code_array_column(
-    model: dict, emb_col: str = "embedding", dim: int = 64
-) -> Column:
-    """The m per-subspace codes as an ``array<int>`` column (0-based
-    argmin indices, same first-match tie-break as
-    :func:`pq_code_columns`) — the storage form ADC joins want: a
-    probe-side lookup is one array load, with no per-row string
-    split (the comma-string form re-parsed 16x per candidate pair in
-    the shortlist stage)."""
-    m = model["m"]
-    emb = F.col(emb_col)
-    return F.array(
-        *[_sub_argmin(model, s, emb, dim)["i"].cast("int") for s in range(m)]
-    )
-
-
-def pq_query_lut_udf(model: dict, dim: int = 64):
-    """Arrow-vectorized twin of :func:`pq_query_lut_column` (same
-    values, bit-for-bit): per subspace s and centroid c the squared
-    distance is accumulated COMPONENT-SEQUENTIALLY (``acc = acc +
-    (x_j - c_j)^2`` over j, vectorized across rows) — numpy
-    elementwise ufuncs are plain IEEE ops with no FMA/reassociation,
-    so the fold matches the SQL '+' chain exactly, while the plan
-    shrinks from 256 literal expression trees (interpreted
-    higher-order functions, ~ms/row) to ONE Arrow batch stage."""
+def pq_query_lut_udf(model: dict):
+    """Arrow-vectorized per-query LUT (same values as
+    :func:`pq_query_lut_column`, bit for bit): one :func:`_sq_dists`
+    fold per batch, reshaped to the s-major m*k entries — ONE Arrow
+    batch stage instead of 256 literal expression trees."""
     from pyspark.sql.types import ArrayType, DoubleType
 
-    books = model["codebooks"]
-    m, k = model["m"], model["k"]
-    sub = dim // m
-    b = np.asarray(books, dtype=np.float64)  # (m, k, sub)
+    b = np.asarray(model["codebooks"], dtype=np.float64)  # (m, k, sub)
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _lut(vs: pd.Series) -> pd.Series:
-        # One stack + exact float64 widening (r12, guide §4.2) —
-        # same values as the former per-row asarray loop.
+        # One stack + exact float64 widening (r12, guide §4.2).
         q = np.stack(vs.to_numpy()).astype(np.float64, copy=False)  # (n, dim)
-        n = q.shape[0]
-        out = np.empty((n, m * k), dtype=np.float64)
-        for s in range(m):
-            qs = q[:, s * sub : (s + 1) * sub]  # (n, sub)
-            for c in range(k):
-                acc = None
-                for j in range(sub):
-                    d = qs[:, j] - b[s, c, j]
-                    t = d * d
-                    acc = t if acc is None else acc + t
-                out[:, s * k + c] = acc
-        return pd.Series(list(out))
+        return pd.Series(list(_sq_dists(q, b).reshape(len(q), -1)))
 
     return _lut
 
 
-def pq_code_array_udf(model: dict, dim: int = 64):
-    """Arrow-vectorized twin of :func:`pq_code_array_column`: same
-    component-sequential distance fold (bit-exact, see
-    :func:`pq_query_lut_udf`), argmin via ``np.argmin`` — first
-    occurrence on ties, the same tie-break as ``array_min`` /
-    ``list_position``. The encode stage drops from interpreted
-    literal-HOF evaluation to one Arrow batch pass."""
+def pq_code_array_udf(model: dict):
+    """The m per-subspace codes as an ``array<int>`` column (0-based)
+    — the storage form ADC joins want: a probe-side lookup is one
+    array load, with no per-row string split. ``np.argmin`` over the
+    :func:`_sq_dists` fold takes the first index on ties, the same
+    tie-break as ``list_position`` in the SQL twins."""
     from pyspark.sql.types import ArrayType, IntegerType
 
-    books = model["codebooks"]
-    m, k = model["m"], model["k"]
-    sub = dim // m
-    b = np.asarray(books, dtype=np.float64)
+    b = np.asarray(model["codebooks"], dtype=np.float64)
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _codes(vs: pd.Series) -> pd.Series:
         # One stack + exact float64 widening (r12, guide §4.2).
         q = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        n = q.shape[0]
-        codes = np.empty((n, m), dtype=np.int32)
-        for s in range(m):
-            qs = q[:, s * sub : (s + 1) * sub]
-            dists = np.empty((n, k), dtype=np.float64)
-            for c in range(k):
-                acc = None
-                for j in range(sub):
-                    d = qs[:, j] - b[s, c, j]
-                    t = d * d
-                    acc = t if acc is None else acc + t
-                dists[:, c] = acc
-            codes[:, s] = np.argmin(dists, axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_sq_dists(q, b).argmin(axis=2).astype(np.int32)))
 
     return _codes
 
 
-def pq_adc_from_lut_column(
-    model: dict, lut_col: str = "lut", codes_col: str = "codes"
-) -> Column:
-    """ADC distance of one (query, candidate) pair from the query's
-    LUT column and the candidate's stored ``array<int>`` codes: a
-    left-associated sum of m 0-based array lookups — the per-pair
-    search kernel is m loads + m adds, no per-dimension arithmetic."""
+def pq_adc_from_lut_column(model: dict, lut: Column, codes: Column) -> Column:
+    """The one ADC column: the distance of a (query, candidate) pair
+    from the query's s-major m*k LUT and the candidate's 0-based
+    ``array<int>`` codes — a left-associated sum of m array lookups,
+    so the per-pair search kernel is m loads + m adds, no
+    per-dimension arithmetic."""
     m, k = model["m"], model["k"]
-    codes_arr = F.col(codes_col)
-    terms = [
-        F.get(
-            F.col(lut_col),
-            F.lit(s * k) + F.element_at(codes_arr, s + 1),
-        )
-        for s in range(m)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    return reduce(
+        operator.add,
+        (F.get(lut, F.lit(s * k) + F.element_at(codes, s + 1)) for s in range(m)),
+    )
 
 
 def pq_adc_cogroup_scorer(model: dict, refine: int, query_block: int = 256):
@@ -547,30 +396,15 @@ def pq_adc_from_lut_sql(
     return "(" + " + ".join(terms) + ")"
 
 
-def pq_codes_list_sql(model: dict, emb_sql: str = "embedding", dim: int = 64) -> str:
-    """DuckDB twin of the encoder for ADC joins: the m per-subspace
-    codes as a LIST of 1-based positions (list_position first-match
-    argmin — same tie-break as :func:`pq_code_columns`)."""
-    books = model["codebooks"]
-    m, k = model["m"], model["k"]
-    sub = dim // m
-    exprs = []
-    for s in range(m):
-        dlist = ", ".join(
-            pq_sub_distance_sql(emb_sql, s, sub, books[s][c]) for c in range(k)
+def pq_codes_list_sql(model: dict, emb_sql: str = "embedding") -> str:
+    """DuckDB twin of :func:`pq_code_array_udf` for ADC joins: the m
+    per-subspace codes as a LIST of 1-based positions (list_position
+    first-match argmin)."""
+    return (
+        "["
+        + ", ".join(
+            f"list_position({dl}, list_min({dl}))"
+            for dl in pq_dist_lists_sql(model, emb_sql)
         )
-        exprs.append(f"list_position([{dlist}], list_min([{dlist}]))")
-    return "[" + ", ".join(exprs) + "]"
-
-
-def pq_sub_distance_sql(
-    emb_sql: str, s: int, sub: int, centroid
-) -> str:
-    """DuckDB twin of :func:`_sub_distance` — same left-associated
-    expression tree, same literal centroids."""
-    terms = [
-        f"(CAST({emb_sql}[{s * sub + j + 1}] AS DOUBLE) - {float(centroid[j])!r})"
-        f" * (CAST({emb_sql}[{s * sub + j + 1}] AS DOUBLE) - {float(centroid[j])!r})"
-        for j in range(sub)
-    ]
-    return "(" + " + ".join(terms) + ")"
+        + "]"
+    )

@@ -25,8 +25,6 @@ aggregate, never hit the driver.
 
 from __future__ import annotations
 
-import numpy as np
-
 
 def _chunk(fourcc: bytes, payload: bytes) -> bytes:
     data = payload + (b"\x00" if len(payload) & 1 else b"")  # word align

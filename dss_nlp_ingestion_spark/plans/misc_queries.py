@@ -1736,10 +1736,10 @@ def _txds_setup(spark: SparkSession, sf_dir: str):
     The warm read (a 10-row table through format('txlog')) moves the
     one-time Python-DataSource cost — driver-side planner process,
     ArrowEvalPython codegen, source-worker fork — into setup_sec,
-    the same cold/steady policy register_warm applies to the
-    literal-heavy PQ plans (r9 verdict #7: the probe read ~3.9 s of
-    which ~3 s was first-use machinery, measured; warmed probe
-    ~1.1 s at sf0.1 — THAT is the number that scales with data)."""
+    the same cold/steady split bench.py's headline passes make (r9
+    verdict #7: the probe read ~3.9 s of which ~3 s was first-use
+    machinery, measured; warmed probe ~1.1 s at sf0.1 — THAT is the
+    number that scales with data)."""
     from dss_nlp_ingestion_spark.sources import txlog
     from dss_nlp_ingestion_spark.sources.txlog_datasource import TxLogDataSource
 

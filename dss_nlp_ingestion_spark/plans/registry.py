@@ -93,71 +93,6 @@ def register_split(
     return composed
 
 
-def register_warm(
-    name: str, oracle: str | None = None, tag: str | None = None
-) -> Callable[[QueryFn], QueryFn]:
-    """Register a query whose PLAN COMPILATION dominates its toy-SF
-    runtime (literal-heavy codegen — the PQ codebook / trained-centroid
-    families janino-compile thousands of literal cells per plan).
-
-    The driver-facing ``QUERIES`` entry is the plain single-execution
-    query (correctness path unchanged); bench.py additionally sees a
-    SETUP — one warmup execution, which compiles the generated code
-    (cached JVM-wide by generated source) and is reported under
-    ``setup_sec`` — and a PROBE, the steady-state re-execution whose
-    time is the number that scales.  This is the same cold/steady
-    policy the headline set already gets from its three passes,
-    expressed through the split seam so non-headline rows stop
-    charging a one-time compile cost to the operator (r7 verdict #2:
-    the corpus-trained m=16 codebook doubled the janino literal count
-    and the sweep read it as an operator regression)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        def warm_setup(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Build the plan ONCE (the py4j literal construction +
-            # Catalyst analysis of a 10k-literal tree is the dominant
-            # toy-SF cost) and execute it once to materialize codegen;
-            # the probe re-executes the SAME DataFrame, whose analyzed/
-            # optimized/compiled plan is cached on the object — so the
-            # probe measures execution, the only part that is O(data).
-            #
-            # PRECONDITION (r8 advisor): ``fn`` must not persist()/
-            # cache() internally — a cached intermediate would make
-            # the probe time cached-block reads instead of real
-            # execution. Asserted below: the warmup execution must not
-            # grow the persistent-RDD set.
-            cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
-            df = fn(spark, sf_dir)
-            assert df.count() >= 0
-            cached_after = spark.sparkContext._jsc.getPersistentRDDs().size()
-            assert cached_after <= cached_before, (
-                f"register_warm({name!r}): query persisted "
-                f"{cached_after - cached_before} block(s) internally; "
-                "the steady-state probe would measure cache reads, not "
-                "execution — use register_split with an explicit "
-                "setup/probe seam instead"
-            )
-            return df
-
-        def steady_probe(spark: SparkSession, df: DataFrame) -> DataFrame:
-            return df
-
-        warm_setup.__name__ = f"{name}_warm_setup"
-        steady_probe.__name__ = f"{name}_steady_probe"
-        fn._split = (warm_setup, steady_probe)  # type: ignore[attr-defined]
-        register(name, oracle)(fn)
-        SETUPS[name] = warm_setup
-        PROBES[name] = steady_probe
-        TAGS[name] = tag or (
-            "setup_sec = warmup execution (janino compile of the "
-            "literal-heavy plan, one-time/amortized at scale); the "
-            "recorded time is the steady-state re-execution"
-        )
-        return fn
-
-    return deco
-
-
 def fround(col: Column, n: int = 4) -> Column:
     """Deterministic cross-engine rounding: floor(x*10^n + 0.5)/10^n.
 

@@ -5,6 +5,9 @@ bit-identical between Spark and DuckDB (see operators.similarity).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,7 +25,6 @@ from dss_nlp_ingestion_spark.plans.registry import (
     fround_sql,
     register,
     register_split,
-    register_warm,
 )
 
 _DIM = 64
@@ -326,16 +328,7 @@ FROM ranked WHERE rank <= {_IVF_K}
 """
 
 
-@register_warm(
-    "ivf_topk",
-    _IVF_ORACLE,
-    tag=(
-        "setup_sec = centroid collect (index build) + plan compile and "
-        "one warm run; the 32x64 centroid cells are within the exact-fold "
-        "cap (exact fold <= 64x64 cells, one float64 matmul above, one "
-        "ranking); recorded time = the probe execution, the O(data) part"
-    ),
-)
+@register("ivf_topk", _IVF_ORACLE)
 def ivf_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors for the first 10 query
     vectors: inverted lists by nearest deterministic centroid (every
@@ -416,7 +409,7 @@ FROM ranked WHERE rank <= {_IVF_K}
 """
 
 
-@register_warm("ivf_topk_trained", _IVF_TRAINED_ORACLE)
+@register("ivf_topk_trained", _IVF_TRAINED_ORACLE)
 def ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search over TRAINED centers — the committed spherical
     k-means artifact (operators/similarity.py ivf_centroids_v1.npz)
@@ -457,7 +450,7 @@ GROUP BY bf.query_id
 """
 
 
-@register_warm("ann_recall_trained_eval", _TRAINED_RECALL_ORACLE)
+@register("ann_recall_trained_eval", _TRAINED_RECALL_ORACLE)
 def ann_recall_trained_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@5 of the trained-centroid IVF vs exact brute force —
     the eval that justified committing the centroid artifact (mean
@@ -1023,24 +1016,14 @@ def _pq_oracle() -> str:
     from dss_nlp_ingestion_spark.operators.pq import (
         DEFAULT_PQ_ARTIFACT,
         load_pq_artifact,
-        pq_sub_distance_sql,
+        pq_dist_lists_sql,
     )
 
-    model = load_pq_artifact(DEFAULT_PQ_ARTIFACT)
-    books, m, k = model["codebooks"], model["m"], model["k"]
-    sub = 64 // m
-    code_exprs, err_exprs = [], []
-    for s in range(m):
-        dlist = ", ".join(
-            pq_sub_distance_sql("embedding", s, sub, books[s][c])
-            for c in range(k)
-        )
-        code_exprs.append(
-            f"CAST(list_position([{dlist}], list_min([{dlist}])) - 1 AS VARCHAR)"
-        )
-        err_exprs.append(f"list_min([{dlist}])")
-    codes = " || ',' || ".join(code_exprs)
-    total = " + ".join(err_exprs)
+    dlists = pq_dist_lists_sql(load_pq_artifact(DEFAULT_PQ_ARTIFACT))
+    codes = " || ',' || ".join(
+        f"CAST(list_position({dl}, list_min({dl})) - 1 AS VARCHAR)" for dl in dlists
+    )
+    total = " + ".join(f"list_min({dl})" for dl in dlists)
     return f"""
 SELECT vec_id,
        {codes} AS pq_codes,
@@ -1049,30 +1032,40 @@ FROM embeddings
 """
 
 
-@register_warm("pq_encode_embeddings", _pq_oracle())
+@register("pq_encode_embeddings", _pq_oracle())
 def pq_encode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (Jégou et al.) — the compressor that
-    makes billion-vector ANN serveable (64 floats -> 8 codebook
+    makes billion-vector ANN serveable (64 floats -> 16 codebook
     bytes): codebooks are committed model parameters (deterministic
-    numpy Lloyd on a synthetic sample, operators/pq.py — the
+    numpy Lloyd on a corpus sample, operators/pq.py — the
     train-driver-side / assign-distributed split production PQ
-    uses), assignment is pure codegen column math (fixed-order IEEE
-    distance expressions, first-match argmin), so the encoder
-    hash-matches the SQL twin bit-for-bit. pq_err rides along as the
-    summed per-subspace quantization error."""
+    uses). Assignment is one Arrow pass: the per-row LUT of the m*k
+    squared distances (the numpy fold of ``pq_query_lut_udf``), then
+    per subspace block of k entries ``array_min`` is the error term
+    and its first position the code (the tie-break of
+    ``list_position``), so the encoder hash-matches the SQL twin
+    bit-for-bit. pq_err is the left-associated sum of the m errors."""
     from dss_nlp_ingestion_spark.operators.pq import (
         DEFAULT_PQ_ARTIFACT,
         load_pq_artifact,
-        pq_code_columns,
+        pq_query_lut_udf,
     )
 
     model = load_pq_artifact(DEFAULT_PQ_ARTIFACT)
-    codes, err = pq_code_columns(model)
-    e = table(spark, sf_dir, "embeddings")
-    return e.select(
+    m, k = model["m"], model["k"]
+    d = table(spark, sf_dir, "embeddings").select(
+        "vec_id", pq_query_lut_udf(model)(F.col("embedding")).alias("_d")
+    )
+    blocks = [F.slice(F.col("_d"), s * k + 1, k) for s in range(m)]
+    mins = [F.array_min(blk) for blk in blocks]
+    codes = [
+        (F.array_position(blk, mn) - 1).cast("string")
+        for blk, mn in zip(blocks, mins)
+    ]
+    return d.select(
         "vec_id",
-        codes.alias("pq_codes"),
-        fround(err, 8).alias("pq_err"),
+        F.concat_ws(",", *codes).alias("pq_codes"),
+        fround(reduce(operator.add, mins), 8).alias("pq_err"),
     )
 
 
@@ -1170,26 +1163,39 @@ def kmeans_update_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ADC_K = 20
 
 
+def _double_sql(v: float) -> str:
+    """A Spark SQL double literal that parses to exactly ``v``: the
+    string->double cast is Java's correctly rounded parse of Python's
+    round-trip repr. Literal-heavy columns are built as one SQL
+    expression: every ``F.lit`` is a py4j round trip (~1 ms on a
+    4-core host), and 64 literal terms built that way took ~1 s of
+    plan construction."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _adc_query_vec() -> list[float]:
+    """The committed eval query point of the PQ artifact — the one
+    query every ADC row and oracle scores against."""
+    from dss_nlp_ingestion_spark.operators.pq import (
+        DEFAULT_PQ_ARTIFACT,
+        load_pq_artifact,
+    )
+
+    return [float(x) for x in load_pq_artifact(DEFAULT_PQ_ARTIFACT)["query_vec"]]
+
+
 def _adc_query_and_oracle():
-    """Build the shared query vector, LUT, and the DuckDB twin from
-    the committed codebook artifact."""
+    """Build the model, the query's LUT, and the DuckDB twin from the
+    committed codebook artifact."""
     from dss_nlp_ingestion_spark.operators.pq import (
         DEFAULT_PQ_ARTIFACT,
         adc_lookup_table,
         load_pq_artifact,
         pq_adc_sql,
-        synth_training_sample,
     )
 
     model = load_pq_artifact(DEFAULT_PQ_ARTIFACT)
-    # The artifact carries its eval query point (in-distribution —
-    # an off-cloud query makes all distances near-equal and ADC
-    # ranking meaningless, r7 recall finding); synth is the fallback
-    # for artifacts predating the field.
-    qvec = model.get("query_vec")
-    if qvec is None:
-        qvec = synth_training_sample(1, 64)[0]
-    lut = adc_lookup_table(model, qvec)
+    lut = adc_lookup_table(model, _adc_query_vec())
     adc_sql = pq_adc_sql(model, lut)
     oracle = f"""
 WITH scored AS (
@@ -1209,7 +1215,23 @@ FROM top
 _ADC_MODEL, _ADC_LUT, _ADC_ORACLE = _adc_query_and_oracle()
 
 
-@register_warm("pq_adc_topk", _ADC_ORACLE)
+def _adc_col():
+    """ADC distance of every stored vector to the eval query: codes
+    from the Arrow encoder, looked up in the query's LUT shipped as
+    one literal array of m*k doubles (built lazily — Column
+    construction needs an active SparkContext)."""
+    from dss_nlp_ingestion_spark.operators.pq import (
+        pq_adc_from_lut_column,
+        pq_code_array_udf,
+    )
+
+    lits = ", ".join(_double_sql(v) for row in _ADC_LUT for v in row)
+    lut = F.expr(f"array({lits})")
+    codes = pq_code_array_udf(_ADC_MODEL)(F.col("embedding"))
+    return pq_adc_from_lut_column(_ADC_MODEL, lut, codes)
+
+
+@register("pq_adc_topk", _ADC_ORACLE)
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ search the way a billion-vector serving tier runs it
     (Jégou et al. §III): the query is preprocessed driver-side into
@@ -1218,16 +1240,14 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair O(dim) arithmetic, no shuffle before the global top-k
     (TakeOrderedAndProject ships k rows per task). In a deployed
     index the codes are precomputed (pq_encode_embeddings) and the
-    scan reads 8 bytes/vector instead of 256; here codes are derived
-    in the same scan so the whole kernel stays under the hash gate."""
+    scan reads 16 bytes/vector instead of 256; here codes are derived
+    in the same scan (one Arrow pass) so the whole kernel stays under
+    the hash gate."""
     from pyspark.sql import Window
 
-    from dss_nlp_ingestion_spark.operators.pq import pq_adc_column
-
     emb = table(spark, sf_dir, "embeddings")
-    adc = pq_adc_column(_ADC_MODEL, _ADC_LUT)
     top = (
-        emb.select("vec_id", adc.alias("adc_exact"))
+        emb.select("vec_id", _adc_col().alias("adc_exact"))
         .orderBy(F.col("adc_exact").asc(), F.col("vec_id").asc())
         .limit(_ADC_K)
     )
@@ -1296,34 +1316,18 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ADC quality eval: PQ top-k vs exact top-k for the same query
 # ---------------------------------------------------------------------------
 
-def _adc_query_vec() -> list[float]:
-    from dss_nlp_ingestion_spark.operators.pq import (
-        DEFAULT_PQ_ARTIFACT,
-        load_pq_artifact,
-        synth_training_sample,
-    )
-
-    q = load_pq_artifact(DEFAULT_PQ_ARTIFACT).get("query_vec")
-    if q is None:
-        q = synth_training_sample(1, 64)[0]
-    return [float(x) for x in q]
-
-
 def _adc_exact_col():
     """Exact squared-L2 distance of every vector to the same literal
-    query the ADC search uses (built lazily — Column construction
-    needs an active SparkContext)."""
-    q = _adc_query_vec()
-    qlit = F.array(*[F.lit(v) for v in q])
-    return F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            qlit,
-            lambda x, qq: (x.cast("double") - qq) * (x.cast("double") - qq),
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
+    query the ADC search uses: a left-associated '+' chain of the
+    per-component squares, plain codegen arithmetic (no interpreted
+    lambda). The SQL twin seeds its fold with 0.0, and 0.0 + t == t
+    for a square, so the doubles agree bit for bit. Built lazily —
+    Column construction needs an active SparkContext."""
+    terms = []
+    for j, qj in enumerate(_adc_query_vec()):
+        d = f"(CAST(element_at(embedding, {j + 1}) AS DOUBLE) - {_double_sql(qj)})"
+        terms.append(f"{d} * {d}")
+    return F.expr(" + ".join(terms))
 
 
 def _adc_exact_sql() -> str:
@@ -1351,7 +1355,7 @@ FROM exact LEFT JOIN approx ON approx.vec_id = exact.vec_id
 """
 
 
-@register_warm("pq_adc_recall_eval", _ADC_RECALL_ORACLE)
+@register("pq_adc_recall_eval", _ADC_RECALL_ORACLE)
 def pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC search quality measured IN the engine: recall@{_ADC_K} of
     the PQ lookup-table search against the exact squared-L2 top-k for
@@ -1421,7 +1425,7 @@ def _adc_refine_oracle() -> str:
     )
 
 
-@register_warm("pq_adc_refine_topk", _adc_refine_oracle())
+@register("pq_adc_refine_topk", _adc_refine_oracle())
 def pq_adc_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION PQ serving shape (Jégou et al. §V, FAISS
     IndexRefineFlat): compressed-domain ADC scan selects a shortlist
@@ -1432,12 +1436,9 @@ def pq_adc_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.45 -> 1.0 on this corpus for two bounded stages."""
     from pyspark.sql import Window
 
-    from dss_nlp_ingestion_spark.operators.pq import pq_adc_column
-
     emb = table(spark, sf_dir, "embeddings")
-    adc = pq_adc_column(_ADC_MODEL, _ADC_LUT)
     short = (
-        emb.select("vec_id", adc.alias("adc"))
+        emb.select("vec_id", _adc_col().alias("adc"))
         .orderBy(F.col("adc").asc(), F.col("vec_id").asc())
         .limit(_ADC_SHORTLIST)
         .select("vec_id")
@@ -1469,7 +1470,7 @@ FROM exact LEFT JOIN approx ON approx.vec_id = exact.vec_id
 """
 
 
-@register_warm(
+@register(
     "pq_adc_refine_recall_eval",
     _ADC_REFINE_RECALL_ORACLE.format(
         refine_oracle=_adc_refine_oracle(), exact_sql=_ADC_EXACT_SQL
@@ -1502,8 +1503,6 @@ def pq_adc_refine_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from dss_nlp_ingestion_spark.plans.registry import TAGS
-
 TAGS["embedding_near_dups_exact"] = (
     "small-sf verifier: unguarded bucket self-join kept to prove the "
     "skew-guarded default (embedding_near_dups) result-identical; "
@@ -1511,20 +1510,6 @@ TAGS["embedding_near_dups_exact"] = (
     " — the adaptive rule returns exactly 8 at every SF this twin is "
     "run at, keeping the two rows byte-comparable)"
 )
-
-for _pq_name in (
-    "pq_encode_embeddings",
-    "pq_adc_topk",
-    "pq_adc_recall_eval",
-    "pq_adc_refine_topk",
-    "pq_adc_refine_recall_eval",
-):
-    TAGS[_pq_name] = (
-        "codebook-literal codegen: janino compile dominates at toy SF "
-        "(~2-5 s/plan) and amortizes at scale; r7 corpus-trained book "
-        "(m=16) costs ~2 s more compile than the old m=8 book and "
-        "buys ADC recall 0.05 -> 0.45 raw / 1.0 refined"
-    )
 
 TAGS["embedding_near_dups_guarded"] = (
     "split-path demo: cap=4 deliberately tiny so the block-split "

@@ -6,6 +6,8 @@ anything at scale."""
 
 from __future__ import annotations
 
+import pytest
+
 from dss_nlp_ingestion_spark.plans import QUERIES
 from tests.conftest import SF_DIR
 
@@ -495,21 +497,20 @@ def test_ivf_inc_trained_probe_broadcasts_batch_not_index(spark):
     assert "WindowGroupLimit" in plan  # top-k limits pushed into sort
 
 
-def test_register_warm_probe_reuses_the_same_plan(spark):
-    """register_warm (r8): the probe must hand back the SAME DataFrame
-    the setup built and warmed — plan construction/compile happens
-    once (reported as setup_sec) and the probe measures execution
-    only. The driver-facing QUERIES entry stays the plain
-    single-execution function."""
-    from dss_nlp_ingestion_spark.plans.registry import PROBES, SETUPS
+@pytest.mark.parametrize(
+    "name", ["pq_encode_embeddings", "pq_adc_topk", "pq_adc_refine_topk"]
+)
+def test_pq_queries_run_one_arrow_kernel(spark, name):
+    """Every registered PQ query encodes through ONE Arrow evaluation
+    of the numpy distance fold (operators/pq.py ``_sq_dists``) and
+    builds no higher-order-function literal tree: a second
+    ArrowEvalPython node would mean the optimizer duplicated the UDF,
+    a lambdafunction the interpreted per-row form is back."""
+    import re
 
-    df = SETUPS["pq_adc_topk"](spark, SF_DIR)
-    assert PROBES["pq_adc_topk"](spark, df) is df  # identity, not a rebuild
-    assert df.count() > 0  # still executable after the warm count
-    fn = QUERIES["pq_adc_topk"]
-    assert not hasattr(fn, "__wrapped__") and callable(fn)
-    # greenness hash covers the warm halves
-    assert len(getattr(fn, "_split", ())) == 2
+    plan = _formatted(spark, name)
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    assert "lambdafunction" not in plan
 
 
 def test_scoring_udfs_evaluate_once_per_branch(spark):

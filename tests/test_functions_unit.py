@@ -628,3 +628,92 @@ def test_artifact_loaders_reject_unsupported_versions(tmp_path, load):
         with pytest.raises(ValueError, match="supported versions") as err:
             getattr(N, load)(path)
         assert name in str(err.value)
+
+
+@pytest.mark.parametrize(
+    "module, stem, artifact",
+    [
+        ("functions.nlp", "sentiment", "sentiment_model_v2.npz"),
+        ("functions.nlp", "sentiment", "sentiment_model_v3.npz"),
+        ("functions.nlp", "topic", "topic_model_v2.npz"),
+        ("functions.nlp", "encoder", "encoder_model_v2.npz"),
+        ("functions.nlp", "keyword", "keyword_idf_v1.npz"),
+        ("operators.pq", "pq", "pq_codebook_v1.npz"),
+    ],
+)
+def test_artifact_savers_round_trip_committed_files(tmp_path, module, stem, artifact):
+    """Every committed model file survives load -> save -> load with
+    the same fields: same keys, equal arrays, same dtypes. A re-pin
+    (a retrain that moves one ulp) then goes through a tested writer."""
+    import importlib
+    import os
+
+    import numpy as np
+
+    mod = importlib.import_module(f"dss_nlp_ingestion_spark.{module}")
+    load = getattr(mod, f"load_{stem}_artifact")
+    save = getattr(mod, f"save_{stem}_artifact")
+    committed = os.path.join(os.path.dirname(mod.__file__), artifact)
+    out = str(tmp_path / artifact)
+    save(load(committed), out)
+    with np.load(committed) as want, np.load(out) as got:
+        assert sorted(got.files) == sorted(want.files)
+        for key in want.files:
+            assert got[key].dtype == want[key].dtype, key
+            assert np.array_equal(got[key], want[key]), key
+    reloaded, shipped = load(out), load(committed)
+    assert reloaded.keys() == shipped.keys()
+    for key, value in shipped.items():
+        assert np.array_equal(np.asarray(reloaded[key]), np.asarray(value)), key
+
+
+@pytest.mark.parametrize("field", ["codebooks", "m", "k", "query_vec"])
+def test_load_pq_artifact_rejects_missing_fields(tmp_path, field):
+    """A PQ artifact without one of its fields fails at load with a
+    ValueError naming the file. Without ``query_vec`` there is no
+    in-distribution eval query, and an off-distribution stand-in makes
+    every ADC distance near-equal."""
+    import numpy as np
+
+    from dss_nlp_ingestion_spark.operators.pq import (
+        DEFAULT_PQ_ARTIFACT,
+        load_pq_artifact,
+    )
+
+    with np.load(DEFAULT_PQ_ARTIFACT) as z:
+        arrays = {key: z[key] for key in z.files if key != field}
+    path = str(tmp_path / f"no_{field}.npz")
+    np.savez(path, **arrays)
+    with pytest.raises(ValueError, match=field) as err:
+        load_pq_artifact(path)
+    assert path in str(err.value)
+
+
+def test_spark_ws_split_matches_spark_split_trim(spark):
+    """The Python replay of ``split(trim(_), '\\s+')`` that the Arrow
+    kernels tokenize with gives Spark's own tokens on the texts that
+    stress it: Java ``\\s`` is ASCII-only (NBSP and U+3000 are not
+    whitespace), ``trim`` strips spaces only, and empty leading and
+    trailing fields are kept."""
+    from dss_nlp_ingestion_spark.functions.text import spark_ws_split, ws_tokens
+
+    texts = [
+        "alpha beta gamma",
+        "  leading and trailing  ",
+        "tab\tand\nnewline\x0bmix\fhere\rend",
+        "nbsp\u00a0stays one token",
+        "ideographic\u3000space too",
+        "",
+        "   ",
+        "\t",
+        None,
+        "dup dup dup dup",
+        "é ünï çödé 中文 字",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = {r["i"]: r["toks"] for r in df.select("i", ws_tokens(F.col("t")).alias("toks")).collect()}
+    for i, t in enumerate(texts):
+        if t is None:
+            assert got[i] is None
+        else:
+            assert spark_ws_split(t) == list(got[i]), repr(t)

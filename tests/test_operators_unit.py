@@ -1375,11 +1375,14 @@ def test_pq_adc_exact_on_codebook_vectors(spark):
 
     import pytest
 
+    from pyspark.sql import functions as F
+
     from dss_nlp_ingestion_spark.operators.pq import (
         DEFAULT_PQ_ARTIFACT,
         adc_lookup_table,
         load_pq_artifact,
-        pq_adc_column,
+        pq_adc_from_lut_column,
+        pq_code_array_udf,
     )
 
     model = load_pq_artifact(DEFAULT_PQ_ARTIFACT)
@@ -1393,12 +1396,12 @@ def test_pq_adc_exact_on_codebook_vectors(spark):
         v = np.concatenate([books[s][c] for s in range(m)])
         rows.append((c, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        r["vec_id"]: r["adc"]
-        for r in df.select(
-            "vec_id", pq_adc_column(model, lut).alias("adc")
-        ).collect()
-    }
+    adc = pq_adc_from_lut_column(
+        model,
+        F.array(*[F.lit(v) for row in lut for v in row]),
+        pq_code_array_udf(model)(F.col("embedding")),
+    )
+    got = {r["vec_id"]: r["adc"] for r in df.select("vec_id", adc.alias("adc")).collect()}
     for c in (0, 3, 7):
         v = np.concatenate([books[s][c] for s in range(m)])
         true_d2 = sum(

@@ -1,12 +1,12 @@
 """Bit-equality of the two implementations of each IVFADC kernel.
 
-The ADC search path ships every kernel in two forms: a Catalyst
-expression form (documentation of the exact IEEE fold the oracle SQL
-mirrors — interpreted higher-order functions, slow) and the Arrow
-pandas-UDF form the queries actually run (component-sequential numpy
-folds, 10-100x faster). The hash gate only stays sound if the two are
-bit-identical: numpy must not fuse or reassociate the folds. Pin it
-per element over the real embeddings fixture.
+The ADC search path runs every kernel as an Arrow pandas UDF
+(component-sequential numpy folds). The Catalyst expression form
+(interpreted higher-order functions, slow) is kept as the reference
+that documents the exact IEEE fold the oracle SQL mirrors. The hash
+gate only stays sound if the two are bit-identical: numpy must not
+fuse or reassociate the folds. Pin it per element over the real
+embeddings fixture.
 
 Also pins the centroid top-k kernel's exact-fold branch against its
 expression form (same scores, same DESC/cent_id ASC tie-break) — the
@@ -21,23 +21,29 @@ from tests.conftest import SF_DIR
 
 
 def test_pq_code_udf_matches_expression_form(spark):
+    """The codes UDF picks, per subspace block of k LUT entries of the
+    expression form, the first position of the block minimum — the
+    ``list_position(l, list_min(l))`` argmin of the SQL twins."""
     from dss_nlp_ingestion_spark.operators.pq import (
         DEFAULT_PQ_ARTIFACT,
         load_pq_artifact,
-        pq_code_array_column,
         pq_code_array_udf,
+        pq_query_lut_column,
     )
 
     model = load_pq_artifact(DEFAULT_PQ_ARTIFACT)
+    m, k = model["m"], model["k"]
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     rows = emb.select(
         "vec_id",
-        pq_code_array_column(model).alias("expr"),
+        pq_query_lut_column(model).alias("expr"),
         pq_code_array_udf(model)(F.col("embedding")).alias("udf"),
     ).collect()
     assert rows
     for r in rows:
-        assert list(r["expr"]) == list(r["udf"]), r["vec_id"]
+        blocks = [r["expr"][s * k : (s + 1) * k] for s in range(m)]
+        want = [blk.index(min(blk)) for blk in blocks]
+        assert want == list(r["udf"]), r["vec_id"]
 
 
 def test_pq_lut_udf_matches_expression_form_bitwise(spark):
