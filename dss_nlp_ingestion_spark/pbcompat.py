@@ -5,13 +5,20 @@ protobuf messages (``pyspark.sql.streaming.proto.StateMessage_pb2``),
 imported in BOTH the driver and every Python worker. Hermetic
 containers often lack the ``protobuf`` pip package while still
 carrying a pure-Python runtime on disk (e.g. the Google Cloud SDK
-ships one). This module finds such a runtime, relaxes the
-gencode/runtime MINOR-version gate when that is the only mismatch
-(the wire format and the ``internal.builder`` API are stable across
-minors — protobuf's own cross-version guarantee), and exports the
-discovery to Spark workers via ``PYTHONPATH`` + a ``sitecustomize``
-hook. Everything is best-effort: with no runtime anywhere, callers
-see the same ImportError/skip as before.
+ships one). This module finds such a runtime, puts its root on
+``sys.path`` and ``PYTHONPATH``, and relaxes the gencode/runtime
+MINOR-version gate when that is the only mismatch (the wire format
+and the ``internal.builder`` API are stable across minors, protobuf's
+own cross-version guarantee). Everything is best-effort: with no
+runtime anywhere, callers see the same ImportError/skip as before.
+
+Only discovery lives here. The worker side is the engine's one site
+hook, ``worker_site/sitecustomize.py``, which ``session.get_spark``
+always puts on ``PYTHONPATH``. At worker startup it applies the same
+:func:`relax_minor_version_gate`, which takes effect when the runtime
+root added here is on the worker's path. (The hook also stops each
+task re-reading ``pyspark.zip`` and the spark-core jar; see its
+docstring.)
 
 Must run BEFORE the JVM launches (workers inherit the JVM's env),
 which :func:`dss_nlp_ingestion_spark.session.get_spark` guarantees.
@@ -21,6 +28,8 @@ from __future__ import annotations
 
 import os
 import sys
+
+from dss_nlp_ingestion_spark.worker_site.sitecustomize import relax_minor_version_gate
 
 #: Candidate roots holding a pure-Python ``google/protobuf`` tree.
 #: ``DSS_PROTOBUF_PATH`` (colon-separated) is consulted first so a
@@ -40,29 +49,14 @@ def _candidate_roots() -> list[str]:
     return roots
 
 
-def relax_minor_version_gate() -> None:
-    """Wrap ``runtime_version.ValidateProtobufRuntimeVersion`` so a
-    MINOR-version gap between gencode and runtime no longer raises;
-    a MAJOR mismatch still does (those may break the builder API).
-    Idempotent; a runtime without the module (protobuf < 5) needs no
-    gate at all."""
-    try:
-        from google.protobuf import runtime_version as rv
-    except ImportError:
-        return
-    if getattr(rv.ValidateProtobufRuntimeVersion, "_dss_relaxed", False):
-        return
-    orig = rv.ValidateProtobufRuntimeVersion
-
-    def relaxed(domain, major, minor, patch, suffix, location):  # noqa: ANN001
-        try:
-            orig(domain, major, minor, patch, suffix, location)
-        except rv.VersionError:
-            if major != rv.MAJOR:
-                raise
-
-    relaxed._dss_relaxed = True  # type: ignore[attr-defined]
-    rv.ValidateProtobufRuntimeVersion = relaxed
+def add_pythonpath(entry: str) -> None:
+    """Append ``entry`` to ``os.environ["PYTHONPATH"]`` unless it is
+    already there, so repeated calls leave one copy."""
+    parts = [
+        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p
+    ]
+    if entry not in parts:
+        os.environ["PYTHONPATH"] = os.pathsep.join([*parts, entry])
 
 
 def ensure_protobuf() -> bool:
@@ -77,7 +71,6 @@ def ensure_protobuf() -> bool:
         return True
     except ImportError:
         pass
-    site_dir = os.path.join(os.path.dirname(__file__), "pbcompat_site")
     for root in _candidate_roots():
         if not os.path.isfile(
             os.path.join(root, "google", "protobuf", "descriptor.py")
@@ -90,16 +83,6 @@ def ensure_protobuf() -> bool:
             sys.path.remove(root)
             continue
         relax_minor_version_gate()
-        # Workers: same runtime on PYTHONPATH + the sitecustomize dir
-        # that re-applies the relaxed gate at interpreter startup.
-        parts = [
-            p
-            for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-            if p
-        ]
-        for extra in (site_dir, root):
-            if extra not in parts:
-                parts.append(extra)
-        os.environ["PYTHONPATH"] = os.pathsep.join(parts)
+        add_pythonpath(root)
         return True
     return False

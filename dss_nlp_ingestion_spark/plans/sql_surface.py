@@ -22,6 +22,7 @@ from dss_nlp_ingestion_spark.plans.registry import (
     register,
     register_split,
 )
+from dss_nlp_ingestion_spark.plans.similarity_queries import _DIM, _dot_sql
 
 # ---------------------------------------------------------------------------
 # Pure-SQL query through spark.sql over registered views
@@ -51,15 +52,7 @@ def sql_surface_nation_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-style ANN: bucket-pruned top-k (scale path of similarity search)
 # ---------------------------------------------------------------------------
 
-_DIM, _N_PLANES = 64, 8
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"list_reduce([CAST(0.0 AS DOUBLE)] || list_transform(range(1, {_DIM + 1}), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-    )
-
+_N_PLANES = 8
 
 _plane_projs = []
 for p in range(_N_PLANES):

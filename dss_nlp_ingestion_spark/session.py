@@ -5,10 +5,23 @@ timezone, ANSI off so behavior matches classic SQL semantics) and for
 scale (AQE with skew-join handling and partition coalescing, Arrow for
 any pandas-UDF stage). On a real cluster the same settings apply; only
 ``master`` changes.
+
+Before the JVM launches, :func:`get_spark` puts the engine's one worker
+site hook (``worker_site/sitecustomize.py``) on ``PYTHONPATH``, which
+every Python worker inherits. PySpark calls
+``importlib.invalidate_caches()`` at the start of every Python task,
+and on Python 3.10-3.12 that re-reads the directory of each zip on the
+worker's path (``pyspark.zip``, the spark-core jar, py4j): 0.29 s of
+CPU per task before it touches a row. The hook re-reads an archive
+only when its stat key moved. On Python >= 3.13 the stdlib already
+reloads lazily and the hook leaves zipimport alone. A session built
+elsewhere, or one reused by ``getOrCreate`` from a JVM that was
+launched before this wiring, runs its workers without the hook.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -64,18 +77,24 @@ def ship_package(spark: SparkSession) -> None:
     runs from a different working directory. Zipping the package and
     registering it with ``addPyFile`` makes the session location-
     independent — exactly what ``spark-submit --py-files`` does on a
-    real cluster."""
+    real cluster.
+
+    The zip is written for each new session, so a file that an earlier
+    process with the same pid left is never shipped, and it is removed
+    when the process exits. It is not removed right after
+    ``addPyFile``: local-mode executors fetch it from this path while
+    the session lives."""
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED:
         return
     pkg_dir = Path(__file__).resolve().parent
     zip_path = Path(tempfile.gettempdir()) / f"dss_nlp_ingestion_spark-{os.getpid()}.zip"
-    if not zip_path.exists():
-        tmp = zip_path.with_suffix(".tmp")
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_STORED) as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
-                zf.write(py, arcname=f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
-        tmp.rename(zip_path)
+    tmp = zip_path.with_suffix(".tmp")
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_STORED) as zf:
+        for py in sorted(pkg_dir.rglob("*.py")):
+            zf.write(py, arcname=f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
+    tmp.replace(zip_path)
+    atexit.register(zip_path.unlink, missing_ok=True)
     spark.sparkContext.addPyFile(str(zip_path))
     _SHIPPED.add(app_id)
 
@@ -92,11 +111,12 @@ def get_spark(
     tests and bench share one code path; on a cluster pass ``None`` and
     let spark-submit decide.
     """
-    # Wire a protobuf runtime (driver + worker PYTHONPATH) BEFORE the
-    # JVM launches — Spark-4 typed-state streaming needs it in every
-    # Python worker; best-effort no-op when none exists on disk.
-    from dss_nlp_ingestion_spark.pbcompat import ensure_protobuf
+    # Worker PYTHONPATH is fixed when the JVM launches, so wire it
+    # first: the site hook, then a protobuf runtime if one is on disk
+    # (Spark-4 typed-state streaming needs it in every Python worker).
+    from dss_nlp_ingestion_spark.pbcompat import add_pythonpath, ensure_protobuf
 
+    add_pythonpath(str(Path(__file__).resolve().parent / "worker_site"))
     ensure_protobuf()
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
