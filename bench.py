@@ -7,13 +7,25 @@ tail-truncating captures). The full per-query map is written to
 BENCH_FULL.json at the repo root.
 
 Each query is executed as Spark would on a cluster — full plan through
-Catalyst, result materialized via a count/collect of the final
-(small) output. A warmup pass absorbs JVM/codegen startup so the
-numbers reflect steady-state execution.
+Catalyst, result materialized via a count of the final (small) output.
+A warmup pass absorbs JVM/codegen startup so the numbers reflect
+steady-state execution.
+
+Each run of a query, and the setup half of a split composite, runs
+under its own Spark job group. Right after it the harness reads what
+that group did from ``sc.statusTracker()`` (:func:`group_work`), and
+the record's ``profile`` map holds, per timed row, ``build_sec`` (the
+query call), ``exec_sec`` (the ``.count()``), ``jobs``, ``stages`` and
+``tasks``. Wall time on a shared host swings with its neighbours; job
+and task counts do not, so they tell a plan change from host noise.
+The record also carries ``cpus``: compare only records of one core
+count.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import json
 import os
 import re
@@ -38,27 +50,24 @@ BENCH_OUT = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
 #: 1 = time only the headline set (the sf1 scaling run skips the
 #: 290-query full sweep).
 HEADLINE_ONLY = os.environ.get("SPARK_GRAFT_HEADLINE_ONLY", "") == "1"
+
+
+def _names_from_env(var: str) -> set[str]:
+    return {n.strip() for n in os.environ.get(var, "").split(",") if n.strip()}
+
+
 #: Comma-separated query names to EXCLUDE from this run (recorded in
 #: the output under "skipped"). Used by the sf1 tail sweep to leave
 #: out the documented small-sf verifier twins whose cost is
 #: quadratic BY DESIGN (their scale-shaped defaults are measured
 #: instead — e.g. ngram_jaccard_dups vs ngram_jaccard_dups_capped,
 #: embedding_near_dups_exact vs the guarded default).
-SKIP = {
-    n.strip()
-    for n in os.environ.get("SPARK_GRAFT_SKIP", "").split(",")
-    if n.strip()
-}
-
+SKIP = _names_from_env("SPARK_GRAFT_SKIP")
 #: Comma-separated query names to run EXCLUSIVELY (everything else is
 #: skipped; headline totals cover the intersection). Used by the
 #: sf10 scale probe (r9 verdict #1) to sweep the ~15 scale-critical
 #: queries without paying for the full 300-query tail at 100x data.
-ONLY = {
-    n.strip()
-    for n in os.environ.get("SPARK_GRAFT_ONLY", "").split(",")
-    if n.strip()
-}
+ONLY = _names_from_env("SPARK_GRAFT_ONLY")
 
 #: Headline set: the heaviest representatives of each operator family
 #: (relational core, windows/rollups, dedup suite, similarity search,
@@ -144,136 +153,30 @@ def _sf_from_dir(sf_dir: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-#: Solo re-measurement (r7 verdict #5): a 200+-query same-process
-#: sweep inflates pair-heavy rows 2-3x through GC pressure, so any
-#: row whose time exceeds SPARK_GRAFT_SOLO_RATIO x its baseline
-#: record (SPARK_GRAFT_SOLO_BASE, e.g. the committed sf0.1 record
-#: when this run is the sf1 sweep) is re-run in a FRESH subprocess
-#: and the clean number lands in the record as solo_sec[name].
-#:
-#: r10 postmortem: the solo pass used to spawn one fresh python+JVM
-#: PER flagged query (~25-40 s of pure startup each); with 45 flagged
-#: rows that added 20-30 min and timed out the driver's bench run
-#: (BENCH_r10.json rc=124). The pass is now (a) BATCHED — all flagged
-#: queries run sequentially inside ONE fresh subprocess/JVM, with
-#: release_cached between rows, which preserves the "fresh session,
-#: no 300-query GC debris" property that motivated solo numbers while
-#: paying JVM startup once — and (b) BUDGETED — the child stops
-#: starting new rows once SPARK_GRAFT_SOLO_BUDGET seconds (default
-#: 300) have elapsed, largest sweep rows first, and the remainder is
-#: recorded under "solo_skipped" instead of silently missing.
-SOLO_BASE = os.environ.get("SPARK_GRAFT_SOLO_BASE", "")
-SOLO_RATIO = float(os.environ.get("SPARK_GRAFT_SOLO_RATIO", "6"))
-SOLO_BUDGET = float(os.environ.get("SPARK_GRAFT_SOLO_BUDGET", "300"))
-#: Internal: set => this process times the listed queries solo
-#: (one fresh JVM, sequential) and exits.
-SOLO_QUERIES = os.environ.get("SPARK_GRAFT_SOLO_QUERIES", "")
+def group_work(spark, group: str, timeout_s: float = 30.0) -> dict[str, int]:
+    """Jobs, stages that ran tasks, and completed tasks of one Spark job
+    group, read from ``sc.statusTracker()`` through py4j (no UI, no REST
+    call, no extra job).
 
-
-def _solo_main() -> None:
-    """Fresh-session batched solo timing (the SPARK_GRAFT_SOLO_QUERIES
-    mode the solo_sec pass spawns). Same measurement policy as the
-    sweep: setup/probe split honored, min of two timed executions
-    after a warmup of the python-worker pool. One JSON line per
-    completed query (so a hard kill leaves partials parseable), then
-    a final summary line with the full map + the budget-skipped tail."""
-    t_start = time.perf_counter()
-    spark = get_spark(
-        app_name="dss-bench-solo",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(CPUS, 32),
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(0, 1000, 1, CPUS).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
-
-    def once(name: str) -> float:
-        if name in SETUPS:
-            ctx = SETUPS[name](spark, SF_DIR)
-            t0 = time.perf_counter()
-            assert PROBES[name](spark, ctx).count() >= 0
-        else:
-            t0 = time.perf_counter()
-            assert QUERIES[name](spark, SF_DIR).count() >= 0
-        dt = time.perf_counter() - t0
-        release_cached(spark)
-        return dt
-
-    out: dict[str, object] = {}
-    skipped: list[str] = []
-    for name in [n.strip() for n in SOLO_QUERIES.split(",") if n.strip()]:
-        if time.perf_counter() - t_start > SOLO_BUDGET:
-            skipped.append(name)
-            continue
-        try:
-            t: object = round(min(once(name), once(name)), 3)
-        except Exception as exc:  # noqa: BLE001 — keep measuring the rest
-            t = {"solo_sec": -1.0, "reason": f"{type(exc).__name__}: {exc}"[:200]}
-        out[name] = t
-        print(json.dumps({"query": name, "solo_sec": t}), flush=True)
-    print(
-        json.dumps({"solo_sec": out, "solo_skipped": skipped}), flush=True
-    )
-    spark.stop()
-
-
-def _solo_rerun(
-    names: list[str],
-) -> tuple[dict[str, object], list[str]]:
-    """Spawn ONE fresh python/JVM for all flagged queries (largest
-    sweep time first — the caller orders them) and collect the clean
-    timings. A per-query failure records -1 WITH its reason so a -1
-    in the committed record is diagnosable; a child death/timeout is
-    recovered from the per-query progress lines, with unreported
-    names recorded under solo_skipped."""
-    import subprocess
-
-    env = dict(os.environ, SPARK_GRAFT_SOLO_QUERIES=",".join(names))
-    print(
-        f"[bench] solo re-run (batched, {len(names)} rows, "
-        f"budget {SOLO_BUDGET:.0f}s): {' '.join(names)}",
-        file=sys.stderr,
-        flush=True,
-    )
-    stdout = ""
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            capture_output=True,
-            text=True,
-            # JVM start + warmup + one in-flight row of slack past the
-            # child's own budget cut-off.
-            timeout=SOLO_BUDGET + 420,
-            env=env,
-        )
-        stdout = proc.stdout or ""
-    except subprocess.TimeoutExpired as exc:
-        stdout = (exc.stdout or b"").decode(errors="replace") if isinstance(
-            exc.stdout, bytes
-        ) else (exc.stdout or "")
-        print("[bench] solo re-run child timed out", file=sys.stderr, flush=True)
-    except Exception as exc:  # noqa: BLE001 — the sweep numbers stand
-        print(
-            f"[bench] solo re-run FAILED: {type(exc).__name__}: {exc}",
-            file=sys.stderr,
-            flush=True,
-        )
-    out: dict[str, object] = {}
-    skipped: list[str] = []
-    for line in stdout.splitlines():
-        try:
-            rec = json.loads(line)
-        except ValueError:
-            continue
-        if "query" in rec:  # per-query progress line
-            out[rec["query"]] = rec["solo_sec"]
-        elif "solo_sec" in rec:  # final summary line
-            out.update(rec["solo_sec"])
-            skipped = list(rec.get("solo_skipped", []))
-    if not skipped:
-        skipped = [n for n in names if n not in out]
-    return out, skipped
+    The status store keeps only the last 1,000 jobs and stages
+    (``spark.ui.retainedJobs`` / ``retainedStages``), so read a group right
+    after its query. The listener bus that fills the store is
+    asynchronous: first wait, up to ``timeout_s``, until it has processed
+    every event posted so far, which includes each job end of a finished
+    action (past the bound the wait raises, and the caller records the
+    row as an error). A stage a job skipped (its shuffle output was
+    reused) runs no task and is not counted."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(int(timeout_s * 1000))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = {s for j in jobs if (job := tracker.getJobInfo(j)) for s in job.stageIds}
+    done = [
+        stage.numCompletedTasks
+        for s in stage_ids
+        if (stage := tracker.getStageInfo(s)) is not None
+    ]
+    return {"jobs": len(jobs), "stages": sum(1 for n in done if n), "tasks": sum(done)}
 
 
 def main() -> None:
@@ -282,7 +185,8 @@ def main() -> None:
         master=f"local[{CPUS}]",
         shuffle_partitions=max(CPUS, 32),
     )
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
 
     names = [n for n in BENCH_QUERIES if n in QUERIES and n not in SKIP]
     if ONLY:
@@ -304,89 +208,89 @@ def main() -> None:
     # #2). setup_obs collects one observation per pass; the committed
     # record reports the per-query MIN like the query timings.
     setup_obs: dict[str, list[float]] = {}
+    runs = itertools.count()
 
-    def _time(name: str) -> float | None:
+    def _run(name: str) -> dict | None:
+        """One timed run of ``name`` under its own job group (a split
+        composite's setup under another): its profile entry, with the
+        run's wall time under ``sec``, or None when it failed."""
+        group = f"bench:{name}:{next(runs)}"
+        build = functools.partial(QUERIES[name], spark, SF_DIR)
+        setup = None
         if name in SETUPS:
+            sc.setJobGroup(f"{group}:setup", f"{name} setup")
             t0 = time.perf_counter()
             try:
                 ctx = SETUPS[name](spark, SF_DIR)
+                t_setup = round(time.perf_counter() - t0, 3)
+                setup = group_work(spark, f"{group}:setup")
             except Exception as exc:  # noqa: BLE001
                 errors[name] = f"setup {type(exc).__name__}: {exc}"[:500]
                 return None
-            t_setup = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            try:
-                n = PROBES[name](spark, ctx).count()
-                assert n >= 0
-            except Exception as exc:  # noqa: BLE001
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                return None
-            errors.pop(name, None)
-            setup_obs.setdefault(name, []).append(t_setup)
-            dt = round(time.perf_counter() - t0, 3)
-            release_cached(spark)
-            return dt
+            build = functools.partial(PROBES[name], spark, ctx)
+        sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         try:
-            n = QUERIES[name](spark, SF_DIR).count()
-            assert n >= 0
+            df = build()
+            t1 = time.perf_counter()
+            assert df.count() >= 0
+            t2 = time.perf_counter()
+            work = group_work(spark, group)
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             return None
         # A transient failure (e.g. warmup hiccup) must not shadow a
         # later clean run of the same query.
         errors.pop(name, None)
-        dt = round(time.perf_counter() - t0, 3)
+        prof = {
+            "sec": round(t2 - t0, 3),
+            "build_sec": round(t1 - t0, 3),
+            "exec_sec": round(t2 - t1, 3),
+            **work,
+        }
+        if setup is not None:
+            setup_obs.setdefault(name, []).append(t_setup)
+            prof["setup"] = setup
         # Between-queries cache hygiene (outside the timed window):
         # iterative operators persist/localCheckpoint working sets
         # that live until JVM GC; across a 160-query sweep the leaked
         # blocks degenerate into GC thrash that charged multi-x
         # slowdowns to whatever innocent query ran late.
         release_cached(spark)
-        return dt
+        return prof
 
     # Warmup: one JVM query (codegen/JIT) and one trivial Arrow stage
     # (spawns the reusable python workers) so timings are steady-state.
-    _time(names[0])
+    _run(names[0])
     spark.range(0, 1000, 1, CPUS).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
 
     # Headline queries are measured three times: the first run carries
-    # per-plan codegen/compile cost (reported as cold_queries); the
-    # steady-state number — the one that scales — is the per-query MIN
-    # of two further runs, which strips transient host-contention noise
-    # (observed: uniform 15-30% inflation for minutes at a time) the
-    # way a single second run cannot. Then every other registered
+    # per-plan codegen/compile cost (reported as cold_total); the
+    # steady-state number is the per-query MIN over all three complete
+    # runs, and its profile is that run's. Then every other registered
     # query runs once so non-headline regressions stay visible
     # round-over-round.
-    cold = {name: _time(name) for name in names}
+    cold = {name: _run(name) for name in names}
     ok = [n for n in names if cold[n] is not None]
-    steady_a = {name: _time(name) for name in ok}
-    steady_b = {name: _time(name) for name in ok}
-    # The cold run participates in the min: it is a complete
-    # execution too, and on this host multi-minute noisy-neighbor
-    # episodes (observed 2-4x uniform inflation) can swallow BOTH
-    # steady passes — the min over three spaced-out full runs is the
-    # honest steady-state estimate that survives one episode.
-    timings = {
-        name: min(
-            t
-            for t in (cold[name], steady_a[name], steady_b[name])
-            if t is not None
-        )
-        for name in ok
-        if steady_a[name] is not None or steady_b[name] is not None
-    }
-    total = round(sum(timings.values()), 3)
+    steady = [{name: _run(name) for name in ok} for _ in range(2)]
+    profile = {}
+    for name in ok:
+        done = [p for p in (cold[name], *(s[name] for s in steady)) if p]
+        if len(done) > 1:
+            profile[name] = min(done, key=lambda p: p["sec"])
+    total = round(sum(p["sec"] for p in profile.values()), 3)
     if not HEADLINE_ONLY:
         for name in QUERIES:
             if name in SKIP or (ONLY and name not in ONLY):
                 continue
-            if name not in timings and name not in errors and not name.startswith("streaming_"):
-                t = _time(name)
-                if t is not None:
-                    timings[name] = t
+            if name not in profile and name not in errors and not name.startswith("streaming_"):
+                prof = _run(name)
+                if prof is not None:
+                    profile[name] = prof
+    cold_total = round(sum(p["sec"] for p in cold.values() if p is not None), 3)
+    timings = {name: p.pop("sec") for name, p in profile.items()}
     # Skew-guard demonstration (verdict r2 ask #6): synthetic hot-key
     # fixtures, three arms each for the bucket self-join and the
     # fact-dim join — see dss_nlp_ingestion_spark/bench_support.py.
@@ -397,37 +301,6 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 — demo must not kill the record
         skew = {"err": f"{type(exc).__name__}: {exc}"[:500]}
 
-    # Solo re-measurement of outlier rows vs the baseline record.
-    solo_sec: dict[str, object] = {}
-    solo_skipped: list[str] = []
-    flagged: set[str] = set()
-    if SOLO_BASE:
-        try:
-            base = json.load(open(SOLO_BASE))["queries"]
-            flagged = {
-                n for n, t in timings.items()
-                if base.get(n, 0) and t / base[n] > SOLO_RATIO
-            }
-        except (OSError, ValueError, KeyError):
-            flagged = set()
-    # r9 verdict #2: at the audit SF every heavy row (>2 s) ALWAYS
-    # gets a fresh-session solo measurement, so the committed record
-    # itself settles any later sweep-contention dispute (solo_sec had
-    # gone empty when no baseline was supplied).
-    if _sf_from_dir(SF_DIR) <= 0.2 and not HEADLINE_ONLY:
-        flagged |= {n for n, t in timings.items() if t > 2.0}
-    if flagged:
-        # Budget priority: UNTAGGED rows first (their solo number
-        # decides the heavy-row audit), tagged rows after; largest
-        # sweep time first within each class — if the solo budget
-        # binds, the rows most worth a clean number are measured
-        # first.
-        ordered = sorted(
-            flagged, key=lambda n: (n in TAGS, -timings.get(n, 0.0))
-        )
-        solo_sec, solo_skipped = _solo_rerun(ordered)
-
-    cold_total = round(sum(t for t in cold.values() if t is not None), 3)
     # The full record (per-query map, headline list, skew demo) goes to
     # a committed file: the driver's stdout capture keeps only a ~2 KB
     # tail, which swallowed the 4 KB one-liner three rounds running
@@ -438,6 +311,11 @@ def main() -> None:
         "unit": "sec",
         "timing": "steady_state",
         "queries": timings,
+        # Per timed row: build_sec (the query call: plan construction
+        # plus any driver-loop supersteps) + exec_sec (the .count()),
+        # and the work of its job group; a split composite's setup
+        # half has its own group under "setup".
+        "profile": profile,
         "headline": list(names),
         "cold_total": cold_total,
         "all_queries_total": round(sum(timings.values()), 3),
@@ -447,44 +325,11 @@ def main() -> None:
         # Documented-slow compatibility paths — their full-sweep cost
         # is intentional, not a regression (see each tag).
         "tags": dict(sorted(TAGS.items())),
-        # Fresh-session re-measurements of rows that exceeded
-        # SOLO_RATIO x their SOLO_BASE baseline inside the sweep —
-        # the number to read when sweep contention is suspected.
-        "solo_sec": solo_sec,
-        # Rows the solo budget cut off (largest-first ordering means
-        # these are the cheapest of the flagged set).
-        "solo_skipped": solo_skipped,
-        # r8 verdict #8: every >2 s row must carry a documenting TAGS
-        # note. Violations are recorded here (never crash the sweep —
-        # the driver still needs a record) and
-        # tests/test_rotation.py::test_committed_bench_heavy_rows_tagged
-        # asserts the committed record is clean. The 2 s threshold is
-        # calibrated to sf0.1 — at larger SFs most rows legitimately
-        # exceed it, so the audit only applies to sf<=0.2 sweeps.
-        # r10 postmortem: the audit judges each row by its EFFECTIVE
-        # time — min(sweep, fresh-session solo) — so a noisy-window
-        # sweep can no longer mark genuinely-fast rows heavy when
-        # their own solo measurement (taken in this same run) shows
-        # them under threshold.
-        "untagged_heavy": sorted(
-            n
-            for n, t in timings.items()
-            if n not in TAGS
-            and min(
-                t,
-                solo_sec[n]
-                if isinstance(solo_sec.get(n), (int, float))
-                and solo_sec[n] > 0
-                else t,
-            )
-            > 2.0
-        )
-        if _sf_from_dir(SF_DIR) <= 0.2
-        else [],
         "errors": errors,
         "skew_demo": skew,
         "skipped": sorted(SKIP),
         "sf": _sf_from_dir(SF_DIR),
+        "cpus": CPUS,
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), BENCH_OUT)
     with open(full_path, "w") as fh:
@@ -514,9 +359,8 @@ def main() -> None:
 if __name__ == "__main__":
     # One temp root per run, as tests/conftest.py::tmp_root: ``tempfile``
     # hands it out, so every table and checkpoint the queries make lands
-    # under it; child processes (the solo pass) inherit it through
-    # TMPDIR. It is removed at exit, SIGTERM included, after the Spark
-    # session has stopped.
+    # under it; child processes inherit it through TMPDIR. It is removed
+    # at exit, SIGTERM included, after the Spark session has stopped.
     import shutil
     import signal
     import tempfile
@@ -526,9 +370,6 @@ if __name__ == "__main__":
     os.environ["TMPDIR"] = _root
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     try:
-        if SOLO_QUERIES:
-            _solo_main()
-        else:
-            main()
+        main()
     finally:
         shutil.rmtree(_root, ignore_errors=True)

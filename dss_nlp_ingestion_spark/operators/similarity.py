@@ -113,9 +113,10 @@ def cosine(a: Column, b: Column) -> Column:
         # the optimizer's filter pushdown duplicated the UDF — one
         # ArrowEvalPython below the pushed filter, one above for the
         # projection — so EVERY candidate pair paid the cosine twice
-        # (plan nodes 48+51 in plans/r12/embedding_near_dups_before
-        # .txt). The function is pure; the marker only pins a single
-        # evaluation, exactly the r11 simhash fix.
+        # (tests/test_explain_plans.py::
+        # test_scoring_udfs_evaluate_once_per_branch pins one). The
+        # function is pure; the marker only pins a single evaluation,
+        # exactly the r11 simhash fix.
         _COSINE_ARROW_UDF = pandas_udf(_cos_fn, "double").asNondeterministic()
     return _COSINE_ARROW_UDF(a, b)
 
@@ -345,8 +346,9 @@ def hyperplane_bucket(vec_col: Column, n_planes: int = 8, dim: int = 64) -> Colu
         # a join/group key downstream, and the join-inferred
         # isnotnull(bucket) filter was pushed below the projection,
         # duplicating the UDF — TWO ArrowEvalPython nodes per scan
-        # branch in plans/r12/embedding_near_dups_before.txt. The
-        # function is pure; the marker pins one evaluation per branch.
+        # branch of embedding_near_dups before r12 (the plan-facts
+        # test in tests/test_explain_plans.py pins one). The function
+        # is pure; the marker pins one evaluation per branch.
         _HYPERPLANE_UDFS[key] = pandas_udf(_bucket_fn, "long").asNondeterministic()
     return _HYPERPLANE_UDFS[key](vec_col)
 

@@ -13,12 +13,12 @@ own cross-version guarantee). Everything is best-effort: with no
 runtime anywhere, callers see the same ImportError/skip as before.
 
 Only discovery lives here. The worker side is the engine's one site
-hook, ``worker_site/sitecustomize.py``, which ``session.get_spark``
-always puts on ``PYTHONPATH``. At worker startup it applies the same
-:func:`relax_minor_version_gate`, which takes effect when the runtime
-root added here is on the worker's path. (The hook also stops each
-task re-reading ``pyspark.zip`` and the spark-core jar; see its
-docstring.)
+hook, ``worker_site/sitecustomize.py``, which ``session.ship_package``
+puts on every session's worker ``PYTHONPATH``. At worker startup it
+applies the same :func:`relax_minor_version_gate`, which takes effect
+when the runtime root added here is on the worker's path. (The hook
+also stops each task re-reading ``pyspark.zip`` and the spark-core
+jar; see its docstring.)
 
 Must run BEFORE the JVM launches (workers inherit the JVM's env),
 which :func:`dss_nlp_ingestion_spark.session.get_spark` guarantees.
@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections.abc import MutableMapping
 
 from dss_nlp_ingestion_spark.worker_site.sitecustomize import relax_minor_version_gate
 
@@ -49,14 +50,13 @@ def _candidate_roots() -> list[str]:
     return roots
 
 
-def add_pythonpath(entry: str) -> None:
-    """Append ``entry`` to ``os.environ["PYTHONPATH"]`` unless it is
-    already there, so repeated calls leave one copy."""
-    parts = [
-        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p
-    ]
+def add_pythonpath(entry: str, env: MutableMapping[str, str] = os.environ) -> None:
+    """Append ``entry`` to ``env["PYTHONPATH"]`` (the process
+    environment by default) unless it is already there, so repeated
+    calls leave one copy."""
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     if entry not in parts:
-        os.environ["PYTHONPATH"] = os.pathsep.join([*parts, entry])
+        env["PYTHONPATH"] = os.pathsep.join([*parts, entry])
 
 
 def ensure_protobuf() -> bool:

@@ -34,10 +34,9 @@ from dss_nlp_ingestion_spark.plans import scale_queries  # noqa: F401,E402
 from dss_nlp_ingestion_spark.plans import series_queries  # noqa: F401,E402
 
 # ---------------------------------------------------------------------------
-# Cost notes for every row that runs >2 s at sf0.1 (r8 verdict #8:
-# heavy rows carry a documenting TAGS entry; bench.py records any
-# violation under "untagged_heavy" and tests/test_rotation.py asserts
-# the committed record is clean). setdefault: register-time tags win.
+# By-design cost notes: each names the work a row does by construction,
+# so a heavy row in a bench record reads as intended, not as a
+# regression. setdefault: register-time tags win.
 # ---------------------------------------------------------------------------
 from dss_nlp_ingestion_spark.plans.registry import TAGS as _TAGS  # noqa: E402
 
@@ -47,12 +46,16 @@ for _name, _note in {
         "on the same queries — costs two searches by construction"
     ),
     "corpus_funnel_counts": (
-        "single-pass multi-gate funnel over full document text "
-        "(length/lang/quality/dedup counters share one scan)"
+        "multi-gate funnel over full document text: one spine pass "
+        "flags every doc (length/lang/quality/dedup), two id sets (LSH "
+        "near-dup drops, contaminated docs) are built once each, one "
+        "aggregation folds the four counts"
     ),
     "dsir_top_selection": (
-        "scan-side hashed n-gram featurizer over full text + "
-        "importance-weight ranking; cost is O(tokens), one shuffle"
+        "scan-side hashed n-gram featurizer over full text, folded once "
+        "to per-(doc, bucket) counts that feed both the importance "
+        "stats and the scoring join, + importance-weight ranking; cost "
+        "is O(tokens)"
     ),
     "dup_canonical_best": (
         "connected components (min-label hop + pointer-jump rounds, "
@@ -92,143 +95,32 @@ for _name, _note in {
         "the banded path is the scale default"
     ),
     "pagerank_nation_trade": (
-        "fixed 10 power-iteration supersteps = 10 join jobs by "
-        "design; per-round data is edge-bounded"
+        "fixed 3 power-iteration supersteps (iterations=3), each "
+        "materialized by its own localCheckpoint job, by design; "
+        "per-round data is edge-bounded"
     ),
     "reco_fallback_parts": (
         "three-level fallback (item/segment/global) — three "
         "aggregates + coalescing join in one row by design"
     ),
     "semdedup_prune": (
-        "BLAS pandas centroid assignment (above the literal-plan "
-        "budget) + per-cluster pruning; sound at scale, Arrow-bound "
-        "at toy SF"
+        "nearest-centroid assignment in one Arrow kernel (exact fold up "
+        "to 64x64 centroid cells, float64 matmul above) + per-cluster "
+        "pruning through a cent_id-keyed self-join and one Arrow "
+        "cosine; sound at scale, Arrow-bound at toy SF"
     ),
     "simhash_near_dups_banded": (
         "60-bit pigeonhole banding self-join — candidate-pair-bound "
         "verifier of the simhash family"
     ),
     "triangle_count_coparts": (
-        "degree-oriented sorted-adjacency intersection (r8 rewrite): "
-        "arboricity-bounded arrays, wedge set never materialized"
+        "degree-oriented adjacency intersection (array_intersect per "
+        "oriented edge) in one linear plan: arboricity-bounded arrays, "
+        "wedge set never materialized"
     ),
     "txlog_cdc_replicate_orders": (
         "CDC replication replay: N source commits -> N incremental "
         "applies by design (multi-commit IO at toy SF)"
-    ),
-    # Borderline rows (~1.5-2.4 s at sf0.1) that cross the 2 s tag
-    # threshold under host-contention windows — notes so a noisy
-    # sweep can't produce an untagged_heavy violation.
-    "association_rules_confidence": (
-        "basket self-join for pair supports — candidate-pair-bound "
-        "market-basket kernel"
-    ),
-    "cent_exact_allocation": (
-        "largest-remainder allocation = exact decimal aggregate + "
-        "two rank windows by design"
-    ),
-    "dsir_importance_weights": (
-        "scan-side hashed n-gram featurizer over full text (same "
-        "cost class as dsir_top_selection)"
-    ),
-    "gdpr_cascade_delete": (
-        "multi-table transactional delete cascade: one commit per "
-        "referencing table (write IO at toy SF)"
-    ),
-    "kcore_copurchase_parts": (
-        "iterative k-core peel: one degree-filter superstep per "
-        "round until fixpoint, by design"
-    ),
-    "multitable_txn_snapshot": (
-        "multi-table atomic txn vector: N table writes + snapshot "
-        "reads in one row (commit IO at toy SF)"
-    ),
-    "copurchase_chi2_topk": (
-        "basket pair supports + chi-square scoring — candidate-pair-"
-        "bound market-basket kernel (same class as the lift/support "
-        "twins)"
-    ),
-    "copurchase_lift_topk": (
-        "basket pair supports + lift scoring — candidate-pair-bound"
-    ),
-    "copurchase_pairs_support": (
-        "basket pair-support base table — candidate-pair-bound"
-    ),
-    "copurchase_triples_support": (
-        "basket TRIPLE supports — candidate-triple-bound by design"
-    ),
-    "ngram_jaccard_dups": (
-        "uncapped postings self-join — the small-sample exact "
-        "verifier of the df-capped scale default (sf1 skip-listed)"
-    ),
-    "cogrouped_conversion_stats": (
-        "applyInPandas cogroup demo on a 1/8 user slice — the "
-        "documented Python-boundary compatibility path"
-    ),
-    "txlog_ivm_with_deletes": (
-        "IVM through appends AND deletes: multi-commit lifecycle + "
-        "signed-delta refresh (commit IO at toy SF)"
-    ),
-    "ancestor_closure_customers": (
-        "recursive closure: one join superstep per hierarchy level "
-        "until fixpoint, by design"
-    ),
-    "cjk_lsh_candidates": (
-        "character-shingle MinHash banding for unsegmented text — "
-        "shingle volume is chars, not words (denser postings)"
-    ),
-    "fulltext_topk": (
-        "BM25 scoring join over the posting lists + top-k window "
-        "(index-build IO shares the row at toy SF)"
-    ),
-    "fulltext_topk_cjk": (
-        "BM25 over character-shingled CJK postings — denser lists "
-        "than word tokens by design"
-    ),
-    "degree_distribution_log2": (
-        "full trade-graph degree aggregation + log2 binning — one "
-        "graph-wide shuffle by design"
-    ),
-    "incremental_lsh_dedup": (
-        "batch-vs-corpus band-index probe: cost tracks the batch; "
-        "fixture batch is corpus-sized by design"
-    ),
-    "triangle_edge_support": (
-        "per-EDGE triangle supports (k-truss ingredient) — "
-        "adjacency-intersection bound, heavier than the count-only "
-        "twin by design"
-    ),
-    "media_decode_real": (
-        "pure-python baseline-JPEG/PNG decode inside mapInPandas — "
-        "the documented hermetic-container codec path (native seam "
-        "exists)"
-    ),
-    # r11 host-window notes: rows measurably < 2 s in the r9 quiet
-    # window and in idle spot-checks on the r11 host, whose bench
-    # slots landed inside this host's multi-minute CPU-steal episodes
-    # (observed 3-4x inflation on sub-second rows). Notes document
-    # the window, not an operator cost change.
-    "funnel_time_to_convert": (
-        "3-step funnel over per-user ordered event lists (one "
-        "user_id shuffle + codegen HOF scan) — 1.6 s r9 quiet / "
-        "~2.8 s r11-host steady; crosses the 2 s audit line only "
-        "under this host's CPU-steal factor"
-    ),
-    "lm_bigram_scores": (
-        "corpus bigram-LM estimation + per-doc scoring in one row — "
-        "1.7 s r9 quiet / ~2.5 s r11-host steady; borderline of the "
-        "2 s audit line under this host's CPU-steal factor"
-    ),
-    "media_decode_stub": (
-        "sub-second row (0.6-0.9 s steady, r9 0.60 s) whose r11 "
-        "sweep AND solo slots both hit host-steal episodes; nothing "
-        "operator-side exceeds the audit threshold"
-    ),
-    "txlog_merge_upsert_orders": (
-        "file-pruned ACID MERGE measured end-to-end (commit IO at "
-        "toy SF) — 1.6 s r9 quiet / ~2.7 s r11-host steady; "
-        "borderline of the 2 s audit line under this host's "
-        "CPU-steal factor"
     ),
 }.items():
     _TAGS.setdefault(_name, _note)

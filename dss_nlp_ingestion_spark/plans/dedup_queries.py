@@ -1456,14 +1456,12 @@ TAGS["simhash_near_dups"] = (
 TAGS["ngram_containment_pairs"] = (
     "output-bound pair emitter: containment at threshold 0.0 cannot "
     "prefix-prune, and make_sf cluster replication grows qualifying "
-    "pairs ~quadratically - time-per-output-pair FALLS at sf1; "
-    "solo_sec in BENCH_SF1 carries the fresh-session number"
+    "pairs ~quadratically - time-per-output-pair FALLS at sf1"
 )
 TAGS["prefix_filter_jaccard_pairs"] = (
     "exact AllPairs join - the lossless verifier of the banded/capped "
     "scale paths; pair output (and so runtime) grows with replica-"
-    "inflated cluster sizes; solo_sec shows the sweep number ~3x "
-    "GC-inflated at sf1"
+    "inflated cluster sizes"
 )
 TAGS["lsh_quality_eval"] = (
     "the EXACT leg of the precision/recall compare is the small-sf "

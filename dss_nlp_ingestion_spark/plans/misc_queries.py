@@ -1110,9 +1110,8 @@ register_split(
     "bloom_pruned_orders", _bloom_setup, _bloom_probe, _BLOOM_ORACLE,
     tag=(
         "probe = Bloom-sidecar file-skip lifecycle (broadcast keep-list "
-        "join + pruned multi-file scan); committed solo floor ~1.6 s at "
-        "sf0.1 sits within sweep-contention noise of the 2 s audit "
-        "threshold. At scale the probe is O(kept files), not O(rows) — "
+        "join + pruned multi-file scan). At scale the probe is O(kept "
+        "files), not O(rows) — "
         "plan-locked shuffle-free in tests/test_layout.py"
     ),
 )
@@ -2422,9 +2421,8 @@ def txlog_sql_dml_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # intentionally-Python compatibility paths whose full-sweep cost would
 # otherwise read as a regression.
 TAGS["range_join_cooccurring"] = (
-    "linear in data: solo_sec 6.2s = 11.3x for 10x data (per-user "
-    "pair frontier is density-bounded); the in-sweep sf1 number is "
-    "GC-inflated"
+    "linear in data: 11.3x for 10x data from sf0.1 to sf1 (per-user "
+    "pair frontier is density-bounded)"
 )
 TAGS["cogrouped_conversion_stats"] = (
     "documented-slow: cogroup().applyInPandas imperative escape-hatch "
@@ -2437,8 +2435,6 @@ TAGS["udtf_chunk_explode"] = (
 TAGS["txlog_optimize_zorder"] = (
     "N-commit OPTIMIZE lifecycle measured end-to-end (append commits + "
     "atomic Morton-recluster rewrite + read-back hash check); fixture "
-    "write churn dominates at toy SF and sits within sweep-contention "
-    "noise of the 2 s sf0.1 audit threshold (committed solo ~1.4 s). "
-    "At scale OPTIMIZE is an offline maintenance pass, amortized "
+    "write churn dominates at toy SF. At scale OPTIMIZE is an offline maintenance pass, amortized "
     "across reads that prune on both Z-order dimensions"
 )

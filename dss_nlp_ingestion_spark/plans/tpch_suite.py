@@ -48,16 +48,13 @@ from dss_nlp_ingestion_spark.plans.registry import (
 TAGS["q21_waiting_suppliers"] = (
     "TPC-H Q21 — the suite's heaviest query by design (EXISTS/NOT "
     "EXISTS legs collapsed into one per-order aggregate over "
-    "lineitem); ~2 s at sf0.1 is within noise of the audit threshold; "
-    "scales as a single map-combined shuffle on l_orderkey"
+    "lineitem); scales as a single map-combined shuffle on l_orderkey"
 )
 
 TAGS["q2_min_cost_supplier"] = (
     "TPC-H Q2 — correlated min-cost subquery: partsupp scanned twice "
     "(once for the per-part min, once re-joined at the minimum) plus "
-    "the 4-way dim join; ~2 s at sf0.1 sits within sweep-contention "
-    "noise of the 2 s audit threshold (solo 2.5-3.4 s across r10/r11 "
-    "windows); both partsupp legs are broadcast-dim joins + one "
+    "the 4-way dim join; both partsupp legs are broadcast-dim joins + one "
     "map-combined shuffle on ps_partkey, so it scales like the other "
     "shuffle-bound TPC-H rows"
 )

@@ -6,17 +6,19 @@ scale (AQE with skew-join handling and partition coalescing, Arrow for
 any pandas-UDF stage). On a real cluster the same settings apply; only
 ``master`` changes.
 
-Before the JVM launches, :func:`get_spark` puts the engine's one worker
-site hook (``worker_site/sitecustomize.py``) on ``PYTHONPATH``, which
-every Python worker inherits. PySpark calls
+Every Python worker of a session runs the engine's one worker site
+hook (``worker_site/sitecustomize.py``): :func:`ship_package` appends
+its directory to ``sc.environment["PYTHONPATH"]``, the environment
+Spark hands each Python worker it starts. PySpark calls
 ``importlib.invalidate_caches()`` at the start of every Python task,
 and on Python 3.10-3.12 that re-reads the directory of each zip on the
-worker's path (``pyspark.zip``, the spark-core jar, py4j): 0.29 s of
+worker's path (``pyspark.zip``, the spark-core jar, py4j): 0.1-0.3 s of
 CPU per task before it touches a row. The hook re-reads an archive
 only when its stat key moved. On Python >= 3.13 the stdlib already
-reloads lazily and the hook leaves zipimport alone. A session built
-elsewhere, or one reused by ``getOrCreate`` from a JVM that was
-launched before this wiring, runs its workers without the hook.
+reloads lazily and the hook leaves zipimport alone. Because the hook
+rides the session's environment, not the JVM's, a vanilla session
+(``SparkSession.builder.getOrCreate()``) gets it too once a query has
+gone through :func:`ship_package`, as ``__spark_entry__`` does.
 """
 
 from __future__ import annotations
@@ -62,9 +64,10 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
-# Sessions (by applicationId) that already have the package zip on
-# their Python-worker path — addPyFile is done once per session.
+# Sessions (by applicationId) that already have the package zip and the
+# site hook on their Python-worker path — done once per session.
 _SHIPPED: set[str] = set()
+_WORKER_SITE = str(Path(__file__).resolve().parent / "worker_site")
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -83,8 +86,18 @@ def ship_package(spark: SparkSession) -> None:
     process with the same pid left is never shipped, and it is removed
     when the process exits. It is not removed right after
     ``addPyFile``: local-mode executors fetch it from this path while
-    the session lives."""
-    app_id = spark.sparkContext.applicationId
+    the session lives.
+
+    It also appends the worker site hook's directory and the zip to the
+    session's worker ``PYTHONPATH`` (``sc.environment``), keeping any
+    value already there. Spark starts a worker pool per environment, so
+    both reach every Python process started after this call, including
+    the streaming data-source runner, which imports the pickled source
+    without the ``addPyFile`` includes."""
+    from dss_nlp_ingestion_spark.pbcompat import add_pythonpath
+
+    sc = spark.sparkContext
+    app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
     pkg_dir = Path(__file__).resolve().parent
@@ -95,7 +108,9 @@ def ship_package(spark: SparkSession) -> None:
             zf.write(py, arcname=f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
     tmp.replace(zip_path)
     atexit.register(zip_path.unlink, missing_ok=True)
-    spark.sparkContext.addPyFile(str(zip_path))
+    sc.addPyFile(str(zip_path))
+    for entry in (_WORKER_SITE, str(zip_path)):
+        add_pythonpath(entry, sc.environment)
     _SHIPPED.add(app_id)
 
 
@@ -111,12 +126,11 @@ def get_spark(
     tests and bench share one code path; on a cluster pass ``None`` and
     let spark-submit decide.
     """
-    # Worker PYTHONPATH is fixed when the JVM launches, so wire it
-    # first: the site hook, then a protobuf runtime if one is on disk
-    # (Spark-4 typed-state streaming needs it in every Python worker).
-    from dss_nlp_ingestion_spark.pbcompat import add_pythonpath, ensure_protobuf
+    # The JVM's PYTHONPATH is fixed when it launches, so wire a
+    # protobuf runtime first if one is on disk (Spark-4 typed-state
+    # streaming needs it in every Python worker).
+    from dss_nlp_ingestion_spark.pbcompat import ensure_protobuf
 
-    add_pythonpath(str(Path(__file__).resolve().parent / "worker_site"))
     ensure_protobuf()
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:

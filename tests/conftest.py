@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import datetime
+import math
 import shutil
 import tempfile
 
@@ -21,6 +23,30 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def norm_value(v):
+    """One cell of a Spark or DuckDB row in the form the oracle parity
+    check compares: floats by repr, timestamps and dates by isoformat."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return str(v)
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else repr(v)
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    return str(v)
+
+
+def normalize(cols, rows):
+    """Columns sorted by name and rows sorted, so a result compares
+    without regard to column or row order. Also used by the verify
+    skill's drive script."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    out = [tuple(norm_value(r[i]) for i in order) for r in rows]
+    out.sort()
+    return [cols[i] for i in order], out
 
 
 @pytest.fixture(scope="session", autouse=True)

@@ -545,3 +545,88 @@ def test_edit_distance_uses_banded_dp_and_length_prefilter(spark):
     # threshold form carries the third argument (rendered Some(20))
     assert re.search(r"levenshtein\([^)]*Some\(20\)", plan)
     assert "abs((length" in plan.replace("\n", "")
+
+
+#: Plan facts of rewritten operators, checked on the plan Spark would
+#: run (built, not executed) at the test SF. Keys: a physical node name
+#: maps to its exact count in the plan tree; "documents scans" counts
+#: reads of the documents table; "regex" must match the plan text;
+#: "analyzed" must appear in the analyzed plan. ``regexp_count`` is
+#: one such: Spark rewrites it to ``size(regexp_extract_all(...))``
+#: while optimizing, so only the analyzed plan shows it. Every case
+#: also has no CartesianProduct.
+PLAN_FACTS = {
+    # One explode emits both orientations/endpoints/directions, where
+    # a two-branch union ran the pair aggregation twice.
+    "association_rules_confidence": {"Union": 0, "BroadcastHashJoin": 1},
+    "degree_distribution_log2": {"Union": 0, "Scan parquet": 1},
+    "triangle_count_coparts": {"Union": 0, "InMemoryTableScan": 0},
+    # One spine pass over documents (12 scans and 27 exchanges before).
+    "corpus_funnel_counts": {"Union": 0, "documents scans": 5, "Exchange": 10},
+    # One corpus tokenize for the BM25 stats and one for tf; document
+    # frequency is a window over tf, not a third corpus pass.
+    "fulltext_topk": {"documents scans": 2, "Window": 2, "analyzed": "regexp_count"},
+    "fulltext_topk_cjk": {"documents scans": 2, "Window": 2},
+    "hybrid_rrf_retrieval": {"documents scans": 2, "ArrowEvalPython": 1},
+    # One band-bucket pass: the signature pipeline runs once.
+    "incremental_lsh_dedup": {"documents scans": 2, "Exchange": 4},
+    # PPJoin positional bound in the prefix join condition.
+    "prefix_filter_jaccard_pairs": {"regex": r"least\(\(sz#\d+L - "},
+    # SimHash signatures are one row-local Arrow map, once per side.
+    "simhash_signatures": {"ArrowEvalPython": 1, "Generate": 0},
+    "simhash_near_dups": {"ArrowEvalPython": 2},
+    "simhash_near_dups_banded": {"ArrowEvalPython": 2},
+    # asNondeterministic scoring UDFs: one evaluation per scan branch
+    # and one cosine per candidate pair.
+    "ann_bucket_topk": {"ArrowEvalPython": 3},
+    "ann_multiprobe_topk": {"ArrowEvalPython": 3},
+    "ann_recall_trained_eval": {"ArrowEvalPython": 4},
+    "cosine_topk_bruteforce": {"ArrowEvalPython": 1},
+    "embedding_near_dups_exact": {"ArrowEvalPython": 3},
+    "embedding_near_dups_guarded": {"ArrowEvalPython": 5},
+    "ivf_topk": {"ArrowEvalPython": 3},
+    "ivf_topk_trained": {"ArrowEvalPython": 3},
+    # Pruning is a cent_id equi-join + one Arrow cosine, not a
+    # left-semi join with an interpreted fold in its condition.
+    "semdedup_prune": {
+        "ArrowEvalPython": 4,
+        "regex": r"Left keys \[1\]: \[cent_id",
+        "LeftSemi": 0,
+    },
+    # Match counts through regexp_count.
+    "cjk_lsh_candidates": {"analyzed": "regexp_count"},
+    "cjk_near_dups": {"analyzed": "regexp_count"},
+    "lang_id_quality": {"analyzed": "regexp_count"},
+    "pii_redaction": {"analyzed": "regexp_count"},
+    "quality_report_by_source": {"analyzed": "regexp_count"},
+    "sentiment_scores": {"analyzed": "regexp_count"},
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_FACTS))
+def test_rewritten_operator_plan_facts(spark, name):
+    import re
+
+    from dss_nlp_ingestion_spark.plans.analytics_queries import _triangle_out
+
+    # The registered triangle row collects its one-row result and
+    # returns a literal; its plan is _triangle_out's.
+    build = _triangle_out if name == "triangle_count_coparts" else QUERIES[name]
+    qe = build(spark, SF_DIR)._jdf.queryExecution()
+    plan = qe.explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert "CartesianProduct" not in plan
+    for key, want in PLAN_FACTS[name].items():
+        if key == "regex":
+            assert re.search(want, plan), want
+        elif key == "analyzed":
+            assert want in qe.analyzed().toString(), want
+        elif key == "documents scans":
+            got = len(re.findall(r"Location: \S+ \[\S*/documents\.parquet\]", plan))
+            assert got == want, (key, got)
+        elif key == "LeftSemi":
+            assert plan.count("LeftSemi") == want, (key, plan.count("LeftSemi"))
+        else:
+            got = len(re.findall(rf"\(\d+\) {key}\b", plan))
+            assert got == want, (key, got)

@@ -6,36 +6,10 @@ CORRECTNESS_r{N}.json."""
 
 from __future__ import annotations
 
-import datetime
-import math
-
 import pytest
 
 from dss_nlp_ingestion_spark.plans import ORACLES, QUERIES
-from tests.conftest import SF_DIR
-
-
-def _norm_value(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    return str(v)
-
-
-def _normalize(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_value(r[i]) for i in order) for r in rows]
-    out.sort()
-    return [cols[i] for i in order], out
+from tests.conftest import SF_DIR, normalize
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -49,8 +23,8 @@ def test_query_matches_oracle(name, spark, duck):
     drows = res.fetchall()
 
     assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
-    s_cols, s_norm = _normalize(scols, srows)
-    d_cols, d_norm = _normalize(dcols, drows)
+    s_cols, s_norm = normalize(scols, srows)
+    d_cols, d_norm = normalize(dcols, drows)
     assert len(s_norm) == len(d_norm), (
         f"{name}: row count {len(s_norm)} (spark) != {len(d_norm)} (duckdb)"
     )

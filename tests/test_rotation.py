@@ -127,40 +127,19 @@ def test_registry_split_and_tag_invariants():
         assert tagged, f"skip-listed {name} has no documenting tag"
 
 
-def test_committed_bench_heavy_rows_tagged():
-    """r8 verdict #8: every row that ran >2 s at sf0.1 in the
-    COMMITTED bench record must carry a documenting TAGS entry (cost
-    is by-design, not an unexplained regression). A new heavy row
-    therefore cannot land without its tag + solo discipline in the
-    same commit.
+def test_no_tag_describes_host_speed():
+    """A TAGS note states what a row does by design. Whether one sweep
+    ran it during a CPU-steal episode or a contended window says
+    nothing about the row, and bench records carry per-query job and
+    task counts that do not move with the host."""
+    import re
 
-    r11 alignment with the bench audit: a row is judged by its
-    EFFECTIVE time — min(sweep, fresh-session solo), both taken from
-    the committed record — the same rule bench.py's own
-    `untagged_heavy` audit has applied since the r10 postmortem. The
-    sweep number alone is not a verdict on this host: multi-minute
-    CPU-steal episodes (observed 3-4x on sub-second rows) land on
-    whichever row is in flight. The recomputation here, rather than
-    trusting the record's stored `untagged_heavy` field, also lets a
-    tag added AFTER a sweep (the documented borderline-row workflow)
-    satisfy the guard without a 45-minute re-sweep whose noise would
-    simply pick different victims."""
-    import json
-    import os
-
+    from dss_nlp_ingestion_spark.plans import QUERIES  # noqa: F401 — fills TAGS
     from dss_nlp_ingestion_spark.plans.registry import TAGS
 
-    path = os.path.join(os.path.dirname(__file__), "..", "BENCH_FULL.json")
-    rec = json.load(open(path))
-    solo = rec.get("solo_sec", {})
-
-    def eff(name: str, sweep: float) -> float:
-        s = solo.get(name)
-        return min(sweep, s) if isinstance(s, (int, float)) and s > 0 else sweep
-
-    heavy = sorted(n for n, t in rec["queries"].items() if eff(n, t) > 2.0)
-    missing = [n for n in heavy if n not in TAGS]
-    assert not missing, f"heavy rows without TAGS notes: {missing}"
+    host = re.compile(r"steal|\bhost|contention|noise|audit", re.IGNORECASE)
+    bad = {name: note for name, note in TAGS.items() if host.search(note)}
+    assert not bad, bad
 
 
 @pytest.mark.parametrize(

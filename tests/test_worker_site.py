@@ -2,8 +2,8 @@
 
 ``worker_site/sitecustomize.py`` keeps a zip archive's directory
 across ``importlib.invalidate_caches()`` while the archive is
-unchanged; ``get_spark`` wires it into every Python worker.
-``ship_package`` removes the zip it writes when the process exits.
+unchanged; ``ship_package`` wires it into every Python worker of a
+session and removes the zip it writes when the process exits.
 """
 
 from __future__ import annotations
@@ -114,6 +114,41 @@ def test_worker_invalidate_caches_keeps_pyspark_zip(spark):
     assert rows and all(n >= 1 for n, _, _ in rows), rows
     assert all(same for _, same, _ in rows), rows
     assert max(cpu for _, _, cpu in rows) < 0.05, rows
+
+
+def test_add_pythonpath_appends_once_and_keeps_existing_entries():
+    from dss_nlp_ingestion_spark.pbcompat import add_pythonpath
+
+    env = {"PYTHONPATH": os.pathsep.join(["/a", "/b"])}
+    add_pythonpath("/c", env)
+    add_pythonpath("/c", env)
+    add_pythonpath("/a", env)
+    assert env["PYTHONPATH"] == os.pathsep.join(["/a", "/b", "/c"])
+    empty: dict[str, str] = {}
+    add_pythonpath("/c", empty)
+    assert empty == {"PYTHONPATH": "/c"}
+
+
+def test_ship_package_puts_hook_and_zip_on_session_worker_path(spark):
+    """The hook dir and the package zip ride ``sc.environment``, the
+    environment Spark hands each Python process it starts, so a session
+    built outside ``get_spark`` gets both through ``ship_package`` too;
+    shipping again adds no second copy."""
+    from dss_nlp_ingestion_spark.session import _WORKER_SITE, ship_package
+
+    zip_name = f"dss_nlp_ingestion_spark-{os.getpid()}.zip"
+
+    def entries() -> list[str]:
+        path = spark.sparkContext.environment.get("PYTHONPATH", "")
+        return [
+            p
+            for p in path.split(os.pathsep)
+            if p == _WORKER_SITE or os.path.basename(p) == zip_name
+        ]
+
+    assert entries()[0] == _WORKER_SITE and len(entries()) == 2, entries()
+    ship_package(spark)
+    assert len(entries()) == 2, entries()
 
 
 def test_get_spark_removes_its_package_zip(tmp_path):

@@ -1,9 +1,11 @@
 """Dump .explain("formatted") for registered queries + a plan-shape
 summary (Exchange count, join strategies, Python-eval nodes, scan
-pushdown) used by the r11 optimization round to triage operators.
+pushdown), the on-demand view of what a plan looks like. Dumps are not
+committed: a plan fact worth keeping goes into
+tests/test_explain_plans.py.
 
 Usage:
-    python tools/dump_plans.py [outdir] [query ...]
+    python tools/dump_plans.py outdir [query ...]
 
 With no query names, dumps every entry in the registry. Writes
 <outdir>/<query>.txt and prints one summary line per query:
@@ -60,7 +62,9 @@ def summarize(txt: str) -> str:
 
 
 def main() -> None:
-    outdir = sys.argv[1] if len(sys.argv) > 1 else "plans/r11"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    outdir = sys.argv[1]
     names = sys.argv[2:] or list(QUERIES)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark(
