@@ -117,8 +117,8 @@ BENCH_QUERIES = (
     "quality_curriculum_bins",
     "corpus_build_e2e",
     "quality_report_by_source",
-    # Round 4: CJK-analyzed BM25, the partition-scoped COW merge (a
-    # store write-path measured end-to-end: write, merge, read), and
+    # Round 4: CJK-analyzed BM25, the COW merge into the tx-log table
+    # (a store write-path measured end-to-end: write, merge, read), and
     # the bigram-LM quality gate (corpus-model estimation + scoring).
     "fulltext_topk_cjk",
     "merge_cow_orders",

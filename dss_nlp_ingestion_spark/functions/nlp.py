@@ -51,8 +51,8 @@ EMBED_DIM = 8
 
 
 def _hits(col: Column, words: tuple[str, ...]) -> Column:
-    # regexp_count: same integer as size(regexp_extract_all(...)),
-    # no match array materialized (r12, guide §2.3).
+    # regexp_count: the optimizer rewrites it to
+    # size(regexp_extract_all(...)), so the match array is still built.
     pat = r"\b(" + "|".join(words) + r")\b"
     return F.regexp_count(F.lower(col), F.lit(pat)).cast("long")
 

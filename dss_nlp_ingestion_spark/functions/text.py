@@ -70,10 +70,10 @@ def token_count(col: Column) -> Column:
 def bpe_token_count(col: Column) -> Column:
     """BPE-ish token count via :data:`BPE_TOKEN_RE`, BIGINT.
 
-    ``regexp_count`` scans once and allocates nothing — the same
-    integer as ``size(regexp_extract_all(...))`` without building the
-    match array (r12, guide §2.3; the r11 fulltext trick applied to
-    the whole count family)."""
+    ``regexp_count`` is a runtime-replaceable expression: the optimizer
+    rewrites it to ``size(regexp_extract_all(...))``, so each row still
+    builds one array element per match before taking its size. Only the
+    analyzed plan names ``regexp_count``."""
     return F.regexp_count(col, F.lit(BPE_TOKEN_RE)).cast("long")
 
 
@@ -199,8 +199,8 @@ def hierarchy_truncate(code: Column, trim: Column | int) -> Column:
 
 def stopword_count(col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     """Count of stopword occurrences (word-bounded). ``regexp_count``
-    — same integer as ``size(regexp_extract_all(...))``, no match
-    array materialized (r12, guide §2.3)."""
+    runs as ``size(regexp_extract_all(...))`` (see
+    :func:`bpe_token_count`)."""
     pat = r"\b(" + "|".join(stopwords) + r")\b"
     return F.regexp_count(F.lower(col), F.lit(pat)).cast("long")
 
@@ -264,10 +264,9 @@ CJK_CHAR_RE = r"[一-鿿]"
 
 def cjk_char_ratio(col: Column) -> Column:
     """Fraction of characters that are CJK ideographs, in [0,1].
-    ``regexp_count`` — the old form materialized one array element
-    per CJK character of every document just to take its size (r12,
-    guide §2.3); the count is the same integer, so per-row routing
-    decisions (``shingles_auto``) are unchanged."""
+    ``regexp_count`` runs as ``size(regexp_extract_all(...))`` (see
+    :func:`bpe_token_count`): one array element per CJK character of
+    the document, built and then sized."""
     n_cjk = F.regexp_count(col, F.lit(CJK_CHAR_RE))
     return n_cjk / F.greatest(F.length(col), F.lit(1))
 
@@ -356,8 +355,8 @@ def redact_pii(col: Column) -> Column:
 
 def pii_counts(col: Column) -> tuple[Column, Column, Column]:
     """(n_emails, n_phones, n_ips) occurrence counts — the audit
-    metric reported alongside redaction. ``regexp_count`` — same
-    integers, no match arrays (r12, guide §2.3)."""
+    metric reported alongside redaction. Each ``regexp_count`` runs as
+    ``size(regexp_extract_all(...))`` (see :func:`bpe_token_count`)."""
     return (
         F.regexp_count(col, F.lit(PII_EMAIL_RE)).cast("long"),
         F.regexp_count(col, F.lit(PII_PHONE_RE)).cast("long"),

@@ -56,11 +56,11 @@ def text_tokens(col: F.Column) -> F.Column:
 
 
 def text_token_count(col: F.Column) -> F.Column:
-    """Token COUNT of :func:`text_tokens` without materializing the
-    array: ``regexp_count`` scans the string once and allocates
-    nothing, vs ``size(regexp_extract_all(...))`` which copies every
-    token out just to count it. Used by the corpus-stats pass (r11
-    guide §2.3 — the stats aggregate needs only dl, not the tokens)."""
+    """Token COUNT of :func:`text_tokens`, one integer column. The
+    optimizer rewrites ``regexp_count`` to
+    ``size(regexp_extract_all(...))``, so each row still builds the
+    token array before sizing it. Used by the corpus-stats pass (the
+    stats aggregate needs only dl, not the tokens)."""
     return F.regexp_count(F.lower(col), F.lit(TOKEN_PATTERN))
 
 
@@ -91,8 +91,8 @@ def text_tokens_cjk(col: F.Column) -> F.Column:
 
 
 def text_token_count_cjk(col: F.Column) -> F.Column:
-    """Token COUNT of :func:`text_tokens_cjk` without materializing
-    token arrays: ascii tokens via ``regexp_count``, and each CJK run
+    """Token COUNT of :func:`text_tokens_cjk` without the bigram
+    arrays: ascii tokens via ``regexp_count``, and each CJK run
     of length L contributes L-1 bigrams (1 for an isolated
     ideograph) — summed over the runs array. The runs themselves are
     still extracted (cheap: few per row), but the per-run BIGRAM
@@ -161,9 +161,10 @@ def bm25_topk(
       a separate aggregation branch of the same corpus-sized
       pipeline — one small exchange replaces a full re-tokenize.
     - The corpus-stats pass (n_docs, avgdl) needs only the token
-      COUNT per document, so it runs the array-free ``token_counter``
-      (``regexp_count``) — the same integer per row as
-      ``size(tokenizer(...))``, with zero array materialization.
+      COUNT per document, so it runs ``token_counter``
+      (``regexp_count``, which Spark runs as
+      ``size(regexp_extract_all(...))``) — the same integer per row as
+      ``size(tokenizer(...))``.
     """
     tokenizer_given = tokenizer is not None
     tokenizer = tokenizer or text_tokens

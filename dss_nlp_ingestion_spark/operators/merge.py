@@ -5,8 +5,10 @@ that overwrite matched documents and insert new ones
 (src/base.py:239-253 bulk index with explicit ``_id``). The lakehouse
 twin of that sink semantics is ``MERGE INTO`` — re-expressed here as a
 single full-outer join so it runs on any DataFrame source, returns the
-merged relation, and stays oracle-checkable (the engine-side sinks in
-``sources.sinks`` already cover the write-path idempotence).
+merged relation, and stays oracle-checkable. The store write path is
+``sources.txlog.merge_into_table``: it runs this transform on the
+files holding matched keys only, and its insert-only mode appends the
+unmatched source rows without rewriting any file.
 
 Scale shape: one shuffle of each side on the merge key (or a broadcast
 of the source when it is delta-sized, which is the common case —

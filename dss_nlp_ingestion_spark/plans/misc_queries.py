@@ -811,8 +811,8 @@ def txlog_snapshot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders (version 0), APPEND a derived delta through the O_EXCL
     log-commit protocol (version 1), snapshot-read the result. The
     hash match proves the log fold exposes exactly committed files —
-    the multi-writer/idempotence story the raw-parquet sinks lacked
-    (reference's analog: ES _op_type='create',
+    the one document store, whose commits give multi-writer safety and
+    idempotent loads (reference's analog: ES _op_type='create',
     src/res/models/datamodels.py:32). Doubling the price keeps the
     delta float-exact (power of two)."""
     import tempfile

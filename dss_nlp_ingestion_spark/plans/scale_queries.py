@@ -1276,7 +1276,7 @@ def partitioned_overwrite_orders(
     aggregate proves exactly one partition changed.  This is the
     partition-scoped COW idiom for Hive-style layouts, the
     directory-level complement of the file-level COW merge in
-    sources/sinks.py.  The write moves only the repriced partition's
+    sources/txlog.py.  The write moves only the repriced partition's
     rows; the final aggregate is one partial-agg shuffle."""
     orders = table(spark, sf_dir, "orders")
     base = tempfile.mkdtemp(prefix="dss_dynpart_") + "/orders"

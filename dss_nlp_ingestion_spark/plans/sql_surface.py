@@ -256,10 +256,10 @@ def merge_insert_only_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Partition-scoped copy-on-write MERGE — the store-level twin of
-# merge_upsert_orders: same merge relation, but executed against a
-# partitioned parquet store where ONLY delta-touched partitions are
-# read and rewritten (sources.sinks.merge_into_partitioned_store).
+# Copy-on-write MERGE into the tx-log table — the store-level twin of
+# merge_upsert_orders: same merge relation, run by
+# sources.txlog.merge_into_table, which rewrites only the data files
+# that hold matched keys and commits them in one log entry.
 # ---------------------------------------------------------------------------
 
 _COW_HOT = "('1-URGENT', '2-HIGH')"
@@ -289,34 +289,32 @@ FROM orders t FULL JOIN src s ON t.o_orderkey = s.o_orderkey
 
 
 def _cow_setup(spark: SparkSession, sf_dir: str):
-    """SETUP: materialize orders as the partitioned parquet store the
-    merge targets."""
+    """SETUP: materialize orders as the tx table the merge targets,
+    with commit-logged o_orderkey stats."""
     import tempfile
+
+    from dss_nlp_ingestion_spark.sources import txlog
 
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority"]
     orders = table(spark, sf_dir, "orders").select(*cols)
-    store = tempfile.mkdtemp(prefix="dss_cow_store_")
-    orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(store)
-    return store, orders
+    path = tempfile.mkdtemp(prefix="dss_cow_store_") + "/orders"
+    txlog.create_table(orders, path, stats_cols=["o_orderkey"])
+    return path, orders
 
 
 def _cow_probe(spark: SparkSession, ctx) -> DataFrame:
-    """PROBE — MERGE as a STORE write-path with partition-scoped
-    copy-on-write: a delta touching only the two hot priorities is
-    merged via dynamic partition overwrite, so 2 of 5 partitions are
-    read+rewritten and 3 are never opened (the full-table-rewrite
-    MERGE of r3 is retired as the write path; the relational
+    """PROBE — MERGE as the store write path: a delta of the two hot
+    priorities (updates plus new keys) is merged by
+    ``txlog.merge_into_table``, which rewrites only the files holding
+    matched keys in one atomic commit (the relational
     `merge_upsert_orders` form remains the pure transform). The delta
-    bumps prices by an exact +100.00 so the store schema stays
-    decimal(15,2) across touched and untouched partitions. Returned
-    relation = the store read back after the merge."""
-    from dss_nlp_ingestion_spark.sources.sinks import (
-        merge_into_partitioned_store,
-        read_store,
-    )
+    bumps prices by an exact +100.00 so the schema stays decimal(15,2)
+    across rewritten and untouched files. Returned relation = the
+    table read back after the merge."""
+    from dss_nlp_ingestion_spark.sources import txlog
 
-    store, orders = ctx
+    path, orders = ctx
     hot = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     updates = orders.filter((F.col("o_orderkey") % 7 == 0) & hot).select(
         "o_orderkey",
@@ -332,15 +330,11 @@ def _cow_probe(spark: SparkSession, ctx) -> DataFrame:
         "o_totalprice",
         "o_orderpriority",
     )
-    merge_into_partitioned_store(
-        spark,
-        store,
-        updates.unionByName(inserts),
-        key_cols=("o_orderkey",),
-        partition_by=("o_orderpriority",),
+    txlog.merge_into_table(
+        spark, path, updates.unionByName(inserts), ["o_orderkey"],
+        stats_cols=["o_orderkey"],
     )
-    out = read_store(spark, store)
-    return out.select(
+    return txlog.read(spark, path).select(
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",

@@ -13,9 +13,8 @@ log-structured core those formats share, pure stdlib + Spark:
   and INVISIBLE until a log entry references them.
 - Commit = write data files first, then create the next numbered log
   entry with ``O_CREAT | O_EXCL`` — the filesystem arbitrates exactly
-  one winner per version (same primitive the advisory-locked COW
-  merge uses, but here losers RETRY against the new snapshot instead
-  of failing: blind appends always merge cleanly).
+  one winner per version, and losers RETRY against the new snapshot
+  instead of failing: blind appends always merge cleanly.
 - Rewrites (compaction / COW merge) declare the files they replace;
   if a concurrent commit touched any of them the rewrite raises
   ``TxConflictError`` (optimistic concurrency, writer must re-read).
@@ -992,19 +991,26 @@ def merge_into_table(
     against the fresh snapshot, recomputing its file plan.
 
     ``delete_col`` names a boolean tombstone column on ``source``
-    (WHEN MATCHED AND <flag> THEN DELETE); ``insert_only`` keeps
-    matched target rows (replicate-if-absent). ``null_safe`` compares
-    keys with ``<=>`` — for GROUP-BY-keyed callers (matview refresh)
-    where NULL is an ordinary key value; it also disables stat
-    pruning when the source carries a NULL key, because parquet
-    min/max stats ignore NULLs, so a file holding NULL-keyed rows can
-    sit outside every stats range. Returns a summary dict:
-    version committed, files touched/total/stat-skipped, and whether
-    the commit degraded to an append."""
+    (WHEN MATCHED AND <flag> THEN DELETE). ``insert_only`` is WHEN NOT
+    MATCHED THEN INSERT alone (insert-if-absent, the reference's
+    ``_op_type='create'`` load, src/base.py:155-196): the candidate
+    files' keys anti-join the source, only the unmatched source rows
+    are appended, and no file is rewritten, so a replay commits
+    nothing (with ``txn``, one stamped entry that adds no file).
+    ``null_safe`` compares keys with ``<=>`` — for GROUP-BY-keyed
+    callers (matview refresh) where NULL is an ordinary key value; it
+    also disables stat pruning when the source carries a NULL key,
+    because parquet min/max stats ignore NULLs, so a file holding
+    NULL-keyed rows can sit outside every stats range. Returns a summary dict:
+    version committed, files touched/total/stat-skipped, whether the
+    commit degraded to an append, and ``rows_written``: the rows in
+    the data files the commit added, summed from their parquet footers
+    on the driver (no Spark job)."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from dss_nlp_ingestion_spark.operators.merge import (
+        _key_cond,
         merge_into,
         merge_into_with_delete,
     )
@@ -1031,6 +1037,7 @@ def merge_into_table(
                     "files_skipped_by_stats": 0,
                     "appended": False,
                     "skipped": True,
+                    "rows_written": 0,
                 }
             candidates, skipped = snap.files, 0
             if len(key_cols) == 1:
@@ -1057,34 +1064,38 @@ def merge_into_table(
                 "files_skipped_by_stats": skipped,
                 "appended": False,
                 "skipped": False,
+                "rows_written": 0,
             }
             touched: list[str] = []
+            inserts = source
             if candidates:
                 # Source keys target the LOGICAL schema, which _scan
                 # resolves like every other snapshot reader.
-                cand_keys = (
-                    _scan(spark, snap, candidates)
-                    .withColumn("_f", F.input_file_name())
-                    .select(*key_cols, "_f")
-                )
-                src_keys = source.select(
-                    *[F.col(k).alias(f"_sk_{k}") for k in key_cols]
-                ).distinct()
-                sem = reduce(
-                    lambda a, b: a & b,
-                    [
-                        cand_keys[k].eqNullSafe(src_keys[f"_sk_{k}"])
-                        if null_safe
-                        else cand_keys[k] == src_keys[f"_sk_{k}"]
-                        for k in key_cols
-                    ],
-                )
-                touched = _touched_files(cand_keys.join(src_keys, sem, "left_semi"))
+                cand = _scan(spark, snap, candidates)
+                prefixed = [F.col(k).alias(f"_s_{k}") for k in key_cols]
+                if insert_only:
+                    tgt_keys = cand.select(*prefixed)
+                    inserts = source.join(
+                        tgt_keys,
+                        _key_cond(source, tgt_keys, key_cols, null_safe),
+                        "left_anti",
+                    )
+                else:
+                    cand_keys = cand.select(
+                        *key_cols, F.input_file_name().alias("_f")
+                    )
+                    src_keys = source.select(*prefixed).distinct()
+                    touched = _touched_files(
+                        cand_keys.join(
+                            src_keys,
+                            _key_cond(cand_keys, src_keys, key_cols, null_safe),
+                            "left_semi",
+                        )
+                    )
             if not touched:
-                # No key matches anywhere: pure insert, commutes with
-                # every concurrent commit -> blind retryable append
-                # (folded to the physical schema like any append).
-                inserts = source
+                # Nothing to rewrite: a pure insert commutes with every
+                # concurrent commit -> blind retryable append (folded
+                # to the physical schema like any append).
                 if delete_col is not None:
                     inserts = inserts.filter(
                         ~F.coalesce(F.col(delete_col), F.lit(False))
@@ -1092,16 +1103,20 @@ def merge_into_table(
                 if inserts.isEmpty():
                     if txn is not None:
                         # the watermark must still advance: commit a
-                        # metadata-only stamped entry, else CDC/matview
-                        # consumers re-scan an ever-growing source window
-                        res["version"] = _append(
-                            inserts.limit(0), path, None, 10, txn, snap.renames
+                        # stamped entry that adds no file, else CDC/
+                        # matview consumers re-scan an ever-growing
+                        # source window
+                        stamp = {"op": "append", "add": [], "remove": [],
+                                 "txn": {"app": txn[0], "epoch": int(txn[1])}}
+                        res["version"] = _commit_next(
+                            path, lambda head: stamp, "append"
                         )
                     return res
                 res["version"] = _append(
                     inserts, path, stats_cols, 10, txn, snap.renames
                 )
                 res["appended"] = True
+                res["rows_written"] = _rows_added(path, res["version"])
                 return res
             target_touched = _scan(spark, snap, touched)
             if delete_col is not None:
@@ -1111,8 +1126,7 @@ def merge_into_table(
                 )
             else:
                 merged = merge_into(
-                    target_touched, source, key_cols, insert_only=insert_only,
-                    null_safe=null_safe,
+                    target_touched, source, key_cols, null_safe=null_safe
                 )
             try:
                 res["version"] = rewrite(
@@ -1128,6 +1142,7 @@ def merge_into_table(
                 last_err = exc
                 continue
             res["files_touched"] = len(touched)
+            res["rows_written"] = _rows_added(path, res["version"])
             return res
         raise TxConflictError(
             f"merge lost {max_retries} commit races at {path}: {last_err}"
@@ -1135,6 +1150,17 @@ def merge_into_table(
     finally:
         if owned:
             source.unpersist()
+
+
+def _rows_added(path: str, version: int) -> int:
+    """Rows in the data files commit ``version`` added, summed from
+    their parquet footers on the driver: no Spark job, no data page."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, "data", f)).num_rows
+        for f in _read_entry(path, version)["add"]
+    )
 
 
 def _touched_files(df: DataFrame) -> list[str]:

@@ -6,8 +6,10 @@
 | re-scrape overlap + Redis dedup       | watermark + dropDuplicates-  |
 | (redislease.py:60-79, 7-day SETEX)    | WithinWatermark (7-day)      |
 | workers drain & exit (rediswq.py:76)  | trigger(availableNow=True)   |
-| ES create-if-absent sink              | foreachBatch idempotent      |
-| (datamodels.py:32)                    | anti-join append             |
+| ES create-if-absent sink              | foreachBatch MERGE into the  |
+| (datamodels.py:32)                    | tx-log table, replays        |
+|                                       | skipped by (app, batch id)   |
+|                                       | (stream_merge_to_txlog_table)|
 
 Batch/stream parity: each streaming transform is the thin wrapper
 over the same expression its batch twin uses, so the batch oracle
@@ -21,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dss_nlp_ingestion_spark.functions.dates import epoch_ms
-from dss_nlp_ingestion_spark.sources.sinks import idempotent_append
 
 
 def read_events_stream(
@@ -99,27 +100,6 @@ def run_complete_available_now(stream_df: DataFrame, query_name: str) -> None:
     q.awaitTermination()
 
 
-def stream_to_idempotent_store(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    store_path: str,
-    key: str = "unique_identifier",
-    partition_by: tuple[str, ...] = ("source",),
-):
-    """K2 exactly-once-effect sink: every micro-batch is MERGEd
-    insert-if-absent by key, so replays are no-ops (the ES
-    ``_op_type='create'`` semantics)."""
-
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        idempotent_append(spark, batch_df, store_path, key, partition_by)
-
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def session_window_counts_stream(
     stream: DataFrame,
     ts_col: str = "ts",
@@ -170,9 +150,12 @@ def stream_neardup_dedup(
     joins are batch-bands×batch-bands (bounded by the batch) and
     batch-bands semi-join the index (shuffle on the band key; at
     100 TB the index is bucketed by band_key so the probe co-locates).
-    The index grows with ACCEPTED documents only. foreachBatch gives
-    the same at-least-once + idempotent-store contract as
-    ``stream_to_idempotent_store``.
+    The index grows with ACCEPTED documents only. foreachBatch is
+    at-least-once: a batch replayed after its index append finds its
+    own bands and lands nothing, but one replayed after a crash
+    between the two appends lands its documents twice (the store is
+    raw parquet with no log; the exactly-once sink is
+    :func:`stream_merge_to_txlog_table`).
 
     Returns the foreachBatch callback (exposed for direct unit
     testing) alongside the started-query helper pattern used by the

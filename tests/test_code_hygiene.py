@@ -3,11 +3,15 @@
 from __future__ import annotations
 
 import ast
+import io
 import pathlib
+import re
+import tokenize
 
 import dss_nlp_ingestion_spark
 
 PKG = pathlib.Path(dss_nlp_ingestion_spark.__file__).parent
+ROOT = PKG.parent
 
 
 def _used_names(tree: ast.AST) -> set[str]:
@@ -49,3 +53,43 @@ def test_no_unused_module_level_imports():
                     rel = path.relative_to(PKG.parent)
                     unused.append(f"{rel}:{node.lineno}: {name}")
     assert not unused, "unused imports:\n" + "\n".join(unused)
+
+
+#: A ``dir/module.py`` path, not the tail of a longer path.
+_CITED_PATH = re.compile(r"(?<![\w./-])((?:[\w.-]+/)+[\w-]+\.py)\b")
+
+
+def _comments_and_docstrings(src: str):
+    """(line, text) of every comment and docstring in ``src``."""
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            yield tok.start[0], tok.string
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            doc = ast.get_docstring(node, clean=False)
+            if doc:
+                yield node.body[0].lineno, doc
+
+
+def test_cited_package_paths_exist():
+    """Every ``dir/module.py`` a comment or docstring of the package,
+    ``bench.py`` or ``tools/`` cites exists, relative to the repo root
+    or to the package, so deleting or moving a module cannot leave a
+    stale citation behind. Citations of the reference code (``src/...``)
+    are exempt."""
+    sources = [
+        *sorted(PKG.rglob("*.py")),
+        ROOT / "bench.py",
+        *sorted((ROOT / "tools").glob("*.py")),
+    ]
+    stale = []
+    for path in sources:
+        for line, text in _comments_and_docstrings(path.read_text(encoding="utf-8")):
+            for cited in _CITED_PATH.findall(text):
+                if cited.startswith("src/"):
+                    continue
+                if not ((ROOT / cited).exists() or (PKG / cited).exists()):
+                    stale.append(f"{path.relative_to(ROOT)}:{line}: {cited}")
+    assert not stale, "cited paths that do not exist:\n" + "\n".join(stale)

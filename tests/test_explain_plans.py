@@ -593,11 +593,13 @@ PLAN_FACTS = {
         "regex": r"Left keys \[1\]: \[cent_id",
         "LeftSemi": 0,
     },
-    # Match counts through regexp_count.
+    # Match counts through regexp_count, which the optimizer rewrites
+    # to size(regexp_extract_all(...)): the physical plan builds the
+    # match array.
     "cjk_lsh_candidates": {"analyzed": "regexp_count"},
     "cjk_near_dups": {"analyzed": "regexp_count"},
-    "lang_id_quality": {"analyzed": "regexp_count"},
-    "pii_redaction": {"analyzed": "regexp_count"},
+    "lang_id_quality": {"analyzed": "regexp_count", "regex": r"regexp_extract_all"},
+    "pii_redaction": {"analyzed": "regexp_count", "regex": r"regexp_extract_all"},
     "quality_report_by_source": {"analyzed": "regexp_count"},
     "sentiment_scores": {"analyzed": "regexp_count"},
 }

@@ -1,153 +1,78 @@
-"""Partition-scoped copy-on-write MERGE: only delta-touched
-partitions are rewritten (file-level proof), untouched partitions'
-files are byte-identical, replay is idempotent, and the
-partition-stability validator catches key moves."""
+"""Copy-on-write MERGE into the tx-log table: only the data files that
+hold matched keys are rewritten (file-level proof), untouched files
+are byte-identical and stay live, and a replayed upsert leaves the
+same rows."""
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import os
-import time
 
-import pytest
-from pyspark.sql import functions as F
-
-from dss_nlp_ingestion_spark.sources.sinks import (
-    merge_into_partitioned_store,
-    read_store,
-)
+from dss_nlp_ingestion_spark.sources import txlog
 
 
-def _files_state(store: str) -> dict[str, tuple[float, str]]:
+def _files_state(path: str) -> dict[str, tuple[float, str]]:
     out = {}
-    for p in glob.glob(os.path.join(store, "**", "*.parquet"), recursive=True):
+    for p in txlog.snapshot_files(path):
         with open(p, "rb") as fh:
             out[p] = (os.path.getmtime(p), hashlib.sha256(fh.read()).hexdigest())
     return out
 
 
-def _mk_store(spark, tmp_path) -> str:
-    store = str(tmp_path / "store")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
-        ["id", "part", "val"],
-    )
-    base.write.mode("overwrite").partitionBy("part").parquet(store)
-    return store
+def _mk_table(spark, tmp_path) -> str:
+    """One commit per ``part`` value, so each data file holds one part
+    and the files stand in for the partitions of a partitioned store."""
+    path = str(tmp_path / "store")
+    parts = {
+        "a": [(1, "a", 10.0), (2, "a", 20.0)],
+        "b": [(3, "b", 30.0)],
+        "c": [(4, "c", 40.0)],
+    }
+    for i, rows in enumerate(parts.values()):
+        df = spark.createDataFrame(rows, "id long, part string, val double").coalesce(1)
+        if i == 0:
+            txlog.create_table(df, path, stats_cols=["id"])
+        else:
+            txlog.append(df, path, stats_cols=["id"])
+    return path
 
 
 def test_cow_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    store = _mk_store(spark, tmp_path)
-    before = _files_state(store)
+    path = _mk_table(spark, tmp_path)
+    before = _files_state(path)
+    by_part = {
+        r["part"]: r["f"]
+        for r in txlog.read(spark, path)
+        .selectExpr("part", "input_file_name() AS f")
+        .distinct()
+        .collect()
+    }
 
     delta = spark.createDataFrame(
-        [(2, "a", 21.0), (9, "a", 90.0)], ["id", "part", "val"]
+        [(2, "a", 21.0), (9, "a", 90.0)], "id long, part string, val double"
     )
-    stats = merge_into_partitioned_store(
-        spark, store, delta, key_cols=("id",), partition_by=("part",)
-    )
-    assert stats["partitions_touched"] == 1
+    res = txlog.merge_into_table(spark, path, delta, ["id"], stats_cols=["id"])
+    assert res["files_touched"] == 1
 
-    after = _files_state(store)
-    untouched_b = {p for p in before if "part=b" in p}
-    untouched_c = {p for p in before if "part=c" in p}
-    for p in untouched_b | untouched_c:
+    after = _files_state(path)
+    touched = [p for p in before if by_part["a"].endswith(p)]
+    assert len(touched) == 1
+    for p in set(before) - set(touched):
         # Same file, same bytes, same mtime — never opened for write.
         assert after[p] == before[p], p
-    # Touched partition really was replaced.
-    assert {p for p in before if "part=a" in p} != {
-        p for p in after if "part=a" in p
-    }
+    # The touched file really was replaced.
+    assert touched[0] not in after
 
-    rows = {
-        r.id: r for r in read_store(spark, store).orderBy("id").collect()
-    }
+    rows = {r.id: r for r in txlog.read(spark, path).collect()}
     assert rows[2].val == 21.0 and rows[9].val == 90.0  # update + insert
     assert rows[1].val == 10.0 and rows[3].val == 30.0 and rows[4].val == 40.0
     assert len(rows) == 5
 
 
 def test_cow_merge_replay_is_idempotent(spark, tmp_path):
-    store = _mk_store(spark, tmp_path)
-    delta = spark.createDataFrame([(2, "a", 21.0)], ["id", "part", "val"])
-    merge_into_partitioned_store(
-        spark, store, delta, key_cols=("id",), partition_by=("part",)
-    )
-    first = sorted(map(tuple, read_store(spark, store).collect()))
-    merge_into_partitioned_store(
-        spark, store, delta, key_cols=("id",), partition_by=("part",)
-    )
-    assert sorted(map(tuple, read_store(spark, store).collect())) == first
-
-
-def test_cow_merge_insert_only_keeps_target(spark, tmp_path):
-    store = _mk_store(spark, tmp_path)
-    delta = spark.createDataFrame(
-        [(2, "a", 999.0), (9, "a", 90.0)], ["id", "part", "val"]
-    )
-    merge_into_partitioned_store(
-        spark, store, delta, key_cols=("id",), partition_by=("part",),
-        insert_only=True,
-    )
-    rows = {r.id: r for r in read_store(spark, store).collect()}
-    assert rows[2].val == 20.0  # matched target kept verbatim
-    assert rows[9].val == 90.0  # unmatched inserted
-
-
-def test_cow_merge_bootstrap_creates_store(spark, tmp_path):
-    store = str(tmp_path / "fresh")
-    delta = spark.createDataFrame([(1, "a", 1.0)], ["id", "part", "val"])
-    stats = merge_into_partitioned_store(
-        spark, store, delta, key_cols=("id",), partition_by=("part",)
-    )
-    assert stats == {"rows_written": 1, "partitions_touched": 1}
-    assert [tuple(r) for r in read_store(spark, store).collect()] == [(1, 1.0, "a")]
-
-
-def test_cow_merge_validator_rejects_partition_moves(spark, tmp_path):
-    store = _mk_store(spark, tmp_path)
-    # id=3 lives in part=b; the delta claims part=a — a key move that
-    # would leave a stale twin in part=b.
-    delta = spark.createDataFrame([(3, "a", 31.0)], ["id", "part", "val"])
-    with pytest.raises(ValueError, match="across partitions"):
-        merge_into_partitioned_store(
-            spark, store, delta, key_cols=("id",), partition_by=("part",),
-            validate_partition_stability=True,
-        )
-
-
-def test_cow_merge_conflict_raises(spark, tmp_path):
-    """A held advisory lock makes a concurrent merge fail fast instead
-    of interleaving partition overwrites."""
-    from dss_nlp_ingestion_spark.sources.sinks import ConcurrentMergeError
-
-    store = _mk_store(spark, tmp_path)
-    lock = store.rstrip("/") + ".merge.lock"
-    with open(lock, "w") as fh:
-        fh.write("pid=held-by-test")
-    delta = spark.createDataFrame([(2, "a", 99.0)], ["id", "part", "val"])
-    with pytest.raises(ConcurrentMergeError, match="held"):
-        merge_into_partitioned_store(
-            spark, store, delta, key_cols=("id",), partition_by=("part",)
-        )
-    os.remove(lock)
-
-
-def test_cow_merge_stale_lock_taken_over_and_released(spark, tmp_path):
-    """A lock older than stale_after_s belongs to a crashed merger:
-    the merge takes it over, proceeds, and removes it afterward."""
-    store = _mk_store(spark, tmp_path)
-    lock = store.rstrip("/") + ".merge.lock"
-    with open(lock, "w") as fh:
-        fh.write("pid=crashed")
-    old = time.time() - 7200
-    os.utime(lock, (old, old))
-    delta = spark.createDataFrame([(2, "a", 99.0)], ["id", "part", "val"])
-    merge_into_partitioned_store(
-        spark, store, delta, key_cols=("id",), partition_by=("part",),
-        lock_stale_after_s=3600.0,
-    )
-    assert not os.path.exists(lock)  # released after the merge
-    rows = {r.id: r for r in read_store(spark, store).collect()}
-    assert rows[2].val == 99.0
+    path = _mk_table(spark, tmp_path)
+    delta = spark.createDataFrame([(2, "a", 21.0)], "id long, part string, val double")
+    txlog.merge_into_table(spark, path, delta, ["id"])
+    first = sorted(map(tuple, txlog.read(spark, path).collect()))
+    txlog.merge_into_table(spark, path, delta, ["id"])
+    assert sorted(map(tuple, txlog.read(spark, path).collect())) == first

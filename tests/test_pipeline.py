@@ -1,6 +1,7 @@
 """End-to-end ingestion pipeline test (SURVEY.md §3.2): task grid ->
 fetch (fake transport) -> parse -> history dedup -> sector enrichment
-(J1 explode + broadcast join, A1/A2 vote) -> idempotent store ->
+(J1 explode + broadcast join, A1/A2 vote) -> insert-if-absent MERGE
+into the tx-log table ->
 flagship-style query over the store. One Spark job graph, no network,
 no driver-side loops."""
 
@@ -15,7 +16,7 @@ from dss_nlp_ingestion_spark.operators.dedup import history_filter
 from dss_nlp_ingestion_spark.operators.relational import majority_vote
 from dss_nlp_ingestion_spark.sources.fetch import fetch_stage
 from dss_nlp_ingestion_spark.sources.parsers import parse_newsfilter
-from dss_nlp_ingestion_spark.sources.sinks import idempotent_append, read_store
+from dss_nlp_ingestion_spark.sources import txlog
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -74,14 +75,23 @@ def test_ingestion_end_to_end(spark, tmp_path):
     )
     enriched = fresh.join(sector, "unique_identifier", "left")
 
-    # 6. K2 idempotent store + replay (exactly-once effect).
+    # 6. K2 insert-if-absent load + replay (exactly-once effect); the
+    #    merge reports the rows its commit wrote.
     store = str(tmp_path / "docstore")
-    n1 = idempotent_append(spark, enriched, store)
-    n2 = idempotent_append(spark, enriched, store)  # replay: no-op
+    txlog.create_table(enriched.limit(0), store)
+
+    def load():
+        res = txlog.merge_into_table(
+            spark, store, enriched, ["unique_identifier"], insert_only=True
+        )
+        return res["rows_written"]
+
+    n1 = load()
+    n2 = load()  # replay: no-op
     assert n1 == 2 and n2 == 0  # nf-001 deduped, dup page deduped
 
     # 7. Query the store (flagship shape: filter window + group).
-    stored = read_store(spark, store)
+    stored = txlog.read(spark, store)
     out = (
         stored.filter(F.col("time") >= F.lit("2024-01-01").cast("timestamp"))
         .groupBy("source")

@@ -1,18 +1,15 @@
-"""Retention-job test (§2.12 ILM delete-phase analog)."""
+"""Store maintenance on the tx-log table: retention delete (§2.12 ILM
+delete-phase analog), compaction and additive schema evolution."""
 
 from __future__ import annotations
 
 import datetime
 
-from dss_nlp_ingestion_spark.sources.sinks import (
-    bulk_append,
-    read_store,
-    retention_delete,
-)
+from dss_nlp_ingestion_spark.sources import txlog
 
 
 def test_retention_delete(spark, tmp_path):
-    store = str(tmp_path / "retstore")
+    path = str(tmp_path / "retstore")
     base = datetime.datetime(2024, 1, 1)
     rows = [
         ("a", "s1", base),
@@ -20,128 +17,59 @@ def test_retention_delete(spark, tmp_path):
         ("c", "s2", base + datetime.timedelta(days=200)),
     ]
     df = spark.createDataFrame(rows, ["unique_identifier", "source", "time"])
-    bulk_append(df, store)
+    txlog.create_table(df, path)
 
-    n = retention_delete(spark, store, "time", "2024-04-01 00:00:00")
-    assert n == 1  # only 'a' expired
-    remaining = read_store(spark, store)
-    assert sorted(r.unique_identifier for r in remaining.collect()) == ["b", "c"]
-    # Partition layout survives the rewrite.
-    assert set(r.source for r in remaining.collect()) == {"s1", "s2"}
-    # Idempotent when nothing is expired.
-    assert retention_delete(spark, store, "time", "2024-04-01 00:00:00") == 0
-
-
-def test_observed_append_metrics(spark, tmp_path):
-    from dss_nlp_ingestion_spark.sources.sinks import observed_append
-
-    df = spark.createDataFrame(
-        [("a", "s1"), ("b", "s1"), ("c", "s2")], ["unique_identifier", "source"]
-    )
-    metrics = observed_append(df, str(tmp_path / "obs_store"))
-    assert metrics["rows_written"] == 3
-    assert metrics["partitions_touched"] == 2
-
-
-def test_date_partitioned_store_prunes(spark, tmp_path):
-    import datetime
-    from dss_nlp_ingestion_spark.sources.sinks import date_partitioned_append
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = [
-        ("a", "s1", base),
-        ("b", "s1", base + datetime.timedelta(days=1)),
-        ("c", "s2", base),
-    ]
-    store = str(tmp_path / "datestore")
-    df = spark.createDataFrame(rows, ["unique_identifier", "source", "time"])
-    date_partitioned_append(df, store)
-    scan = spark.read.parquet(store).filter(
-        "(source = 's1') AND (_day = '2024-01-01')"
-    )
-    assert scan.count() == 1
-    # Partition pruning: both predicates are partition filters on the
-    # scan (no data-file read outside source=s1/_day=2024-01-01).
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "source" in pf and "_day" in pf
+    expired = "time < TIMESTAMP '2024-04-01 00:00:00'"
+    res = txlog.delete_from_table(spark, path, expired)
+    assert res["files_touched"] >= 1
+    remaining = txlog.read(spark, path).collect()
+    assert sorted(r.unique_identifier for r in remaining) == ["b", "c"]  # only 'a' expired
+    assert {r.source for r in remaining} == {"s1", "s2"}
+    # Idempotent when nothing is expired: no file touched, no commit.
+    again = txlog.delete_from_table(spark, path, expired)
+    assert again["files_touched"] == 0 and again["version"] == res["version"]
 
 
 def test_compact_store(spark, tmp_path):
-    from dss_nlp_ingestion_spark.sources.sinks import bulk_append, compact_store, read_store
-
-    store = str(tmp_path / "compactstore")
-    # Three small appends -> many small files.
+    path = str(tmp_path / "compactstore")
+    # Three small commits -> many small files.
     for batch in range(3):
         df = spark.createDataFrame(
             [(f"id{batch}-{i}", "s1") for i in range(10)],
             ["unique_identifier", "source"],
-        )
-        bulk_append(df, store)
-    before = len(read_store(spark, store).inputFiles())
-    n_files = compact_store(spark, store, ("source",), target_files_per_partition=1)
-    assert n_files < before
-    assert read_store(spark, store).count() == 30
-
-
-def test_training_shard_store_prunes(spark, tmp_path):
-    from dss_nlp_ingestion_spark.catalog import table
-    from dss_nlp_ingestion_spark.functions.text import token_count
-    from dss_nlp_ingestion_spark.operators.sampling import pack_shards
-    from dss_nlp_ingestion_spark.sources.sinks import write_training_shards
-    from pyspark.sql import functions as F
-    from tests.conftest import SF_DIR
-
-    docs = table(spark, SF_DIR, "documents")
-    packed = pack_shards(
-        docs.select("doc_id", token_count(F.col("text")).alias("w")),
-        "doc_id", "w", budget=500, range_size=16,
-    ).join(docs.select("doc_id", "lang"), "doc_id")
-    store = str(tmp_path / "shards")
-    write_training_shards(packed, store)
-
-    # A single-shard read must prune to one partition directory.
-    one = spark.read.parquet(store).filter(F.col("shard_id") == 0)
-    plan = one._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan and "shard_id" in plan.split("PartitionFilters")[1].split("\n")[0]
-    # Round trip: every doc kept exactly once, shard sizes ~budget.
-    back = spark.read.parquet(store)
-    assert back.count() == docs.count()
-    assert back.select("doc_id").distinct().count() == docs.count()
-    sizes = {r.shard_id: r.tot for r in back.groupBy("shard_id").agg(
-        F.sum("n_tokens").alias("tot")).collect()}
-    assert len(sizes) >= 2
+        ).repartition(2)
+        if batch == 0:
+            txlog.create_table(df, path)
+        else:
+            txlog.append(df, path)
+    before = len(txlog.snapshot_files(path))
+    txlog.compact(spark, path, target_files=1)
+    assert len(txlog.snapshot_files(path)) == 1 < before
+    assert txlog.read(spark, path).count() == 30
 
 
 def test_store_schema_evolution_additive(spark, tmp_path):
     """Append-only stores gain columns over time: old files lack the
-    new column, and a merge-schema read returns the superset with
-    NULLs for pre-evolution rows (the additive half of schema
-    evolution; idempotent_append keeps working on the shared key)."""
-    from dss_nlp_ingestion_spark.sources.sinks import (
-        bulk_append,
-        idempotent_append,
-        read_store,
-    )
-
-    store = str(tmp_path / "evolving")
+    new column, and the snapshot read returns the superset with NULLs
+    for pre-evolution rows (the additive half of schema evolution;
+    insert-if-absent keeps working on the shared key)."""
+    path = str(tmp_path / "evolving")
     v1 = spark.createDataFrame(
         [("a", 1, "s1")], ["unique_identifier", "v", "source"]
     )
-    bulk_append(v1, store)
+    txlog.create_table(v1, path)
     v2 = spark.createDataFrame(
         [("b", 2, "s1", "en")], ["unique_identifier", "v", "source", "lang"]
     )
-    bulk_append(v2, store)
+    txlog.append(v2, path)
 
-    out = read_store(spark, store, merge_schema=True)
+    out = txlog.read(spark, path)
     assert set(out.columns) == {"unique_identifier", "v", "source", "lang"}
     rows = {r.unique_identifier: r for r in out.collect()}
     assert rows["a"].lang is None and rows["b"].lang == "en"
 
     # Idempotence still holds across the evolution boundary.
-    n = idempotent_append(spark, v2, store)
-    assert n == 0
+    res = txlog.merge_into_table(
+        spark, path, v2, ["unique_identifier"], insert_only=True
+    )
+    assert res["rows_written"] == 0

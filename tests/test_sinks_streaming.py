@@ -1,6 +1,8 @@
-"""Sink (K1/K2/K4) and streaming (§2.12) semantics tests: idempotent
-append, tumbling-window parity with batch, watermarked TTL dedup,
-availableNow drain, foreachBatch merge."""
+"""Sink (K2/K4) and streaming (§2.12) semantics tests: insert-if-absent
+MERGE into the tx-log table, tumbling-window parity with batch,
+watermarked TTL dedup, availableNow drain. The exactly-once streaming
+sink's replay test is tests/test_txlog.py::
+test_stream_merge_to_txlog_replay_lands_nothing."""
 
 from __future__ import annotations
 
@@ -8,12 +10,11 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from dss_nlp_ingestion_spark.sources.sinks import idempotent_append, read_store
+from dss_nlp_ingestion_spark.sources import txlog
 from dss_nlp_ingestion_spark.streaming.pipeline import (
     hourly_window_counts,
     read_events_stream,
     run_complete_available_now,
-    stream_to_idempotent_store,
     watermark_dedup,
 )
 from tests.conftest import SF_DIR
@@ -26,15 +27,22 @@ def _docs(spark, rows):
 def test_idempotent_append_is_insert_if_absent(spark, tmp_path):
     store = str(tmp_path / "store")
     first = _docs(spark, [("a", "s1", "t1"), ("b", "s1", "t2")])
-    assert idempotent_append(spark, first, store) == 2
+    txlog.create_table(first.limit(0), store)
+
+    def load(df):
+        res = txlog.merge_into_table(
+            spark, store, df, ["unique_identifier"], insert_only=True
+        )
+        return res["rows_written"]
+
+    assert load(first) == 2
+    assert load(first) == 0  # replay: no-op
     # Replay the same batch + one novel row: only the novel row lands.
-    replay = _docs(spark, [("a", "s1", "t1"), ("c", "s2", "t3")])
-    assert idempotent_append(spark, replay, store) == 1
-    stored = read_store(spark, store)
+    assert load(_docs(spark, [("a", "s1", "t1"), ("c", "s2", "t3")])) == 1
+    stored = txlog.read(spark, store)
     assert stored.count() == 3
     assert stored.select("unique_identifier").distinct().count() == 3
-    # Partition pruning works (per-source collection analog).
-    assert set(r.source for r in stored.select("source").distinct().collect()) == {"s1", "s2"}
+    assert {r.source for r in stored.select("source").distinct().collect()} == {"s1", "s2"}
 
 
 def test_streaming_hourly_windows_match_batch(spark, tmp_path):
@@ -90,27 +98,6 @@ def test_watermark_dedup_drops_in_stream_duplicates(spark, tmp_path):
     # live state -> exactly one survives; (2, view) survives.
     keys = sorted((r.user_id, r.event_type) for r in out)
     assert keys == [(1, "click"), (2, "view")]
-
-
-def test_foreachbatch_idempotent_store(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", "s1", "t1"), ("b", "s1", "t2"), ("a", "s1", "t1")],
-        ["unique_identifier", "source", "text"],
-    )
-    src = str(tmp_path / "stream_src")
-    df.write.parquet(src)
-    store = str(tmp_path / "merge_store")
-    stream = read_events_stream(spark, src, schema=df.schema)
-    q = stream_to_idempotent_store(spark, stream, store, key="unique_identifier")
-    q.awaitTermination()
-    stored = read_store(spark, store)
-    # In-batch duplicate 'a' still appends once per novel key set; the
-    # guarantee is cross-batch idempotence: a replay adds nothing.
-    stream2 = read_events_stream(spark, src, schema=df.schema)
-    q2 = stream_to_idempotent_store(spark, stream2, store, key="unique_identifier")
-    q2.awaitTermination()
-    assert read_store(spark, store).select("unique_identifier").distinct().count() == 2
-    assert stored.count() <= 3
 
 
 def test_streaming_session_windows_match_batch(spark, tmp_path):

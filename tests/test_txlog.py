@@ -581,6 +581,37 @@ def test_merge_into_table_no_match_degrades_to_append(spark):
     assert txlog.snapshot_row_count(path) == 41
 
 
+def test_merge_into_table_insert_only_keeps_target(spark):
+    """Insert-if-absent: matched target rows are kept verbatim, new keys
+    land, no file is rewritten, and a replay adds no data file to the
+    log (with a txn stamp it commits one entry that adds no file)."""
+    path = tempfile.mkdtemp(prefix="dss_txmerge_")
+    txlog.create_table(_orders_tbl(spark, n=8, files=2), path, stats_cols=["k"])
+    before = set(txlog.snapshot_files(path))
+    src = spark.createDataFrame(
+        [(2, "upd", 999.0), (90, "new", 1.0)], "k long, c string, p double"
+    )
+    res = txlog.merge_into_table(spark, path, src, ["k"], insert_only=True)
+    assert res["files_touched"] == 0 and res["rows_written"] == 1
+    assert before <= set(txlog.snapshot_files(path))
+    got = {r["k"]: (r["c"], r["p"]) for r in txlog.read(spark, path).collect()}
+    assert got[2] == ("c2", 4.0)  # matched target kept verbatim
+    assert got[90] == ("new", 1.0)  # unmatched inserted
+    assert len(got) == 9
+
+    n_versions = len(txlog.history(path))
+    replay = txlog.merge_into_table(spark, path, src, ["k"], insert_only=True)
+    assert replay["rows_written"] == 0 and not replay["appended"]
+    assert len(txlog.history(path)) == n_versions
+    stamped = txlog.merge_into_table(
+        spark, path, src, ["k"], insert_only=True, txn=("ins", 0)
+    )
+    assert txlog.history(path)[-1]["n_add"] == 0
+    assert stamped["rows_written"] == 0
+    assert txlog.last_committed_txn(path, "ins") == 0
+    assert txlog.snapshot_row_count(path) == 9
+
+
 def test_merge_into_table_delete_clause(spark):
     path = tempfile.mkdtemp(prefix="dss_txmerge_")
     txlog.create_table(_orders_tbl(spark, n=10, files=2), path, stats_cols=["k"])
