@@ -16,8 +16,10 @@ under its own Spark job group. Right after it the harness reads what
 that group did from ``sc.statusTracker()`` (:func:`group_work`), and
 the record's ``profile`` map holds, per timed row, ``build_sec`` (the
 query call), ``exec_sec`` (the ``.count()``), ``jobs``, ``stages`` and
-``tasks``. Wall time on a shared host swings with its neighbours; job
-and task counts do not, so they tell a plan change from host noise.
+``tasks``, and ``compiles``: the code bodies Spark generated and
+compiled for it (:func:`compile_count`). Wall time on a shared host
+swings with its neighbours; job, task and compile counts do not, so
+they tell a plan change from host noise.
 The record also carries ``cpus``: compare only records of one core
 count.
 """
@@ -179,6 +181,16 @@ def group_work(spark, group: str, timeout_s: float = 30.0) -> dict[str, int]:
     return {"jobs": len(jobs), "stages": sum(1 for n in done if n), "tasks": sum(done)}
 
 
+def compile_count(spark) -> int:
+    """Janino compilations so far in this JVM: the count of Spark's
+    ``CodegenMetrics`` compilation-time histogram, read through py4j (no
+    job). A body served from the generated-code cache is not counted.
+    The counter is JVM-global, so its change across a query is that
+    query's own only while one query runs at a time, as it does here."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     spark = get_spark(
         app_name="dss-bench",
@@ -219,16 +231,19 @@ def main() -> None:
         setup = None
         if name in SETUPS:
             sc.setJobGroup(f"{group}:setup", f"{name} setup")
+            c0 = compile_count(spark)
             t0 = time.perf_counter()
             try:
                 ctx = SETUPS[name](spark, SF_DIR)
                 t_setup = round(time.perf_counter() - t0, 3)
                 setup = group_work(spark, f"{group}:setup")
+                setup["compiles"] = compile_count(spark) - c0
             except Exception as exc:  # noqa: BLE001
                 errors[name] = f"setup {type(exc).__name__}: {exc}"[:500]
                 return None
             build = functools.partial(PROBES[name], spark, ctx)
         sc.setJobGroup(group, name)
+        c0 = compile_count(spark)
         t0 = time.perf_counter()
         try:
             df = build()
@@ -236,6 +251,7 @@ def main() -> None:
             assert df.count() >= 0
             t2 = time.perf_counter()
             work = group_work(spark, group)
+            work["compiles"] = compile_count(spark) - c0
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             return None
@@ -313,8 +329,8 @@ def main() -> None:
         "queries": timings,
         # Per timed row: build_sec (the query call: plan construction
         # plus any driver-loop supersteps) + exec_sec (the .count()),
-        # and the work of its job group; a split composite's setup
-        # half has its own group under "setup".
+        # the work of its job group and its codegen compilations; a
+        # split composite's setup half has its own under "setup".
         "profile": profile,
         "headline": list(names),
         "cold_total": cold_total,

@@ -28,7 +28,24 @@ ROWS = [
 
 
 @pytest.fixture(scope="module")
-def derby_url(spark):
+def derby_log(spark):
+    """Derby writes ``derby.log`` into the JVM's working directory when
+    it boots, which is wherever the tests were started from. Point its
+    ``derby.stream.error.file`` system property under the tests' temp
+    root before the first connection, and restore it after the module."""
+    system = spark.sparkContext._jvm.java.lang.System
+    old = system.getProperty("derby.stream.error.file")
+    log = os.path.join(tempfile.mkdtemp(prefix="dss_derby_log_"), "derby.log")
+    system.setProperty("derby.stream.error.file", log)
+    yield log
+    if old is None:
+        system.clearProperty("derby.stream.error.file")
+    else:
+        system.setProperty("derby.stream.error.file", old)
+
+
+@pytest.fixture(scope="module")
+def derby_url(spark, derby_log):
     path = os.path.join(tempfile.mkdtemp(prefix="dss_derby_"), "universe_db")
     url = f"jdbc:derby:{path};create=true"
     df = spark.createDataFrame(
@@ -91,3 +108,9 @@ def test_spark_side_filter_pushed_to_jdbc(spark, derby_url):
     )
     assert "PushedFilters" in plan and "currency_code" in plan.split("PushedFilters")[1].split("\n")[0]
     assert {r.ticker for r in df.collect()} == {"AAPL", "MSFT", "NA1"}
+
+
+def test_derby_logs_under_temp_root(derby_url, derby_log):
+    """Derby booted with its log under the tests' temp root, so a run
+    leaves no ``derby.log`` in the directory it was started from."""
+    assert os.path.isfile(derby_log)
