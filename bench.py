@@ -21,7 +21,9 @@ compiled for it (:func:`compile_count`). Wall time on a shared host
 swings with its neighbours; job, task and compile counts do not, so
 they tell a plan change from host noise.
 The record also carries ``cpus``: compare only records of one core
-count.
+count, and ``phases``: wall-clock seconds since the run began at which
+the session came up, the warmup, the headline passes, the tail sweep
+and the skew demo were done, so a slow sweep says where its time went.
 """
 
 from __future__ import annotations
@@ -192,6 +194,12 @@ def compile_count(spark) -> int:
 
 
 def main() -> None:
+    t_start = time.time()
+    phases: dict[str, float] = {}
+
+    def mark(phase: str) -> None:
+        phases[phase] = round(time.time() - t_start, 3)
+
     spark = get_spark(
         app_name="dss-bench",
         master=f"local[{CPUS}]",
@@ -199,6 +207,7 @@ def main() -> None:
     )
     sc = spark.sparkContext
     sc.setLogLevel("WARN")
+    mark("session_up")
 
     names = [n for n in BENCH_QUERIES if n in QUERIES and n not in SKIP]
     if ONLY:
@@ -281,6 +290,7 @@ def main() -> None:
     spark.range(0, 1000, 1, CPUS).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
+    mark("warmup_done")
 
     # Headline queries are measured three times: the first run carries
     # per-plan codegen/compile cost (reported as cold_total); the
@@ -297,6 +307,7 @@ def main() -> None:
         if len(done) > 1:
             profile[name] = min(done, key=lambda p: p["sec"])
     total = round(sum(p["sec"] for p in profile.values()), 3)
+    mark("headline_done")
     if not HEADLINE_ONLY:
         for name in QUERIES:
             if name in SKIP or (ONLY and name not in ONLY):
@@ -305,6 +316,7 @@ def main() -> None:
                 prof = _run(name)
                 if prof is not None:
                     profile[name] = prof
+    mark("tail_done")
     cold_total = round(sum(p["sec"] for p in cold.values() if p is not None), 3)
     timings = {name: p.pop("sec") for name, p in profile.items()}
     # Skew-guard demonstration (verdict r2 ask #6): synthetic hot-key
@@ -316,6 +328,7 @@ def main() -> None:
         skew = run_skew_demo(spark)
     except Exception as exc:  # noqa: BLE001 — demo must not kill the record
         skew = {"err": f"{type(exc).__name__}: {exc}"[:500]}
+    mark("skew_demo_done")
 
     # The full record (per-query map, headline list, skew demo) goes to
     # a committed file: the driver's stdout capture keeps only a ~2 KB
@@ -346,6 +359,7 @@ def main() -> None:
         "skipped": sorted(SKIP),
         "sf": _sf_from_dir(SF_DIR),
         "cpus": CPUS,
+        "phases": phases,
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), BENCH_OUT)
     with open(full_path, "w") as fh:

@@ -12,7 +12,8 @@ Reference parity (citations into /root/reference):
 - X7  whitespace squeeze  — src/lurkers/aastocks.py:177
 - X9  zero-pad ticker     — src/lurkers/aastocks.py:80
 - X10 exchange suffix     — src/utils/hkscraper_utils.py:1-12
-- X12 field concat        — src/base.py:143-153
+- X12 field concat        — src/base.py:143-153 (``concat_ws`` in
+                            :func:`content_hash`)
 - X13 stable id hash      — src/workqueue/rediswq.py:195-197 (sha224)
 - X14 content hash        — replaces Python ``hash`` with sha2-256
                             (deterministic; documented semantic change)
@@ -169,11 +170,6 @@ def exchange_suffix(col: Column) -> Column:
     )
 
 
-def concat_fields(*cols: Column, sep: str = " ") -> Column:
-    """X12: null-safe field concatenation (title+description+text)."""
-    return F.concat_ws(sep, *cols)
-
-
 def stable_id_hash(col: Column) -> Column:
     """X13: stable dedup-key hash. The reference uses sha224
     (rediswq.py:195-197); we standardize on sha256 for oracle parity
@@ -185,14 +181,6 @@ def content_hash(*cols: Column) -> Column:
     """X14/D2: deterministic content hash replacing Python ``hash``
     (which is per-process salted — reference bug fixed by design)."""
     return F.sha2(F.concat_ws("", *cols), 256)
-
-
-# --- hierarchy math (X17, X18) --------------------------------------------
-
-def hierarchy_truncate(code: Column, trim: Column | int) -> Column:
-    """X17: ``code // 10^trim`` integer hierarchy truncation."""
-    t = F.lit(trim) if isinstance(trim, int) else trim
-    return F.floor(code / F.pow(F.lit(10.0), t)).cast("long")
 
 
 # --- text analysis (LLM-pipeline operators) -------------------------------

@@ -19,6 +19,13 @@ a shuffle join):
   codegen expressions (no explode, no per-row Python, no shuffle).
   Rows failing ANY bit are dropped *before* the exact join shuffles
   them.
+- **grouped**: ``group_cols`` builds one bitmap per group instead —
+  with ``group_cols=["_file"]`` over ``input_file_name()`` that is a
+  per-file index for point-lookup file skipping, and
+  :func:`bloom_matches` keeps the groups whose bitmap admits some
+  probe key, with the keys broadcast and the index left distributed.
+  Build and both probes share one position expression and one bit
+  test, so they cannot disagree.
 
 The filter is one-sided (false positives only), so callers follow it
 with the exact join; the Bloom pass just keeps non-matching rows out
@@ -28,46 +35,80 @@ the full fact table and shuffling the ~selectivity fraction of it.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def bloom_build(
-    df: DataFrame, key_col: str, m_bits: int = 1 << 17, n_hashes: int = 3
-) -> DataFrame:
-    """Aggregate ``df[key_col]`` into a 1-row Bloom bitmap.
+def _positions(key: Column, m_bits: int, n_hashes: int) -> list[Column]:
+    """The one position expression: the ``n_hashes`` bits ``key``
+    sets, xxhash64 of (key, seed) folded into [0, m_bits) (pmod keeps
+    negatives out)."""
+    return [
+        F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(m_bits)) for seed in range(n_hashes)
+    ]
 
-    Returns a single-row DataFrame with column ``bloom_words``:
+
+def _word_idx(pos: Column) -> Column:
+    return (pos / 64).cast("long")
+
+
+def _bit(pos: Column) -> Column:
+    # pyspark's F.shiftleft wants a literal shift; the SQL function
+    # takes a column.
+    return F.call_function(
+        "shiftleft", F.lit(1).cast("long"), (pos % 64).cast("int")
+    )
+
+
+def _bits_set(words: Column, positions: Sequence[Column]) -> Column:
+    """The one bit test: every position's bit is set in the
+    ``map<long,long>`` bitmap ``words`` (an absent word is all zero)."""
+    return reduce(
+        lambda a, b: a & b,
+        [
+            F.coalesce(F.element_at(words, _word_idx(p)), F.lit(0).cast("long"))
+            .bitwiseAND(_bit(p))
+            != 0
+            for p in positions
+        ],
+    )
+
+
+def bloom_build(
+    df: DataFrame,
+    key_col: str,
+    m_bits: int = 1 << 17,
+    n_hashes: int = 3,
+    group_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Aggregate ``df[key_col]`` into a Bloom bitmap per ``group_cols``
+    group (no ``group_cols``: one row for the whole input).
+
+    Each row carries the group columns and ``bloom_words``:
     ``map<long,long>`` of word-index -> 64-bit word (absent word =>
     all-zero). Distributed end-to-end: per-partition partial
-    ``bit_or`` then a <= m_bits/64-row final merge.
+    ``bit_or`` then a <= m_bits/64-rows-per-group final merge.
     """
     if m_bits % 64 != 0:
         raise ValueError("m_bits must be a multiple of 64")
-    key = F.col(key_col)
-    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-    pos = F.pmod(F.xxhash64(key, F.col("_seed")), F.lit(m_bits))
-    bits = (
-        df.select(key, F.explode(seeds).alias("_seed"))
-        .select(pos.alias("_pos"))
-        .select(
-            (F.col("_pos") / 64).cast("long").alias("word_idx"),
-            # pyspark's F.shiftleft wants a literal shift; the SQL
-            # form takes a column.
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(_pos % 64 AS INT))").alias(
-                "bit"
-            ),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("bit").alias("bits"))
+    pos = F.explode(F.array(*_positions(F.col(key_col), m_bits, n_hashes)))
+    words = (
+        df.select(*group_cols, pos.alias("_pos"))
+        .groupBy(*group_cols, _word_idx(F.col("_pos")).alias("word_idx"))
+        .agg(F.bit_or(_bit(F.col("_pos"))).alias("bits"))
     )
-    return bits.agg(
+    return words.groupBy(*group_cols).agg(
         F.map_from_entries(F.collect_list(F.struct("word_idx", "bits"))).alias(
             "bloom_words"
         )
     )
+
+
+def _pos_cols(n_hashes: int) -> list[str]:
+    return [f"_bloom_pos{seed}" for seed in range(n_hashes)]
 
 
 def bloom_prefilter(
@@ -78,27 +119,41 @@ def bloom_prefilter(
     n_hashes: int = 3,
 ) -> DataFrame:
     """Keep only rows whose ``key_col`` *might* be in ``bloom``
-    (built by :func:`bloom_build` with the SAME m_bits/n_hashes).
+    (built by :func:`bloom_build` with the SAME m_bits/n_hashes and
+    no ``group_cols``).
 
     The bitmap row rides in on a broadcast cross join; the probe is
     whole-stage-codegen arithmetic per row (one AND over the
     ``n_hashes`` bit checks — small fixed expression tree). Output
     schema == input schema.
     """
-    probed = df.crossJoin(F.broadcast(bloom))
-    pos_cols = []
-    checks = []
-    for seed in range(n_hashes):
-        pc = f"_bloom_pos{seed}"
-        pos_cols.append(pc)
-        probed = probed.withColumn(
-            pc, F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)), F.lit(m_bits))
-        )
-        word = F.coalesce(
-            F.element_at(F.col("bloom_words"), (F.col(pc) / 64).cast("long")),
-            F.lit(0).cast("long"),
-        )
-        bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({pc} % 64 AS INT))")
-        checks.append(word.bitwiseAND(bit) != 0)
-    kept = probed.filter(reduce(lambda a, b: a & b, checks))
-    return kept.drop("bloom_words", *pos_cols)
+    cols = _pos_cols(n_hashes)
+    probed = df.crossJoin(F.broadcast(bloom)).withColumns(
+        dict(zip(cols, _positions(F.col(key_col), m_bits, n_hashes)))
+    )
+    kept = probed.filter(_bits_set(F.col("bloom_words"), [F.col(c) for c in cols]))
+    return kept.drop("bloom_words", *cols)
+
+
+def bloom_matches(
+    bloom: DataFrame,
+    keys: DataFrame,
+    key_col: str,
+    m_bits: int = 1 << 17,
+    n_hashes: int = 3,
+) -> DataFrame:
+    """Rows of a grouped ``bloom`` (:func:`bloom_build` with
+    ``group_cols``, the SAME m_bits/n_hashes) whose bitmap might hold
+    at least one ``keys[key_col]`` value: for a per-file index, the
+    files a point lookup must open. A left-semi nested-loop join with
+    the keys' bit positions broadcast: the index stays distributed,
+    never broadcast or collected, however many files it covers."""
+    cols = _pos_cols(n_hashes)
+    probe = keys.select(
+        *[p.alias(c) for c, p in zip(cols, _positions(F.col(key_col), m_bits, n_hashes))]
+    )
+    return bloom.join(
+        F.broadcast(probe),
+        _bits_set(F.col("bloom_words"), [F.col(c) for c in cols]),
+        "left_semi",
+    )

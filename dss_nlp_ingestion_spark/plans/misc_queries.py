@@ -253,21 +253,20 @@ SELECT o_orderkey, o_custkey, o_totalprice FROM orders
 def zorder_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout maintenance under the hash gate: orders written
     clustered along the Morton curve of (o_custkey, o_totalprice)
-    (sources/layout.py:zorder_write — broadcast min/max
-    normalization, codegen bit interleave, range-partitioned write)
-    and read back must be content-identical to the source — layout
+    (sources/layout.py:zorder_cluster — broadcast min/max
+    normalization, codegen bit interleave, range partitioning) and
+    read back must be content-identical to the source — layout
     changes physical order and file boundaries, never rows. The
     skipping effectiveness itself is measured in
     tests/test_layout.py."""
-    import tempfile
-
-    from dss_nlp_ingestion_spark.sources.layout import zorder_write
+    from dss_nlp_ingestion_spark.sources.layout import zorder_cluster
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     path = tempfile.mkdtemp(prefix="dss_zorder_") + "/orders"
-    zorder_write(orders, path, ["o_custkey", "o_totalprice"], n_files=8)
+    clustered = zorder_cluster(orders, ["o_custkey", "o_totalprice"], n_files=8)
+    clustered.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
@@ -979,30 +978,26 @@ WHERE o_custkey BETWEEN 100 AND 200
 
 @register("zonemap_pruned_orders", _ZONEMAP_ORACLE)
 def zonemap_pruned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File skipping via an explicit zone map: orders written
-    Z-ordered (so file min/max ranges are tight on both clustered
-    columns), a file-level min/max stats table built once, then a
+    """File skipping via the zone map a tx-log commit logs: orders
+    written Z-ordered (so file min/max ranges are tight on both
+    clustered columns) as a tx table whose create commit records each
+    file's o_custkey [min, max] from the parquet footers, then a
     selective read that opens ONLY overlapping files
-    (sources/layout.py:zonemap_pruned_read). Hash match vs the full
-    filtered table proves pruning loses nothing; the
-    fewer-files-opened effect itself is asserted in
-    tests/test_layout.py. At 100 TB this is the driver-side coarse
-    prune in front of parquet's own row-group stats."""
-    import tempfile
-
-    from dss_nlp_ingestion_spark.sources.layout import (
-        build_zonemap,
-        zonemap_pruned_read,
-        zorder_write,
-    )
+    (sources/txlog.py:read_pruned). Hash match vs the full filtered
+    table proves pruning loses nothing; the fewer-files-opened effect
+    itself is asserted in tests/test_txlog.py. At 100 TB this is the
+    driver-side coarse prune in front of parquet's own row-group
+    stats, planned from the log without a scan."""
+    from dss_nlp_ingestion_spark.sources import txlog
+    from dss_nlp_ingestion_spark.sources.layout import zorder_cluster
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     path = tempfile.mkdtemp(prefix="dss_zonemap_") + "/orders"
-    zorder_write(orders, path, ["o_custkey", "o_totalprice"], n_files=8)
-    zm = build_zonemap(spark, path, ["o_custkey"])
-    return zonemap_pruned_read(spark, path, zm, "o_custkey", 100, 200)
+    clustered = zorder_cluster(orders, ["o_custkey", "o_totalprice"], n_files=8)
+    txlog.create_table(clustered, path, stats_cols=["o_custkey"])
+    return txlog.read_pruned(spark, path, "o_custkey", 100, 200)
 
 
 _TXLOG_INCR_ORACLE = """
@@ -1072,47 +1067,91 @@ WHERE o_orderkey IN {_BLOOM_KEYS}
 """
 
 
-def _bloom_setup(spark: SparkSession, sf_dir: str):
-    """SETUP: write orders HASH-distributed on o_orderkey and build
-    the per-file Bloom sidecar — in a deployment this cost is paid
-    once and amortized over every subsequent point lookup."""
-    import tempfile
+#: Per-file Bloom bitmap size: 10 bits per key with 3 hashes is a
+#: ~2% false-positive rate per file; a false positive only costs an
+#: extra file open, never correctness.
+_BLOOM_BITS_PER_KEY = 10
+_BLOOM_FILE_HASHES = 3
 
-    from dss_nlp_ingestion_spark.sources.layout import build_bloom_index
+
+def _bloom_setup(spark: SparkSession, sf_dir: str):
+    """SETUP: write orders HASH-distributed on o_orderkey, then build
+    the per-file Bloom index (operators/bloom.py:bloom_build grouped
+    by file) and store it next to the table — in a deployment this
+    cost is paid once and amortized over every subsequent point
+    lookup. The bitmap is sized from the largest file's footer row
+    count, so it does not saturate as the table grows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from dss_nlp_ingestion_spark.operators.bloom import bloom_build
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="dss_bloom_") + "/orders"
+    root = tempfile.mkdtemp(prefix="dss_bloom_")
+    path, index_path = root + "/orders", root + "/orders_bloom"
     orders.repartition(8, "o_orderkey").write.mode("overwrite").parquet(path)
-    return path, build_bloom_index(spark, path, "o_orderkey")
+    per_file = max(
+        pq.read_metadata(f).num_rows for f in glob.glob(path + "/*.parquet")
+    )
+    m_bits = 64 * (_BLOOM_BITS_PER_KEY * per_file // 64 + 1)
+    index = bloom_build(
+        spark.read.schema(orders.schema)
+        .parquet(path)
+        .withColumn("_file", F.input_file_name()),
+        "o_orderkey",
+        m_bits,
+        _BLOOM_FILE_HASHES,
+        group_cols=["_file"],
+    )
+    index.write.mode("overwrite").parquet(index_path)
+    return (
+        orders.schema,
+        spark.read.schema(index.schema).parquet(index_path),
+        m_bits,
+    )
 
 
 def _bloom_probe(spark: SparkSession, ctx) -> DataFrame:
-    """PROBE — point-lookup file skipping via a Bloom index
-    (sources/layout.py:build_bloom_index): the hash-distributed
-    layout is where zone maps prune nothing (every file's min/max
-    spans the whole key range) but a per-file Bloom set prunes almost
+    """PROBE — point-lookup file skipping via a per-file Bloom index
+    (operators/bloom.py:bloom_matches): the hash-distributed layout
+    is where min/max stats prune nothing (every file's range spans
+    the whole key space) but a per-file Bloom bitmap prunes almost
     everything (each key lives in exactly one file; false positives
-    only cost an extra open). Hash match vs the plain IN-filter
-    proves no-false-negative pruning; the fewer-files-opened effect
-    is asserted in tests/test_layout.py; the probe itself is
-    shuffle-free (plan-locked). At 100 TB this is the sidecar index
-    in front of a needle-in-haystack lookup that would otherwise
-    scan every file."""
-    from dss_nlp_ingestion_spark.sources.layout import bloom_pruned_read
+    only cost an extra open); only the kept file names reach the
+    driver. Hash match vs the plain IN-filter proves
+    no-false-negative pruning; the fewer-files-opened effect and the
+    broadcast side are asserted in tests/test_layout.py. At 100 TB
+    this is the sidecar index in front of a needle-in-haystack lookup
+    that would otherwise scan every file."""
+    from dss_nlp_ingestion_spark.operators.bloom import bloom_matches
 
-    path, idx = ctx
-    return bloom_pruned_read(spark, path, idx, "o_orderkey", list(_BLOOM_KEYS))
+    schema, index, m_bits = ctx
+    key_type = schema["o_orderkey"].dataType
+    keys = spark.range(1).select(
+        F.explode(F.array(*[F.lit(k).cast(key_type) for k in _BLOOM_KEYS]))
+        .alias("o_orderkey")
+    )
+    kept = bloom_matches(index, keys, "o_orderkey", m_bits, _BLOOM_FILE_HASHES)
+    # No kept file reads as an empty frame: the schema is given.
+    files = [r["_file"] for r in kept.select("_file").collect()]
+    return (
+        spark.read.schema(schema)
+        .parquet(*files)
+        .filter(F.col("o_orderkey").isin(list(_BLOOM_KEYS)))
+    )
 
 
 register_split(
     "bloom_pruned_orders", _bloom_setup, _bloom_probe, _BLOOM_ORACLE,
     tag=(
-        "probe = Bloom-sidecar file-skip lifecycle (broadcast keep-list "
-        "join + pruned multi-file scan). At scale the probe is O(kept "
-        "files), not O(rows) — "
-        "plan-locked shuffle-free in tests/test_layout.py"
+        "probe = Bloom-index file-skip lookup (keys broadcast into a "
+        "left-semi join over the stored per-file index, then a pruned "
+        "multi-file scan); the index build is the setup half. At scale "
+        "the probe is O(files) index rows plus O(kept files) data, "
+        "not O(rows)"
     ),
 )
 
@@ -2431,6 +2470,12 @@ TAGS["cogrouped_conversion_stats"] = (
 TAGS["udtf_chunk_explode"] = (
     "documented-slow: Python UDTF row path for SQL-only consumers; the "
     "codegen HOF chunker (chunk_dedup_docs) is the hot-path form"
+)
+TAGS["zonemap_pruned_orders"] = (
+    "one query times the whole lifecycle: Z-cluster (min/max "
+    "aggregate + range-partitioned write) into a tx table whose "
+    "create commit logs per-file min/max from the footers, then a "
+    "read planned from those stats; the write dominates at toy SF"
 )
 TAGS["txlog_optimize_zorder"] = (
     "N-commit OPTIMIZE lifecycle measured end-to-end (append commits + "

@@ -1,6 +1,5 @@
-"""Data-layout maintenance: Z-order clustering for multi-dimensional
-file skipping (the Delta ``OPTIMIZE ZORDER BY`` / Iceberg sort-order
-analog, on raw parquet).
+"""Z-order clustering for multi-dimensional file skipping (the Delta
+``OPTIMIZE ZORDER BY`` / Iceberg sort-order analog).
 
 Why it matters at 100 TB: parquet scans prune row groups by min/max
 statistics. A table sorted by one column skips perfectly on that
@@ -9,10 +8,13 @@ columns' normalized ranks (a Morton/Z-curve) gives every clustered
 column locality, so a 2-predicate query skips most files on both
 dimensions. The operator is pure DataFrame work: two-pass min/max
 normalization (one tiny aggregate, broadcast), bit interleave as
-codegen'd integer expressions, ``repartitionByRange`` +
-``sortWithinPartitions`` on the curve key, then a plain parquet
-write — no table format required, and the write parallelism is the
-range partitioning, not a global sort bottleneck.
+codegen'd integer expressions, then ``repartitionByRange`` +
+``sortWithinPartitions`` on the curve key — the write parallelism is
+the range partitioning, not a global sort bottleneck. Callers write
+the clustered frame themselves; the tx-log table
+(``txlog.create_table(..., stats_cols=...)``, ``txlog.optimize_zorder``)
+logs each file's min/max at commit, and ``txlog.read_pruned`` skips
+files from those stats.
 """
 
 from __future__ import annotations
@@ -55,19 +57,18 @@ def morton_interleave(cols: Sequence[Column], bits: int = ZORDER_BITS) -> Column
     return key
 
 
-def zorder_write(
+def zorder_cluster(
     df: DataFrame,
-    path: str,
     zorder_cols: Sequence[str],
-    n_files: int = 8,
+    n_files: int,
     bits: int = ZORDER_BITS,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered along the
-    Z-curve of ``zorder_cols``: each file covers a compact hyper-
-    rectangle of the clustered space, so min/max row-group stats
-    prune multi-dimensional predicates. Two jobs: a one-row min/max
-    aggregate (broadcast into the scan-side key expression) and the
-    range-partitioned write itself."""
+) -> DataFrame:
+    """``df`` in ``n_files`` partitions clustered along the Z-curve of
+    ``zorder_cols``: written out, each file covers a compact hyper-
+    rectangle of the clustered space, so per-file min/max stats prune
+    predicates on any of the columns. One job here (the one-row
+    min/max aggregate, broadcast into the key expression as literals);
+    the range partitioning runs with the caller's write."""
     stats = df.agg(
         *[F.min(c).alias(f"_min_{c}") for c in zorder_cols],
         *[F.max(c).alias(f"_max_{c}") for c in zorder_cols],
@@ -78,144 +79,9 @@ def zorder_write(
         )
         for c in zorder_cols
     ]
-    keyed = df.withColumn("_z", morton_interleave(normed, bits))
-    (
-        keyed.repartitionByRange(n_files, "_z")
+    return (
+        df.withColumn("_z", morton_interleave(normed, bits))
+        .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
-
-
-def build_zonemap(
-    spark: "SparkSession", path: str, stat_cols: Sequence[str]
-) -> DataFrame:
-    """File-level zone map: one row per parquet file with min/max of
-    ``stat_cols`` — the skipping index parquet keeps per row group,
-    lifted to file granularity so the DRIVER can prune the file list
-    before Spark even plans the scan (parquet row-group pruning then
-    still applies inside each surviving file). One scan builds it;
-    amortized over every subsequent selective query. The zone map is
-    O(files) rows — catalog-sized, fine to collect."""
-    df = spark.read.parquet(path).withColumn("_file", F.input_file_name())
-    aggs = []
-    for c in stat_cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return df.groupBy("_file").agg(*aggs)
-
-
-def zonemap_pruned_read(
-    spark: "SparkSession",
-    path: str,
-    zonemap: DataFrame,
-    col: str,
-    lo,
-    hi,
-) -> DataFrame:
-    """Read only the files whose [min, max] range overlaps [lo, hi],
-    then apply the exact predicate. Equivalent to the full scan +
-    filter by construction (a file outside the range can't hold a
-    matching row); the win is that non-overlapping files are never
-    opened. Returns the filtered DataFrame; the pruned file count is
-    observable via ``zonemap`` for tests/monitoring."""
-    keep = [
-        r["_file"]
-        for r in zonemap.filter(
-            (F.col(f"max_{col}") >= F.lit(lo)) & (F.col(f"min_{col}") <= F.lit(hi))
-        ).collect()
-    ]
-    if not keep:
-        return spark.read.parquet(path).filter(F.lit(False))
-    return spark.read.parquet(*keep).filter(F.col(col).between(lo, hi))
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter file skipping (point-lookup complement to the zone map)
-# ---------------------------------------------------------------------------
-
-#: Per-file bitset width / hash count. 4096 bits x 3 hashes holds ~500
-#: distinct keys per file at ~2% false-positive rate; FPs only cost an
-#: extra file open, never correctness.
-BLOOM_BITS = 4096
-BLOOM_HASHES = 3
-
-
-def _bloom_positions(col: Column, n_bits: int, n_hashes: int) -> Column:
-    """k bit positions for a value: xxhash64 under k seeds, folded to
-    [0, n_bits). Codegen'd integer expressions — the same expression
-    is used to build the index and to hash probe keys, so build/probe
-    can never disagree (pmod keeps negatives out)."""
-    return F.array(
-        *[
-            F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(n_bits))
-            for seed in range(n_hashes)
-        ]
-    )
-
-
-def build_bloom_index(
-    spark: "SparkSession",
-    path: str,
-    col: str,
-    n_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
-    """File-level Bloom index: one row per parquet file with the SET
-    of bit positions its values light up (a sparse bitset — exact set
-    semantics, so membership tests are standard Bloom semantics: maybe
-    -> open file, definitely-not -> skip). Zone maps prune RANGE
-    predicates on clustered columns; the Bloom index prunes POINT
-    lookups on columns the layout is NOT sorted by — hash-distributed
-    files have full-range min/max (zone map useless) but each file
-    holds only ~1/n of the keys, which is exactly what a Bloom set
-    captures. O(files x n_bits) rows — catalog-sized."""
-    df = spark.read.parquet(path).withColumn("_file", F.input_file_name())
-    pos = df.select(
-        "_file",
-        F.explode(_bloom_positions(F.col(col), n_bits, n_hashes)).alias("_p"),
-    )
-    return pos.groupBy("_file").agg(F.collect_set("_p").alias("bits"))
-
-
-def bloom_pruned_read(
-    spark: "SparkSession",
-    path: str,
-    index: DataFrame,
-    col: str,
-    keys: Sequence,
-    n_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
-    """Read only the files whose Bloom set admits at least one probe
-    key, then apply the exact ``IN`` predicate. Equivalent to the full
-    scan + filter by construction (Bloom filters have no false
-    negatives). Probe keys are hashed by the SAME Spark expression
-    that built the index (a 1-job, len(keys)-row plan — typed from
-    the table schema so long/int hashing can't diverge)."""
-    field = next(f for f in spark.read.parquet(path).schema.fields if f.name == col)
-    from pyspark.sql.types import StructField, StructType
-
-    probe_df = spark.createDataFrame(
-        [(k,) for k in keys], StructType([StructField(col, field.dataType)])
-    ).select(_bloom_positions(F.col(col), n_bits, n_hashes).alias("pos"))
-    # File-keep decision runs CLUSTER-side: a broadcast left-semi
-    # nested-loop join keeps a file iff some probe's positions are all
-    # set in its Bloom bitset (array_except(pos, bits) empty). Only the
-    # O(kept) surviving file names are collected — at 100 TB (~800k
-    # files) the driver never sees the index rows, and the per-file
-    # membership test is JVM codegen, not a Python loop.
-    keep = [
-        r["_file"]
-        for r in index.join(
-            F.broadcast(probe_df),
-            F.size(F.array_except(F.col("pos"), F.col("bits"))) == 0,
-            "left_semi",
-        )
-        .select("_file")
-        .collect()
-    ]
-    if not keep:
-        return spark.read.parquet(path).filter(F.lit(False))
-    return spark.read.parquet(*keep).filter(F.col(col).isin(list(keys)))

@@ -529,13 +529,6 @@ def added_files_between(path: str, v_from: int, v_to: int) -> list[str]:
     return _file_diff(path, v_from, v_to)[0]
 
 
-def removed_files_between(path: str, v_from: int, v_to: int) -> list[str]:
-    """Data files live at v_from but no longer live at v_to — the
-    complement of :func:`added_files_between`; together they are the
-    file-level change feed between two snapshots."""
-    return _file_diff(path, v_from, v_to)[1]
-
-
 def _file_diff(
     path: str, v_from: int, v_to: int
 ) -> tuple[list[str], list[str], _Snapshot]:
@@ -754,35 +747,11 @@ def optimize_zorder(
     that the dominant 2-3 predicate columns all get file-level
     skipping; cost is one full read + range-partitioned write, all
     distributed (the min/max normalization is a one-row aggregate)."""
-    from dss_nlp_ingestion_spark.sources.layout import (
-        ZORDER_BITS,
-        _normalize_to_bits,
-        morton_interleave,
-    )
-    from pyspark.sql import functions as F
+    from dss_nlp_ingestion_spark.sources.layout import zorder_cluster
 
     for _ in range(max_retries):
         snap = _read_snapshot(path)
-        df = _scan(spark, snap)
-        stats = df.agg(
-            *[F.min(c).alias(f"_min_{c}") for c in zorder_cols],
-            *[F.max(c).alias(f"_max_{c}") for c in zorder_cols],
-        ).collect()[0]
-        normed = [
-            _normalize_to_bits(
-                F.col(c),
-                F.lit(stats[f"_min_{c}"]),
-                F.lit(stats[f"_max_{c}"]),
-                ZORDER_BITS,
-            )
-            for c in zorder_cols
-        ]
-        clustered = (
-            df.withColumn("_z", morton_interleave(normed, ZORDER_BITS))
-            .repartitionByRange(target_files, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
+        clustered = zorder_cluster(_scan(spark, snap), zorder_cols, target_files)
         try:
             return rewrite(
                 _unapply_renames(clustered, snap.renames),

@@ -55,6 +55,13 @@ def test_no_unused_module_level_imports():
     assert not unused, "unused imports:\n" + "\n".join(unused)
 
 
+#: The files whose comments and strings the citation checks read.
+_SOURCES = [
+    *sorted(PKG.rglob("*.py")),
+    ROOT / "bench.py",
+    *sorted((ROOT / "tools").glob("*.py")),
+]
+
 #: A ``dir/module.py`` path, not the tail of a longer path.
 _CITED_PATH = re.compile(r"(?<![\w./-])((?:[\w.-]+/)+[\w-]+\.py)\b")
 
@@ -79,13 +86,8 @@ def test_cited_package_paths_exist():
     or to the package, so deleting or moving a module cannot leave a
     stale citation behind. Citations of the reference code (``src/...``)
     are exempt."""
-    sources = [
-        *sorted(PKG.rglob("*.py")),
-        ROOT / "bench.py",
-        *sorted((ROOT / "tools").glob("*.py")),
-    ]
     stale = []
-    for path in sources:
+    for path in _SOURCES:
         for line, text in _comments_and_docstrings(path.read_text(encoding="utf-8")):
             for cited in _CITED_PATH.findall(text):
                 if cited.startswith("src/"):
@@ -93,3 +95,47 @@ def test_cited_package_paths_exist():
                 if not ((ROOT / cited).exists() or (PKG / cited).exists()):
                     stale.append(f"{path.relative_to(ROOT)}:{line}: {cited}")
     assert not stale, "cited paths that do not exist:\n" + "\n".join(stale)
+
+
+#: A ``path.py:name`` or ``path.py::name`` citation of a definition.
+_CITED_NAME = re.compile(r"(?<![\w./-])((?:[\w.-]+/)*[\w-]+\.py)::?([A-Za-z_]\w*)")
+
+
+def _top_level_names(path: pathlib.Path) -> set[str]:
+    """The defs, classes and assigned constants at a module's top level."""
+    names = set()
+    for node in ast.parse(path.read_text(encoding="utf-8")).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return names
+
+
+def test_cited_names_exist():
+    """Every ``path.py:name`` or ``path.py::name`` a comment or string
+    of the package, ``bench.py`` or ``tools/`` cites names a top-level
+    def, class or constant of that module, so deleting or renaming a
+    function cannot leave a stale citation behind. String tokens are
+    read one at a time, so a citation split across implicitly joined
+    literals is reported by its broken half. Citations of the
+    reference code (``src/...``) and line citations (``path.py:12``)
+    are exempt."""
+    stale = []
+    for path in _SOURCES:
+        src = path.read_text(encoding="utf-8")
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+            if tok.type not in (tokenize.COMMENT, tokenize.STRING):
+                continue
+            for m in _CITED_NAME.finditer(tok.string):
+                cited, name = m.groups()
+                if cited.startswith("src/"):
+                    continue
+                module = next(
+                    (p for p in (ROOT / cited, PKG / cited) if p.exists()), None
+                )
+                if module is None or name not in _top_level_names(module):
+                    line = tok.start[0] + tok.string.count("\n", 0, m.start())
+                    stale.append(f"{path.relative_to(ROOT)}:{line}: {cited}:{name}")
+    assert not stale, "cited names that do not exist:\n" + "\n".join(stale)

@@ -401,9 +401,9 @@ def render(results: list[dict]) -> str:
         "cut 0.6479; per-row diff: +5 OOV-contrastive rows, -6 "
         "negated-OOV rows, rest world-knowledge noise). Decision: "
         "v2 stays the default/gate model; the v3 architecture ships "
-        "as a tested, retrain-pinned variant "
-        "(tests/test_functions_unit.py::test_subword_sentiment_"
-        "variant_provenance_and_capability) selectable by artifact "
+        "as a tested, retrain-pinned variant ("
+        "tests/test_functions_unit.py::test_subword_sentiment_variant_provenance_and_capability"
+        ") selectable by artifact "
         "path. Eval queries spent this round: two (the selection "
         "ran on carriers).",
         "",
