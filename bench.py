@@ -322,12 +322,16 @@ def main() -> None:
     # Skew-guard demonstration (verdict r2 ask #6): synthetic hot-key
     # fixtures, three arms each for the bucket self-join and the
     # fact-dim join — see dss_nlp_ingestion_spark/bench_support.py.
-    from dss_nlp_ingestion_spark.bench_support import run_skew_demo
+    # An ONLY run skips it: its ~30 s would dwarf the rows asked for.
+    if ONLY:
+        skew = {"skipped": "SPARK_GRAFT_ONLY"}
+    else:
+        from dss_nlp_ingestion_spark.bench_support import run_skew_demo
 
-    try:
-        skew = run_skew_demo(spark)
-    except Exception as exc:  # noqa: BLE001 — demo must not kill the record
-        skew = {"err": f"{type(exc).__name__}: {exc}"[:500]}
+        try:
+            skew = run_skew_demo(spark)
+        except Exception as exc:  # noqa: BLE001 — demo must not kill the record
+            skew = {"err": f"{type(exc).__name__}: {exc}"[:500]}
     mark("skew_demo_done")
 
     # The full record (per-query map, headline list, skew demo) goes to

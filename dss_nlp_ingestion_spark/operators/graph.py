@@ -16,11 +16,15 @@ Each round is a join + aggregate shuffled on the node id, driven by
 :func:`converge` — the driver reads one observed count per round,
 never row data, and NON-CONVERGENCE IS NEVER SILENT: wrong cluster
 labels (hence wrong canonical documents) must not leak out quietly.
+:func:`unroll` runs the same driver for a fixed round count (PageRank
+below, the k-core peel of plans/scale_queries.py), so ``converge`` is
+the one superstep loop of the package.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator, Sequence
+from itertools import islice
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -56,6 +60,24 @@ def converge(
         f"{what} did not converge within {len(steps)} rounds "
         f"({n_changed} rows still changing) — raise the round cap"
     )
+
+
+def unroll(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    changed: Column,
+    what: str,
+) -> DataFrame:
+    """The state after at most ``rounds`` rounds of ``step`` on
+    :func:`converge`: a fixed unroll that ends early at a fixpoint.
+    ``step`` must be a deterministic function of the state, so the
+    early end returns what the full unroll returns. ``islice`` never
+    resumes the driver past its last yield, so the round cap's
+    RuntimeError, which guards open-ended callers, cannot fire."""
+    for state in islice(converge(state, [step] * rounds, changed, what), rounds):
+        pass
+    return state
 
 
 def _sym_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -204,9 +226,9 @@ def pagerank(
     damping: float = 0.85,
     scale: int = 10**9,
 ) -> DataFrame:
-    """Fixed-iteration weighted PageRank as a chain of join+aggregate
-    supersteps — (node, rank) with ranks in INTEGER mass units of
-    ``1/scale`` so the result is bit-identical across engines.
+    """Fixed-iteration weighted PageRank as join+aggregate supersteps
+    on the :func:`converge` driver — (node, rank) with ranks in INTEGER mass units
+    of ``1/scale`` so the result is bit-identical across engines.
 
     Why integer mass: float PageRank sums incoming contributions, and
     float addition is order-dependent — partial-agg order would make
@@ -219,62 +241,52 @@ def pagerank(
     ``rank * w < 2**53`` (holds for graphs up to ~millions of nodes
     at the default scale; lower ``scale`` for bigger graphs).
 
-    Scale design: each iteration is one shuffle on src (contribution
-    join) + one on dst (the sum) over an edge list persisted WITH its
-    out-weight — the same superstep shape as connected_components,
-    no graph library. ``iterations`` is a fixed unroll (lineage
-    depth ~3 joins per step), appropriate for the handful of steps
-    ranking needs; dangling-node mass is dropped (standard
-    simplification), so ranks are comparative, not a distribution.
+    Scale design: ``iterations`` rounds at most, run by :func:`unroll`,
+    which stops early at a round that changes no rank (it returns what
+    the full unroll returns). A round is one contribution join on src,
+    over an edge list persisted WITH its out-weight, and one shuffle on
+    the receiving node: a node's own row (contribution 0, its old rank)
+    rides the same aggregate as its in-contributions, so every node
+    keeps a row without a join against the node list, and the round
+    carries ``_old`` for the changed test. Dangling-node mass is
+    dropped (standard simplification), so ranks are comparative, not a
+    distribution.
     """
     w = F.col(weight_col) if weight_col else F.lit(1)
-    # ``nodes``, ``out`` and ``ew`` all consume the projected edge
-    # list: persisted, the upstream edge pipeline runs once, not once
-    # per consumer. No repartition("src"): at scale the ``ew`` build
-    # is a sort-merge on src, so the cache is already src-partitioned.
+    # ``out``, ``ew`` and the seed all consume the projected edge list:
+    # persisted, the upstream edge pipeline runs once, not once per
+    # consumer. No repartition("src"): at scale the ``ew`` build is a
+    # sort-merge on src, so the cache is already src-partitioned.
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     ).persist()
-    # Both frames are read every superstep; they stay cached for the
-    # loop (node + edge sized) and are released before return.
-    nodes = (
-        e.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-        )
-        .distinct()
-        .persist()
-    )
     out = e.groupBy("src").agg(F.sum("w").alias("wout"))
+    # Read every round; released before return.
     ew = e.join(out, "src").persist()
     base = int((1.0 - damping) * scale)
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
-    for _ in range(iterations):
+    share = F.floor(F.col("rank") * F.col("w") / F.col("wout")).cast("long")
+    new_rank = F.lit(base) + F.floor(F.lit(damping) * F.sum("c"))
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = ew.join(ranks, ew.src == ranks.node).select(
-            "dst",
-            F.floor(F.col("rank") * F.col("w") / F.col("wout"))
-            .cast("long")
-            .alias("c"),
+            F.col("dst").alias("node"), share.alias("c"), F.lit(None).alias("_old")
         )
-        insum = contrib.groupBy("dst").agg(F.sum("c").alias("insum"))
-        ranks = (
-            nodes.join(insum, nodes.node == insum.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.floor(F.lit(damping) * F.coalesce("insum", F.lit(0)))
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-            # Materialize each superstep (node-table-sized) so the
-            # final plan is ONE superstep deep, not iterations-deep —
-            # unbounded lineage is what kills iterative DataFrame
-            # algorithms long before data size does.
-            .localCheckpoint()
+        own = ranks.select("node", F.lit(0).alias("c"), F.col("rank").alias("_old"))
+        return (
+            contrib.unionByName(own)
+            .groupBy("node")
+            .agg(new_rank.cast("long").alias("rank"), F.max("_old").alias("_old"))
         )
-    # The final ranks are materialized (localCheckpoint above); the
-    # working-set caches are dead weight from here on.
-    for cached in (ew, nodes, e):
-        cached.unpersist()
-    return ranks
+
+    seed = (
+        e.select(F.explode(F.array("src", "dst")).alias("node"))
+        .distinct()
+        .withColumn("rank", F.lit(scale).cast("long"))
+    )
+    try:
+        changed = F.col("rank") != F.col("_old")
+        ranks = unroll(seed, step, iterations, changed, "pagerank")
+    finally:  # rounds are checkpointed: nothing still reads these
+        ew.unpersist()
+        e.unpersist()
+    return ranks.select("node", "rank")

@@ -95,9 +95,9 @@ for _name, _note in {
         "the banded path is the scale default"
     ),
     "pagerank_nation_trade": (
-        "fixed 3 power-iteration supersteps (iterations=3), each "
-        "materialized by its own localCheckpoint job, by design; "
-        "per-round data is edge-bounded"
+        "up to 3 power-iteration supersteps (iterations=3) on the "
+        "converge round driver, each materialized by its checkpoint "
+        "job, by design; per-round data is edge-bounded"
     ),
     "reco_fallback_parts": (
         "three-level fallback (item/segment/global) — three "

@@ -139,3 +139,34 @@ def test_cited_names_exist():
                     line = tok.start[0] + tok.string.count("\n", 0, m.start())
                     stale.append(f"{path.relative_to(ROOT)}:{line}: {cited}:{name}")
     assert not stale, "cited names that do not exist:\n" + "\n".join(stale)
+
+
+def _method_call_sites(tree: ast.AST, method: str, scope: str = ""):
+    """The dotted def scope (``outer.inner``; ``""`` at module level)
+    of every ``<expr>.method(...)`` call in ``tree``."""
+    for node in ast.iter_child_nodes(tree):
+        inner = scope
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            inner = f"{scope}.{node.name}" if scope else node.name
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == method
+        ):
+            yield scope
+        yield from _method_call_sites(node, method, inner)
+
+
+def test_one_local_checkpoint_in_converge():
+    """``converge`` is the package's only superstep loop, so it holds
+    the only ``.localCheckpoint(`` call: a loop that cuts lineage on
+    its own bypasses the driver's convergence count and any change to
+    how rounds are materialized."""
+    sites = [
+        f"{path.relative_to(ROOT)}::{scope or '<module>'}"
+        for path in sorted(PKG.rglob("*.py"))
+        for scope in _method_call_sites(
+            ast.parse(path.read_text(encoding="utf-8")), "localCheckpoint"
+        )
+    ]
+    assert sites == ["dss_nlp_ingestion_spark/operators/graph.py::converge"], sites

@@ -36,14 +36,33 @@ def test_kcore_crafted_peels_pendant_chain(spark):
     edges = e.select(F.col("pa").alias("a"), F.col("pb").alias("b")).unionAll(
         e.select(F.col("pb").alias("a"), F.col("pa").alias("b"))
     )
-    out = _peel_rounds(edges, k=3, rounds=4)
-    got = {
-        (r.part, r.degree)
-        for r in out.groupBy(F.col("a").alias("part"))
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .collect()
-    }
-    assert got == {(1, 3), (2, 3), (3, 3), (4, 3)}
+    def degrees(rounds):
+        out = _peel_rounds(edges, k=3, rounds=rounds)
+        return {
+            (r.part, r.degree)
+            for r in out.groupBy(F.col("a").alias("part"))
+            .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+            .collect()
+        }
+
+    assert degrees(4) == {(1, 3), (2, 3), (3, 3), (4, 3)}
+    assert degrees(1) == _brute_force_peel(pairs, k=3, rounds=1)
+
+
+def _brute_force_peel(pairs, k, rounds):
+    """{(node, degree)} after ``rounds`` k-core peel rounds over the
+    undirected ``pairs``: each round keeps the edges whose two
+    endpoints both had degree >= k at the round's start."""
+    edges = {(a, b) for a, b in pairs} | {(b, a) for a, b in pairs}
+    for _ in range(rounds):
+        deg = {}
+        for a, _ in edges:
+            deg[a] = deg.get(a, 0) + 1
+        edges = {(a, b) for a, b in edges if deg[a] >= k and deg[b] >= k}
+    deg = {}
+    for a, _ in edges:
+        deg[a] = deg.get(a, 0) + 1
+    return set(deg.items())
 
 
 def test_funnel_ttc_positive_and_ordered(spark):

@@ -513,6 +513,85 @@ def test_cc_nonconvergence_raises_not_silent(spark):
         connected_components(edges, max_iter=2)
 
 
+def test_converge_fixed_unroll_stops_without_raising(spark):
+    """A caller that stops reading after N rounds gets N rounds and no
+    round-cap error; reading every capped round of a still-changing
+    state raises; past the fixpoint the driver stops by itself."""
+    from itertools import islice
+
+    from dss_nlp_ingestion_spark.operators.graph import converge
+
+    def climb(state):  # x climbs by one per round until it reaches 10
+        x = F.least(F.col("x") + 1, F.lit(10))
+        return state.select("id", x.alias("x"), F.col("x").alias("_old"))
+
+    seed = spark.range(3).select("id", F.col("id").alias("x"))
+    changed = F.col("x") != F.col("_old")
+    top = [
+        r.agg(F.max("x")).first()[0]
+        for r in islice(converge(seed, [climb] * 3, changed, "climb"), 2)
+    ]
+    assert top == [3, 4]
+    with pytest.raises(RuntimeError, match="climb did not converge within 3 rounds"):
+        list(converge(seed, [climb] * 3, changed, "climb"))
+    # id 0 reaches 10 in round 10; round 11 changes nothing and is the last
+    rounds = list(converge(seed, [climb] * 20, changed, "climb"))
+    assert len(rounds) == 11
+    assert {r.x for r in rounds[-1].collect()} == {10}
+
+
+def _pagerank_replay(edges, iterations, damping, scale):
+    """Pure-Python integer-mass PageRank, round for round the formula
+    of operators/graph.py::pagerank: {node: rank}."""
+    import math
+    from collections import defaultdict
+
+    nodes = {n for s, d, _ in edges for n in (s, d)}
+    wout = defaultdict(int)
+    for s, _, w in edges:
+        wout[s] += w
+    base = int((1.0 - damping) * scale)
+    ranks = dict.fromkeys(nodes, scale)
+    for _ in range(iterations):
+        insum = defaultdict(int)
+        for s, d, w in edges:
+            insum[d] += math.floor(ranks[s] * w / wout[s])
+        ranks = {n: base + math.floor(damping * insum[n]) for n in nodes}
+    return ranks
+
+
+def test_pagerank_matches_integer_replay_and_stops_at_fixpoint(spark):
+    """Node 4 is dangling (no out-edge), node 5 source-only (no
+    in-edge). At damping 0.5 and scale 1000 the replay reaches its
+    fixpoint: round 8 returns round 7's ranks. A call asking for 20
+    rounds must return the same ranks as 8 and run no more jobs."""
+    from dss_nlp_ingestion_spark.operators.graph import pagerank
+
+    graph = [
+        (1, 2, 3), (2, 1, 1), (2, 3, 2), (3, 1, 1), (3, 4, 5), (5, 1, 2), (5, 2, 1)
+    ]
+    kw = {"damping": 0.5, "scale": 1000}
+    fix = 8
+    before, at, after = (_pagerank_replay(graph, n, **kw) for n in (fix - 2, fix - 1, fix))
+    assert before != at == after
+    # Fresh ids, so no cached plan from another test can stand in.
+    edges = spark.createDataFrame(
+        [(s + 2 * 10**6, d + 2 * 10**6, w) for s, d, w in graph],
+        "src long, dst long, w long",
+    )
+    jobs = {}
+    for n in (1, 3, fix, 20):
+        jobs[n], rows = _spark_jobs(
+            spark,
+            f"pagerank-jobs-{n}",
+            lambda: pagerank(edges, weight_col="w", iterations=n, **kw).collect(),
+        )
+        got = {r.node - 2 * 10**6: r.rank for r in rows}
+        assert got == _pagerank_replay(graph, n, **kw), n
+    assert jobs[1] < jobs[3] < jobs[fix]
+    assert jobs[20] == jobs[fix], jobs
+
+
 def test_cjk_char_shingles_catch_mutated_twins(spark):
     from pyspark.sql import functions as SF
 
