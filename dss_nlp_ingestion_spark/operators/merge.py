@@ -41,6 +41,7 @@ def merge_into(
     key_cols: Sequence[str],
     insert_only: bool = False,
     null_safe: bool = False,
+    delete_col: str | None = None,
 ) -> DataFrame:
     """Return ``target`` merged with ``source`` on ``key_cols``:
 
@@ -50,6 +51,12 @@ def merge_into(
     - source rows with no match are inserted (WHEN NOT MATCHED THEN
       INSERT *);
     - target rows with no match are kept.
+
+    ``delete_col`` names a boolean tombstone column on ``source`` (the
+    CDC convention): a flagged source row DELETEs its matched target
+    row (WHEN MATCHED AND <flag> THEN DELETE), and a flagged row whose
+    key is absent from the target is a no-op, as in Delta/Iceberg
+    MERGE. The clause is a filter on the joined relation, not a stage.
 
     ``source`` must have (at least) the target's columns. By default
     the join is PLAIN equality, so NULL merge keys never match (SQL
@@ -64,56 +71,17 @@ def merge_into(
     inspection, so NULL source values are not mistaken for "no match".
     """
     cols = target.columns
+    flag = [] if delete_col is None else [F.col(delete_col).alias("_s_del")]
     src = source.select(
-        [F.col(c).alias(f"_s_{c}") for c in cols]
+        [F.col(c).alias(f"_s_{c}") for c in cols] + flag
     ).withColumn("_s_present", F.lit(True))
     tgt = target.withColumn("_t_present", F.lit(True))
     cond = _key_cond(tgt, src, key_cols, null_safe)
     joined = tgt.join(src, cond, "full_outer")
     has_source = src["_s_present"].isNotNull()
-    has_target = tgt["_t_present"].isNotNull()
-    out = []
-    for c in cols:
-        take_source = has_source & (~has_target if insert_only else F.lit(True))
-        out.append(
-            F.when(take_source, src[f"_s_{c}"]).otherwise(tgt[c]).alias(c)
-        )
-    return joined.select(*out)
-
-
-def merge_into_with_delete(
-    target: DataFrame,
-    source: DataFrame,
-    key_cols: Sequence[str],
-    delete_col: str,
-    null_safe: bool = False,
-) -> DataFrame:
-    """Full MERGE surface: WHEN MATCHED AND source.<delete_col> THEN
-    DELETE / WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
-    INSERT *. ``delete_col`` is a boolean column on ``source``
-    (tombstone flag — the CDC convention); a flagged row whose key is
-    absent from the target is a no-op, matching Delta/Iceberg MERGE.
-    ``null_safe`` as in :func:`merge_into` (``<=>`` keys for GROUP-BY-
-    keyed callers like the matview). Same single full-outer join shape
-    as :func:`merge_into` — the delete clause adds a filter, not a
-    stage."""
-    cols = target.columns
-    src = source.select(
-        [F.col(c).alias(f"_s_{c}") for c in cols]
-        + [F.col(delete_col).alias("_s_del")]
-    ).withColumn("_s_present", F.lit(True))
-    tgt = target.withColumn("_t_present", F.lit(True))
-    cond = _key_cond(tgt, src, key_cols, null_safe)
-    joined = tgt.join(src, cond, "full_outer")
-    has_source = src["_s_present"].isNotNull()
-    has_target = tgt["_t_present"].isNotNull()
-    deleted = has_source & has_target & F.coalesce(src["_s_del"], F.lit(False))
-    insert_noop = has_source & ~has_target & F.coalesce(
-        src["_s_del"], F.lit(False)
+    take_source = has_source & tgt["_t_present"].isNull() if insert_only else has_source
+    if delete_col is not None:
+        joined = joined.filter(~(has_source & F.coalesce(src["_s_del"], F.lit(False))))
+    return joined.select(
+        *[F.when(take_source, src[f"_s_{c}"]).otherwise(tgt[c]).alias(c) for c in cols]
     )
-    kept = joined.filter(~deleted & ~insert_noop)
-    out = [
-        F.when(has_source, src[f"_s_{c}"]).otherwise(tgt[c]).alias(c)
-        for c in cols
-    ]
-    return kept.select(*out)

@@ -613,10 +613,10 @@ def merge_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full three-clause MERGE: tombstone-flagged source rows
     DELETE their matched target row (and no-op when unmatched — the
     CDC convention), unflagged matched rows UPDATE, unmatched rows
-    INSERT (operators/merge.py:merge_into_with_delete). Still ONE
+    INSERT (operators/merge.py:merge_into with ``delete_col``). Still ONE
     full-outer join on the merge key; the delete clause is a filter
     on the joined relation, not an extra stage."""
-    from dss_nlp_ingestion_spark.operators.merge import merge_into_with_delete
+    from dss_nlp_ingestion_spark.operators.merge import merge_into
 
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -635,8 +635,8 @@ def merge_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         (F.col("o_orderkey") % 3000 == 0).alias("is_delete"),
     )
-    merged = merge_into_with_delete(
-        orders, updates.unionByName(inserts), ["o_orderkey"], "is_delete"
+    merged = merge_into(
+        orders, updates.unionByName(inserts), ["o_orderkey"], delete_col="is_delete"
     )
     return merged.select(
         "o_orderkey",

@@ -23,14 +23,18 @@ log-structured core those formats share, pure stdlib + Spark:
   orphan data files (cleaned by ``vacuum``), never a torn table.
 - ``read(..., version=N)`` is time travel; ``history`` lists commits.
 
-One fold, one commit loop: every reader and writer takes a version's
-live files, per-file stats and rename chain from ONE call,
-:func:`_fold`, never from separate replays. The fold resumes from the
-newest checkpoint at or below the version (see :func:`checkpoint_log`)
-and replays only the entries after it; a checkpoint that is torn or
-lacks any of ``live`` / ``renames`` is ignored, because a checkpoint is
-only an optimization. Every commit that claims ``head + 1`` goes
-through :func:`_commit_next`.
+One fold, one commit loop, one rewrite loop: every reader and writer
+takes a version's live files, per-file stats and rename chain from ONE
+call, :func:`_fold`, never from separate replays. The fold resumes from
+the newest checkpoint at or below the version (see
+:func:`checkpoint_log`) and replays only the entries after it; a
+checkpoint that is torn or lacks any of ``live`` / ``renames`` is
+ignored, because a checkpoint is only an optimization. Every commit
+that claims ``head + 1`` goes through :func:`_commit_next`. Every
+copy-on-write job (MERGE, DELETE, UPDATE, compaction, Z-order) picks
+the files whose rows change, rewrites them and retries a conflict in
+ONE loop, :func:`_cow_rewrite`; each job supplies only its row match,
+its transform and its pruning ranges.
 
 Scale note: the log is O(commits) tiny JSON files; state folding is
 driver-side metadata work (like Delta's log replay), while data stays
@@ -468,21 +472,11 @@ def compact(
     scans into open()-bound metadata storms. Concurrent APPENDS
     commute with the rewrite (disjoint files); a concurrent rewrite
     of the same base raises ``TxConflictError`` and is retried here
-    against the fresh snapshot."""
-    for _ in range(max_retries):
-        snap = _read_snapshot(path)
-        # _scan yields the LOGICAL schema; fold back so compacted
-        # files keep the physical-schema invariant (a concurrent
-        # append of a pre-rename producer would otherwise mix
-        # generations under mergeSchema).
-        df = _unapply_renames(_scan(spark, snap), snap.renames).coalesce(target_files)
-        try:
-            return rewrite(
-                df, path, snap.live, expect_version=snap.version, op="compact"
-            )
-        except TxConflictError:
-            continue
-    raise TxConflictError(f"compaction lost {max_retries} rewrite races at {path}")
+    against the fresh snapshot. An empty snapshot raises ValueError."""
+    return _cow_rewrite(
+        spark, path, "compact", lambda df: df.coalesce(target_files),
+        max_retries=max_retries,
+    )["version"]
 
 
 def vacuum(path: str, grace_seconds: float = 3600.0) -> list[str]:
@@ -749,21 +743,11 @@ def optimize_zorder(
     distributed (the min/max normalization is a one-row aggregate)."""
     from dss_nlp_ingestion_spark.sources.layout import zorder_cluster
 
-    for _ in range(max_retries):
-        snap = _read_snapshot(path)
-        clustered = zorder_cluster(_scan(spark, snap), zorder_cols, target_files)
-        try:
-            return rewrite(
-                _unapply_renames(clustered, snap.renames),
-                path,
-                snap.live,
-                expect_version=snap.version,
-                op="zorder",
-                stats_cols=_physical_names(zorder_cols, snap.renames),
-            )
-        except TxConflictError:
-            continue
-    raise TxConflictError(f"zorder lost {max_retries} rewrite races at {path}")
+    return _cow_rewrite(
+        spark, path, "zorder",
+        lambda df: zorder_cluster(df, zorder_cols, target_files),
+        stats_cols=zorder_cols, max_retries=max_retries,
+    )["version"]
 
 
 def vacuum_retain(path: str, horizon_version: int) -> dict:
@@ -941,24 +925,25 @@ def merge_into_table(
     null_safe: bool = False,
 ) -> dict:
     """ACID ``MERGE INTO`` on a tx table — the Delta/Iceberg merge
-    plan re-expressed over this log: (1) PRUNE candidate files from
-    the commit-logged key stats (driver-side metadata, no scan),
-    (2) FIND the exact touched files with one semi-join of candidates
-    against the source keys (files whose rows can never match are
-    never rewritten), (3) rewrite ONLY the touched files through the
-    COW join in :mod:`..operators.merge`, committed atomically with
-    ``rewrite``; a source with no matches anywhere degrades to a
-    blind (retryable) append. Cost is O(files holding matched keys) +
-    O(source), not O(table), only when keys are clustered by file, so
-    that each file's min/max key range covers a slice of the key space
-    and the stats prune the rest. On hash keys, such as the paper's
-    ``unique_identifier``, every file's range spans the key space,
-    nothing is pruned, and a handful of matched keys spread over the
-    store rewrites every file: a traced ``perfbench`` ``upsert_stream``
-    batch touched 4 of 4 files (``merge_prune_frac`` 0) and wrote 452
-    rows for 43 source rows (ROADMAP D6). The reference's upsert analog,
-    the ES ``_id``-keyed bulk index (src/base.py:239-253), rewrites
-    documents, never the store.
+    plan, run on the copy-on-write loop :func:`_cow_rewrite`: (1) PRUNE
+    candidate files by the source's key bounds against the
+    commit-logged key stats (one aggregate job, then driver-side
+    metadata), (2) FIND the exact touched files with one semi-join of
+    the candidates against the distinct source keys (files whose rows
+    can never match are never rewritten), (3) rewrite ONLY the touched
+    files through :func:`..operators.merge.merge_into`, committed
+    atomically with ``rewrite``; a source with no matches anywhere
+    degrades to a blind (retryable) append. Cost is O(files holding
+    matched keys) + O(source), not O(table), only when keys are
+    clustered by file, so that each file's min/max key range covers a
+    slice of the key space and the stats prune the rest. On hash keys,
+    such as the paper's ``unique_identifier``, every file's range spans
+    the key space, nothing is pruned, and a handful of matched keys
+    spread over the store rewrites every file: a traced ``perfbench``
+    ``upsert_stream`` batch touched 4 of 4 files (``merge_prune_frac``
+    0) and wrote 452 rows for 43 source rows (ROADMAP D6). The
+    reference's upsert analog, the ES ``_id``-keyed bulk index
+    (src/base.py:239-253), rewrites documents, never the store.
 
     Isolation matches Delta's default WriteSerializable: concurrent
     blind appends commute with the merge commit (their rows were not
@@ -972,25 +957,31 @@ def merge_into_table(
     ``_op_type='create'`` load, src/base.py:155-196): the candidate
     files' keys anti-join the source, only the unmatched source rows
     are appended, and no file is rewritten, so a replay commits
-    nothing (with ``txn``, one stamped entry that adds no file).
+    nothing (with ``txn``, one stamped entry that adds no file). A
+    ``txn`` = (app_id, epoch) already committed skips the whole merge.
     ``null_safe`` compares keys with ``<=>`` — for GROUP-BY-keyed
     callers (matview refresh) where NULL is an ordinary key value; it
     also disables stat pruning when the source carries a NULL key,
     because parquet min/max stats ignore NULLs, so a file holding
-    NULL-keyed rows can sit outside every stats range. Returns a summary dict:
-    version committed, files touched/total/stat-skipped, whether the
-    commit degraded to an append, and ``rows_written``: the rows in
-    the data files the commit added, summed from their parquet footers
-    on the driver (no Spark job)."""
+    NULL-keyed rows can sit outside every stats range. Returns
+    :func:`_cow_rewrite`'s summary (version committed, files
+    touched/total/stat-skipped, ``rows_written``) plus whether the
+    commit degraded to an append and whether a replay was skipped."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
-    from dss_nlp_ingestion_spark.operators.merge import (
-        _key_cond,
-        merge_into,
-        merge_into_with_delete,
-    )
+    from dss_nlp_ingestion_spark.operators.merge import _key_cond, merge_into
 
+    if txn is not None and last_committed_txn(path, txn[0]) >= txn[1]:
+        return {
+            "version": _versions(path)[-1],
+            "files_touched": 0,
+            "files_total": 0,
+            "files_skipped_by_stats": 0,
+            "rows_written": 0,
+            "appended": False,
+            "skipped": True,
+        }
     # The merge reads ``source`` three times (pruning bounds, touched-
     # file semi-join, COW rewrite), and for CDC / matview callers it is
     # a whole net-changes pipeline, so it is cached for the call: it is
@@ -1000,129 +991,64 @@ def merge_into_table(
     if owned:
         source = source.persist()
     try:
-        last_err: TxConflictError | None = None
-        for _ in range(max_retries):
-            snap = _fold(path)
-            if snap.version < 0:
-                raise ValueError(f"no tx table at {path}")
-            if txn is not None and last_committed_txn(path, txn[0]) >= txn[1]:
-                return {
-                    "version": snap.version,
-                    "files_touched": 0,
-                    "files_total": 0,
-                    "files_skipped_by_stats": 0,
-                    "appended": False,
-                    "skipped": True,
-                    "rows_written": 0,
-                }
-            candidates, skipped = snap.files, 0
-            if len(key_cols) == 1:
-                key = key_cols[0]
-                # One aggregate job yields the pruning bounds AND (for
-                # the null-safe path) whether any source key is NULL —
-                # min/max ignore NULLs, so NULL presence needs its own
-                # flag.
-                bounds = source.agg(
-                    F.min(key).alias("lo"),
-                    F.max(key).alias("hi"),
-                    F.max(F.col(key).isNull().cast("int")).alias("has_null"),
-                ).collect()[0]
-                if bounds["lo"] is not None and not (
-                    null_safe and bounds["has_null"]
-                ):
-                    candidates, skipped = _prune(
-                        snap, {key: (bounds["lo"], bounds["hi"])}
-                    )
-            res = {
-                "version": snap.version,
-                "files_touched": 0,
-                "files_total": len(snap.live),
-                "files_skipped_by_stats": skipped,
-                "appended": False,
-                "skipped": False,
-                "rows_written": 0,
-            }
-            touched: list[str] = []
+        ranges = {}
+        if len(key_cols) == 1:
+            key = key_cols[0]
+            # One aggregate job yields the pruning bounds AND (for the
+            # null-safe path) whether any source key is NULL — min/max
+            # ignore NULLs, so NULL presence needs its own flag.
+            bounds = source.agg(
+                F.min(key).alias("lo"),
+                F.max(key).alias("hi"),
+                F.max(F.col(key).isNull().cast("int")).alias("has_null"),
+            ).collect()[0]
+            if bounds["lo"] is not None and not (null_safe and bounds["has_null"]):
+                ranges = {key: (bounds["lo"], bounds["hi"])}
+        prefixed = [F.col(k).alias(f"_s_{k}") for k in key_cols]
+
+        def append_unmatched(snap: _Snapshot, candidates: list, res: dict) -> dict:
+            # Nothing to rewrite: a pure insert commutes with every
+            # concurrent commit -> blind retryable append (folded to the
+            # physical schema like any append).
             inserts = source
-            if candidates:
-                # Source keys target the LOGICAL schema, which _scan
-                # resolves like every other snapshot reader.
-                cand = _scan(spark, snap, candidates)
-                prefixed = [F.col(k).alias(f"_s_{k}") for k in key_cols]
-                if insert_only:
-                    tgt_keys = cand.select(*prefixed)
-                    inserts = source.join(
-                        tgt_keys,
-                        _key_cond(source, tgt_keys, key_cols, null_safe),
-                        "left_anti",
-                    )
-                else:
-                    cand_keys = cand.select(
-                        *key_cols, F.input_file_name().alias("_f")
-                    )
-                    src_keys = source.select(*prefixed).distinct()
-                    touched = _touched_files(
-                        cand_keys.join(
-                            src_keys,
-                            _key_cond(cand_keys, src_keys, key_cols, null_safe),
-                            "left_semi",
-                        )
-                    )
-            if not touched:
-                # Nothing to rewrite: a pure insert commutes with every
-                # concurrent commit -> blind retryable append (folded
-                # to the physical schema like any append).
-                if delete_col is not None:
-                    inserts = inserts.filter(
-                        ~F.coalesce(F.col(delete_col), F.lit(False))
-                    ).drop(delete_col)
-                if inserts.isEmpty():
-                    if txn is not None:
-                        # the watermark must still advance: commit a
-                        # stamped entry that adds no file, else CDC/
-                        # matview consumers re-scan an ever-growing
-                        # source window
-                        stamp = {"op": "append", "add": [], "remove": [],
-                                 "txn": {"app": txn[0], "epoch": int(txn[1])}}
-                        res["version"] = _commit_next(
-                            path, lambda head: stamp, "append"
-                        )
-                    return res
-                res["version"] = _append(
-                    inserts, path, stats_cols, 10, txn, snap.renames
+            if insert_only and candidates:
+                tgt_keys = _scan(spark, snap, candidates).select(*prefixed)
+                inserts = source.join(
+                    tgt_keys,
+                    _key_cond(source, tgt_keys, key_cols, null_safe),
+                    "left_anti",
                 )
-                res["appended"] = True
-                res["rows_written"] = _rows_added(path, res["version"])
-                return res
-            target_touched = _scan(spark, snap, touched)
             if delete_col is not None:
-                merged = merge_into_with_delete(
-                    target_touched, source, key_cols, delete_col,
-                    null_safe=null_safe,
-                )
-            else:
-                merged = merge_into(
-                    target_touched, source, key_cols, null_safe=null_safe
-                )
-            try:
-                res["version"] = rewrite(
-                    _unapply_renames(merged, snap.renames),
-                    path,
-                    [_stored_name(path, f) for f in touched],
-                    expect_version=snap.version,
-                    op="merge",
-                    stats_cols=_physical_names(stats_cols, snap.renames),
-                    txn=txn,
-                )
-            except TxConflictError as exc:
-                last_err = exc
-                continue
-            res["files_touched"] = len(touched)
+                inserts = inserts.filter(
+                    ~F.coalesce(F.col(delete_col), F.lit(False))
+                ).drop(delete_col)
+            if inserts.isEmpty():
+                if txn is not None:
+                    # the watermark must still advance: commit a stamped
+                    # entry that adds no file, else CDC/matview consumers
+                    # re-scan an ever-growing source window
+                    stamp = {"op": "append", "add": [], "remove": [],
+                             "txn": {"app": txn[0], "epoch": int(txn[1])}}
+                    res["version"] = _commit_next(path, lambda head: stamp, "append")
+                return res
+            res["version"] = _append(inserts, path, stats_cols, 10, txn, snap.renames)
+            res["appended"] = True
             res["rows_written"] = _rows_added(path, res["version"])
             return res
-        raise TxConflictError(
-            f"merge lost {max_retries} commit races at {path}: {last_err}"
+
+        src_keys = source.select(*prefixed).distinct()
+        res = _cow_rewrite(
+            spark, path, "merge",
+            None if insert_only else lambda tgt: merge_into(
+                tgt, source, key_cols, null_safe=null_safe, delete_col=delete_col
+            ),
+            match=lambda cand: cand.join(
+                src_keys, _key_cond(cand, src_keys, key_cols, null_safe), "left_semi"
+            ),
+            ranges=ranges, stats_cols=stats_cols, max_retries=max_retries,
+            txn=txn, untouched=append_unmatched,
         )
+        return {"appended": False, **res, "skipped": False}
     finally:
         if owned:
             source.unpersist()
@@ -1201,13 +1127,14 @@ def delete_from_table(
     rewritten without their matching rows, atomically. Files with no
     matches are never read again, never rewritten. ``predicate`` is a
     SQL expression string evaluated by Spark (same text can run in
-    the oracle)."""
+    the oracle). Returns :func:`_cow_rewrite`'s summary."""
     from pyspark.sql import functions as F
 
     return _cow_rewrite(
-        spark, path, "delete", predicate,
-        lambda tgt: tgt.filter(~F.expr(predicate)),
-        prune_col, prune_lo, prune_hi, stats_cols, max_retries,
+        spark, path, "delete", lambda tgt: tgt.filter(~F.expr(predicate)),
+        match=lambda cand: cand.filter(F.expr(predicate)),
+        ranges={} if prune_col is None else {prune_col: (prune_lo, prune_hi)},
+        stats_cols=stats_cols, max_retries=max_retries,
     )
 
 
@@ -1248,8 +1175,10 @@ def update_table(
         )
 
     return _cow_rewrite(
-        spark, path, "update", predicate, transform,
-        prune_col, prune_lo, prune_hi, stats_cols, max_retries,
+        spark, path, "update", transform,
+        match=lambda cand: cand.filter(F.expr(predicate)),
+        ranges={} if prune_col is None else {prune_col: (prune_lo, prune_hi)},
+        stats_cols=stats_cols, max_retries=max_retries,
     )
 
 
@@ -1257,48 +1186,61 @@ def _cow_rewrite(
     spark: SparkSession,
     path: str,
     op: str,
-    predicate: str,
     transform,
-    prune_col: str | None,
-    prune_lo,
-    prune_hi,
-    stats_cols: list[str] | None,
-    max_retries: int,
+    match=None,
+    ranges: dict | None = None,
+    stats_cols: list[str] | None = None,
+    max_retries: int = 3,
+    txn: tuple[str, int] | None = None,
+    untouched=None,
 ) -> dict:
-    """The loop DELETE and UPDATE share: prune candidates from the
-    logged stats, find the files holding rows that match ``predicate``,
-    rewrite only those through ``transform`` (a function of the
-    touched files' LOGICAL-schema rows) and retry the whole plan on a
-    rewrite conflict. Predicates are written against the LOGICAL
-    schema, which :func:`_scan` resolves."""
+    """THE copy-on-write loop: MERGE, DELETE, UPDATE, compaction and
+    Z-order all rewrite through it, and it is the module's only caller
+    of :func:`rewrite`. Each pass (1) folds the snapshot, (2) prunes
+    candidate files by their logged stats for ``ranges`` ({col: (lo,
+    hi)}, LOGICAL names), (3) finds the touched files with one
+    ``input_file_name()`` pass of ``match``, a function of the
+    candidates' rows that keeps the rows to change, (4) rewrites the
+    touched files through ``transform``, a function of their
+    LOGICAL-schema rows (:func:`_scan` resolves renames), committed
+    with ``rewrite(..., txn=txn)``, and (5) on a ``TxConflictError``
+    reruns the whole plan against the fresh snapshot.
+
+    ``match`` None touches every live file without a scan (compaction
+    and Z-order); those read through :func:`_read_snapshot`, so an
+    empty snapshot raises. ``transform`` None rewrites nothing (the
+    insert-only MERGE). When nothing is rewritten the pass returns
+    ``untouched(snap, candidates, res)`` if given, else the summary
+    ``res``: the version, files touched / total / skipped by stats,
+    and ``rows_written`` (:func:`_rows_added`, no Spark job)."""
     from pyspark.sql import functions as F
 
     last_err: TxConflictError | None = None
     for _ in range(max_retries):
-        snap = _fold(path)
+        snap = _read_snapshot(path) if match is None else _fold(path)
         if snap.version < 0:
             raise ValueError(f"no tx table at {path}")
-        candidates, skipped = snap.files, 0
-        if prune_col is not None:
-            candidates, skipped = _prune(snap, {prune_col: (prune_lo, prune_hi)})
-        touched = (
-            _touched_files(
-                _scan(spark, snap, candidates)
-                .withColumn("_f", F.input_file_name())
-                .filter(F.expr(predicate))
-            )
-            if candidates
-            else []
-        )
+        candidates, skipped = _prune(snap, ranges or {})
+        if transform is None or not candidates:
+            touched = []
+        elif match is None:
+            touched = candidates
+        else:
+            cand = _scan(spark, snap, candidates).withColumn("_f", F.input_file_name())
+            touched = _touched_files(match(cand))
         res = {
             "version": snap.version,
-            "files_touched": len(touched),
+            "files_touched": 0,
             "files_total": len(snap.live),
             "files_skipped_by_stats": skipped,
+            "rows_written": 0,
         }
         if not touched:
-            return res
+            return untouched(snap, candidates, res) if untouched else res
         try:
+            # Fold back to the physical schema: every data file keeps
+            # the physical (pre-rename) column names all snapshot
+            # readers resolve from.
             res["version"] = rewrite(
                 _unapply_renames(transform(_scan(spark, snap, touched)), snap.renames),
                 path,
@@ -1306,10 +1248,13 @@ def _cow_rewrite(
                 expect_version=snap.version,
                 op=op,
                 stats_cols=_physical_names(stats_cols, snap.renames),
+                txn=txn,
             )
         except TxConflictError as exc:
             last_err = exc
             continue
+        res["files_touched"] = len(touched)
+        res["rows_written"] = _rows_added(path, res["version"])
         return res
     raise TxConflictError(
         f"{op} lost {max_retries} commit races at {path}: {last_err}"

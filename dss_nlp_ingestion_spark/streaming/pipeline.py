@@ -239,25 +239,42 @@ def sliding_window_counts(
     )
 
 
+def _create_if_missing(df: DataFrame, path: str) -> None:
+    """Create an empty tx table with ``df``'s schema at ``path`` unless
+    one exists: the first step of every tx-log sink's micro-batch."""
+    from dss_nlp_ingestion_spark.sources import txlog
+
+    if not txlog._versions(path):
+        try:
+            txlog.create_table(df.limit(0), path)
+        except FileExistsError:
+            pass  # concurrent batch-0 retry created it
+
+
 def stream_to_txlog_table(
     stream: DataFrame, path: str, checkpoint: str, query_name: str = "tx_sink"
 ) -> None:
     """foreachBatch sink committing every micro-batch through the
-    transaction log (sources/txlog.py): batch 0 creates the table,
-    later batches append via the O_EXCL commit protocol. Exactly-once
-    lands for free: a replayed micro-batch re-runs append, but the
-    checkpoint pins batch boundaries and the log makes each commit
-    atomic — a crash between data staging and log commit leaves only
-    orphan files (vacuumed), never partial rows. This is the
-    reference's create-if-absent ES sink (datamodels.py:32) upgraded
-    to a table format with time travel."""
+    transaction log (sources/txlog.py): the first batch creates the
+    table empty, and every batch appends through ``append_txn``
+    stamped (query_name, batch_id). foreachBatch alone is
+    at-least-once: a batch replayed after a crash between the commit
+    and the checkpoint write, or a re-drain from a fresh checkpoint,
+    runs again, and the stamp skips it before any data is staged, so
+    each batch lands exactly once. The log makes each commit atomic —
+    a crash between data staging and log commit leaves only orphan
+    files (vacuumed), never partial rows. Contract (as for
+    :func:`stream_merge_to_txlog_table`): one live writer per
+    ``query_name`` and monotone batch ids. This is the reference's
+    create-if-absent ES sink (datamodels.py:32) upgraded to a table
+    format with time travel."""
     from dss_nlp_ingestion_spark.sources import txlog
 
-    def _commit(batch_df: DataFrame, _batch_id: int) -> None:
-        try:
-            txlog.create_table(batch_df, path)
-        except FileExistsError:
-            txlog.append(batch_df, path)
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        _create_if_missing(batch_df, path)
+        txlog.append_txn(batch_df, path, query_name, batch_id)
+        # long-running sinks accrete commits; keep log replay O(tail)
+        txlog.maybe_checkpoint(path)
 
     q = (
         stream.writeStream.foreachBatch(_commit)
@@ -290,11 +307,7 @@ def stream_merge_to_txlog_table(
     from dss_nlp_ingestion_spark.sources import txlog
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        if not txlog._versions(path):
-            try:
-                txlog.create_table(batch_df.limit(0), path)
-            except FileExistsError:
-                pass  # concurrent batch-0 retry created it
+        _create_if_missing(batch_df, path)
         txlog.merge_into_table(
             batch_df.sparkSession,
             path,
@@ -392,11 +405,7 @@ def stream_to_multitxn_tables(
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
         for path, df in ((raw, batch_df), (agg, hourly)):
-            if not txlog._versions(path):
-                try:
-                    txlog.create_table(df.limit(0), path)
-                except FileExistsError:
-                    pass  # concurrent batch-0 retry created it
+            _create_if_missing(df, path)
             txlog.append_txn(df, path, app_id, batch_id)
             # keep log replay O(tail) for long-running sinks (same
             # guard as stream_merge_to_txlog_table)

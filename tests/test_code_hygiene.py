@@ -143,15 +143,15 @@ def test_cited_names_exist():
 
 def _method_call_sites(tree: ast.AST, method: str, scope: str = ""):
     """The dotted def scope (``outer.inner``; ``""`` at module level)
-    of every ``<expr>.method(...)`` call in ``tree``."""
+    of every ``<expr>.method(...)`` or bare ``method(...)`` call in
+    ``tree``."""
     for node in ast.iter_child_nodes(tree):
         inner = scope
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             inner = f"{scope}.{node.name}" if scope else node.name
-        elif (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == method
+        elif isinstance(node, ast.Call) and method in (
+            getattr(node.func, "attr", None),
+            getattr(node.func, "id", None),
         ):
             yield scope
         yield from _method_call_sites(node, method, inner)
@@ -170,3 +170,15 @@ def test_one_local_checkpoint_in_converge():
         )
     ]
     assert sites == ["dss_nlp_ingestion_spark/operators/graph.py::converge"], sites
+
+
+def test_one_rewrite_call_in_txlog():
+    """``_cow_rewrite`` is the tx-log store's one copy-on-write loop, so
+    inside ``sources/txlog.py`` it alone calls ``rewrite(``: a second
+    pick-rewrite-retry loop would miss every change made to the one
+    loop (merge-on-read deletes, row-level conflicts)."""
+    path = PKG / "sources" / "txlog.py"
+    sites = list(
+        _method_call_sites(ast.parse(path.read_text(encoding="utf-8")), "rewrite")
+    )
+    assert sites == ["_cow_rewrite"], sites

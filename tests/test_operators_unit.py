@@ -1313,7 +1313,7 @@ def test_reconcile_identical_tables_all_match(spark):
 
 
 def test_merge_with_delete_clauses(spark):
-    from dss_nlp_ingestion_spark.operators.merge import merge_into_with_delete
+    from dss_nlp_ingestion_spark.operators.merge import merge_into
 
     target = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], ["k", "v"]
@@ -1329,7 +1329,7 @@ def test_merge_with_delete_clauses(spark):
     )
     got = sorted(
         (r["k"], r["v"])
-        for r in merge_into_with_delete(target, source, ["k"], "dead").collect()
+        for r in merge_into(target, source, ["k"], delete_col="dead").collect()
     )
     assert got == [(1, "a"), (2, "B"), (4, "d")]
 

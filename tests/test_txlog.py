@@ -3,10 +3,12 @@ optimistic retry, rewrite conflicts, time travel, vacuum safety."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from dss_nlp_ingestion_spark.sources import txlog
 
@@ -733,6 +735,35 @@ def test_stream_merge_to_txlog_replay_lands_nothing(spark):
     assert rows2 == rows1
 
 
+def test_stream_to_txlog_replay_lands_nothing(spark):
+    """The append sink's twin of the merge-sink replay test: a re-drain
+    from a fresh checkpoint re-runs every micro-batch, and the
+    (query_name, batch_id) stamp skips each one, so no row lands
+    twice."""
+    from dss_nlp_ingestion_spark.streaming.pipeline import (
+        read_events_stream,
+        stream_to_txlog_table,
+    )
+
+    base = tempfile.mkdtemp(prefix="dss_txstream_")
+    src = base + "/src"
+    df = _orders_tbl(spark, n=30, files=3)
+    df.write.parquet(src)
+
+    def drain(ckpt):
+        stream = read_events_stream(spark, src, schema=df.schema)
+        stream_to_txlog_table(stream, base + "/t", os.path.join(base, ckpt))
+
+    drain("c1")
+    files_after_first = set(txlog.snapshot_files(base + "/t"))
+    rows1 = sorted(r["k"] for r in txlog.read(spark, base + "/t").collect())
+    assert rows1 == sorted(range(30))
+    drain("c2")  # full replay
+    assert set(txlog.snapshot_files(base + "/t")) == files_after_first
+    rows2 = sorted(r["k"] for r in txlog.read(spark, base + "/t").collect())
+    assert rows2 == rows1
+
+
 def test_delete_from_table_rewrites_only_matching_files(spark):
     path = tempfile.mkdtemp(prefix="dss_txdel_")
     txlog.create_table(_orders_tbl(spark, n=40, files=4), path, stats_cols=["k"])
@@ -741,6 +772,7 @@ def test_delete_from_table_rewrites_only_matching_files(spark):
         spark, path, "k >= 5 AND k < 8", prune_col="k", prune_lo=5, prune_hi=7
     )
     assert res["files_touched"] == 1 and res["files_skipped_by_stats"] >= 1
+    assert res["rows_written"] == 10 - 3  # the touched file's survivors
     after = set(txlog.snapshot_files(path))
     assert len(before & after) == len(before) - 1  # others carried
     got = sorted(r["k"] for r in txlog.read(spark, path).collect())
@@ -749,7 +781,7 @@ def test_delete_from_table_rewrites_only_matching_files(spark):
     # no-match delete commits nothing
     head = len(txlog.history(path))
     res2 = txlog.delete_from_table(spark, path, "k = 999")
-    assert res2["files_touched"] == 0
+    assert res2["files_touched"] == 0 and res2["rows_written"] == 0
     assert len(txlog.history(path)) == head
 
 
@@ -765,6 +797,86 @@ def test_update_table_transforms_only_matching_rows(spark):
     assert got[4] == ("c4!", 16.0)   # matched: both SET exprs applied
     assert got[5] == ("c5", 10.0)    # unmatched row in touched file intact
     assert len(got) == 20
+
+
+def _sha1_rows(spark, ids, dead=False):
+    """Rows keyed by the sha1 hex of their id, the paper's
+    ``unique_identifier`` shape: every file's key range spans the key
+    space, so logged stats prune nothing."""
+    df = spark.createDataFrame(
+        [(hashlib.sha1(str(i).encode()).hexdigest(), i, float(i)) for i in ids],
+        "k string, n long, p double",
+    )
+    return df.withColumn("dead", F.col("n") % 2 == 0) if dead else df
+
+
+_DML_CALLS = {
+    "upsert_match": lambda spark, path: txlog.merge_into_table(
+        spark, path, _sha1_rows(spark, range(380, 430)), ["k"],
+        stats_cols=["k"],
+    ),
+    "upsert_no_match": lambda spark, path: txlog.merge_into_table(
+        spark, path, _sha1_rows(spark, range(1000, 1050)), ["k"],
+        stats_cols=["k"],
+    ),
+    "insert_only": lambda spark, path: txlog.merge_into_table(
+        spark, path, _sha1_rows(spark, range(380, 430)), ["k"],
+        insert_only=True, stats_cols=["k"],
+    ),
+    "merge_delete": lambda spark, path: txlog.merge_into_table(
+        spark, path, _sha1_rows(spark, range(380, 430), dead=True), ["k"],
+        delete_col="dead", stats_cols=["k"],
+    ),
+    "delete": lambda spark, path: txlog.delete_from_table(
+        spark, path, "n >= 380", stats_cols=["k"]
+    ),
+    "update": lambda spark, path: txlog.update_table(
+        spark, path, "n >= 380", {"p": "p * 2"}, stats_cols=["k"]
+    ),
+    "compact": lambda spark, path: txlog.compact(spark, path),
+    "optimize_zorder": lambda spark, path: txlog.optimize_zorder(
+        spark, path, ["n", "p"], target_files=4
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    ("call", "max_jobs"),
+    [
+        ("upsert_match", 10),
+        ("upsert_no_match", 8),
+        ("insert_only", 7),
+        ("insert_only_replay", 5),
+        ("merge_delete", 10),
+        ("delete", 3),
+        ("update", 3),
+        ("compact", 1),
+        ("optimize_zorder", 5),
+    ],
+)
+def test_spark_jobs_per_dml_call(spark, call, max_jobs):
+    """Spark jobs one DML call launches, on a 400-row, 4-file table
+    keyed by sha1 hex with logged key stats; the MERGE sources hold 50
+    rows, 20 of them matching. The bounds are the counts measured at
+    local[4] with 4 shuffle partitions. ``insert_only_replay`` counts a
+    second insert-only MERGE of the same rows, which appends nothing."""
+    path = tempfile.mkdtemp(prefix="dss_txjobs_")
+    txlog.create_table(
+        _sha1_rows(spark, range(400)).repartition(4), path,
+        stats_cols=["k"],
+    )
+    if call == "insert_only_replay":
+        _DML_CALLS["insert_only"](spark, path)
+        call = "insert_only"
+    sc = spark.sparkContext
+    group = f"dml-jobs-{os.path.basename(path)}"
+    sc.setJobGroup(group, group)
+    try:
+        _DML_CALLS[call](spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= max_jobs, n_jobs
 
 
 def test_checkpoint_log_replay_equivalence_and_time_travel(spark):
