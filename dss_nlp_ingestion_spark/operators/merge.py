@@ -79,7 +79,9 @@ def merge_into(
     cond = _key_cond(tgt, src, key_cols, null_safe)
     joined = tgt.join(src, cond, "full_outer")
     has_source = src["_s_present"].isNotNull()
-    take_source = has_source & tgt["_t_present"].isNull() if insert_only else has_source
+    take_source = has_source
+    if insert_only:
+        take_source = has_source & tgt["_t_present"].isNull()
     if delete_col is not None:
         joined = joined.filter(~(has_source & F.coalesce(src["_s_del"], F.lit(False))))
     return joined.select(
